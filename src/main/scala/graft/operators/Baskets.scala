@@ -150,8 +150,7 @@ object Baskets {
   }
 
   def frequentTriples(df: DataFrame, basketCol: String, itemCol: String,
-      minSupport: Long, topKPairs: Int,
-      driverMaxRows: Long = Graph.HarmonicDriverMaxEdges): DataFrame = {
+      minSupport: Long, topKPairs: Int): DataFrame = {
     require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")
     require(topKPairs >= 1 && topKPairs <= 100000,
       s"topKPairs must be in [1, 100000], got $topKPairs")
@@ -167,10 +166,9 @@ object Baskets {
     // DESC, a, b) UTF8-binary pair cap, the all-three-pairs triple
     // prune, and the two final rounded doubles are term-for-term; the
     // path engages only for string items (the `<` orders replicate as
-    // unsigned UTF-8 byte compares). driverMaxRows = 0 forces the
-    // distributed plan. AnalyticsOpsSpec pins path equality.
-    if (d1.count() <= driverMaxRows
-        && d1.schema("_i").dataType ==
+    // unsigned UTF-8 byte compares). AnalyticsOpsSpec pins path
+    // equality.
+    if (d1.schema("_i").dataType ==
           org.apache.spark.sql.types.StringType
         && {
           import org.apache.spark.sql.types._
@@ -179,9 +177,10 @@ object Baskets {
           Set[DataType](StringType, IntegerType, LongType, ShortType,
             ByteType, BooleanType, DateType)
             .contains(d1.schema("_b").dataType)
-        }) {
-      return frequentTriplesDriver(df.sparkSession, d1.collect(),
+        }) DriverPath.rows(d1) match {
+      case Some(rows) => return frequentTriplesDriver(df.sparkSession, rows,
         minSupport, topKPairs)
+      case None =>
     }
     val nBaskets = d1.select(col("_b")).distinct().count()
     // r18: checkpoint once — freqItems AND the three final lift joins

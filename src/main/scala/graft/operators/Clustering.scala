@@ -53,20 +53,13 @@ object Clustering {
     * is ~10 shortcut passes vs ~1000 plain ones.
     *
     * Adaptive small-graph path: when the deduped symmetric edge list
-    * has ≤ `driverMaxEdges` rows AND an atomic vertex type, labels
+    * fits the [[DriverPath]] bound AND has an atomic vertex type, labels
     * come from a driver union-find instead of the loop — the broadcast
     * -join argument applied to iteration (several scheduler round-
     * trips per pass vs milliseconds of single-core work). Both paths
-    * produce the identical min-id fixpoint (spec-pinned); pass
-    * `driverMaxEdges = 0` to force the distributed loop. The default
-    * bound is [[Graph.HarmonicDriverMaxEdges]] (2M symmetric edges ≈
-    * tens of MB of driver strings — the same footprint class as an
-    * ordinary broadcast relation, far under the 8 GB broadcast cap),
-    * matching the bound the harmonic/closeness/betweenness family has
-    * carried since r15; the old 200k bound pushed mid-size graphs
-    * (e.g. the 342k-sym-edge mod-7 co-order graph at sf0.1) into the
-    * distributed loop, where ~15 min-label passes × ~6 stages of pure
-    * scheduler overhead cost 5+ s for milliseconds of actual work.
+    * produce the identical min-id fixpoint (spec-pinned). The default
+    * bound (2M symmetric edges ≈ tens of MB of driver strings) is the
+    * footprint class of an ordinary broadcast relation.
     */
   /** Driver union-find over a collected symmetric edge list: the
     * small-graph fast path of [[connectedComponents]]. Path-compressed
@@ -120,8 +113,7 @@ object Clustering {
   }
 
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 25, shortcut: Boolean = false,
-      driverMaxEdges: Long = Graph.HarmonicDriverMaxEdges): DataFrame = {
+      maxIters: Int = 25, shortcut: Boolean = false): DataFrame = {
     // null endpoints carry no connectivity and would propagate null
     // labels through least(); drop them up front
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -132,9 +124,6 @@ object Clustering {
       .unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .localCheckpoint() // upstream (often a blocked join) runs ONCE
-    // Size decisions read the EDGE LIST, not the session default. The
-    // count is free — symRaw is already materialized.
-    val nSym = symRaw.count()
     // Small-graph fast path: the same adaptivity argument as a
     // broadcast join — when the (deduped, symmetrized) edge list fits
     // the driver comfortably, a path-compressed union-find labels it
@@ -154,18 +143,23 @@ object Clustering {
         case _ => false
       }
     }
-    if (nSym <= driverMaxEdges && comparableV) {
-      val pairs = symRaw.collect().map(r => (r.get(0), r.get(1)))
-      val labeled = unionFindLabels(pairs)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("v", vType),
-        org.apache.spark.sql.types.StructField("cluster_id", vType)))
-      val rows = labeled.map { case (v, c) =>
-        org.apache.spark.sql.Row(v, c) }
-      val slices = math.max(1, rows.size / 100000)
-      return edges.sparkSession.createDataFrame(
-        edges.sparkSession.sparkContext.parallelize(rows, slices), schema)
+    if (comparableV) DriverPath.rows(symRaw) match {
+      case Some(collected) =>
+        val pairs = collected.map(r => (r.get(0), r.get(1)))
+        val labeled = unionFindLabels(pairs)
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("v", vType),
+          org.apache.spark.sql.types.StructField("cluster_id", vType)))
+        val rows = labeled.map { case (v, c) =>
+          org.apache.spark.sql.Row(v, c) }
+        val slices = math.max(1, rows.size / 100000)
+        return edges.sparkSession.createDataFrame(
+          edges.sparkSession.sparkContext.parallelize(rows, slices), schema)
+      case None =>
     }
+    // Size decisions read the EDGE LIST, not the session default. The
+    // count is cheap — symRaw is already materialized.
+    val nSym = symRaw.count()
     val defaultParts = edges.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt
     val parts = math.max(1L,
@@ -315,13 +309,11 @@ object Clustering {
   }
 
   def kmeansPortable(vecs: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int, roundDp: Int = 6,
-      driverMaxRows: Long = Graph.HarmonicDriverMaxEdges): DataFrame = {
+      k: Int, iters: Int, roundDp: Int = 6): DataFrame = {
     val Seq(idc, vc) = Cols.fresh("km", 2, vecs)
     val v = vecs.select(col(idCol).as(idc),
       col(vecCol).cast("array<double>").as(vc))
-    val centroids = trainCentroids(v, idc, vc, k, iters, roundDp,
-      driverMaxRows)
+    val centroids = trainCentroids(v, idc, vc, k, iters, roundDp)
     assignToCentroids(v, idc, vc, centroids, roundDp)
       .select(col(idc).as(idCol), col("cluster"), col("dist"))
   }
@@ -340,36 +332,15 @@ object Clustering {
     * empty-cluster rule; driver state is the k·dim centroid matrix
     * only (the sanctioned bounded collect).
     */
-  /** Collect an (id, vector) projection for the r18 driver fast paths.
-    * Returns None (→ caller stays distributed) when the id type's
-    * driver-side ordering would not replicate Spark's, or when any
-    * null/ragged row is present (those flow through the distributed
-    * kernels' own null semantics). */
-  /** Byte-aware driver-collect budget for the (id, vector) fast paths
-    * (r19): the 2M-ROW bound alone is not a memory bound for wide
-    * rows — 2M rows of 1536-dim doubles is ~24 GB, far past
-    * spark.driver.maxResultSize (default 1 GB), so the collect would
-    * FAIL where the distributed path succeeds. Estimated payload =
-    * rows × (8·dim + 48 bytes id/row overhead); 400 MB keeps the
-    * serialized result comfortably under the 1 GB default. */
-  private[graft] val DriverMaxCollectBytes = 400L << 20
-
-  /** The shared (id, vector) fast-path gate: row bound AND estimated
-    * byte bound. `dim` is a first-row probe (an estimate is all a
-    * gate needs — ragged inputs fall back inside collectVectors). */
-  private[graft] def fitsDriverCollect(nRows: Long, dim: Int,
-      maxRows: Long,
-      maxBytes: Long = DriverMaxCollectBytes): Boolean =
-    nRows <= maxRows &&
-      nRows * (8L * math.max(dim, 0).toLong + 48L) <= maxBytes
-
-  /** First-row vector width, or 0 on an empty/null-leading frame —
-    * feeds [[fitsDriverCollect]]'s byte estimate only. */
-  private[graft] def probeDim(v: DataFrame, vc: String): Int = {
-    val r = v.select(size(col(vc))).limit(1).collect()
-    if (r.isEmpty || r(0).isNullAt(0)) 0 else math.max(r(0).getInt(0), 0)
-  }
-
+  /** The (id, vector) driver fast-path gate: the collected projection
+    * when it fits the [[DriverPath]] bound. The bound is byte-aware
+    * (r19): rows × (8·dim + 48 bytes id/row overhead) must also fit
+    * [[DriverPath.DriverMaxCollectBytes]], dim from a first-row probe
+    * (an estimate is all a gate needs). Returns None (→ caller stays
+    * distributed) past either bound, when the id type's driver-side
+    * ordering would not replicate Spark's, or when any null/ragged
+    * row is present (those flow through the distributed kernels' own
+    * null semantics). */
   private[operators] def collectVectors(v: DataFrame, idc: String,
       vc: String): Option[(Array[Any], Array[Array[Double]])] = {
     import org.apache.spark.sql.types._
@@ -380,7 +351,14 @@ object Clustering {
       case _ => false
     }
     if (!idOk || !vecOk) return None
-    val rows = v.select(col(idc), col(vc)).collect()
+    val probe = v.select(size(col(vc))).limit(1).collect()
+    val width = if (probe.isEmpty || probe(0).isNullAt(0)) 0
+      else math.max(probe(0).getInt(0), 0)
+    val rows = DriverPath.rows(v.select(col(idc), col(vc)),
+        bytesPerRow = 8L * width + 48L) match {
+      case Some(rows) => rows
+      case None => return None
+    }
     val ids = new Array[Any](rows.length)
     val vecs = new Array[Array[Double]](rows.length)
     var dim = -1
@@ -478,9 +456,7 @@ object Clustering {
   }
 
   private[operators] def trainCentroids(v: DataFrame, idc: String,
-      vc: String, k: Int, iters: Int, roundDp: Int,
-      driverMaxRows: Long = Graph.HarmonicDriverMaxEdges)
-      : Seq[Seq[Double]] = {
+      vc: String, k: Int, iters: Int, roundDp: Int): Seq[Seq[Double]] = {
     require(k >= 1, s"kmeansPortable: k must be >= 1, got $k")
     require(iters >= 0, s"kmeansPortable: iters must be >= 0, got $iters")
     // Driver fast path (r18): the seed scan + iters × (assign/agg/
@@ -488,17 +464,18 @@ object Clustering {
     // the driver bound — this is the shared Lloyd kernel under
     // kmeansPortable, gmmPortable, silhouette/Davies-Bouldin, and
     // every ProductQuantizer training call. Falls back on non-
-    // replicable id types or null/ragged vectors. r19: the gate is
-    // byte-aware ([[fitsDriverCollect]]) — a row count alone would
-    // collect ~24 GB of 1536-dim vectors at the 2M bound and die on
-    // spark.driver.maxResultSize where the distributed path succeeds.
-    if (fitsDriverCollect(v.count(), probeDim(v, vc), driverMaxRows)) {
-      collectVectors(v, idc, vc) match {
-        case Some((ids, vecs)) =>
-          return trainCentroidsDriver(ids, vecs, k, iters, roundDp)
-        case None => ()
-      }
+    // replicable id types or null/ragged vectors; the gate is
+    // byte-aware ([[collectVectors]]).
+    collectVectors(v, idc, vc) match {
+      case Some((ids, vecs)) =>
+        trainCentroidsDriver(ids, vecs, k, iters, roundDp)
+      case None => lloydCentroids(v, idc, vc, k, iters, roundDp)
     }
+  }
+
+  /** The distributed Lloyd loop behind [[trainCentroids]]. */
+  private def lloydCentroids(v: DataFrame, idc: String, vc: String,
+      k: Int, iters: Int, roundDp: Int): Seq[Seq[Double]] = {
     val dim = v.select(size(col(vc))).head().getInt(0)
     var centroids: Seq[Seq[Double]] = v
       .orderBy(Sampling.portableUnit(col(idc)), col(idc))
@@ -820,8 +797,7 @@ object Clustering {
 
   def gmmPortable(vecs: DataFrame, idCol: String, vecCol: String,
       k: Int, passes: Int, kmeansIters: Int = 1,
-      varFloor: Double = 1e-6,
-      driverMaxRows: Long = Graph.HarmonicDriverMaxEdges): DataFrame = {
+      varFloor: Double = 1e-6): DataFrame = {
     require(k >= 1 && k <= 64, s"gmmPortable: k must be in [1, 64], got $k")
     require(passes >= 1 && passes <= 4,
       s"gmmPortable: passes must be in [1, 4], got $passes")
@@ -838,20 +814,18 @@ object Clustering {
     // the 6-dp M-step freezes, varFloor, and first-argmax ties; the
     // double sums differ only in task order under those freezes.
     // ClusteringSpec pins path equality. r19: byte-aware gate
-    // ([[fitsDriverCollect]] — the trainCentroids rationale).
-    if (fitsDriverCollect(v.count(), probeDim(v, vc), driverMaxRows)) {
-      collectVectors(v, idc, vc) match {
-        case Some((ids, vecsArr)) =>
-          return gmmDriverDf(vecs.sparkSession,
-            v.schema(idc).dataType, idCol, ids, vecsArr, k, passes,
-            kmeansIters, varFloor)
-        case None => ()
-      }
+    // ([[collectVectors]] — the trainCentroids rationale).
+    collectVectors(v, idc, vc) match {
+      case Some((ids, vecsArr)) =>
+        return gmmDriverDf(vecs.sparkSession,
+          v.schema(idc).dataType, idCol, ids, vecsArr, k, passes,
+          kmeansIters, varFloor)
+      case None =>
     }
     val dim = v.select(size(col(vc))).head().getInt(0)
     val n = v.count()
     var mu: IndexedSeq[Seq[Double]] =
-      trainCentroids(v, idc, vc, k, kmeansIters, 6, driverMaxRows)
+      lloydCentroids(v, idc, vc, k, kmeansIters, 6) // v is not collectable
         .toIndexedSeq
     var s2: IndexedSeq[Double] = IndexedSeq.fill(k)(1.0)
     var pi: IndexedSeq[Double] = IndexedSeq.fill(k)(r6(1.0 / k))
@@ -958,8 +932,7 @@ object Clustering {
     * Output: (vertex, e2, e3, cluster [0-based], dist).
     */
   def spectralClustering(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, powerIters: Int, lloydIters: Int = 1,
-      driverMaxEdges: Long = Graph.HarmonicDriverMaxEdges): DataFrame = {
+      k: Int, powerIters: Int, lloydIters: Int = 1): DataFrame = {
     require(k >= 2 && k <= 64,
       s"spectralClustering: k must be in [2, 64], got $k")
     require(powerIters >= 1 && powerIters <= 20,
@@ -978,12 +951,13 @@ object Clustering {
     // term for term; double folds differ from the distributed sums
     // only in task order, which both paths (and the DuckDB oracle's
     // own replay) already absorb under the rounding quanta.
-    // ClusteringSpec pins path equality; driverMaxEdges = 0 forces
-    // the distributed loop, which stays the 100 TB path.
-    if (half.count() <= driverMaxEdges) {
-      return spectralDriverDf(edges.sparkSession,
-        half.collect().map(r => (r.getString(0), r.getString(1))),
+    // ClusteringSpec pins path equality; the distributed loop stays
+    // the 100 TB path.
+    DriverPath.rows(half) match {
+      case Some(rows) => return spectralDriverDf(edges.sparkSession,
+        rows.map(r => (r.getString(0), r.getString(1))),
         k, powerIters, lloydIters)
+      case None =>
     }
     val sym = half.select(col("lo").as("_u"), col("hi").as("_w"))
       .unionByName(half.select(col("hi").as("_u"), col("lo").as("_w")))

@@ -789,7 +789,7 @@ object EventWindows {
     */
   def markovAttribution(events: DataFrame, userCol: String, tsCol: String,
       tieCol: String, typeCol: String, isConversion: Column,
-      horizon: Int = 8, driverMaxCells: Long = 200000L): DataFrame = {
+      horizon: Int = 8): DataFrame = {
     require(horizon >= 1 && horizon <= 32,
       s"markovAttribution: horizon must be in [1, 32], got $horizon")
     val dec12 = "decimal(38,12)"
@@ -856,10 +856,9 @@ object EventWindows {
     // (order-free, like the decimal(38,12) fold), v re-frozen at 12 dp
     // — bit-identical to the distributed loop (spec-pinned). Past the
     // bound the loop below runs unchanged.
-    val starts: DataFrame = {
-      val nCells = tScen.count() // free: tScen is checkpointed
-      if (nCells <= driverMaxCells) {
-        val rows = tScen.collect().map(r =>
+    val starts: DataFrame = DriverPath.rows(tScen) match {
+      case Some(collected) =>
+        val rows = collected.map(r =>
           (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3)))
         def r12(x: Double): Double = java.math.BigDecimal.valueOf(x)
           .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
@@ -893,7 +892,7 @@ object EventWindows {
             org.apache.spark.sql.types.DoubleType)))
         events.sparkSession.createDataFrame(
           events.sparkSession.sparkContext.parallelize(out, 1), schema)
-      } else {
+      case None =>
         var v = tScen.select("_sc", "_src").distinct()
           .withColumn("_v", lit(0.0)).localCheckpoint()
         for (_ <- 1 to horizon) {
@@ -912,7 +911,6 @@ object EventWindows {
             .localCheckpoint() // (scenarios × states)-sized
         }
         v.filter(col("_src") === "START").select(col("_sc"), col("_v"))
-      }
     }
     val base = starts.filter(col("_sc") === "none")
       .select(col("_v").as("_pb"))

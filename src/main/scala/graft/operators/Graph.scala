@@ -118,8 +118,7 @@ object Graph {
 
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, damping: Double = 0.85, roundDp: Int = 12,
-      assumeDistinct: Boolean = false,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      assumeDistinct: Boolean = false): DataFrame = {
     require(iters >= 1, s"pageRank: iters must be >= 1, got $iters")
     require(damping > 0.0 && damping < 1.0,
       s"pageRank: damping must be in (0,1), got $damping")
@@ -134,26 +133,21 @@ object Graph {
     // plain double folds on BOTH paths (order shuffles either way);
     // the roundDp quantum is the documented engine-portability
     // contract that already lets the DuckDB oracle replay them.
-    // GraphSpec pins path equality; driverMaxEdges = 0 forces the
-    // distributed loop.
-    // r19: ONE materialization serves both the gate and either path —
-    // the r18 shape checkpointed the deduped list, counted it, and
-    // then checkpointed AGAIN after the repartition, keeping a second
-    // full edge copy in executor storage on the over-bound (100 TB)
-    // path. The gate now counts the repartitioned checkpoint the
-    // distributed loop needs anyway and the collect reuses it (row
-    // order changes are inside the roundDp quantum contract both
-    // replicas already rely on).
+    // GraphSpec pins path equality. The gate reads the one checkpoint
+    // the distributed loop needs anyway (row order changes are inside
+    // the roundDp quantum contract both replicas already rely on).
     val e = (if (assumeDistinct) e0 else e0.distinct())
       // every iteration joins e on src: hash-partition ONCE here and the
       // checkpointed plan keeps its outputPartitioning, so the per-pass
       // exchange moves only the (vertex, rank) state, never the edges
       .repartition(col("src"))
       .localCheckpoint() // joined every iteration: compute once
-    if (e.count() <= driverMaxEdges) {
-      return pageRankDriverDf(edges.sparkSession,
-        e.collect().map(r => (r.getString(0), r.getString(1))),
-        iters, damping, roundDp, sources = null)
+    DriverPath.rows(e) match {
+      case Some(rows) =>
+        return pageRankDriverDf(edges.sparkSession,
+          rows.map(r => (r.getString(0), r.getString(1))),
+          iters, damping, roundDp, sources = null)
+      case None =>
     }
     val nodes = e.select(col("src").as("vertex"))
       .unionByName(e.select(col("dst").as("vertex")))
@@ -234,8 +228,7 @@ object Graph {
   def pageRankPersonalized(edges: DataFrame, srcCol: String,
       dstCol: String, sources: Seq[String], iters: Int,
       damping: Double = 0.85, roundDp: Int = 12,
-      assumeDistinct: Boolean = false,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      assumeDistinct: Boolean = false): DataFrame = {
     require(iters >= 1, s"pageRankPersonalized: iters must be >= 1")
     require(sources.nonEmpty, "pageRankPersonalized: empty source set")
     require(damping > 0.0 && damping < 1.0,
@@ -245,16 +238,16 @@ object Graph {
         col(dstCol).cast("string").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
     // driver fast path: the [[pageRank]] replica with teleport mass
-    // pinned to `sources` (see the contract note there). r19: one
-    // materialization — gate counts the repartitioned checkpoint the
-    // distributed loop needs anyway; the collect reuses it.
+    // pinned to `sources` (see the contract note there).
     val e = (if (assumeDistinct) e0 else e0.distinct())
       .repartition(col("src"))
       .localCheckpoint()
-    if (e.count() <= driverMaxEdges) {
-      return pageRankDriverDf(edges.sparkSession,
-        e.collect().map(r => (r.getString(0), r.getString(1))),
-        iters, damping, roundDp, sources = sources)
+    DriverPath.rows(e) match {
+      case Some(rows) =>
+        return pageRankDriverDf(edges.sparkSession,
+          rows.map(r => (r.getString(0), r.getString(1))),
+          iters, damping, roundDp, sources = sources)
+      case None =>
     }
     val nodes = e.select(col("src").as("vertex"))
       .unionByName(e.select(col("dst").as("vertex")))
@@ -321,8 +314,7 @@ object Graph {
     */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iters: Int, damping: Double = 0.85,
-      roundDp: Int = 12,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      roundDp: Int = 12): DataFrame = {
     require(iters >= 1, s"pageRankWeighted: iters must be >= 1, got $iters")
     require(damping > 0.0 && damping < 1.0,
       s"pageRankWeighted: damping must be in (0,1), got $damping")
@@ -342,61 +334,62 @@ object Graph {
     // vertex set comes from the UNFILTERED edge endpoints (a vertex
     // whose every edge was weight-dropped still ranks, as dangling),
     // so the collect is gated on both tables. GraphSpec pins path
-    // equality; driverMaxEdges = 0 forces the distributed loop.
+    // equality.
     val nodesBase = edges
       .select(col(srcCol).cast("string").as("vertex"))
       .unionByName(edges.select(col(dstCol).cast("string").as("vertex")))
       .filter(col("vertex").isNotNull)
       .distinct()
       .localCheckpoint()
-    if (e0base.count() <= driverMaxEdges
-        && nodesBase.count() <= 2L * math.max(1L, driverMaxEdges)) {
-      val names = nodesBase.collect().map(_.getString(0))
-      val idx = new java.util.HashMap[String, Integer]()
-      var i = 0
-      while (i < names.length) { idx.put(names(i), i); i += 1 }
-      val n = names.length
-      val rowsE = e0base.collect()
-      val m = rowsE.length
-      val es = new Array[Int](m); val ed = new Array[Int](m)
-      val ew = new Array[Double](m)
-      i = 0
-      while (i < m) {
-        es(i) = idx.get(rowsE(i).getString(0)).intValue()
-        ed(i) = idx.get(rowsE(i).getString(1)).intValue()
-        ew(i) = rowsE(i).getDouble(2)
-        i += 1
-      }
-      val woutArr = new Array[Double](n)
-      i = 0
-      while (i < m) { woutArr(es(i)) += ew(i); i += 1 }
-      val nD = n.toDouble
-      var rank = Array.fill(n)(1.0 / nD)
-      val hasDangling = woutArr.exists(_ == 0.0)
-      for (_ <- 1 to iters) {
-        val contrib = new Array[Double](n)
+    DriverPath.rows(e0base).flatMap(rowsE =>
+        DriverPath.rows(nodesBase, scale = 2).map((rowsE, _))) match {
+      case Some((rowsE, nodeRows)) =>
+        val names = nodeRows.map(_.getString(0))
+        val idx = new java.util.HashMap[String, Integer]()
+        var i = 0
+        while (i < names.length) { idx.put(names(i), i); i += 1 }
+        val n = names.length
+        val m = rowsE.length
+        val es = new Array[Int](m); val ed = new Array[Int](m)
+        val ew = new Array[Double](m)
         i = 0
         while (i < m) {
-          contrib(ed(i)) += rank(es(i)) * (ew(i) / woutArr(es(i)))
+          es(i) = idx.get(rowsE(i).getString(0)).intValue()
+          ed(i) = idx.get(rowsE(i).getString(1)).intValue()
+          ew(i) = rowsE(i).getDouble(2)
           i += 1
         }
-        var dangling = 0.0
-        if (hasDangling) {
-          var v = 0
-          while (v < n) { if (woutArr(v) == 0.0) dangling += rank(v); v += 1 }
+        val woutArr = new Array[Double](n)
+        i = 0
+        while (i < m) { woutArr(es(i)) += ew(i); i += 1 }
+        val nD = n.toDouble
+        var rank = Array.fill(n)(1.0 / nD)
+        val hasDangling = woutArr.exists(_ == 0.0)
+        for (_ <- 1 to iters) {
+          val contrib = new Array[Double](n)
+          i = 0
+          while (i < m) {
+            contrib(ed(i)) += rank(es(i)) * (ew(i) / woutArr(es(i)))
+            i += 1
+          }
+          var dangling = 0.0
+          if (hasDangling) {
+            var v = 0
+            while (v < n) { if (woutArr(v) == 0.0) dangling += rank(v); v += 1 }
+          }
+          rank = Array.tabulate(n)(v =>
+            roundHalfUp((1.0 - damping) / nD
+              + damping * (contrib(v) + dangling / nD), roundDp))
         }
-        rank = Array.tabulate(n)(v =>
-          roundHalfUp((1.0 - damping) / nD
-            + damping * (contrib(v) + dangling / nD), roundDp))
-      }
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(StructField("vertex", StringType),
-        StructField("rank", DoubleType)))
-      val out = (0 until n).map(v =>
-        org.apache.spark.sql.Row(names(v), rank(v)))
-      return edges.sparkSession.createDataFrame(
-        edges.sparkSession.sparkContext.parallelize(out,
-          math.max(1, n / 100000)), schema)
+        import org.apache.spark.sql.types._
+        val schema = StructType(Seq(StructField("vertex", StringType),
+          StructField("rank", DoubleType)))
+        val out = (0 until n).map(v =>
+          org.apache.spark.sql.Row(names(v), rank(v)))
+        return edges.sparkSession.createDataFrame(
+          edges.sparkSession.sparkContext.parallelize(out,
+            math.max(1, n / 100000)), schema)
+      case None =>
     }
     val e0 = e0base
     val wout = e0.groupBy(col("src").as("wv")).agg(sum(col("w")).as("wout"))
@@ -405,11 +398,7 @@ object Graph {
       .select(col("src"), col("dst"), (col("w") / col("wout")).as("share"))
       .repartition(col("src"))
       .localCheckpoint()
-    // r19: the gate already materialized the vertex set (nodesBase) —
-    // the r18 shape rebuilt and re-checkpointed the identical frame
-    // here, a second full vertex copy in executor storage on the
-    // over-bound path for nothing.
-    val nodes = nodesBase
+    val nodes = nodesBase // materialized for the gate already
     var state = nodes
       .join(wout, nodes("vertex") === wout("wv"), "left")
       .select(col("vertex"), col("wout").isNotNull.as("has_out"))
@@ -465,11 +454,9 @@ object Graph {
     * Returns (vertex, hub, auth).
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, roundDp: Int = 12,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      iters: Int, roundDp: Int = 12): DataFrame = {
     require(iters >= 1, s"hits: iters must be >= 1, got $iters")
-    // r19: one materialization serves gate + both paths (the pageRank
-    // single-checkpoint rationale — no second edge copy over-bound)
+    // one materialization serves gate + both paths (as in pageRank)
     val eBase = edges
       .select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
@@ -480,45 +467,47 @@ object Graph {
     // driver fast path (the pageRank replica contract: identical
     // half-step/normalize/roundDp arithmetic, double folds under the
     // same quantum, GraphSpec-pinned path equality)
-    if (eBase.count() <= driverMaxEdges) {
-      val rows = eBase.collect().map(r => (r.getString(0), r.getString(1)))
-      val idx = new java.util.HashMap[String, Integer]()
-      val names = new scala.collection.mutable.ArrayBuffer[String]()
-      def id(s: String): Int = {
-        val got = idx.get(s)
-        if (got != null) got.intValue()
-        else { val i = names.length; idx.put(s, i); names += s; i }
-      }
-      val m = rows.length
-      val es = new Array[Int](m); val ed = new Array[Int](m)
-      var i = 0
-      while (i < m) { es(i) = id(rows(i)._1); ed(i) = id(rows(i)._2); i += 1 }
-      val n = names.length
-      var hub = Array.fill(n)(1.0)
-      var auth = Array.fill(n)(1.0)
-      def normalize(xs: Array[Double]): Array[Double] = {
-        var t = 0.0; var v = 0
-        while (v < n) { t += xs(v); v += 1 }
-        xs.map(x => roundHalfUp(x / t, roundDp))
-      }
-      for (_ <- 1 to iters) {
-        val a2 = new Array[Double](n)
-        i = 0
-        while (i < m) { a2(ed(i)) += hub(es(i)); i += 1 }
-        auth = normalize(a2)
-        val h2 = new Array[Double](n)
-        i = 0
-        while (i < m) { h2(es(i)) += auth(ed(i)); i += 1 }
-        hub = normalize(h2)
-      }
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(StructField("vertex", StringType),
-        StructField("hub", DoubleType), StructField("auth", DoubleType)))
-      val out = (0 until n).map(v =>
-        org.apache.spark.sql.Row(names(v), hub(v), auth(v)))
-      return edges.sparkSession.createDataFrame(
-        edges.sparkSession.sparkContext.parallelize(out,
-          math.max(1, n / 100000)), schema)
+    DriverPath.rows(eBase) match {
+      case Some(collected) =>
+        val rows = collected.map(r => (r.getString(0), r.getString(1)))
+        val idx = new java.util.HashMap[String, Integer]()
+        val names = new scala.collection.mutable.ArrayBuffer[String]()
+        def id(s: String): Int = {
+          val got = idx.get(s)
+          if (got != null) got.intValue()
+          else { val i = names.length; idx.put(s, i); names += s; i }
+        }
+        val m = rows.length
+        val es = new Array[Int](m); val ed = new Array[Int](m)
+        var i = 0
+        while (i < m) { es(i) = id(rows(i)._1); ed(i) = id(rows(i)._2); i += 1 }
+        val n = names.length
+        var hub = Array.fill(n)(1.0)
+        var auth = Array.fill(n)(1.0)
+        def normalize(xs: Array[Double]): Array[Double] = {
+          var t = 0.0; var v = 0
+          while (v < n) { t += xs(v); v += 1 }
+          xs.map(x => roundHalfUp(x / t, roundDp))
+        }
+        for (_ <- 1 to iters) {
+          val a2 = new Array[Double](n)
+          i = 0
+          while (i < m) { a2(ed(i)) += hub(es(i)); i += 1 }
+          auth = normalize(a2)
+          val h2 = new Array[Double](n)
+          i = 0
+          while (i < m) { h2(es(i)) += auth(ed(i)); i += 1 }
+          hub = normalize(h2)
+        }
+        import org.apache.spark.sql.types._
+        val schema = StructType(Seq(StructField("vertex", StringType),
+          StructField("hub", DoubleType), StructField("auth", DoubleType)))
+        val out = (0 until n).map(v =>
+          org.apache.spark.sql.Row(names(v), hub(v), auth(v)))
+        return edges.sparkSession.createDataFrame(
+          edges.sparkSession.sparkContext.parallelize(out,
+            math.max(1, n / 100000)), schema)
+      case None =>
     }
     val e = eBase
     val nodes = e.select(col("src").as("vertex"))
@@ -712,24 +701,26 @@ object Graph {
     (names.toArray, tv)
   }
 
-  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String)
+      : DataFrame = {
     val canon = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
     // Driver fast path (r18, the ktruss integers): the orient + two
     // joins + explode + aggregate collapse to in-memory intersections.
-    if (canon.count() <= driverMaxEdges) {
-      val (names, tv) = triangleDriverCounts(
-        canon.collect().map(r => (r.getString(0), r.getString(1))))
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(StructField("vertex", StringType),
-        StructField("n_triangles", LongType)))
-      val rows = names.indices.collect {
-        case v if tv(v) > 0L => // vertices in >= 1 triangle, as the plan
-          org.apache.spark.sql.Row(names(v), tv(v))
-      }
-      return edges.sparkSession.createDataFrame(
-        edges.sparkSession.sparkContext.parallelize(rows,
-          math.max(1, rows.length / 100000)), schema)
+    DriverPath.rows(canon) match {
+      case Some(pairs) =>
+        val (names, tv) = triangleDriverCounts(
+          pairs.map(r => (r.getString(0), r.getString(1))))
+        import org.apache.spark.sql.types._
+        val schema = StructType(Seq(StructField("vertex", StringType),
+          StructField("n_triangles", LongType)))
+        val rows = names.indices.collect {
+          case v if tv(v) > 0L => // vertices in >= 1 triangle, as the plan
+            org.apache.spark.sql.Row(names(v), tv(v))
+        }
+        return edges.sparkSession.createDataFrame(
+          edges.sparkSession.sparkContext.parallelize(rows,
+            math.max(1, rows.length / 100000)), schema)
+      case None =>
     }
     val (oriented, _) = orientByDegree(canon, alreadyMaterialized = true)
     val corners = triangleCorners(oriented) // eagerly checkpoints oriented
@@ -790,8 +781,7 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, vertexCol: String, labelCol: String,
-      iters: Int,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      iters: Int): DataFrame = {
     require(iters >= 1, s"labelPropagation: iters must be >= 1, got $iters")
     val half = edges
       .select(col(srcCol).cast("string").as("src"),
@@ -814,14 +804,15 @@ object Graph {
     // collected symmetric edges + seed map — exact integer counts and
     // the UTF8-binary (count DESC, label ASC) argmax replicated term
     // for term (all-string/integer arithmetic, no rounding anywhere,
-    // so the replica is bit-exact by construction). One count on the
-    // checkpoint the loop needs anyway; GraphSpec pins path equality;
-    // driverMaxEdges = 0 forces the distributed loop.
-    if (e.count() <= 2L * driverMaxEdges
-        && seed.count() <= 2L * driverMaxEdges) {
-      return labelPropDriverDf(edges.sparkSession,
-        e.collect().map(r => (r.getString(0), r.getString(1))),
-        seed.collect().map(r => (r.getString(0), r.getString(1))), iters)
+    // so the replica is bit-exact by construction). The gate reads the
+    // checkpoint the loop needs anyway; GraphSpec pins path equality.
+    DriverPath.rows(e, scale = 2).flatMap(es =>
+        DriverPath.rows(seed, scale = 2).map((es, _))) match {
+      case Some((es, seedRows)) =>
+        return labelPropDriverDf(edges.sparkSession,
+          es.map(r => (r.getString(0), r.getString(1))),
+          seedRows.map(r => (r.getString(0), r.getString(1))), iters)
+      case None =>
     }
     val nodes = e.select(col("src").as("vertex")).distinct()
     var state = nodes
@@ -982,7 +973,7 @@ object Graph {
     *
     * Small-graph driver fast path (r18, the [[harmonicCentrality]] /
     * connectedComponents precedent): when the deduped canonical edge
-    * list fits `driverMaxEdges`, the identical half-synchronous passes
+    * list fits the [[DriverPath]] bound, the identical half-synchronous passes
     * run over a dense driver adjacency via [[louvainDriverDf]], which
     * reproduces step for step the dense-rank parity schedule (rank =
     * 1-based position in UTF8-binary vertex order, exactly
@@ -995,8 +986,7 @@ object Graph {
     * milliseconds of arithmetic (measured: q_louvain 6.8 s steady at
     * sf0.1, ~0.15 s of which is the actual gain computation). Past the
     * bound the loop below runs unchanged; GraphSpec pins both paths
-    * row-identical on the same fixtures. Pass `driverMaxEdges = 0` to
-    * force the distributed path.
+    * row-identical on the same fixtures.
     */
   /** Driver replica of the louvainMove / louvainMoveWeighted passes
     * over collected canonical edges (`pairs`: deduped a<b with summed
@@ -1103,17 +1093,18 @@ object Graph {
   }
 
   def louvainMove(edges: DataFrame, srcCol: String, dstCol: String,
-      passes: Int, driverMaxEdges: Long = HarmonicDriverMaxEdges)
-      : DataFrame = {
+      passes: Int): DataFrame = {
     require(passes >= 1 && passes <= 8,
       s"louvainMove: passes must be in [1, 8], got $passes")
     val canonBase = canonicalEdges(edges, srcCol, dstCol)
-      .localCheckpoint() // counted for the path decision, then reused
-    if (canonBase.count() <= driverMaxEdges) {
-      val pairs = canonBase.collect().map(r =>
-        (r.getString(0), r.getString(1), 1L))
-      return louvainDriverDf(edges.sparkSession, pairs,
-        Array.empty[(String, Long)], passes)
+      .localCheckpoint() // read for the path decision, then reused
+    DriverPath.rows(canonBase) match {
+      case Some(rows) =>
+        val pairs = rows.map(r =>
+          (r.getString(0), r.getString(1), 1L))
+        return louvainDriverDf(edges.sparkSession, pairs,
+          Array.empty[(String, Long)], passes)
+      case None =>
     }
     val canon = canonBase
       .select(col("lo").as("_a"), col("hi").as("_b"))
@@ -1189,8 +1180,7 @@ object Graph {
     * overflow. Returns (vertex, community, comm_size).
     */
   def louvainMoveWeighted(edges: DataFrame, srcCol: String,
-      dstCol: String, weightCol: String, passes: Int,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      dstCol: String, weightCol: String, passes: Int): DataFrame = {
     require(passes >= 1 && passes <= 8,
       s"louvainMoveWeighted: passes must be in [1, 8], got $passes")
     val dec = "decimal(38,0)"
@@ -1214,11 +1204,14 @@ object Graph {
     val selfW = raw.filter(col("_ca") === col("_cb"))
       .groupBy(col("_ca").as("_v")).agg(sum("_w").as("_sw"))
       .localCheckpoint()
-    if (canon.count() + selfW.count() <= driverMaxEdges) {
-      val pairs = canon.collect().map(r =>
-        (r.getString(0), r.getString(1), r.getLong(2)))
-      val selfs = selfW.collect().map(r => (r.getString(0), r.getLong(1)))
-      return louvainDriverDf(edges.sparkSession, pairs, selfs, passes)
+    DriverPath.rows(canon).flatMap(cs =>
+        DriverPath.rows(selfW).map((cs, _))) match {
+      case Some((cs, ss)) =>
+        val pairs = cs.map(r =>
+          (r.getString(0), r.getString(1), r.getLong(2)))
+        val selfs = ss.map(r => (r.getString(0), r.getLong(1)))
+        return louvainDriverDf(edges.sparkSession, pairs, selfs, passes)
+      case None =>
     }
     val sym = canon
       .unionByName(canon.select(col("_b").as("_a"), col("_a").as("_b"),
@@ -1288,8 +1281,7 @@ object Graph {
     */
   def contractCommunities(edges: DataFrame, srcCol: String,
       dstCol: String, labels: DataFrame, vCol: String, commCol: String,
-      weightCol: Option[String] = None,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      weightCol: Option[String] = None): DataFrame = {
     val wExpr = weightCol.map(c => col(c).cast("long"))
       .getOrElse(lit(1L))
     val e = edges.select(col(srcCol).cast("string").as("_sa"),
@@ -1305,16 +1297,14 @@ object Graph {
     // greatest skip nulls; sum skips nulls and goes NULL on all-null
     // groups); falls back on duplicate label vertices (the joins
     // would multiply edges). Gate order keeps the 100 TB path cheap:
-    // the vertex-sized labels count short-circuits before any edge
-    // count runs; no checkpoint is added to either path. GraphSpec
-    // pins path equality; driverMaxEdges = 0 forces distributed.
-    if (driverMaxEdges > 0L && lab.count() <= 2L * driverMaxEdges
-        && e.count() <= driverMaxEdges) {
-      contractDriverDf(edges.sparkSession, lab.collect(), e.collect())
-        match {
-        case Some(df) => return df
-        case None => ()
-      }
+    // an over-bound label table short-circuits before the edge list is
+    // read; no checkpoint is added to either path. GraphSpec pins path
+    // equality.
+    DriverPath.rows(lab, scale = 2).flatMap(ls =>
+        DriverPath.rows(e).flatMap(es =>
+          contractDriverDf(edges.sparkSession, ls, es))) match {
+      case Some(df) => return df
+      case None =>
     }
     e.join(lab.select(col("_lv").as("_sa"), col("_lc").as("_ca")), "_sa")
       .join(lab.select(col("_lv").as("_sb"), col("_lc").as("_cb")), "_sb")
@@ -1508,8 +1498,7 @@ object Graph {
     * the community-induced subgraph. Returns (vertex, community).
     */
   def refineConnected(edges: DataFrame, srcCol: String, dstCol: String,
-      labels: DataFrame, vCol: String, commCol: String,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      labels: DataFrame, vCol: String, commCol: String): DataFrame = {
     val lab = labels.select(col(vCol).cast("string").as("_v"),
       col(commCol).cast("string").as("_c"))
     val e = edges.select(col(srcCol).cast("string").as("_sa"),
@@ -1524,15 +1513,13 @@ object Graph {
     // (min member under UTF8-binary order) match by construction; the
     // null-unsafe _la === _lb filter and the coalesce(_rc, _v)
     // singleton rule are replicated term for term. Falls back on
-    // duplicate label vertices. Gate order: vertex-sized labels count
-    // short-circuits before any edge count; no added checkpoint.
-    if (driverMaxEdges > 0L && lab.count() <= 2L * driverMaxEdges
-        && e.count() <= driverMaxEdges) {
-      refineDriverDf(edges.sparkSession, lab.collect(), e.collect())
-        match {
-        case Some(df) => return df
-        case None => ()
-      }
+    // duplicate label vertices. Gate order: an over-bound label table
+    // short-circuits before the edge list is read; no added checkpoint.
+    DriverPath.rows(lab, scale = 2).flatMap(ls =>
+        DriverPath.rows(e).flatMap(es =>
+          refineDriverDf(edges.sparkSession, ls, es))) match {
+      case Some(df) => return df
+      case None =>
     }
     val intra = e
       .join(lab.select(col("_v").as("_sa"), col("_c").as("_la")), "_sa")
@@ -1899,8 +1886,7 @@ object Graph {
   }
 
   def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
-      maxMiddleDegree: Int, k: Int,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      maxMiddleDegree: Int, k: Int): DataFrame = {
     require(maxMiddleDegree >= 2,
       s"maxMiddleDegree=$maxMiddleDegree must be >= 2")
     require(k >= 1, s"k=$k must be >= 1")
@@ -1910,13 +1896,12 @@ object Graph {
     // Driver fast path (r18): the wedge fan the two pinned merge
     // joins + aggregate compute distributedly is enumerated in memory
     // (see [[linkPredDriverDf]]); falls back past the key/fan budgets.
-    if (half.count() <= driverMaxEdges) {
-      linkPredDriverDf(edges.sparkSession,
-        half.collect().map(r => (r.getString(0), r.getString(1))),
-        maxMiddleDegree, k, jaccardMode = false) match {
-        case Some(df) => return df
-        case None => ()
-      }
+    DriverPath.rows(half).flatMap(rows =>
+        linkPredDriverDf(edges.sparkSession,
+          rows.map(r => (r.getString(0), r.getString(1))),
+          maxMiddleDegree, k, jaccardMode = false)) match {
+      case Some(df) => return df
+      case None =>
     }
     val sym = half.unionByName(
       half.select(col("_b").as("_a"), col("_a").as("_b")))
@@ -1991,8 +1976,7 @@ object Graph {
     * (a, b, common_neighbors, jaccard).
     */
   def linkPredictionJaccard(edges: DataFrame, srcCol: String,
-      dstCol: String, maxMiddleDegree: Int, k: Int,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      dstCol: String, maxMiddleDegree: Int, k: Int): DataFrame = {
     require(maxMiddleDegree >= 2,
       s"maxMiddleDegree=$maxMiddleDegree must be >= 2")
     require(k >= 1, s"k=$k must be >= 1")
@@ -2001,13 +1985,12 @@ object Graph {
       .localCheckpoint()
     // Driver fast path (r18) — [[linkPredDriverDf]] in jaccard mode
     // (uncapped degree denominators, same candidates and anti-join)
-    if (half.count() <= driverMaxEdges) {
-      linkPredDriverDf(edges.sparkSession,
-        half.collect().map(r => (r.getString(0), r.getString(1))),
-        maxMiddleDegree, k, jaccardMode = true) match {
-        case Some(df) => return df
-        case None => ()
-      }
+    DriverPath.rows(half).flatMap(rows =>
+        linkPredDriverDf(edges.sparkSession,
+          rows.map(r => (r.getString(0), r.getString(1))),
+          maxMiddleDegree, k, jaccardMode = true)) match {
+      case Some(df) => return df
+      case None =>
     }
     val sym = half.unionByName(
       half.select(col("_b").as("_a"), col("_a").as("_b")))
@@ -2107,18 +2090,15 @@ object Graph {
     * (n_vertices, wedges, sum_triangles, transitivity).
     */
   def transitivity(edges: DataFrame, srcCol: String,
-      dstCol: String,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      dstCol: String): DataFrame = {
     val dec = "decimal(38,0)"
     // Driver fast path (r18): exact integer triangles + wedges from
-    // the same collected canonical edges; one row out.
-    // r19: ONE canonical-list materialization serves the gate AND the
-    // over-bound path (which used to re-canonicalize + re-checkpoint
-    // inside triangleCounts and re-aggregate degrees separately).
+    // the same collected canonical edges; one row out. One canonical
+    // checkpoint serves the gate AND the over-bound path.
     val canon0 = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
-    locally {
-      if (canon0.count() <= driverMaxEdges) {
-        val pairs = canon0.collect().map(r =>
+    DriverPath.rows(canon0) match {
+      case Some(rows) =>
+        val pairs = rows.map(r =>
           (r.getString(0), r.getString(1)))
         val (names, tv) = triangleDriverCounts(pairs)
         val deg = new java.util.HashMap[String, Long]()
@@ -2151,7 +2131,7 @@ object Graph {
         return edges.sparkSession.createDataFrame(
           edges.sparkSession.sparkContext.parallelize(Seq(row), 1),
           schema)
-      }
+      case None =>
     }
     // triangle counts and degrees share canon0's checkpoint (and the
     // degree aggregate) through orientByDegree — identical arithmetic
@@ -2405,10 +2385,11 @@ object Graph {
         col("n_communities"))
   }
 
-  /** Harmonic-family driver fast-path bound, in deduped CANONICAL
-    * edges (so ~2M edges ≈ 50 MB collected strings + 16 MB dense
-    * adjacency — the broadcast-join size class). Above it the
-    * distributed forms run unchanged. */
+  /** Default driver fast-path bound ([[DriverPath.MaxRowsConf]]), in
+    * gated rows — for the graph kernels, deduped CANONICAL edges (so
+    * ~2M edges ≈ 50 MB collected strings + 16 MB dense adjacency — the
+    * broadcast-join size class). Above it the distributed forms run
+    * unchanged. */
   private[graft] val HarmonicDriverMaxEdges = 2000000L
 
   /** Drop the cached blocks behind a locally-checkpointed frame whose
@@ -2508,8 +2489,7 @@ object Graph {
     * Output: (vertex, n_hop1 .. n_hopH, harmonic).
     */
   def harmonicCentrality(edges: DataFrame, srcCol: String,
-      dstCol: String, maxHops: Int = 2,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      dstCol: String, maxHops: Int = 2): DataFrame = {
     require(maxHops >= 1 && maxHops <= 4,
       s"harmonicCentrality: maxHops must be in [1, 4], got $maxHops")
     val canon = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
@@ -2521,59 +2501,59 @@ object Graph {
     // checkpointed shuffles — the worst plan in the suite at judged SF
     // (20-31 s steady vs ~2 s here). Past the bound the closure below
     // runs unchanged; GraphSpec pins both paths row-identical on the
-    // same fixture. The bound is edge-count (collect cost ~50 B/edge),
-    // an order above the union-find's 200k because BFS state is dense
-    // ints, not boxed-key hash maps.
-    if (canon.count() <= driverMaxEdges) {
-      val (names, adj) = denseAdjacency(canon.collect().map(r =>
-        (r.getString(0), r.getString(1))))
-      val n = names.length
-      val visited = Array.fill(n)(-1)
-      val bufA = new Array[Int](n)
-      val bufB = new Array[Int](n)
-      val out = new Array[org.apache.spark.sql.Row](n)
-      var v = 0
-      while (v < n) {
-        val hopCounts = new Array[Long](maxHops)
-        visited(v) = v
-        var frontier = bufA
-        var next = bufB
-        var fLen = 0
-        val nb0 = adj(v)
-        var i = 0
-        while (i < nb0.length) {
-          val w = nb0(i)
-          if (visited(w) != v) { visited(w) = v; frontier(fLen) = w; fLen += 1 }
-          i += 1
-        }
-        hopCounts(0) = fLen
-        var h = 2
-        while (h <= maxHops && fLen > 0) {
-          var nLen = 0
-          i = 0
-          while (i < fLen) {
-            val nb = adj(frontier(i))
-            var j = 0
-            while (j < nb.length) {
-              val w = nb(j)
-              if (visited(w) != v) { visited(w) = v; next(nLen) = w; nLen += 1 }
-              j += 1
-            }
+    // same fixture. The bound is edge-count (collect cost ~50 B/edge).
+    DriverPath.rows(canon) match {
+      case Some(rows) =>
+        val (names, adj) = denseAdjacency(rows.map(r =>
+          (r.getString(0), r.getString(1))))
+        val n = names.length
+        val visited = Array.fill(n)(-1)
+        val bufA = new Array[Int](n)
+        val bufB = new Array[Int](n)
+        val out = new Array[org.apache.spark.sql.Row](n)
+        var v = 0
+        while (v < n) {
+          val hopCounts = new Array[Long](maxHops)
+          visited(v) = v
+          var frontier = bufA
+          var next = bufB
+          var fLen = 0
+          val nb0 = adj(v)
+          var i = 0
+          while (i < nb0.length) {
+            val w = nb0(i)
+            if (visited(w) != v) { visited(w) = v; frontier(fLen) = w; fLen += 1 }
             i += 1
           }
-          hopCounts(h - 1) = nLen
-          val t = frontier; frontier = next; next = t; fLen = nLen
-          h += 1
+          hopCounts(0) = fLen
+          var h = 2
+          while (h <= maxHops && fLen > 0) {
+            var nLen = 0
+            i = 0
+            while (i < fLen) {
+              val nb = adj(frontier(i))
+              var j = 0
+              while (j < nb.length) {
+                val w = nb(j)
+                if (visited(w) != v) { visited(w) = v; next(nLen) = w; nLen += 1 }
+                j += 1
+              }
+              i += 1
+            }
+            hopCounts(h - 1) = nLen
+            val t = frontier; frontier = next; next = t; fLen = nLen
+            h += 1
+          }
+          var harm = 0.0
+          var k = 1
+          while (k <= maxHops) { harm += hopCounts(k - 1) / k.toDouble; k += 1 }
+          out(v) = org.apache.spark.sql.Row.fromSeq(
+            names(v) +: hopCounts.toSeq :+ roundHalfUp(harm, 6))
+          v += 1
         }
-        var harm = 0.0
-        var k = 1
-        while (k <= maxHops) { harm += hopCounts(k - 1) / k.toDouble; k += 1 }
-        out(v) = org.apache.spark.sql.Row.fromSeq(
-          names(v) +: hopCounts.toSeq :+ roundHalfUp(harm, 6))
-        v += 1
-      }
-      return driverRowsToDf(edges, out,
-        (1 to maxHops).map(h => s"n_hop$h"))
+        return driverRowsToDf(edges, out,
+          (1 to maxHops).map(h => s"n_hop$h"))
+      case None =>
     }
     val sym = canon.select(col("lo").as("v"), col("hi").as("w"))
       .unionByName(canon.select(col("hi").as("v"), col("lo").as("w")))
@@ -2640,8 +2620,7 @@ object Graph {
     * exact twin, counts as estimate doubles rounded to 2 dp.
     */
   def harmonicCentralityApprox(edges: DataFrame, srcCol: String,
-      dstCol: String, maxHops: Int = 2, p: Int = 12,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      dstCol: String, maxHops: Int = 2, p: Int = 12): DataFrame = {
     require(maxHops >= 1 && maxHops <= 6,
       s"harmonicCentralityApprox: maxHops must be in [1, 6], got $maxHops")
     val canon = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
@@ -2656,86 +2635,88 @@ object Graph {
     // graph small enough that scheduling dominated. Past the bound the
     // sketch loop below runs unchanged — it, not this, is the 100 TB
     // path.
-    if (canon.count() <= driverMaxEdges) {
-      import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-      import org.apache.spark.unsafe.types.UTF8String
-      val (names, adj) = denseAdjacency(canon.collect().map(r =>
-        (r.getString(0), r.getString(1))))
-      val n = names.length
-      val m = 1 << p
-      val hashes = new Array[Long](n)
-      var i = 0
-      while (i < n) {
-        hashes(i) = XxHash64Function.hash(UTF8String.fromString(names(i)),
-          org.apache.spark.sql.types.StringType, graft.functions.HllReach.Seed)
-        i += 1
-      }
-      val visited = Array.fill(n)(-1)
-      val bufA = new Array[Int](n)
-      val bufB = new Array[Int](n)
-      val reg = new Array[Byte](m)
-      val out = new Array[org.apache.spark.sql.Row](n)
-      var v = 0
-      while (v < n) {
-        java.util.Arrays.fill(reg, 0.toByte)
-        graft.functions.HllReach.insertHashed(reg, p, hashes(v))
-        visited(v) = v
-        val balls = new Array[Double](maxHops)
-        var frontier = bufA
-        var next = bufB
-        var fLen = 0
-        val nb0 = adj(v)
-        i = 0
-        while (i < nb0.length) {
-          val w = nb0(i)
-          if (visited(w) != v) {
-            visited(w) = v
-            graft.functions.HllReach.insertHashed(reg, p, hashes(w))
-            frontier(fLen) = w; fLen += 1
-          }
+    DriverPath.rows(canon) match {
+      case Some(rows) =>
+        import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+        import org.apache.spark.unsafe.types.UTF8String
+        val (names, adj) = denseAdjacency(rows.map(r =>
+          (r.getString(0), r.getString(1))))
+        val n = names.length
+        val m = 1 << p
+        val hashes = new Array[Long](n)
+        var i = 0
+        while (i < n) {
+          hashes(i) = XxHash64Function.hash(UTF8String.fromString(names(i)),
+            org.apache.spark.sql.types.StringType, graft.functions.HllReach.Seed)
           i += 1
         }
-        balls(0) = graft.functions.HllReach.estimate(reg)
-        var h = 2
-        while (h <= maxHops) {
-          var nLen = 0
+        val visited = Array.fill(n)(-1)
+        val bufA = new Array[Int](n)
+        val bufB = new Array[Int](n)
+        val reg = new Array[Byte](m)
+        val out = new Array[org.apache.spark.sql.Row](n)
+        var v = 0
+        while (v < n) {
+          java.util.Arrays.fill(reg, 0.toByte)
+          graft.functions.HllReach.insertHashed(reg, p, hashes(v))
+          visited(v) = v
+          val balls = new Array[Double](maxHops)
+          var frontier = bufA
+          var next = bufB
+          var fLen = 0
+          val nb0 = adj(v)
           i = 0
-          while (i < fLen) {
-            val nb = adj(frontier(i))
-            var j = 0
-            while (j < nb.length) {
-              val w = nb(j)
-              if (visited(w) != v) {
-                visited(w) = v
-                graft.functions.HllReach.insertHashed(reg, p, hashes(w))
-                next(nLen) = w; nLen += 1
-              }
-              j += 1
+          while (i < nb0.length) {
+            val w = nb0(i)
+            if (visited(w) != v) {
+              visited(w) = v
+              graft.functions.HllReach.insertHashed(reg, p, hashes(w))
+              frontier(fLen) = w; fLen += 1
             }
             i += 1
           }
-          balls(h - 1) = graft.functions.HllReach.estimate(reg)
-          val t = frontier; frontier = next; next = t; fLen = nLen
-          h += 1
+          balls(0) = graft.functions.HllReach.estimate(reg)
+          var h = 2
+          while (h <= maxHops) {
+            var nLen = 0
+            i = 0
+            while (i < fLen) {
+              val nb = adj(frontier(i))
+              var j = 0
+              while (j < nb.length) {
+                val w = nb(j)
+                if (visited(w) != v) {
+                  visited(w) = v
+                  graft.functions.HllReach.insertHashed(reg, p, hashes(w))
+                  next(nLen) = w; nLen += 1
+                }
+                j += 1
+              }
+              i += 1
+            }
+            balls(h - 1) = graft.functions.HllReach.estimate(reg)
+            val t = frontier; frontier = next; next = t; fLen = nLen
+            h += 1
+          }
+          val shells = new Array[Double](maxHops)
+          var k = 1
+          while (k <= maxHops) {
+            val prev = if (k == 1) 1.0 else balls(k - 2)
+            shells(k - 1) = math.max(0.0, balls(k - 1) - prev)
+            k += 1
+          }
+          var harm = 0.0
+          k = 1
+          while (k <= maxHops) { harm += shells(k - 1) / k.toDouble; k += 1 }
+          out(v) = org.apache.spark.sql.Row.fromSeq(
+            names(v) +: shells.toSeq.map(roundHalfUp(_, 2))
+              :+ roundHalfUp(harm, 6))
+          v += 1
         }
-        val shells = new Array[Double](maxHops)
-        var k = 1
-        while (k <= maxHops) {
-          val prev = if (k == 1) 1.0 else balls(k - 2)
-          shells(k - 1) = math.max(0.0, balls(k - 1) - prev)
-          k += 1
-        }
-        var harm = 0.0
-        k = 1
-        while (k <= maxHops) { harm += shells(k - 1) / k.toDouble; k += 1 }
-        out(v) = org.apache.spark.sql.Row.fromSeq(
-          names(v) +: shells.toSeq.map(roundHalfUp(_, 2))
-            :+ roundHalfUp(harm, 6))
-        v += 1
-      }
-      return driverRowsToDf(edges, out,
-        (1 to maxHops).map(h => s"n_hop$h"),
-        hopType = org.apache.spark.sql.types.DoubleType)
+        return driverRowsToDf(edges, out,
+          (1 to maxHops).map(h => s"n_hop$h"),
+          hopType = org.apache.spark.sql.types.DoubleType)
+      case None =>
     }
     val sym = canon.select(col("lo").as("v"), col("hi").as("w"))
       .unionByName(canon.select(col("hi").as("v"), col("lo").as("w")))
@@ -2886,8 +2867,7 @@ object Graph {
   }
 
   def ktruss(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, rounds: Int,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"ktruss: k must be >= 3, got $k")
     require(rounds >= 1 && rounds <= 16,
       s"ktruss: rounds must be in [1, 16], got $rounds")
@@ -2896,11 +2876,11 @@ object Graph {
     // Driver fast path (r18): rounds × ~5 scheduler jobs of wedge
     // joins for exact integer intersections a driver loop finishes in
     // milliseconds at bench scale. Pure integers — bit-exact by
-    // construction. driverMaxEdges = 0 forces the distributed plan
-    // (the 100 TB path); GraphSpec pins path equality.
-    if (e.count() <= driverMaxEdges) {
-      return ktrussDriverDf(edges.sparkSession,
-        e.collect().map(r => (r.getString(0), r.getString(1))), k, rounds)
+    // construction. GraphSpec pins path equality.
+    DriverPath.rows(e) match {
+      case Some(rows) => return ktrussDriverDf(edges.sparkSession,
+        rows.map(r => (r.getString(0), r.getString(1))), k, rounds)
+      case None =>
     }
     def support(cur: DataFrame): DataFrame = {
       val t = cur.as("e1").join(cur.as("e2"),
@@ -2941,10 +2921,8 @@ object Graph {
     * 1 = everything reached in one hop.
     */
   def closenessCentrality(edges: DataFrame, srcCol: String,
-      dstCol: String, maxHops: Int = 2,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
-    val h = harmonicCentrality(edges, srcCol, dstCol, maxHops,
-      driverMaxEdges)
+      dstCol: String, maxHops: Int = 2): DataFrame = {
+    val h = harmonicCentrality(edges, srcCol, dstCol, maxHops)
     val reach = (1 to maxHops).map(i => col(s"n_hop$i")).reduce(_ + _)
     val dsum = (1 to maxHops).map(i =>
       col(s"n_hop$i") * lit(i.toDouble)).reduce(_ + _)
@@ -2980,8 +2958,7 @@ object Graph {
     * Output: (vertex, eigenvector).
     */
   def eigenvectorCentrality(edges: DataFrame, srcCol: String,
-      dstCol: String, iters: Int = 3,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      dstCol: String, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 8,
       s"eigenvectorCentrality: iters must be in [1, 8], got $iters")
     val canon = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
@@ -2991,38 +2968,39 @@ object Graph {
     // is an order-free decimal(38,12) fold of 12-dp-frozen scores, so
     // folding the same decimals as BigInt unscaled units reproduces
     // _sum, the max, and the renormalized quotient identically.
-    // GraphSpec pins path equality; driverMaxEdges = 0 forces the
-    // distributed loop.
-    if (canon.count() <= driverMaxEdges) {
-      val (names, adj) = denseAdjacency(canon.collect().map(r =>
-        (r.getString(0), r.getString(1))))
-      val n = names.length
-      var x = Array.fill(n)(1.0)
-      for (_ <- 1 to iters) {
-        // decimal(38,12) unscaled units of round(_ev, 12), exactly the
-        // in-plan round(...).cast("decimal(38,12)")
-        val units = x.map(v => BigInt(java.math.BigDecimal
-          .valueOf(roundHalfUp(v, 12))
-          .setScale(12, java.math.RoundingMode.HALF_UP).unscaledValue()))
-        val sums = Array.tabulate(n) { v =>
-          var s = BigInt(0); val nb = adj(v); var i = 0
-          while (i < nb.length) { s += units(nb(i)); i += 1 }
-          s
+    // GraphSpec pins path equality.
+    DriverPath.rows(canon) match {
+      case Some(rows) =>
+        val (names, adj) = denseAdjacency(rows.map(r =>
+          (r.getString(0), r.getString(1))))
+        val n = names.length
+        var x = Array.fill(n)(1.0)
+        for (_ <- 1 to iters) {
+          // decimal(38,12) unscaled units of round(_ev, 12), exactly the
+          // in-plan round(...).cast("decimal(38,12)")
+          val units = x.map(v => BigInt(java.math.BigDecimal
+            .valueOf(roundHalfUp(v, 12))
+            .setScale(12, java.math.RoundingMode.HALF_UP).unscaledValue()))
+          val sums = Array.tabulate(n) { v =>
+            var s = BigInt(0); val nb = adj(v); var i = 0
+            while (i < nb.length) { s += units(nb(i)); i += 1 }
+            s
+          }
+          val mxD = new java.math.BigDecimal(
+            sums.max.bigInteger, 12).doubleValue()
+          x = sums.map(s => roundHalfUp(
+            new java.math.BigDecimal(s.bigInteger, 12).doubleValue() / mxD,
+            12))
         }
-        val mxD = new java.math.BigDecimal(
-          sums.max.bigInteger, 12).doubleValue()
-        x = sums.map(s => roundHalfUp(
-          new java.math.BigDecimal(s.bigInteger, 12).doubleValue() / mxD,
-          12))
-      }
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(StructField("vertex", StringType),
-        StructField("eigenvector", DoubleType)))
-      val out = (0 until n).map(v =>
-        org.apache.spark.sql.Row(names(v), roundHalfUp(x(v), 6)))
-      return edges.sparkSession.createDataFrame(
-        edges.sparkSession.sparkContext.parallelize(out,
-          math.max(1, n / 100000)), schema)
+        import org.apache.spark.sql.types._
+        val schema = StructType(Seq(StructField("vertex", StringType),
+          StructField("eigenvector", DoubleType)))
+        val out = (0 until n).map(v =>
+          org.apache.spark.sql.Row(names(v), roundHalfUp(x(v), 6)))
+        return edges.sparkSession.createDataFrame(
+          edges.sparkSession.sparkContext.parallelize(out,
+            math.max(1, n / 100000)), schema)
+      case None =>
     }
     // partition the symmetric edge table ONCE on the per-pass join key
     // (w): localCheckpoint pins the layout, so every iteration's join
@@ -3072,8 +3050,7 @@ object Graph {
     * katz) at 6 dp.
     */
   def katzCentrality(edges: DataFrame, srcCol: String, dstCol: String,
-      alpha: Double, iters: Int = 3,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      alpha: Double, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 8,
       s"katzCentrality: iters must be in [1, 8], got $iters")
     require(alpha > 0.0 && alpha < 1.0,
@@ -3083,33 +3060,34 @@ object Graph {
     // [[eigenvectorCentrality]]'s: order-free decimal(38,12) neighbor
     // folds replicated as BigInt unscaled units, then the identical
     // α·sum + 1 double expression under the 12-dp freeze. GraphSpec
-    // pins path equality; driverMaxEdges = 0 forces the distributed
-    // loop.
-    if (canon.count() <= driverMaxEdges) {
-      val (names, adj) = denseAdjacency(canon.collect().map(r =>
-        (r.getString(0), r.getString(1))))
-      val n = names.length
-      var x = Array.fill(n)(1.0)
-      for (_ <- 1 to iters) {
-        val units = x.map(v => BigInt(java.math.BigDecimal
-          .valueOf(roundHalfUp(v, 12))
-          .setScale(12, java.math.RoundingMode.HALF_UP).unscaledValue()))
-        x = Array.tabulate(n) { v =>
-          var s = BigInt(0); val nb = adj(v); var i = 0
-          while (i < nb.length) { s += units(nb(i)); i += 1 }
-          roundHalfUp(alpha
-            * new java.math.BigDecimal(s.bigInteger, 12).doubleValue()
-            + 1.0, 12)
+    // pins path equality.
+    DriverPath.rows(canon) match {
+      case Some(rows) =>
+        val (names, adj) = denseAdjacency(rows.map(r =>
+          (r.getString(0), r.getString(1))))
+        val n = names.length
+        var x = Array.fill(n)(1.0)
+        for (_ <- 1 to iters) {
+          val units = x.map(v => BigInt(java.math.BigDecimal
+            .valueOf(roundHalfUp(v, 12))
+            .setScale(12, java.math.RoundingMode.HALF_UP).unscaledValue()))
+          x = Array.tabulate(n) { v =>
+            var s = BigInt(0); val nb = adj(v); var i = 0
+            while (i < nb.length) { s += units(nb(i)); i += 1 }
+            roundHalfUp(alpha
+              * new java.math.BigDecimal(s.bigInteger, 12).doubleValue()
+              + 1.0, 12)
+          }
         }
-      }
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(StructField("vertex", StringType),
-        StructField("katz", DoubleType)))
-      val out = (0 until n).map(v =>
-        org.apache.spark.sql.Row(names(v), roundHalfUp(x(v), 6)))
-      return edges.sparkSession.createDataFrame(
-        edges.sparkSession.sparkContext.parallelize(out,
-          math.max(1, n / 100000)), schema)
+        import org.apache.spark.sql.types._
+        val schema = StructType(Seq(StructField("vertex", StringType),
+          StructField("katz", DoubleType)))
+        val out = (0 until n).map(v =>
+          org.apache.spark.sql.Row(names(v), roundHalfUp(x(v), 6)))
+        return edges.sparkSession.createDataFrame(
+          edges.sparkSession.sparkContext.parallelize(out,
+            math.max(1, n / 100000)), schema)
+      case None =>
     }
     val sym = canon.select(col("lo").as("v"), col("hi").as("w"))
       .unionByName(canon.select(col("hi").as("v"), col("lo").as("w")))
@@ -3198,7 +3176,7 @@ object Graph {
     * halved).
     *
     * Bounds, in the [[harmonicCentrality]] driver-fast-path idiom:
-    * the deduped canonical edge list must fit `driverMaxEdges`
+    * the deduped canonical edge list must fit `maxEdges`
     * (Brandes is O(V·E) time / O(V+E) space — a 2M-edge graph is
     * minutes of driver compute; past that the honest options are the
     * distributed hop-2 form or MORE sampling, and the loud error says
@@ -3213,14 +3191,14 @@ object Graph {
     */
   def betweennessExact(edges: DataFrame, srcCol: String, dstCol: String,
       maxHops: Int = 0, sampleEvery: Int = 1,
-      driverMaxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      maxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
     require(sampleEvery >= 1, s"sampleEvery must be >= 1, got $sampleEvery")
     require(maxHops >= 0, s"maxHops must be >= 0 (0 = unbounded)")
     val canon = canonicalEdges(edges, srcCol, dstCol)
-    val pairs = canon.limit((driverMaxEdges + 1).toInt).collect()
+    val pairs = canon.limit((maxEdges + 1).toInt).collect()
       .map(r => (r.getString(0), r.getString(1)))
-    require(pairs.length <= driverMaxEdges,
-      s"betweennessExact: > $driverMaxEdges canonical edges — run the " +
+    require(pairs.length <= maxEdges,
+      s"betweennessExact: > $maxEdges canonical edges — run the " +
         "distributed hop-2 form (betweenness2) or raise sampleEvery " +
         "with a bigger driver, knowingly")
     val (names, adj) = denseAdjacency(pairs)

@@ -497,8 +497,7 @@ object Scoring {
   }
 
   def alsFactors(df: DataFrame, userCol: String, itemCol: String,
-      ratingCol: String, iters: Int = 2, lambda: Double = 0.1,
-      driverMaxRows: Long = graft.operators.Graph.HarmonicDriverMaxEdges)
+      ratingCol: String, iters: Int = 2, lambda: Double = 0.1)
       : (DataFrame, DataFrame) = {
     require(iters >= 1 && iters <= 4,
       s"alsFactors: iters must be in [1, 4], got $iters")
@@ -517,12 +516,13 @@ object Scoring {
     // factor/rating products sum in exact order-free decimal(38,12)
     // (unscaled-unit accumulators), the ridge solve trees are spelled
     // identically, and the deterministic hash init replicates Spark's
-    // long % / cast semantics. driverMaxRows = 0 forces the
-    // distributed loop (the 100 TB path). ScoringSpec pins equality.
-    if (r.count() <= driverMaxRows) {
-      return alsFactorsDriver(df.sparkSession, r.collect().map(row =>
-        (row.getLong(0), row.getLong(1), row.getDouble(2))),
+    // long % / cast semantics. The distributed loop stays the 100 TB
+    // path. ScoringSpec pins equality.
+    DriverPath.rows(r) match {
+      case Some(rows) => return alsFactorsDriver(df.sparkSession,
+        rows.map(row => (row.getLong(0), row.getLong(1), row.getDouble(2))),
         iters, lambda)
+      case None =>
     }
     var itemF = r.select("_i").distinct()
       .select(col("_i"),

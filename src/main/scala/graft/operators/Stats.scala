@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1056,9 +1056,9 @@ object Stats {
     */
   /** Driver replica of [[huberMean]] (see the fast-path note there). */
   private def huberDriverDf(df: DataFrame, pts: DataFrame,
-      groupCol: String, k: Double, iters: Int): DataFrame = {
+      collected: Array[Row], groupCol: String, k: Double,
+      iters: Int): DataFrame = {
     val rh = Graph.roundHalfUp _
-    val collected = pts.collect()
     val groups = new java.util.LinkedHashMap[Any,
       scala.collection.mutable.ArrayBuffer[Long]]()
     collected.foreach { row =>
@@ -1120,8 +1120,7 @@ object Stats {
   }
 
   def huberMean(df: DataFrame, groupCol: String, valueCol: String,
-      k: Double = 1.345, iters: Int = 2,
-      driverMaxRows: Long = Graph.HarmonicDriverMaxEdges): DataFrame = {
+      k: Double = 1.345, iters: Int = 2): DataFrame = {
     require(k > 0.0, s"huberMean: k must be > 0, got $k")
     require(iters >= 1 && iters <= 6,
       s"huberMean: iters must be in [1, 6], got $iters")
@@ -1135,10 +1134,10 @@ object Stats {
     // cannot change the rank value); w is 12-dp frozen so the decimal
     // sums are exact on both paths; the reweighted mean re-freezes at
     // 6 dp per pass; null group keys drop exactly where the final
-    // equi-join drops them. driverMaxRows = 0 forces the distributed
-    // plan; StatsSpec pins equality.
-    if (pts.count() <= driverMaxRows) {
-      return huberDriverDf(df, pts, groupCol, k, iters)
+    // equi-join drops them. StatsSpec pins equality.
+    DriverPath.rows(pts) match {
+      case Some(rows) => return huberDriverDf(df, pts, rows, groupCol, k, iters)
+      case None =>
     }
     val wv = Window.partitionBy("_g").orderBy("_x")
     val wg = Window.partitionBy("_g")
@@ -4695,13 +4694,12 @@ object Stats {
     * identical r1/U/I double trees, null group keys skipped (equi-
     * join), d = 0 cells contributing zero. */
   private def coxDriverDf(df: DataFrame, subj: DataFrame,
-      groupCol: String, iters: Int, tDesc: (Any, Any) => Boolean)
-      : DataFrame = {
+      collected: Array[Row], groupCol: String, iters: Int,
+      tDesc: (Any, Any) => Boolean): DataFrame = {
     val rh = Graph.roundHalfUp _
     def dec6Unit(t: Double): BigInt = // cast-only (no pre-round)
       BigInt(java.math.BigDecimal.valueOf(t)
         .setScale(6, java.math.RoundingMode.HALF_UP).unscaledValue())
-    val collected = subj.collect()
     // group → subjects, then sort each group by t DESC once
     val groups = new java.util.LinkedHashMap[Any,
       scala.collection.mutable.ArrayBuffer[(Any, Long, Double)]]()
@@ -4795,8 +4793,7 @@ object Stats {
   }
 
   def coxPH(df: DataFrame, groupCol: String, durationCol: String,
-      observed: Column, covariateCol: String, iters: Int = 3,
-      driverMaxRows: Long = Graph.HarmonicDriverMaxEdges): DataFrame = {
+      observed: Column, covariateCol: String, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 8, s"coxPH: iters must be in [1, 8]")
     val dec12 = "decimal(38,12)"
     val subj = df.filter(col(covariateCol).isNotNull
@@ -4832,11 +4829,12 @@ object Stats {
               b.asInstanceOf[java.sql.Date]) > 0)
           case _ => None
         }
-      if (tDesc.isDefined
-          && subj.schema("_x").dataType == DoubleType
-          && subj.count() <= driverMaxRows) {
-        return coxDriverDf(df, subj, groupCol, iters, tDesc.get)
-      }
+      if (tDesc.isDefined && subj.schema("_x").dataType == DoubleType)
+        DriverPath.rows(subj) match {
+          case Some(rows) =>
+            return coxDriverDf(df, subj, rows, groupCol, iters, tDesc.get)
+          case None =>
+        }
     }
     val wRev = Window.partitionBy("_g").orderBy(col("_t").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -4979,8 +4977,7 @@ object Stats {
     math.min(32, math.max(1, Runtime.getRuntime.availableProcessors()))
 
   def logisticFit(df: DataFrame, groupCol: String, xCol: String,
-      yCond: Column, iters: Int = 4,
-      driverMaxRows: Long = Graph.HarmonicDriverMaxEdges): DataFrame = {
+      yCond: Column, iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 8, s"logisticFit: iters must be in [1, 8]")
     val dec12 = "decimal(38,12)"
     val rows = df.filter(col(xCol).isNotNull)
@@ -4996,126 +4993,126 @@ object Stats {
     // order-free on both paths (BigInt unscaled units here), and the
     // Newton solve/output trees are spelled identically. Engaged only
     // for double x (a decimal xCol would flow decimal arithmetic
-    // through the term trees); driverMaxRows = 0 forces the
-    // distributed loop, which stays the 100 TB path. StatsSpec pins
-    // path equality; the DuckDB oracles re-verify the judged queries.
-    if (rows.count() <= driverMaxRows
-        && rows.schema("_x").dataType ==
-          org.apache.spark.sql.types.DoubleType) {
-      val collected = rows.collect()
-      val gIdx = new java.util.HashMap[Any, Integer]()
-      val gVals = new scala.collection.mutable.ArrayBuffer[Any]()
-      val nRows = collected.length
-      val gi = new Array[Int](nRows)
-      val xs = new Array[Double](nRows)
-      val ys = new Array[Double](nRows)
-      // the per-pass equi-join on _g drops null group keys (null
-      // never equals null) — replicate by skipping them outright
-      var i = 0
-      var nKept = 0
-      while (i < nRows) {
-        val row = collected(i)
-        val g = row.get(0)
-        if (g != null) {
-          var idg = gIdx.get(g)
-          if (idg == null) {
-            idg = gVals.length; gIdx.put(g, idg); gVals += g
+    // through the term trees); the distributed loop stays the 100 TB
+    // path. StatsSpec pins path equality; the DuckDB oracles re-verify
+    // the judged queries.
+    if (rows.schema("_x").dataType ==
+        org.apache.spark.sql.types.DoubleType) DriverPath.rows(rows) match {
+      case Some(collected) =>
+        val gIdx = new java.util.HashMap[Any, Integer]()
+        val gVals = new scala.collection.mutable.ArrayBuffer[Any]()
+        val nRows = collected.length
+        val gi = new Array[Int](nRows)
+        val xs = new Array[Double](nRows)
+        val ys = new Array[Double](nRows)
+        // the per-pass equi-join on _g drops null group keys (null
+        // never equals null) — replicate by skipping them outright
+        var i = 0
+        var nKept = 0
+        while (i < nRows) {
+          val row = collected(i)
+          val g = row.get(0)
+          if (g != null) {
+            var idg = gIdx.get(g)
+            if (idg == null) {
+              idg = gVals.length; gIdx.put(g, idg); gVals += g
+            }
+            gi(nKept) = idg.intValue()
+            xs(nKept) = row.getDouble(1); ys(nKept) = row.getDouble(2)
+            nKept += 1
           }
-          gi(nKept) = idg.intValue()
-          xs(nKept) = row.getDouble(1); ys(nKept) = row.getDouble(2)
-          nKept += 1
+          i += 1
         }
-        i += 1
-      }
-      val nUsed = nKept
-      val ng = gVals.length
-      val a = new Array[Double](ng); val b = new Array[Double](ng)
-      val ns = new Array[Long](ng); val ypos = new Array[Double](ng)
-      val G0 = new Array[BigInt](ng); val G1 = new Array[BigInt](ng)
-      val H00 = new Array[BigInt](ng); val H01 = new Array[BigInt](ng)
-      val H11 = new Array[BigInt](ng)
-      val nT = driverThreads
-      def pass(): Unit = {
-        java.util.Arrays.fill(ns, 0L)
-        java.util.Arrays.fill(ypos, 0.0)
-        // per-thread exact accumulators, merged after the barrier —
-        // identical totals to the distributed decimal sums (exact,
-        // order-free); ypos sums 0/1 doubles (exact in any order)
-        val tAcc = Array.fill(nT, 5)(Array.fill(ng)(new Dec12Sum))
-        val tNs = Array.fill(nT)(new Array[Long](ng))
-        val tYp = Array.fill(nT)(new Array[Double](ng))
-        parallelChunks(nUsed, nT) { (t, from, to) =>
-          val Array(g0a, g1a, h00a, h01a, h11a) = tAcc(t)
-          val nsT = tNs(t); val ypT = tYp(t)
-          var i = from
-          while (i < to) {
-            val g = gi(i); val x = xs(i); val y = ys(i)
-            val p = 1.0 / (1.0 + math.exp(-(a(g) + b(g) * x)))
-            val w = p * (1.0 - p)
-            g0a(g).add(y - p)
-            g1a(g).add(x * (y - p))
-            h00a(g).add(w)
-            h01a(g).add(x * w)
-            h11a(g).add(x * x * w)
-            nsT(g) += 1L; ypT(g) += y
-            i += 1
+        val nUsed = nKept
+        val ng = gVals.length
+        val a = new Array[Double](ng); val b = new Array[Double](ng)
+        val ns = new Array[Long](ng); val ypos = new Array[Double](ng)
+        val G0 = new Array[BigInt](ng); val G1 = new Array[BigInt](ng)
+        val H00 = new Array[BigInt](ng); val H01 = new Array[BigInt](ng)
+        val H11 = new Array[BigInt](ng)
+        val nT = driverThreads
+        def pass(): Unit = {
+          java.util.Arrays.fill(ns, 0L)
+          java.util.Arrays.fill(ypos, 0.0)
+          // per-thread exact accumulators, merged after the barrier —
+          // identical totals to the distributed decimal sums (exact,
+          // order-free); ypos sums 0/1 doubles (exact in any order)
+          val tAcc = Array.fill(nT, 5)(Array.fill(ng)(new Dec12Sum))
+          val tNs = Array.fill(nT)(new Array[Long](ng))
+          val tYp = Array.fill(nT)(new Array[Double](ng))
+          parallelChunks(nUsed, nT) { (t, from, to) =>
+            val Array(g0a, g1a, h00a, h01a, h11a) = tAcc(t)
+            val nsT = tNs(t); val ypT = tYp(t)
+            var i = from
+            while (i < to) {
+              val g = gi(i); val x = xs(i); val y = ys(i)
+              val p = 1.0 / (1.0 + math.exp(-(a(g) + b(g) * x)))
+              val w = p * (1.0 - p)
+              g0a(g).add(y - p)
+              g1a(g).add(x * (y - p))
+              h00a(g).add(w)
+              h01a(g).add(x * w)
+              h11a(g).add(x * x * w)
+              nsT(g) += 1L; ypT(g) += y
+              i += 1
+            }
+          }
+          var g = 0
+          while (g < ng) {
+            G0(g) = BigInt(0); G1(g) = BigInt(0); H00(g) = BigInt(0)
+            H01(g) = BigInt(0); H11(g) = BigInt(0)
+            var t = 0
+            while (t < nT) {
+              G0(g) += tAcc(t)(0)(g).total; G1(g) += tAcc(t)(1)(g).total
+              H00(g) += tAcc(t)(2)(g).total; H01(g) += tAcc(t)(3)(g).total
+              H11(g) += tAcc(t)(4)(g).total
+              ns(g) += tNs(t)(g); ypos(g) += tYp(t)(g)
+              t += 1
+            }
+            g += 1
           }
         }
-        var g = 0
-        while (g < ng) {
-          G0(g) = BigInt(0); G1(g) = BigInt(0); H00(g) = BigInt(0)
-          H01(g) = BigInt(0); H11(g) = BigInt(0)
-          var t = 0
-          while (t < nT) {
-            G0(g) += tAcc(t)(0)(g).total; G1(g) += tAcc(t)(1)(g).total
-            H00(g) += tAcc(t)(2)(g).total; H01(g) += tAcc(t)(3)(g).total
-            H11(g) += tAcc(t)(4)(g).total
-            ns(g) += tNs(t)(g); ypos(g) += tYp(t)(g)
-            t += 1
+        for (_ <- 1 to iters) {
+          pass()
+          var g = 0
+          while (g < ng) {
+            val h00 = dec12ToDouble(H00(g)); val h01 = dec12ToDouble(H01(g))
+            val h11 = dec12ToDouble(H11(g))
+            val g0 = dec12ToDouble(G0(g)); val g1 = dec12ToDouble(G1(g))
+            val det = h00 * h11 - h01 * h01
+            if (det > 0.0) {
+              a(g) = Graph.roundHalfUp(a(g) + (g0 * h11 - g1 * h01) / det, 12)
+              b(g) = Graph.roundHalfUp(b(g) + (g1 * h00 - g0 * h01) / det, 12)
+            }
+            g += 1
           }
-          g += 1
         }
-      }
-      for (_ <- 1 to iters) {
-        pass()
-        var g = 0
-        while (g < ng) {
+        pass() // observed information at the final params
+        import org.apache.spark.sql.types._
+        val schema = StructType(Seq(
+          StructField(groupCol, rows.schema("_g").dataType),
+          StructField("n", LongType), StructField("n_pos", LongType),
+          StructField("alpha", DoubleType), StructField("beta", DoubleType),
+          StructField("se_beta", DoubleType),
+          StructField("z_beta", DoubleType),
+          StructField("odds_ratio", DoubleType)))
+        val out = (0 until ng).map { g =>
           val h00 = dec12ToDouble(H00(g)); val h01 = dec12ToDouble(H01(g))
           val h11 = dec12ToDouble(H11(g))
-          val g0 = dec12ToDouble(G0(g)); val g1 = dec12ToDouble(G1(g))
           val det = h00 * h11 - h01 * h01
-          if (det > 0.0) {
-            a(g) = Graph.roundHalfUp(a(g) + (g0 * h11 - g1 * h01) / det, 12)
-            b(g) = Graph.roundHalfUp(b(g) + (g1 * h00 - g0 * h01) / det, 12)
-          }
-          g += 1
+          org.apache.spark.sql.Row(gVals(g), ns(g), ypos(g).toLong,
+            Graph.roundHalfUp(a(g), 6), Graph.roundHalfUp(b(g), 6),
+            if (det > 0.0) Graph.roundHalfUp(math.sqrt(h00 / det), 6)
+            else null,
+            if (det > 0.0)
+              Graph.roundHalfUp(b(g) / math.sqrt(h00 / det), 6)
+            else null,
+            Graph.roundHalfUp(math.exp(b(g)), 6))
         }
-      }
-      pass() // observed information at the final params
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField(groupCol, rows.schema("_g").dataType),
-        StructField("n", LongType), StructField("n_pos", LongType),
-        StructField("alpha", DoubleType), StructField("beta", DoubleType),
-        StructField("se_beta", DoubleType),
-        StructField("z_beta", DoubleType),
-        StructField("odds_ratio", DoubleType)))
-      val out = (0 until ng).map { g =>
-        val h00 = dec12ToDouble(H00(g)); val h01 = dec12ToDouble(H01(g))
-        val h11 = dec12ToDouble(H11(g))
-        val det = h00 * h11 - h01 * h01
-        org.apache.spark.sql.Row(gVals(g), ns(g), ypos(g).toLong,
-          Graph.roundHalfUp(a(g), 6), Graph.roundHalfUp(b(g), 6),
-          if (det > 0.0) Graph.roundHalfUp(math.sqrt(h00 / det), 6)
-          else null,
-          if (det > 0.0)
-            Graph.roundHalfUp(b(g) / math.sqrt(h00 / det), 6)
-          else null,
-          Graph.roundHalfUp(math.exp(b(g)), 6))
-      }
-      return df.sparkSession.createDataFrame(
-        df.sparkSession.sparkContext.parallelize(out,
-          math.max(1, ng / 100000)), schema)
+        return df.sparkSession.createDataFrame(
+          df.sparkSession.sparkContext.parallelize(out,
+            math.max(1, ng / 100000)), schema)
+      case None =>
     }
     def pass(params: DataFrame) = {
       val p = lit(1.0) / (lit(1.0)
@@ -5184,8 +5181,7 @@ object Stats {
     * temperature).
     */
   def temperatureScaling(df: DataFrame, scoreCol: String,
-      yCond: Column, passes: Int = 4,
-      driverMaxRows: Long = Graph.HarmonicDriverMaxEdges): DataFrame = {
+      yCond: Column, passes: Int = 4): DataFrame = {
     require(passes >= 1 && passes <= 6,
       s"temperatureScaling: passes must be in [1, 6], got $passes")
     val dec12 = "decimal(38,12)"
@@ -5198,12 +5194,11 @@ object Stats {
     // the identical clamp tree). Empty input keeps the distributed
     // plan (its global aggregate emits one n=0 row a driver replica
     // of the grouped shape would not).
-    val rowCount = rows.count()
-    if (rowCount > 0 && rowCount <= driverMaxRows
-        && rows.schema("_s").dataType ==
-          org.apache.spark.sql.types.DoubleType) {
-      return temperatureDriverDf(df, rows, passes)
-    }
+    if (rows.schema("_s").dataType == org.apache.spark.sql.types.DoubleType)
+      DriverPath.rows(rows).filter(_.nonEmpty) match {
+        case Some(collected) => return temperatureDriverDf(df, collected, passes)
+        case None =>
+      }
     def pass(params: DataFrame) = {
       val p = lit(1.0) / (lit(1.0) + exp(-(col("_w") * col("_s"))))
       rows.crossJoin(broadcast(params))
@@ -5464,8 +5459,7 @@ object Stats {
     * alpha, b1, b2, se_b1, se_b2, z_b1, z_b2).
     */
   def logisticFit2(df: DataFrame, groupCol: String, x1Col: String,
-      x2Col: String, yCond: Column, iters: Int = 4,
-      driverMaxRows: Long = Graph.HarmonicDriverMaxEdges): DataFrame = {
+      x2Col: String, yCond: Column, iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 8, s"logisticFit2: iters must be in [1, 8]")
     val dec12 = "decimal(38,12)"
     val rows = df.filter(col(x1Col).isNotNull && col(x2Col).isNotNull)
@@ -5476,154 +5470,154 @@ object Stats {
     // Small-input driver fast path — the [[logisticFit]] replica with
     // the 3×3 Cramer solve; BIT-EXACT by the same argument (exact
     // order-free decimal sums, identically-spelled double trees).
-    if (rows.count() <= driverMaxRows
-        && rows.schema("_x1").dataType ==
+    if (rows.schema("_x1").dataType ==
           org.apache.spark.sql.types.DoubleType
         && rows.schema("_x2").dataType ==
-          org.apache.spark.sql.types.DoubleType) {
-      val collected = rows.collect()
-      val gIdx = new java.util.HashMap[Any, Integer]()
-      val gVals = new scala.collection.mutable.ArrayBuffer[Any]()
-      val nRows = collected.length
-      val gi = new Array[Int](nRows)
-      val x1s = new Array[Double](nRows)
-      val x2s = new Array[Double](nRows)
-      val ys = new Array[Double](nRows)
-      // null group keys never survive the per-pass equi-join — skip
-      var i = 0
-      var nKept = 0
-      while (i < nRows) {
-        val row = collected(i)
-        val g = row.get(0)
-        if (g != null) {
-          var idg = gIdx.get(g)
-          if (idg == null) {
-            idg = gVals.length; gIdx.put(g, idg); gVals += g
+          org.apache.spark.sql.types.DoubleType) DriverPath.rows(rows) match {
+      case Some(collected) =>
+        val gIdx = new java.util.HashMap[Any, Integer]()
+        val gVals = new scala.collection.mutable.ArrayBuffer[Any]()
+        val nRows = collected.length
+        val gi = new Array[Int](nRows)
+        val x1s = new Array[Double](nRows)
+        val x2s = new Array[Double](nRows)
+        val ys = new Array[Double](nRows)
+        // null group keys never survive the per-pass equi-join — skip
+        var i = 0
+        var nKept = 0
+        while (i < nRows) {
+          val row = collected(i)
+          val g = row.get(0)
+          if (g != null) {
+            var idg = gIdx.get(g)
+            if (idg == null) {
+              idg = gVals.length; gIdx.put(g, idg); gVals += g
+            }
+            gi(nKept) = idg.intValue()
+            x1s(nKept) = row.getDouble(1); x2s(nKept) = row.getDouble(2)
+            ys(nKept) = row.getDouble(3)
+            nKept += 1
           }
-          gi(nKept) = idg.intValue()
-          x1s(nKept) = row.getDouble(1); x2s(nKept) = row.getDouble(2)
-          ys(nKept) = row.getDouble(3)
-          nKept += 1
+          i += 1
         }
-        i += 1
-      }
-      val nUsed = nKept
-      val ng = gVals.length
-      val a = new Array[Double](ng)
-      val b1 = new Array[Double](ng); val b2 = new Array[Double](ng)
-      val ns = new Array[Long](ng); val ypos = new Array[Double](ng)
-      val acc = Array.fill(9)(new Array[BigInt](ng)) // G0 G1 G2 H00 H01 H02 H11 H12 H22
-      val nT = driverThreads
-      def pass(): Unit = {
-        java.util.Arrays.fill(ns, 0L)
-        java.util.Arrays.fill(ypos, 0.0)
-        val tAcc = Array.fill(nT, 9)(Array.fill(ng)(new Dec12Sum))
-        val tNs = Array.fill(nT)(new Array[Long](ng))
-        val tYp = Array.fill(nT)(new Array[Double](ng))
-        parallelChunks(nUsed, nT) { (t, from, to) =>
-          val ta = tAcc(t); val nsT = tNs(t); val ypT = tYp(t)
-          var i = from
-          while (i < to) {
-            val g = gi(i); val x1 = x1s(i); val x2 = x2s(i); val y = ys(i)
-            val p = 1.0 / (1.0 + math.exp(-(a(g) + b1(g) * x1 + b2(g) * x2)))
-            val w = p * (1.0 - p)
-            ta(0)(g).add(y - p)
-            ta(1)(g).add(x1 * (y - p))
-            ta(2)(g).add(x2 * (y - p))
-            ta(3)(g).add(w)
-            ta(4)(g).add(x1 * w)
-            ta(5)(g).add(x2 * w)
-            ta(6)(g).add(x1 * x1 * w)
-            ta(7)(g).add(x1 * x2 * w)
-            ta(8)(g).add(x2 * x2 * w)
-            nsT(g) += 1L; ypT(g) += y
-            i += 1
+        val nUsed = nKept
+        val ng = gVals.length
+        val a = new Array[Double](ng)
+        val b1 = new Array[Double](ng); val b2 = new Array[Double](ng)
+        val ns = new Array[Long](ng); val ypos = new Array[Double](ng)
+        val acc = Array.fill(9)(new Array[BigInt](ng)) // G0 G1 G2 H00 H01 H02 H11 H12 H22
+        val nT = driverThreads
+        def pass(): Unit = {
+          java.util.Arrays.fill(ns, 0L)
+          java.util.Arrays.fill(ypos, 0.0)
+          val tAcc = Array.fill(nT, 9)(Array.fill(ng)(new Dec12Sum))
+          val tNs = Array.fill(nT)(new Array[Long](ng))
+          val tYp = Array.fill(nT)(new Array[Double](ng))
+          parallelChunks(nUsed, nT) { (t, from, to) =>
+            val ta = tAcc(t); val nsT = tNs(t); val ypT = tYp(t)
+            var i = from
+            while (i < to) {
+              val g = gi(i); val x1 = x1s(i); val x2 = x2s(i); val y = ys(i)
+              val p = 1.0 / (1.0 + math.exp(-(a(g) + b1(g) * x1 + b2(g) * x2)))
+              val w = p * (1.0 - p)
+              ta(0)(g).add(y - p)
+              ta(1)(g).add(x1 * (y - p))
+              ta(2)(g).add(x2 * (y - p))
+              ta(3)(g).add(w)
+              ta(4)(g).add(x1 * w)
+              ta(5)(g).add(x2 * w)
+              ta(6)(g).add(x1 * x1 * w)
+              ta(7)(g).add(x1 * x2 * w)
+              ta(8)(g).add(x2 * x2 * w)
+              nsT(g) += 1L; ypT(g) += y
+              i += 1
+            }
           }
-        }
-        var g = 0
-        while (g < ng) {
-          var k = 0
-          while (k < 9) {
-            var tot = BigInt(0)
+          var g = 0
+          while (g < ng) {
+            var k = 0
+            while (k < 9) {
+              var tot = BigInt(0)
+              var t = 0
+              while (t < nT) { tot += tAcc(t)(k)(g).total; t += 1 }
+              acc(k)(g) = tot
+              k += 1
+            }
             var t = 0
-            while (t < nT) { tot += tAcc(t)(k)(g).total; t += 1 }
-            acc(k)(g) = tot
-            k += 1
+            while (t < nT) {
+              ns(g) += tNs(t)(g); ypos(g) += tYp(t)(g); t += 1
+            }
+            g += 1
           }
-          var t = 0
-          while (t < nT) {
-            ns(g) += tNs(t)(g); ypos(g) += tYp(t)(g); t += 1
-          }
-          g += 1
         }
-      }
-      // the det/det0/det1/det2 double trees, spelled as in the plan
-      def solve(g: Int): (Double, Double, Double, Double, Double) = {
-        val g0 = dec12ToDouble(acc(0)(g)); val g1 = dec12ToDouble(acc(1)(g))
-        val g2 = dec12ToDouble(acc(2)(g))
-        val h00 = dec12ToDouble(acc(3)(g)); val h01 = dec12ToDouble(acc(4)(g))
-        val h02 = dec12ToDouble(acc(5)(g)); val h11 = dec12ToDouble(acc(6)(g))
-        val h12 = dec12ToDouble(acc(7)(g)); val h22 = dec12ToDouble(acc(8)(g))
-        val det = h00 * (h11 * h22 - h12 * h12) -
-          h01 * (h01 * h22 - h12 * h02) +
-          h02 * (h01 * h12 - h11 * h02)
-        val det0 = g0 * (h11 * h22 - h12 * h12) -
-          h01 * (g1 * h22 - h12 * g2) +
-          h02 * (g1 * h12 - h11 * g2)
-        val det1 = h00 * (g1 * h22 - h12 * g2) -
-          g0 * (h01 * h22 - h12 * h02) +
-          h02 * (h01 * g2 - g1 * h02)
-        val det2 = h00 * (h11 * g2 - g1 * h12) -
-          h01 * (h01 * g2 - g1 * h02) +
-          g0 * (h01 * h12 - h11 * h02)
-        (det, det0, det1, det2, 0.0)
-      }
-      for (_ <- 1 to iters) {
+        // the det/det0/det1/det2 double trees, spelled as in the plan
+        def solve(g: Int): (Double, Double, Double, Double, Double) = {
+          val g0 = dec12ToDouble(acc(0)(g)); val g1 = dec12ToDouble(acc(1)(g))
+          val g2 = dec12ToDouble(acc(2)(g))
+          val h00 = dec12ToDouble(acc(3)(g)); val h01 = dec12ToDouble(acc(4)(g))
+          val h02 = dec12ToDouble(acc(5)(g)); val h11 = dec12ToDouble(acc(6)(g))
+          val h12 = dec12ToDouble(acc(7)(g)); val h22 = dec12ToDouble(acc(8)(g))
+          val det = h00 * (h11 * h22 - h12 * h12) -
+            h01 * (h01 * h22 - h12 * h02) +
+            h02 * (h01 * h12 - h11 * h02)
+          val det0 = g0 * (h11 * h22 - h12 * h12) -
+            h01 * (g1 * h22 - h12 * g2) +
+            h02 * (g1 * h12 - h11 * g2)
+          val det1 = h00 * (g1 * h22 - h12 * g2) -
+            g0 * (h01 * h22 - h12 * h02) +
+            h02 * (h01 * g2 - g1 * h02)
+          val det2 = h00 * (h11 * g2 - g1 * h12) -
+            h01 * (h01 * g2 - g1 * h02) +
+            g0 * (h01 * h12 - h11 * h02)
+          (det, det0, det1, det2, 0.0)
+        }
+        for (_ <- 1 to iters) {
+          pass()
+          var g = 0
+          while (g < ng) {
+            val (det, det0, det1, det2, _) = solve(g)
+            if (det > 0.0) {
+              a(g) = Graph.roundHalfUp(a(g) + det0 / det, 12)
+              b1(g) = Graph.roundHalfUp(b1(g) + det1 / det, 12)
+              b2(g) = Graph.roundHalfUp(b2(g) + det2 / det, 12)
+            }
+            g += 1
+          }
+        }
         pass()
-        var g = 0
-        while (g < ng) {
-          val (det, det0, det1, det2, _) = solve(g)
-          if (det > 0.0) {
-            a(g) = Graph.roundHalfUp(a(g) + det0 / det, 12)
-            b1(g) = Graph.roundHalfUp(b1(g) + det1 / det, 12)
-            b2(g) = Graph.roundHalfUp(b2(g) + det2 / det, 12)
-          }
-          g += 1
+        import org.apache.spark.sql.types._
+        val schema = StructType(Seq(
+          StructField(groupCol, rows.schema("_g").dataType),
+          StructField("n", LongType), StructField("n_pos", LongType),
+          StructField("alpha", DoubleType),
+          StructField("b1", DoubleType), StructField("b2", DoubleType),
+          StructField("se_b1", DoubleType), StructField("se_b2", DoubleType),
+          StructField("z_b1", DoubleType), StructField("z_b2", DoubleType)))
+        val out = (0 until ng).map { g =>
+          val (det, _, _, _, _) = solve(g)
+          val h00 = dec12ToDouble(acc(3)(g)); val h01 = dec12ToDouble(acc(4)(g))
+          val h02 = dec12ToDouble(acc(5)(g)); val h11 = dec12ToDouble(acc(6)(g))
+          val h22 = dec12ToDouble(acc(8)(g))
+          val a22 = h00 * h22 - h02 * h02
+          val a33 = h00 * h11 - h01 * h01
+          org.apache.spark.sql.Row(gVals(g), ns(g), ypos(g).toLong,
+            Graph.roundHalfUp(a(g), 6),
+            Graph.roundHalfUp(b1(g), 6), Graph.roundHalfUp(b2(g), 6),
+            if (det > 0.0) Graph.roundHalfUp(math.sqrt(a22 / det), 6)
+            else null,
+            if (det > 0.0) Graph.roundHalfUp(math.sqrt(a33 / det), 6)
+            else null,
+            if (det > 0.0)
+              Graph.roundHalfUp(b1(g) / math.sqrt(a22 / det), 6)
+            else null,
+            if (det > 0.0)
+              Graph.roundHalfUp(b2(g) / math.sqrt(a33 / det), 6)
+            else null)
         }
-      }
-      pass()
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField(groupCol, rows.schema("_g").dataType),
-        StructField("n", LongType), StructField("n_pos", LongType),
-        StructField("alpha", DoubleType),
-        StructField("b1", DoubleType), StructField("b2", DoubleType),
-        StructField("se_b1", DoubleType), StructField("se_b2", DoubleType),
-        StructField("z_b1", DoubleType), StructField("z_b2", DoubleType)))
-      val out = (0 until ng).map { g =>
-        val (det, _, _, _, _) = solve(g)
-        val h00 = dec12ToDouble(acc(3)(g)); val h01 = dec12ToDouble(acc(4)(g))
-        val h02 = dec12ToDouble(acc(5)(g)); val h11 = dec12ToDouble(acc(6)(g))
-        val h22 = dec12ToDouble(acc(8)(g))
-        val a22 = h00 * h22 - h02 * h02
-        val a33 = h00 * h11 - h01 * h01
-        org.apache.spark.sql.Row(gVals(g), ns(g), ypos(g).toLong,
-          Graph.roundHalfUp(a(g), 6),
-          Graph.roundHalfUp(b1(g), 6), Graph.roundHalfUp(b2(g), 6),
-          if (det > 0.0) Graph.roundHalfUp(math.sqrt(a22 / det), 6)
-          else null,
-          if (det > 0.0) Graph.roundHalfUp(math.sqrt(a33 / det), 6)
-          else null,
-          if (det > 0.0)
-            Graph.roundHalfUp(b1(g) / math.sqrt(a22 / det), 6)
-          else null,
-          if (det > 0.0)
-            Graph.roundHalfUp(b2(g) / math.sqrt(a33 / det), 6)
-          else null)
-      }
-      return df.sparkSession.createDataFrame(
-        df.sparkSession.sparkContext.parallelize(out,
-          math.max(1, ng / 100000)), schema)
+        return df.sparkSession.createDataFrame(
+          df.sparkSession.sparkContext.parallelize(out,
+            math.max(1, ng / 100000)), schema)
+      case None =>
     }
     def pass(params: DataFrame) = {
       val p = lit(1.0) / (lit(1.0)
@@ -5725,10 +5719,9 @@ object Stats {
   /** Shared collect step of the GLM driver replicas: (group values,
     * group index per row, x, y), null group keys skipped (the
     * per-pass equi-join drops them). */
-  private def collectGlmRows(rows: DataFrame): (
+  private def collectGlmRows(collected: Array[Row]): (
       scala.collection.mutable.ArrayBuffer[Any], Array[Int],
       Array[Double], Array[Double], Int) = {
-    val collected = rows.collect()
     val gIdx = new java.util.HashMap[Any, Integer]()
     val gVals = new scala.collection.mutable.ArrayBuffer[Any]()
     val gi = new Array[Int](collected.length)
@@ -5753,8 +5746,8 @@ object Stats {
   /** Driver replica of [[poissonFit]]'s iterations (see the fast-path
     * note there). */
   private def poissonDriverDf(df: DataFrame, rows: DataFrame,
-      groupCol: String, iters: Int): DataFrame = {
-    val (gVals, gi, xs, ys, nUsed) = collectGlmRows(rows)
+      collected: Array[Row], groupCol: String, iters: Int): DataFrame = {
+    val (gVals, gi, xs, ys, nUsed) = collectGlmRows(collected)
     val ng = gVals.length
     val a = new Array[Double](ng); val b = new Array[Double](ng)
     val ns = new Array[Long](ng); val sy = new Array[Double](ng)
@@ -5858,8 +5851,8 @@ object Stats {
   /** Driver replica of [[gammaFit]]'s constant-weight IRLS (see the
     * fast-path note there). */
   private def gammaDriverDf(df: DataFrame, rows: DataFrame,
-      groupCol: String, iters: Int): DataFrame = {
-    val (gVals, gi, xs, ys, nUsed) = collectGlmRows(rows)
+      collected: Array[Row], groupCol: String, iters: Int): DataFrame = {
+    val (gVals, gi, xs, ys, nUsed) = collectGlmRows(collected)
     val ng = gVals.length
     val a = new Array[Double](ng); val b = new Array[Double](ng)
     val ns = new Array[Long](ng); val sy = new Array[Double](ng)
@@ -5956,9 +5949,8 @@ object Stats {
 
   /** Driver replica of [[temperatureScaling]]'s clamped 1-D Newton
     * passes (see the fast-path note there). */
-  private def temperatureDriverDf(df: DataFrame, rows: DataFrame,
+  private def temperatureDriverDf(df: DataFrame, collected: Array[Row],
       passes: Int): DataFrame = {
-    val collected = rows.collect()
     val n = collected.length
     val ss = new Array[Double](n); val ys = new Array[Double](n)
     var i = 0
@@ -6013,8 +6005,7 @@ object Stats {
   }
 
   def poissonFit(df: DataFrame, groupCol: String, xCol: String,
-      yCol: String, iters: Int = 4,
-      driverMaxRows: Long = Graph.HarmonicDriverMaxEdges): DataFrame = {
+      yCol: String, iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 8, s"poissonFit: iters must be in [1, 8]")
     val dec12 = "decimal(38,12)"
     val rows = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
@@ -6027,11 +6018,12 @@ object Stats {
     // terms and the Laplace-smoothed log-mean init). The init's and
     // sum_y's double sums are exact for count data (integers); the
     // 12-dp freezes guard the rest identically on both paths.
-    if (rows.count() <= driverMaxRows
-        && rows.schema("_x").dataType ==
-          org.apache.spark.sql.types.DoubleType) {
-      return poissonDriverDf(df, rows, groupCol, iters)
-    }
+    if (rows.schema("_x").dataType == org.apache.spark.sql.types.DoubleType)
+      DriverPath.rows(rows) match {
+        case Some(collected) =>
+          return poissonDriverDf(df, rows, collected, groupCol, iters)
+        case None =>
+      }
     def pass(params: DataFrame) = {
       val mu = exp(col("_a") + col("_b") * col("_x"))
       rows.join(broadcast(params), Seq("_g"))
@@ -6118,8 +6110,7 @@ object Stats {
     * dispersion).
     */
   def gammaFit(df: DataFrame, groupCol: String, xCol: String,
-      yCol: String, iters: Int = 3,
-      driverMaxRows: Long = Graph.HarmonicDriverMaxEdges): DataFrame = {
+      yCol: String, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 8, s"gammaFit: iters must be in [1, 8]")
     val dec12 = "decimal(38,12)"
     val rows = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
@@ -6134,11 +6125,12 @@ object Stats {
     // far below its 12-dp freeze (the documented portability quantum
     // the oracle replay already relies on); everything downstream is
     // exact decimal.
-    if (rows.count() <= driverMaxRows
-        && rows.schema("_x").dataType ==
-          org.apache.spark.sql.types.DoubleType) {
-      return gammaDriverDf(df, rows, groupCol, iters)
-    }
+    if (rows.schema("_x").dataType == org.apache.spark.sql.types.DoubleType)
+      DriverPath.rows(rows) match {
+        case Some(collected) =>
+          return gammaDriverDf(df, rows, collected, groupCol, iters)
+        case None =>
+      }
     def pass(params: DataFrame) = {
       val eta = col("_a") + col("_b") * col("_x")
       val mu = exp(eta)
@@ -6770,8 +6762,7 @@ object Stats {
   /** Driver replica of [[gesd]]'s passes over the collected quantized
     * cells (see the fast-path note there). */
   private def gesdDriverDf(df: DataFrame, cells0: DataFrame,
-      groupCol: String, k: Int): DataFrame = {
-    val collected = cells0.collect()
+      collected: Array[Row], groupCol: String, k: Int): DataFrame = {
     val gIdx = new java.util.HashMap[Any, Integer]()
     val gVals = new scala.collection.mutable.ArrayBuffer[Any]()
     val nc = collected.length
@@ -6866,8 +6857,7 @@ object Stats {
   }
 
   def gesd(df: DataFrame, groupCol: String, valueCol: String,
-      k: Int, driverMaxCells: Long = Graph.HarmonicDriverMaxEdges)
-      : DataFrame = {
+      k: Int): DataFrame = {
     require(k >= 1 && k <= 5, s"gesd: k must be in [1, 5], got $k")
     val dec = "decimal(38,0)"
     val cells0 = df.filter(col(valueCol).isNotNull)
@@ -6880,9 +6870,10 @@ object Stats {
     // moments are exact decimal(38,0) sums (BigInt), z/suspect are
     // the identical rounded double trees, winner ties break to max
     // xq, and null-safe group joins KEEP null groups — all term for
-    // term. driverMaxCells = 0 forces the distributed loop.
-    if (cells0.count() <= driverMaxCells) {
-      return gesdDriverDf(df, cells0, groupCol, k)
+    // term.
+    DriverPath.rows(cells0) match {
+      case Some(rows) => return gesdDriverDf(df, cells0, rows, groupCol, k)
+      case None =>
     }
     def onePass(cells: DataFrame, pass: Int)
         : (DataFrame, DataFrame) = {

@@ -825,9 +825,9 @@ class AnalyticsOpsSpec extends SparkTestBase {
     assert(out("b") == ((0.333333, 0.5, 0.5)), out("b").toString)
     assert(!out.contains("CONV") && !out.contains("START"))
     // driver fast path ≡ distributed loop, bit-identical
-    val dist = graft.operators.EventWindows.markovAttribution(
-        ev, "user", "ts", "ts", "ch", col("ch") === "CONV",
-        driverMaxCells = -1L)
+    val dist = withDriverPathMaxRows(-1L)(
+      graft.operators.EventWindows.markovAttribution(
+        ev, "user", "ts", "ts", "ch", col("ch") === "CONV"))
       .collect().map(_.toSeq.toList).sortBy(_.toString).toList
     val fast = graft.operators.EventWindows.markovAttribution(
         ev, "user", "ts", "ts", "ch", col("ch") === "CONV")
@@ -1070,8 +1070,9 @@ class AnalyticsOpsSpec extends SparkTestBase {
       val fast = graft.operators.Baskets.frequentTriples(df, "basket",
         "item", minSupport = 20L, topKPairs = cap)
         .collect().map(_.toSeq).toSet
-      val dist = graft.operators.Baskets.frequentTriples(df, "basket",
-        "item", minSupport = 20L, topKPairs = cap, driverMaxRows = 0)
+      val dist = withDriverPathMaxRows(0)(
+        graft.operators.Baskets.frequentTriples(df, "basket",
+          "item", minSupport = 20L, topKPairs = cap))
         .collect().map(_.toSeq).toSet
       assert(fast === dist, s"cap=$cap")
     }

@@ -34,9 +34,10 @@ class ClusteringSpec extends SparkTestBase {
   test("maxIters too small fails loudly, not with partial labels") {
     val edges = (1L until 10L).map(i => (i, i + 1)).toDF("i", "j")
     val ex = intercept[IllegalStateException] {
-      // driverMaxEdges = 0: this pins the DISTRIBUTED loop's contract
-      Clustering.connectedComponents(edges, "i", "j", maxIters = 2,
-        driverMaxEdges = 0L).collect()
+      // driver path off: this pins the DISTRIBUTED loop's contract
+      withDriverPathMaxRows(0L)(
+        Clustering.connectedComponents(edges, "i", "j", maxIters = 2))
+        .collect()
     }
     assert(ex.getMessage.contains("not converged"))
   }
@@ -48,15 +49,16 @@ class ClusteringSpec extends SparkTestBase {
       .toDF("i", "j")
     val fast = Clustering.connectedComponents(edges, "i", "j")
       .as[(Long, Long)].collect().toMap
-    val dist = Clustering.connectedComponents(edges, "i", "j",
-        shortcut = true, driverMaxEdges = 0L)
+    val dist = withDriverPathMaxRows(0L)(
+      Clustering.connectedComponents(edges, "i", "j",
+        shortcut = true))
       .as[(Long, Long)].collect().toMap
     assert(fast == dist, "identical min-id fixpoint on either path")
     val sEdges = Seq(("b", "c"), ("a", "b"), ("x", "y")).toDF("i", "j")
     val sFast = Clustering.connectedComponents(sEdges, "i", "j")
       .as[(String, String)].collect().toMap
-    val sDist = Clustering.connectedComponents(sEdges, "i", "j",
-        driverMaxEdges = 0L)
+    val sDist = withDriverPathMaxRows(0L)(
+      Clustering.connectedComponents(sEdges, "i", "j"))
       .as[(String, String)].collect().toMap
     assert(sFast == sDist && sFast("c") == "a" && sFast("y") == "x")
   }
@@ -305,15 +307,17 @@ class ClusteringSpec extends SparkTestBase {
     for (pts <- Seq(ptsS, ptsL); it <- Seq(0, 1, 3)) {
       val fast = Clustering.kmeansPortable(pts, "id", "vec", k = 3,
         iters = it).collect().map(_.toSeq).toSet
-      val dist = Clustering.kmeansPortable(pts, "id", "vec", k = 3,
-        iters = it, driverMaxRows = 0).collect().map(_.toSeq).toSet
+      val dist = withDriverPathMaxRows(0)(
+        Clustering.kmeansPortable(pts, "id", "vec", k = 3,
+          iters = it)).collect().map(_.toSeq).toSet
       assert(fast === dist, s"kmeans iters=$it ${pts.schema("id").dataType}")
     }
     for (pts <- Seq(ptsS, ptsL); ps <- Seq(1, 3)) {
       val fast = Clustering.gmmPortable(pts, "id", "vec", k = 3,
         passes = ps).collect().map(_.toSeq).toSet
-      val dist = Clustering.gmmPortable(pts, "id", "vec", k = 3,
-        passes = ps, driverMaxRows = 0).collect().map(_.toSeq).toSet
+      val dist = withDriverPathMaxRows(0)(
+        Clustering.gmmPortable(pts, "id", "vec", k = 3,
+          passes = ps)).collect().map(_.toSeq).toSet
       assert(fast === dist, s"gmm passes=$ps ${pts.schema("id").dataType}")
     }
   }
@@ -335,8 +339,9 @@ class ClusteringSpec extends SparkTestBase {
       val fast = Clustering.spectralClustering(edges, "s", "t",
           k = k, powerIters = it)
         .as[(String, Double, Double, Int, Double)].collect().toSet
-      val dist = Clustering.spectralClustering(edges, "s", "t",
-          k = k, powerIters = it, driverMaxEdges = 0)
+      val dist = withDriverPathMaxRows(0)(
+        Clustering.spectralClustering(edges, "s", "t",
+          k = k, powerIters = it))
         .as[(String, Double, Double, Int, Double)].collect().toSet
       assert(fast === dist, s"k=$k powerIters=$it")
     }

@@ -231,8 +231,9 @@ class GraphSpec extends SparkTestBase {
       "n3" -> "m", "m" -> "q", "q" -> "r").toDF("s", "t")
     val seeds = Seq("n1" -> "B", "n1" -> "C", "n2" -> "B",
       "n3" -> "A", "z" -> "Z").toDF("v", "l")
-    def run(maxE: Long) = Graph.labelPropagation(edges, "s", "t",
-        seeds, "v", "l", iters = 2, driverMaxEdges = maxE)
+    def run(maxE: Long) = withDriverPathMaxRows(maxE)(
+      Graph.labelPropagation(edges, "s", "t",
+        seeds, "v", "l", iters = 2))
       .collect()
       .map(r => (r.getString(0),
         if (r.isNullAt(1)) null else r.getString(1),
@@ -341,13 +342,15 @@ class GraphSpec extends SparkTestBase {
     for (hops <- Seq(1, 2, 3)) {
       val fast = graft.operators.Graph.harmonicCentrality(
         edges, "s", "d", maxHops = hops)
-      val dist = graft.operators.Graph.harmonicCentrality(
-        edges, "s", "d", maxHops = hops, driverMaxEdges = -1L)
+      val dist = withDriverPathMaxRows(-1L)(
+        graft.operators.Graph.harmonicCentrality(
+          edges, "s", "d", maxHops = hops))
       assert(canon(fast) == canon(dist), s"exact twin diverged at hops=$hops")
       val fastA = graft.operators.Graph.harmonicCentralityApprox(
         edges, "s", "d", maxHops = hops, p = 7)
-      val distA = graft.operators.Graph.harmonicCentralityApprox(
-        edges, "s", "d", maxHops = hops, p = 7, driverMaxEdges = -1L)
+      val distA = withDriverPathMaxRows(-1L)(
+        graft.operators.Graph.harmonicCentralityApprox(
+          edges, "s", "d", maxHops = hops, p = 7))
       assert(canon(fastA) == canon(distA), s"approx twin diverged at hops=$hops")
     }
   }
@@ -449,18 +452,18 @@ class GraphSpec extends SparkTestBase {
         ("k2", "k4"), ("k3", "k4"), ("x", "y"))).toDF("s", "t")
     val fT = Graph.triangleCounts(es, "s", "t")
       .collect().map(_.toSeq).toSet
-    val dT = Graph.triangleCounts(es, "s", "t", driverMaxEdges = 0)
+    val dT = withDriverPathMaxRows(0)(Graph.triangleCounts(es, "s", "t"))
       .collect().map(_.toSeq).toSet
     assert(fT === dT, "triangleCounts")
     val fX = Graph.transitivity(es, "s", "t").collect().map(_.toSeq)
-    val dX = Graph.transitivity(es, "s", "t", driverMaxEdges = 0)
+    val dX = withDriverPathMaxRows(0)(Graph.transitivity(es, "s", "t"))
       .collect().map(_.toSeq)
     assert(fX.toSeq === dX.toSeq, "transitivity")
     // wedge-free: a single edge — NULL transitivity on both paths
     val one = Seq(("a", "b")).toDF("s", "t")
     assert(Graph.transitivity(one, "s", "t").collect().map(_.toSeq)
       .toSeq ===
-      Graph.transitivity(one, "s", "t", driverMaxEdges = 0)
+      withDriverPathMaxRows(0)(Graph.transitivity(one, "s", "t"))
         .collect().map(_.toSeq).toSeq, "wedge-free")
   }
 
@@ -479,13 +482,15 @@ class GraphSpec extends SparkTestBase {
     for (cap <- Seq(3, 10, 50); kk <- Seq(5, 1000)) {
       val fa = Graph.linkPrediction(es, "s", "t", cap, kk)
         .collect().map(_.toSeq)
-      val da = Graph.linkPrediction(es, "s", "t", cap, kk,
-        driverMaxEdges = 0).collect().map(_.toSeq)
+      val da = withDriverPathMaxRows(0)(
+        Graph.linkPrediction(es, "s", "t", cap, kk))
+        .collect().map(_.toSeq)
       assert(fa.toSeq === da.toSeq, s"AA cap=$cap k=$kk")
       val fj = Graph.linkPredictionJaccard(es, "s", "t", cap, kk)
         .collect().map(_.toSeq)
-      val dj = Graph.linkPredictionJaccard(es, "s", "t", cap, kk,
-        driverMaxEdges = 0).collect().map(_.toSeq)
+      val dj = withDriverPathMaxRows(0)(
+        Graph.linkPredictionJaccard(es, "s", "t", cap, kk))
+        .collect().map(_.toSeq)
       assert(fj.toSeq === dj.toSeq, s"jaccard cap=$cap k=$kk")
     }
   }
@@ -517,8 +522,9 @@ class GraphSpec extends SparkTestBase {
     for (kk <- Seq(3, 4, 5); rr <- Seq(1, 2, 4)) {
       val fast = Graph.ktruss(g, "s", "t", k = kk, rounds = rr)
         .collect().map(_.toSeq).toSet
-      val dist = Graph.ktruss(g, "s", "t", k = kk, rounds = rr,
-        driverMaxEdges = 0).collect().map(_.toSeq).toSet
+      val dist = withDriverPathMaxRows(0)(
+        Graph.ktruss(g, "s", "t", k = kk, rounds = rr))
+        .collect().map(_.toSeq).toSet
       assert(fast === dist, s"k=$kk rounds=$rr")
     }
   }
@@ -572,7 +578,7 @@ class GraphSpec extends SparkTestBase {
       Graph.betweennessExact(c6, "s", "t", sampleEvery = 0)
     }
     intercept[IllegalArgumentException] {
-      Graph.betweennessExact(c6, "s", "t", driverMaxEdges = 2)
+      Graph.betweennessExact(c6, "s", "t", maxEdges = 2)
     }
   }
 
@@ -612,7 +618,8 @@ class GraphSpec extends SparkTestBase {
     for (p <- Seq(1, 2, 4)) {
       val fast = Graph.louvainMove(edges, "s", "t", p)
         .as[(String, String, Long)].collect().toSet
-      val dist = Graph.louvainMove(edges, "s", "t", p, driverMaxEdges = 0)
+      val dist = withDriverPathMaxRows(0)(
+        Graph.louvainMove(edges, "s", "t", p))
         .as[(String, String, Long)].collect().toSet
       assert(fast === dist, s"unweighted passes=$p")
     }
@@ -625,8 +632,8 @@ class GraphSpec extends SparkTestBase {
     for (p <- Seq(1, 3)) {
       val fast = Graph.louvainMoveWeighted(wEdges, "s", "t", "w", p)
         .as[(String, String, Long)].collect().toSet
-      val dist = Graph.louvainMoveWeighted(wEdges, "s", "t", "w", p,
-          driverMaxEdges = 0)
+      val dist = withDriverPathMaxRows(0)(
+        Graph.louvainMoveWeighted(wEdges, "s", "t", "w", p))
         .as[(String, String, Long)].collect().toSet
       assert(fast === dist, s"weighted passes=$p")
     }
@@ -645,23 +652,27 @@ class GraphSpec extends SparkTestBase {
     val dEdges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "a" -> "c",
       "c" -> "d", "e" -> "a", "e" -> "b", "b" -> "e").toDF("s", "t")
     for (it <- Seq(1, 3)) {
-      val fast = Graph.pageRank(dEdges, "s", "t", iters = it)
-        .as[(String, Double)].collect().toSet
-      val dist = Graph.pageRank(dEdges, "s", "t", iters = it,
-          driverMaxEdges = 0)
-        .as[(String, Double)].collect().toSet
-      assert(fast === dist, s"pageRank iters=$it")
+      // the empty graph reaches the replica on one path only
+      for (in <- Seq(dEdges, dEdges.limit(0))) {
+        val fast = Graph.pageRank(in, "s", "t", iters = it)
+          .as[(String, Double)].collect().toSet
+        val dist = withDriverPathMaxRows(0)(
+          Graph.pageRank(in, "s", "t", iters = it))
+          .as[(String, Double)].collect().toSet
+        assert(fast === dist, s"pageRank iters=$it")
+      }
       val fastP = Graph.pageRankPersonalized(dEdges, "s", "t",
           sources = Seq("a", "e"), iters = it)
         .as[(String, Double)].collect().toSet
-      val distP = Graph.pageRankPersonalized(dEdges, "s", "t",
-          sources = Seq("a", "e"), iters = it, driverMaxEdges = 0)
+      val distP = withDriverPathMaxRows(0)(
+        Graph.pageRankPersonalized(dEdges, "s", "t",
+          sources = Seq("a", "e"), iters = it))
         .as[(String, Double)].collect().toSet
       assert(fastP === distP, s"ppr iters=$it")
       val fastH = Graph.hits(dEdges, "s", "t", iters = it)
         .as[(String, Double, Double)].collect().toSet
-      val distH = Graph.hits(dEdges, "s", "t", iters = it,
-          driverMaxEdges = 0)
+      val distH = withDriverPathMaxRows(0)(
+        Graph.hits(dEdges, "s", "t", iters = it))
         .as[(String, Double, Double)].collect().toSet
       assert(fastH === distH, s"hits iters=$it")
     }
@@ -674,8 +685,8 @@ class GraphSpec extends SparkTestBase {
     for (it <- Seq(1, 2)) {
       val fast = Graph.pageRankWeighted(wEdges, "s", "t", "w", iters = it)
         .as[(String, Double)].collect().toSet
-      val dist = Graph.pageRankWeighted(wEdges, "s", "t", "w", iters = it,
-          driverMaxEdges = 0)
+      val dist = withDriverPathMaxRows(0)(
+        Graph.pageRankWeighted(wEdges, "s", "t", "w", iters = it))
         .as[(String, Double)].collect().toSet
       assert(fast === dist, s"pageRankWeighted iters=$it")
       assert(fast.map(_._1) === Set("a", "b", "c", "d", "x"),
@@ -688,15 +699,16 @@ class GraphSpec extends SparkTestBase {
     for (it <- Seq(1, 3, 5)) {
       val fastE = Graph.eigenvectorCentrality(uEdges, "s", "t", iters = it)
         .as[(String, Double)].collect().toSet
-      val distE = Graph.eigenvectorCentrality(uEdges, "s", "t", iters = it,
-          driverMaxEdges = 0)
+      val distE = withDriverPathMaxRows(0)(
+        Graph.eigenvectorCentrality(uEdges, "s", "t", iters = it))
         .as[(String, Double)].collect().toSet
       assert(fastE === distE, s"eigenvector iters=$it")
       val fastK = Graph.katzCentrality(uEdges, "s", "t", alpha = 0.1,
           iters = it)
         .as[(String, Double)].collect().toSet
-      val distK = Graph.katzCentrality(uEdges, "s", "t", alpha = 0.1,
-          iters = it, driverMaxEdges = 0)
+      val distK = withDriverPathMaxRows(0)(
+        Graph.katzCentrality(uEdges, "s", "t", alpha = 0.1,
+          iters = it))
         .as[(String, Double)].collect().toSet
       assert(fastK === distK, s"katz iters=$it")
     }
@@ -985,8 +997,9 @@ class GraphSpec extends SparkTestBase {
         if (r.isNullAt(2)) null else r.getLong(2))).toSet
     val cFast = cSet(Graph.contractCommunities(edges, "s", "t",
       labels, "v", "comm"))
-    val cSlow = cSet(Graph.contractCommunities(edges, "s", "t",
-      labels, "v", "comm", None, driverMaxEdges = 0L))
+    val cSlow = cSet(withDriverPathMaxRows(0L)(
+      Graph.contractCommunities(edges, "s", "t",
+        labels, "v", "comm", None)))
     assert(cFast === cSlow, s"contract paths diverge:\n$cFast\n$cSlow")
     // null community on e: least/greatest skip the null, so d-e
     // lands on (Y, Y) — with c-d and the d-d self-loop, weight 3
@@ -998,8 +1011,9 @@ class GraphSpec extends SparkTestBase {
       ("c", "d", null.asInstanceOf[java.lang.Long])).toDF("s", "t", "w")
     val wFast = cSet(Graph.contractCommunities(wEdges, "s", "t",
       labels, "v", "comm", Some("w")))
-    val wSlow = cSet(Graph.contractCommunities(wEdges, "s", "t",
-      labels, "v", "comm", Some("w"), driverMaxEdges = 0L))
+    val wSlow = cSet(withDriverPathMaxRows(0L)(
+      Graph.contractCommunities(wEdges, "s", "t",
+        labels, "v", "comm", Some("w"))))
     assert(wFast === wSlow && wFast === Set(("X", "X", 3L),
       ("Y", "Y", null)), s"$wFast vs $wSlow")
     def rSet(df: org.apache.spark.sql.DataFrame) = df
@@ -1007,8 +1021,9 @@ class GraphSpec extends SparkTestBase {
         if (r.isNullAt(1)) null else r.getString(1))).toSet
     val rFast = rSet(Graph.refineConnected(edges, "s", "t",
       labels, "v", "comm"))
-    val rSlow = rSet(Graph.refineConnected(edges, "s", "t",
-      labels, "v", "comm", driverMaxEdges = 0L))
+    val rSlow = rSet(withDriverPathMaxRows(0L)(
+      Graph.refineConnected(edges, "s", "t",
+        labels, "v", "comm")))
     assert(rFast === rSlow, s"refine paths diverge:\n$rFast\n$rSlow")
     // X = {a,b} connected (dup edge is one link); Y = {c,d} connected
     // (self-loop ignored); e's null community matches nothing -> its
@@ -1021,12 +1036,44 @@ class GraphSpec extends SparkTestBase {
       ("d", "Y")).toDF("v", "comm")
     assert(cSet(Graph.contractCommunities(edges, "s", "t", dup,
         "v", "comm"))
-      === cSet(Graph.contractCommunities(edges, "s", "t", dup,
-        "v", "comm", None, driverMaxEdges = 0L)))
+      === cSet(withDriverPathMaxRows(0L)(
+        Graph.contractCommunities(edges, "s", "t", dup,
+          "v", "comm", None))))
     val rd = Graph.refineConnected(edges, "s", "t", dup, "v", "comm")
-    val rds = Graph.refineConnected(edges, "s", "t", dup, "v", "comm",
-      driverMaxEdges = 0L)
+    val rds = withDriverPathMaxRows(0L)(
+      Graph.refineConnected(edges, "s", "t", dup, "v", "comm"))
     assert(rd.collect().map(_.toSeq).toSeq.sortBy(_.toString)
       === rds.collect().map(_.toSeq).toSeq.sortBy(_.toString))
+  }
+
+  test("contract/refine over the edge bound: one gate job per gated " +
+      "frame and no edge-list count") {
+    // RDD-backed single-partition frames, so every gate is a real job
+    // (a local Seq would be answered on the driver without one)
+    def frame(rows: Seq[(String, String)], cols: String*) =
+      spark.sparkContext.parallelize(rows, 1).toDF(cols: _*)
+    val edges = frame(Seq(("a", "b"), ("a", "b"), ("b", "c"), ("c", "d"),
+      ("d", "d"), ("d", "e"), ("a", "z"), ("e", "c")), "s", "t")
+    val labels = frame(Seq(("a", "X"), ("b", "X"), ("c", "Y"),
+      ("d", "Y"), ("e", "Y")), "v", "comm")
+    // 8 edges over a bound of 3; 5 labels under the 2x vertex bound, so
+    // both gates run and the edge gate is the one that says no
+    withDriverPathMaxRows(3) {
+      val (cJobs, contracted) = jobsDuring(Graph.contractCommunities(
+        edges, "s", "t", labels, "v", "comm"))
+      assert(cJobs.size == 2, s"contract gate jobs: $cJobs")
+      assert(!cJobs.exists(_.startsWith("count")), cJobs.toString)
+      val (rJobs, refined) = jobsDuring(Graph.refineConnected(
+        edges, "s", "t", labels, "v", "comm"))
+      // refine's own two gates, then the distributed path's
+      // connectedComponents gate on the intra-community edges
+      assert(!rJobs.exists(_.startsWith("count at Graph")), rJobs.toString)
+      assert(rJobs.count(_.contains("DriverPath")) == 3, rJobs.toString)
+      val dist = withDriverPathMaxRows(0)((
+        Graph.contractCommunities(edges, "s", "t", labels, "v", "comm"),
+        Graph.refineConnected(edges, "s", "t", labels, "v", "comm")))
+      assert(contracted.collect().toSet === dist._1.collect().toSet)
+      assert(refined.collect().toSet === dist._2.collect().toSet)
+    }
   }
 }

@@ -217,8 +217,8 @@ class ScoringSpec extends SparkTestBase {
       .toDF("u", "i", "r")
     for (it <- Seq(1, 3)) {
       val (fu, fi) = Scoring.alsFactors(df, "u", "i", "r", iters = it)
-      val (du, di) = Scoring.alsFactors(df, "u", "i", "r", iters = it,
-        driverMaxRows = 0)
+      val (du, di) = withDriverPathMaxRows(0)(
+        Scoring.alsFactors(df, "u", "i", "r", iters = it))
       assert(fu.collect().map(_.toSeq).toSet ===
         du.collect().map(_.toSeq).toSet, s"userF iters=$it")
       assert(fi.collect().map(_.toSeq).toSet ===

@@ -2156,13 +2156,15 @@ class StatsSpec extends SparkTestBase {
     for (it <- Seq(1, 3)) {
       val fast1 = Stats.logisticFit(df, "g", "x1", col("y"), iters = it)
         .collect().map(_.toSeq).toSet
-      val dist1 = Stats.logisticFit(df, "g", "x1", col("y"), iters = it,
-        driverMaxRows = 0).collect().map(_.toSeq).toSet
+      val dist1 = withDriverPathMaxRows(0)(
+        Stats.logisticFit(df, "g", "x1", col("y"), iters = it))
+        .collect().map(_.toSeq).toSet
       assert(fast1 === dist1, s"logisticFit iters=$it")
       val fast2 = Stats.logisticFit2(df, "g", "x1", "x2", col("y"),
         iters = it).collect().map(_.toSeq).toSet
-      val dist2 = Stats.logisticFit2(df, "g", "x1", "x2", col("y"),
-        iters = it, driverMaxRows = 0).collect().map(_.toSeq).toSet
+      val dist2 = withDriverPathMaxRows(0)(
+        Stats.logisticFit2(df, "g", "x1", "x2", col("y"),
+          iters = it)).collect().map(_.toSeq).toSet
       assert(fast2 === dist2, s"logisticFit2 iters=$it")
     }
   }
@@ -2178,14 +2180,16 @@ class StatsSpec extends SparkTestBase {
     for (it <- Seq(1, 3)) {
       val fp = Stats.poissonFit(cnt, "g", "x", "y", iters = it)
         .collect().map(_.toSeq).toSet
-      val dp = Stats.poissonFit(cnt, "g", "x", "y", iters = it,
-        driverMaxRows = 0).collect().map(_.toSeq).toSet
+      val dp = withDriverPathMaxRows(0)(
+        Stats.poissonFit(cnt, "g", "x", "y", iters = it))
+        .collect().map(_.toSeq).toSet
       assert(fp === dp, s"poisson iters=$it")
       val pos = cnt.withColumn("y", col("y") + 0.5)
       val fg = Stats.gammaFit(pos, "g", "x", "y", iters = it)
         .collect().map(_.toSeq).toSet
-      val dg = Stats.gammaFit(pos, "g", "x", "y", iters = it,
-        driverMaxRows = 0).collect().map(_.toSeq).toSet
+      val dg = withDriverPathMaxRows(0)(
+        Stats.gammaFit(pos, "g", "x", "y", iters = it))
+        .collect().map(_.toSeq).toSet
       assert(fg === dg, s"gamma iters=$it")
     }
     val scored = (1 to 200).map { i =>
@@ -2194,8 +2198,9 @@ class StatsSpec extends SparkTestBase {
     for (ps <- Seq(1, 4)) {
       val ft = Stats.temperatureScaling(scored, "s", col("y"), passes = ps)
         .collect().map(_.toSeq).toSet
-      val dt = Stats.temperatureScaling(scored, "s", col("y"), passes = ps,
-        driverMaxRows = 0).collect().map(_.toSeq).toSet
+      val dt = withDriverPathMaxRows(0)(
+        Stats.temperatureScaling(scored, "s", col("y"), passes = ps))
+        .collect().map(_.toSeq).toSet
       assert(ft === dt, s"tempScaling passes=$ps")
     }
   }
@@ -2218,10 +2223,11 @@ class StatsSpec extends SparkTestBase {
         (null.asInstanceOf[String], 7.5),
         (null.asInstanceOf[String], 9.0)))
       .toDF("g", "v")
-    for (kk <- Seq(1, 3, 5)) {
-      val fast = Stats.gesd(df, "g", "v", k = kk)
+    // the empty input reaches the replica on one path only
+    for (in <- Seq(df, df.limit(0)); kk <- Seq(1, 3, 5)) {
+      val fast = Stats.gesd(in, "g", "v", k = kk)
         .collect().map(_.toSeq).toSet
-      val dist = Stats.gesd(df, "g", "v", k = kk, driverMaxCells = 0)
+      val dist = withDriverPathMaxRows(0)(Stats.gesd(in, "g", "v", k = kk))
         .collect().map(_.toSeq).toSet
       assert(fast === dist, s"gesd k=$kk")
     }
@@ -2242,8 +2248,9 @@ class StatsSpec extends SparkTestBase {
     for (it <- Seq(1, 3)) {
       val fast = Stats.coxPH(df, "g", "dur", col("obs"), "x", iters = it)
         .collect().map(_.toSeq).toSet
-      val dist = Stats.coxPH(df, "g", "dur", col("obs"), "x", iters = it,
-        driverMaxRows = 0).collect().map(_.toSeq).toSet
+      val dist = withDriverPathMaxRows(0)(
+        Stats.coxPH(df, "g", "dur", col("obs"), "x", iters = it))
+        .collect().map(_.toSeq).toSet
       assert(fast === dist, s"coxPH iters=$it")
     }
   }
@@ -2259,11 +2266,13 @@ class StatsSpec extends SparkTestBase {
       ++ Seq((null.asInstanceOf[String], 3.0),
         (null.asInstanceOf[String], 4.0)))
       .toDF("g", "v")
-    for (it <- Seq(1, 2, 4)) {
-      val fast = Stats.huberMean(df, "g", "v", iters = it)
+    // the empty input reaches the replica on one path only
+    for (in <- Seq(df, df.limit(0)); it <- Seq(1, 2, 4)) {
+      val fast = Stats.huberMean(in, "g", "v", iters = it)
         .collect().map(_.toSeq).toSet
-      val dist = Stats.huberMean(df, "g", "v", iters = it,
-        driverMaxRows = 0).collect().map(_.toSeq).toSet
+      val dist = withDriverPathMaxRows(0)(
+        Stats.huberMean(in, "g", "v", iters = it))
+        .collect().map(_.toSeq).toSet
       assert(fast === dist, s"huber iters=$it")
     }
   }
