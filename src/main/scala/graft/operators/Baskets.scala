@@ -18,31 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Baskets {
 
-  /** Frequent item triples with support and 3-way lift.
-    *
-    * Pipeline (each level prunes the next):
-    *  1. distinct (basket, item) — multiplicity never double-counts;
-    *  2. frequent items (count ≥ minSupport);
-    *  3. frequent pairs among frequent items (count ≥ minSupport),
-    *     capped to `topKPairs` under (count DESC, a, b);
-    *  4. candidate triples = basket-joined item triples a < b < c
-    *     with (a,b), (a,c), (b,c) ALL in the capped frequent-pair
-    *     set (full apriori prune — three semi-joins against a
-    *     broadcast-sized table);
-    *  5. one final count ≥ minSupport, plus lift₃ =
-    *     n₃·N²/(c_a·c_b·c_c) against item independence.
-    *
-    * Determinism: exact integer counts everywhere; the only doubles
-    * are the final support/lift divisions, each one rounded tree.
-    * The topKPairs cut is a TakeOrderedAndProject total order.
-    *
-    * Scale shape: the basket table shuffles on basket for the 3-way
-    * join legs; every leg is pre-filtered by the broadcast frequent
-    * sets, so fan-out is bounded by true co-occurrence of frequent
-    * items, never raw basket size. Driver state: nothing (the capped
-    * pair set stays a DataFrame). Output: (a, b, c, n_baskets,
-    * support, lift), support-descending total order.
-    */
   /** Driver replica of [[frequentTriples]]' apriori levels (see the
     * fast-path note there). */
   private def frequentTriplesDriver(
@@ -143,12 +118,35 @@ object Baskets {
             / (itemCnt.get(a).toDouble * itemCnt.get(b)
               * itemCnt.get(c)), 6))
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out,
-        math.max(1, out.length / 100000)), schema)
+    DriverPath.frame(spark, out, schema)
       .orderBy(col("n_baskets").desc, col("a"), col("b"), col("c"))
   }
 
+  /** Frequent item triples with support and 3-way lift.
+    *
+    * Pipeline (each level prunes the next):
+    *  1. distinct (basket, item) — multiplicity never double-counts;
+    *  2. frequent items (count ≥ minSupport);
+    *  3. frequent pairs among frequent items (count ≥ minSupport),
+    *     capped to `topKPairs` under (count DESC, a, b);
+    *  4. candidate triples = basket-joined item triples a < b < c
+    *     with (a,b), (a,c), (b,c) ALL in the capped frequent-pair
+    *     set (full apriori prune — three semi-joins against a
+    *     broadcast-sized table);
+    *  5. one final count ≥ minSupport, plus lift₃ =
+    *     n₃·N²/(c_a·c_b·c_c) against item independence.
+    *
+    * Determinism: exact integer counts everywhere; the only doubles
+    * are the final support/lift divisions, each one rounded tree.
+    * The topKPairs cut is a TakeOrderedAndProject total order.
+    *
+    * Scale shape: the basket table shuffles on basket for the 3-way
+    * join legs; every leg is pre-filtered by the broadcast frequent
+    * sets, so fan-out is bounded by true co-occurrence of frequent
+    * items, never raw basket size. Driver state: nothing (the capped
+    * pair set stays a DataFrame). Output: (a, b, c, n_baskets,
+    * support, lift), support-descending total order.
+    */
   def frequentTriples(df: DataFrame, basketCol: String, itemCol: String,
       minSupport: Long, topKPairs: Int): DataFrame = {
     require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")

@@ -152,9 +152,7 @@ object Clustering {
           org.apache.spark.sql.types.StructField("cluster_id", vType)))
         val rows = labeled.map { case (v, c) =>
           org.apache.spark.sql.Row(v, c) }
-        val slices = math.max(1, rows.size / 100000)
-        return edges.sparkSession.createDataFrame(
-          edges.sparkSession.sparkContext.parallelize(rows, slices), schema)
+        return DriverPath.frame(edges.sparkSession, rows, schema)
       case None =>
     }
     // Size decisions read the EDGE LIST, not the session default. The
@@ -673,36 +671,6 @@ object Clustering {
   private def r6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Fixed-pass spherical EM-GMM (r16 verdict item 6) — the SOFT
-    * clustering beside [[kmeansPortable]]'s hard assignments, for the
-    * probabilistic-weighting curation pipelines a hard argmin can't
-    * serve. Each component c is (mean μ_c, isotropic variance σ²_c,
-    * weight π_c); deterministic init is the [[trainCentroids]] k-means
-    * centroids + σ² = 1 + uniform π (no RNG anywhere, the portability
-    * contract).
-    *
-    * E-step (per row, closed-form expression over driver-literal
-    * params): score s_c = ln π_c − (d/2)·ln σ²_c − ‖x−μ_c‖²/(2σ²_c)
-    * frozen at 12 dp, then the max-shifted softmax r_c =
-    * exp(s_c−max)/Σexp(s_c−max) frozen at 12 dp — underflow-proof and
-    * bit-reproducible (the 2π constant cancels in the softmax and is
-    * dropped). M-step: π' = Σr/n, μ' = Σr·x/Σr, σ²' =
-    * Σr·‖x−μ'‖²/(d·Σr) floored at `varFloor`; every refreshed
-    * parameter re-freezes at 6 dp (the kmeans rounding argument:
-    * summation-order noise ~1e−13 is far below the 1e−6 quantum), and
-    * a component whose responsibility mass rounds to zero keeps its
-    * previous parameters (the empty-cluster rule).
-    *
-    * Scale shape (the Lloyd discipline verbatim): params ride the plan
-    * as k·(d+2) literals — no join, no shuffle in the E-step; each
-    * M-step is TWO global aggregates (means pass, then variance pass
-    * against the refreshed means) whose map-side partials carry
-    * k·(d+1) sums per partition, never rows; the driver holds exactly
-    * the model. No posexplode anywhere.
-    *
-    * Returns (idCol, cluster [0-based argmax responsibility, ties to
-    * the lowest index], resp [the winning responsibility, 6 dp]).
-    */
   /** Driver replica of [[gmmPortable]]'s EM passes (see the
     * fast-path note there). */
   private def gmmDriverDf(spark: org.apache.spark.sql.SparkSession,
@@ -790,11 +758,39 @@ object Clustering {
       while (c < k) { if (r(c) > r(best)) best = c; c += 1 } // first max
       org.apache.spark.sql.Row(ids(v), best, r6(r(best)))
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, math.max(1, n / 100000)),
-      schema)
+    DriverPath.frame(spark, out, schema)
   }
 
+  /** Fixed-pass spherical EM-GMM (r16 verdict item 6) — the SOFT
+    * clustering beside [[kmeansPortable]]'s hard assignments, for the
+    * probabilistic-weighting curation pipelines a hard argmin can't
+    * serve. Each component c is (mean μ_c, isotropic variance σ²_c,
+    * weight π_c); deterministic init is the [[trainCentroids]] k-means
+    * centroids + σ² = 1 + uniform π (no RNG anywhere, the portability
+    * contract).
+    *
+    * E-step (per row, closed-form expression over driver-literal
+    * params): score s_c = ln π_c − (d/2)·ln σ²_c − ‖x−μ_c‖²/(2σ²_c)
+    * frozen at 12 dp, then the max-shifted softmax r_c =
+    * exp(s_c−max)/Σexp(s_c−max) frozen at 12 dp — underflow-proof and
+    * bit-reproducible (the 2π constant cancels in the softmax and is
+    * dropped). M-step: π' = Σr/n, μ' = Σr·x/Σr, σ²' =
+    * Σr·‖x−μ'‖²/(d·Σr) floored at `varFloor`; every refreshed
+    * parameter re-freezes at 6 dp (the kmeans rounding argument:
+    * summation-order noise ~1e−13 is far below the 1e−6 quantum), and
+    * a component whose responsibility mass rounds to zero keeps its
+    * previous parameters (the empty-cluster rule).
+    *
+    * Scale shape (the Lloyd discipline verbatim): params ride the plan
+    * as k·(d+2) literals — no join, no shuffle in the E-step; each
+    * M-step is TWO global aggregates (means pass, then variance pass
+    * against the refreshed means) whose map-side partials carry
+    * k·(d+1) sums per partition, never rows; the driver holds exactly
+    * the model. No posexplode anywhere.
+    *
+    * Returns (idCol, cluster [0-based argmax responsibility, ties to
+    * the lowest index], resp [the winning responsibility, 6 dp]).
+    */
   def gmmPortable(vecs: DataFrame, idCol: String, vecCol: String,
       k: Int, passes: Int, kmeansIters: Int = 1,
       varFloor: Double = 1e-6): DataFrame = {
@@ -954,9 +950,9 @@ object Clustering {
     // ClusteringSpec pins path equality; the distributed loop stays
     // the 100 TB path.
     DriverPath.rows(half) match {
-      case Some(rows) => return spectralDriverDf(edges.sparkSession,
-        rows.map(r => (r.getString(0), r.getString(1))),
-        k, powerIters, lloydIters)
+      case Some(rows) =>
+        return spectralDriverDf(edges.sparkSession, rows, k, powerIters,
+          lloydIters)
       case None =>
     }
     val sym = half.select(col("lo").as("_u"), col("hi").as("_w"))
@@ -1058,36 +1054,15 @@ object Clustering {
     * oracle's replay relies on.
     */
   private def spectralDriverDf(spark: org.apache.spark.sql.SparkSession,
-      pairs: Array[(String, String)], k: Int, powerIters: Int,
+      pairs: Array[org.apache.spark.sql.Row], k: Int, powerIters: Int,
       lloydIters: Int): DataFrame = {
     val r = Graph.roundHalfUp _
     // dense ids + symmetric neighbor arrays (canonical edges are
     // deduped and loop-free)
-    val idx = new java.util.HashMap[String, Integer]()
-    val names = new scala.collection.mutable.ArrayBuffer[String]()
-    def id(s: String): Int = {
-      val got = idx.get(s)
-      if (got != null) got.intValue()
-      else { val i = names.length; idx.put(s, i); names += s; i }
-    }
-    val m = pairs.length
-    val ea = new Array[Int](m); val eb = new Array[Int](m)
-    var i = 0
-    while (i < m) {
-      ea(i) = id(pairs(i)._1); eb(i) = id(pairs(i)._2); i += 1
-    }
-    val n = names.length
-    val deg = new Array[Long](n)
-    i = 0
-    while (i < m) { deg(ea(i)) += 1L; deg(eb(i)) += 1L; i += 1 }
-    val adj = Array.tabulate(n)(v => new Array[Int](deg(v).toInt))
-    val fill = new Array[Int](n)
-    i = 0
-    while (i < m) {
-      adj(ea(i))(fill(ea(i))) = eb(i); fill(ea(i)) += 1
-      adj(eb(i))(fill(eb(i))) = ea(i); fill(eb(i)) += 1
-      i += 1
-    }
+    val es = DriverPath.edges(pairs)
+    val (names, n) = (es.names, es.n)
+    val adj = Graph.symAdjacency(n, es.src, es.dst)
+    val deg = adj.map(_.length.toLong)
     val tot = deg.sum.toDouble
     val v1 = Array.tabulate(n)(v =>
       r(math.sqrt(deg(v).toDouble) / math.sqrt(tot), 12))
@@ -1193,8 +1168,6 @@ object Clustering {
       val (c, dist) = assign(centroids, v)
       org.apache.spark.sql.Row(names(v), eig(0)(v), eig(1)(v), c, dist)
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, n / 100000)),
-      schema)
+    DriverPath.frame(spark, rows, schema)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over DataFrame edge lists.
@@ -21,33 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Fixed-iteration PageRank on a directed edge list.
-    *
-    * rank_{t+1}(v) = (1-d)/N + d * (Σ_{u→v} rank_t(u)/outdeg(u)
-    *                                + danglingMass_t/N)
-    *
-    * Dangling vertices (no out-edges) spread their rank uniformly — the
-    * standard stochastic-matrix completion, computed as one scalar
-    * aggregate broadcast back into the update (never a driver collect).
-    *
-    * Engine-portable determinism: every rank is rounded to `roundDp`
-    * decimals at the END of each iteration, so an oracle unrolling the
-    * same iterations reproduces bit-identical doubles — float noise
-    * from shuffle-order summation lives ~1e-18, far below the 1e-12
-    * quantum, while ranks live ~1/N >> 1e-12 for any N this targets.
-    * Fixed iteration count (not convergence-tested) keeps the judged
-    * surface deterministic; callers wanting convergence run more
-    * iterations and diff successive rounds themselves.
-    *
-    * Returns one row per vertex: (vertex, rank).
-    *
-    * `assumeDistinct`: callers that can PROVE their edge list carries
-    * no duplicates (e.g. a symmetric closure of a distinct pair table
-    * over disjoint src/dst keyspaces) may skip the defensive dedup —
-    * one full edge-list shuffle saved. A duplicate edge under this
-    * flag double-counts its contribution, so assert it only on
-    * construction-guaranteed inputs.
-    */
   /** Driver replica of the [[pageRank]] / [[pageRankPersonalized]]
     * iterations over a collected deduped directed edge list
     * (`sources = null` selects the uniform-teleport form). Vertex set,
@@ -57,23 +30,11 @@ object Graph {
     * the same roundDp quantum the DuckDB oracles rely on.
     */
   private def pageRankDriverDf(spark: org.apache.spark.sql.SparkSession,
-      dedupedEdges: Array[(String, String)], iters: Int, damping: Double,
+      dedupedEdges: Array[Row], iters: Int, damping: Double,
       roundDp: Int, sources: Seq[String]): DataFrame = {
-    val idx = new java.util.HashMap[String, Integer]()
-    val names = new scala.collection.mutable.ArrayBuffer[String]()
-    def id(s: String): Int = {
-      val got = idx.get(s)
-      if (got != null) got.intValue()
-      else { val i = names.length; idx.put(s, i); names += s; i }
-    }
-    val m = dedupedEdges.length
-    val es = new Array[Int](m); val ed = new Array[Int](m)
+    val g = DriverPath.edges(dedupedEdges)
+    val (names, n, m, es, ed) = (g.names, g.n, g.m, g.src, g.dst)
     var i = 0
-    while (i < m) {
-      es(i) = id(dedupedEdges(i)._1); ed(i) = id(dedupedEdges(i)._2)
-      i += 1
-    }
-    val n = names.length
     val outdeg = new Array[Long](n)
     es.foreach(outdeg(_) += 1L)
     val nD = n.toDouble
@@ -110,12 +71,37 @@ object Graph {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("vertex", StringType),
       StructField("rank", DoubleType)))
-    val rows = (0 until n).map(v =>
-      org.apache.spark.sql.Row(names(v), rank(v)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, n / 100000)), schema)
+    DriverPath.frame(spark, (0 until n).map(v => Row(names(v), rank(v))),
+      schema)
   }
 
+  /** Fixed-iteration PageRank on a directed edge list.
+    *
+    * rank_{t+1}(v) = (1-d)/N + d * (Σ_{u→v} rank_t(u)/outdeg(u)
+    *                                + danglingMass_t/N)
+    *
+    * Dangling vertices (no out-edges) spread their rank uniformly — the
+    * standard stochastic-matrix completion, computed as one scalar
+    * aggregate broadcast back into the update (never a driver collect).
+    *
+    * Engine-portable determinism: every rank is rounded to `roundDp`
+    * decimals at the END of each iteration, so an oracle unrolling the
+    * same iterations reproduces bit-identical doubles — float noise
+    * from shuffle-order summation lives ~1e-18, far below the 1e-12
+    * quantum, while ranks live ~1/N >> 1e-12 for any N this targets.
+    * Fixed iteration count (not convergence-tested) keeps the judged
+    * surface deterministic; callers wanting convergence run more
+    * iterations and diff successive rounds themselves.
+    *
+    * Returns one row per vertex: (vertex, rank).
+    *
+    * `assumeDistinct`: callers that can PROVE their edge list carries
+    * no duplicates (e.g. a symmetric closure of a distinct pair table
+    * over disjoint src/dst keyspaces) may skip the defensive dedup —
+    * one full edge-list shuffle saved. A duplicate edge under this
+    * flag double-counts its contribution, so assert it only on
+    * construction-guaranteed inputs.
+    */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, damping: Double = 0.85, roundDp: Int = 12,
       assumeDistinct: Boolean = false): DataFrame = {
@@ -144,9 +130,8 @@ object Graph {
       .localCheckpoint() // joined every iteration: compute once
     DriverPath.rows(e) match {
       case Some(rows) =>
-        return pageRankDriverDf(edges.sparkSession,
-          rows.map(r => (r.getString(0), r.getString(1))),
-          iters, damping, roundDp, sources = null)
+        return pageRankDriverDf(edges.sparkSession, rows, iters, damping,
+          roundDp, sources = null)
       case None =>
     }
     val nodes = e.select(col("src").as("vertex"))
@@ -244,9 +229,8 @@ object Graph {
       .localCheckpoint()
     DriverPath.rows(e) match {
       case Some(rows) =>
-        return pageRankDriverDf(edges.sparkSession,
-          rows.map(r => (r.getString(0), r.getString(1))),
-          iters, damping, roundDp, sources = sources)
+        return pageRankDriverDf(edges.sparkSession, rows, iters, damping,
+          roundDp, sources = sources)
       case None =>
     }
     val nodes = e.select(col("src").as("vertex"))
@@ -345,20 +329,14 @@ object Graph {
         DriverPath.rows(nodesBase, scale = 2).map((rowsE, _))) match {
       case Some((rowsE, nodeRows)) =>
         val names = nodeRows.map(_.getString(0))
-        val idx = new java.util.HashMap[String, Integer]()
-        var i = 0
-        while (i < names.length) { idx.put(names(i), i); i += 1 }
+        val ids = new DriverPath.Ids[String]
+        names.foreach(ids(_)) // distinct: id = position
         val n = names.length
         val m = rowsE.length
-        val es = new Array[Int](m); val ed = new Array[Int](m)
-        val ew = new Array[Double](m)
-        i = 0
-        while (i < m) {
-          es(i) = idx.get(rowsE(i).getString(0)).intValue()
-          ed(i) = idx.get(rowsE(i).getString(1)).intValue()
-          ew(i) = rowsE(i).getDouble(2)
-          i += 1
-        }
+        val es = rowsE.map(r => ids(r.getString(0)))
+        val ed = rowsE.map(r => ids(r.getString(1)))
+        val ew = rowsE.map(_.getDouble(2))
+        var i = 0
         val woutArr = new Array[Double](n)
         i = 0
         while (i < m) { woutArr(es(i)) += ew(i); i += 1 }
@@ -384,11 +362,8 @@ object Graph {
         import org.apache.spark.sql.types._
         val schema = StructType(Seq(StructField("vertex", StringType),
           StructField("rank", DoubleType)))
-        val out = (0 until n).map(v =>
-          org.apache.spark.sql.Row(names(v), rank(v)))
-        return edges.sparkSession.createDataFrame(
-          edges.sparkSession.sparkContext.parallelize(out,
-            math.max(1, n / 100000)), schema)
+        return DriverPath.frame(edges.sparkSession,
+          (0 until n).map(v => Row(names(v), rank(v))), schema)
       case None =>
     }
     val e0 = e0base
@@ -469,19 +444,9 @@ object Graph {
     // same quantum, GraphSpec-pinned path equality)
     DriverPath.rows(eBase) match {
       case Some(collected) =>
-        val rows = collected.map(r => (r.getString(0), r.getString(1)))
-        val idx = new java.util.HashMap[String, Integer]()
-        val names = new scala.collection.mutable.ArrayBuffer[String]()
-        def id(s: String): Int = {
-          val got = idx.get(s)
-          if (got != null) got.intValue()
-          else { val i = names.length; idx.put(s, i); names += s; i }
-        }
-        val m = rows.length
-        val es = new Array[Int](m); val ed = new Array[Int](m)
+        val g = DriverPath.edges(collected)
+        val (names, n, m, es, ed) = (g.names, g.n, g.m, g.src, g.dst)
         var i = 0
-        while (i < m) { es(i) = id(rows(i)._1); ed(i) = id(rows(i)._2); i += 1 }
-        val n = names.length
         var hub = Array.fill(n)(1.0)
         var auth = Array.fill(n)(1.0)
         def normalize(xs: Array[Double]): Array[Double] = {
@@ -502,11 +467,8 @@ object Graph {
         import org.apache.spark.sql.types._
         val schema = StructType(Seq(StructField("vertex", StringType),
           StructField("hub", DoubleType), StructField("auth", DoubleType)))
-        val out = (0 until n).map(v =>
-          org.apache.spark.sql.Row(names(v), hub(v), auth(v)))
-        return edges.sparkSession.createDataFrame(
-          edges.sparkSession.sparkContext.parallelize(out,
-            math.max(1, n / 100000)), schema)
+        return DriverPath.frame(edges.sparkSession,
+          (0 until n).map(v => Row(names(v), hub(v), auth(v))), schema)
       case None =>
     }
     val e = eBase
@@ -628,54 +590,19 @@ object Graph {
       .agg(count(lit(1)).as("n_triangles"))
   }
 
-  /** Per-vertex triangle counts on an undirected graph given as an
-    * edge list (direction and duplicates ignored, self-loops dropped).
-    *
-    * Algorithm: canonicalize each edge ([[canonicalEdges]]), orient it
-    * low-degree-first ([[orientByDegree]] — the hub guard), then count
-    * rank-ordered wedges that close ([[triangleCorners]]).
-    *
-    * Returns (vertex, n_triangles) for vertices in >= 1 triangle.
-    */
   /** Per-vertex triangle counts over collected canonical edges: each
     * edge's |N(a)∩N(b)| via sorted-adjacency two-pointer intersection
     * credits both endpoints; t_v = half that fold (each triangle hits
     * a vertex through its two incident edges). Exact integers — the
     * enumeration strategy cannot change results (the [[ktruss]]
     * argument). */
-  private def triangleDriverCounts(pairs: Array[(String, String)])
-      : (Array[String], Array[Long]) = {
-    val idx = new java.util.HashMap[String, Integer]()
-    val names = new scala.collection.mutable.ArrayBuffer[String]()
-    def id(s: String): Int = {
-      val got = idx.get(s)
-      if (got != null) got.intValue()
-      else { val i = names.length; idx.put(s, i); names += s; i }
-    }
-    val m = pairs.length
-    val ea = new Array[Int](m); val eb = new Array[Int](m)
-    var i = 0
-    while (i < m) {
-      ea(i) = id(pairs(i)._1); eb(i) = id(pairs(i)._2); i += 1
-    }
-    val n = names.length
-    val deg = new Array[Int](n)
-    i = 0
-    while (i < m) { deg(ea(i)) += 1; deg(eb(i)) += 1; i += 1 }
-    val adj = Array.tabulate(n)(v => new Array[Int](deg(v)))
-    val fill = new Array[Int](n)
-    i = 0
-    while (i < m) {
-      adj(ea(i))(fill(ea(i))) = eb(i); fill(ea(i)) += 1
-      adj(eb(i))(fill(eb(i))) = ea(i); fill(eb(i)) += 1
-      i += 1
-    }
-    var v = 0
-    while (v < n) { java.util.Arrays.sort(adj(v)); v += 1 }
-    val nT = graft.operators.Stats.driverThreads
-    val tAcc = Array.fill(nT)(new Array[Long](n))
-    graft.operators.Stats.parallelChunks(m, nT) { (t, from, to) =>
-      val acc = tAcc(t)
+  private def triangleDriverCounts(pairs: Array[Row])
+      : (scala.collection.mutable.ArrayBuffer[String], Array[Long]) = {
+    val g = DriverPath.edges(pairs)
+    val (ea, eb) = (g.src, g.dst)
+    val adj = symAdjacency(g.n, ea, eb)
+    adj.foreach(java.util.Arrays.sort(_))
+    val tv = DriverPath.foldLongs(g.m, g.n) { (from, to, acc) =>
       var i = from
       while (i < to) {
         val a = adj(ea(i)); val b = adj(eb(i))
@@ -689,18 +616,20 @@ object Graph {
         i += 1
       }
     }
-    val tv = new Array[Long](n)
-    var t = 0
-    while (t < nT) {
-      var v = 0
-      while (v < n) { tv(v) += tAcc(t)(v); v += 1 }
-      t += 1
-    }
-    v = 0
-    while (v < n) { tv(v) /= 2L; v += 1 }
-    (names.toArray, tv)
+    var v = 0
+    while (v < g.n) { tv(v) /= 2L; v += 1 }
+    (g.names, tv)
   }
 
+  /** Per-vertex triangle counts on an undirected graph given as an
+    * edge list (direction and duplicates ignored, self-loops dropped).
+    *
+    * Algorithm: canonicalize each edge ([[canonicalEdges]]), orient it
+    * low-degree-first ([[orientByDegree]] — the hub guard), then count
+    * rank-ordered wedges that close ([[triangleCorners]]).
+    *
+    * Returns (vertex, n_triangles) for vertices in >= 1 triangle.
+    */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String)
       : DataFrame = {
     val canon = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
@@ -708,18 +637,15 @@ object Graph {
     // joins + explode + aggregate collapse to in-memory intersections.
     DriverPath.rows(canon) match {
       case Some(pairs) =>
-        val (names, tv) = triangleDriverCounts(
-          pairs.map(r => (r.getString(0), r.getString(1))))
+        val (names, tv) = triangleDriverCounts(pairs)
         import org.apache.spark.sql.types._
         val schema = StructType(Seq(StructField("vertex", StringType),
           StructField("n_triangles", LongType)))
         val rows = names.indices.collect {
           case v if tv(v) > 0L => // vertices in >= 1 triangle, as the plan
-            org.apache.spark.sql.Row(names(v), tv(v))
+            Row(names(v), tv(v))
         }
-        return edges.sparkSession.createDataFrame(
-          edges.sparkSession.sparkContext.parallelize(rows,
-            math.max(1, rows.length / 100000)), schema)
+        return DriverPath.frame(edges.sparkSession, rows, schema)
       case None =>
     }
     val (oriented, _) = orientByDegree(canon, alreadyMaterialized = true)
@@ -809,8 +735,7 @@ object Graph {
     DriverPath.rows(e, scale = 2).flatMap(es =>
         DriverPath.rows(seed, scale = 2).map((es, _))) match {
       case Some((es, seedRows)) =>
-        return labelPropDriverDf(edges.sparkSession,
-          es.map(r => (r.getString(0), r.getString(1))),
+        return labelPropDriverDf(edges.sparkSession, es,
           seedRows.map(r => (r.getString(0), r.getString(1))), iters)
       case None =>
     }
@@ -854,28 +779,19 @@ object Graph {
     * endpoints (graph-less seeds drop, as the left join dropped
     * them); every read is against the round-start state. */
   private def labelPropDriverDf(spark: org.apache.spark.sql.SparkSession,
-      sym: Array[(String, String)], seedRows: Array[(String, String)],
+      sym: Array[Row], seedRows: Array[(String, String)],
       iters: Int): DataFrame = {
-    val idx = new java.util.HashMap[String, Integer]()
-    val names = new scala.collection.mutable.ArrayBuffer[String]()
-    def id(s: String): Int = {
-      val got = idx.get(s)
-      if (got != null) got.intValue()
-      else { val i = names.length; idx.put(s, i); names += s; i }
-    }
-    val m = sym.length
-    val es = new Array[Int](m); val ed = new Array[Int](m)
+    val g = DriverPath.edges(sym)
+    val (names, n, m, es, ed) = (g.names, g.n, g.m, g.src, g.dst)
     var i = 0
-    while (i < m) { es(i) = id(sym(i)._1); ed(i) = id(sym(i)._2); i += 1 }
-    val n = names.length
     val utf8Lt = (x: String, y: String) =>
       java.util.Arrays.compareUnsigned(
         x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
         y.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
     val seedOf = new Array[String](n)
     seedRows.foreach { case (v, l) =>
-      val got = idx.get(v)
-      if (got != null) seedOf(got.intValue()) = l // graph vertices only
+      val id = g.ids.find(v)
+      if (id >= 0) seedOf(id) = l // graph vertices only
     }
     var label: Array[String] = seedOf.clone()
     for (_ <- 1 to iters) {
@@ -922,11 +838,97 @@ object Graph {
     val schema = StructType(Seq(StructField("vertex", StringType),
       StructField("label", StringType),
       StructField("is_seed", BooleanType, nullable = false)))
-    val rows = (0 until n).map(v => org.apache.spark.sql.Row(
-      names(v), label(v), seedOf(v) != null))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, n / 100000)),
-      schema)
+    DriverPath.frame(spark, (0 until n).map(v =>
+      Row(names(v), label(v), seedOf(v) != null)), schema)
+  }
+
+  /** Driver replica of the louvainMove / louvainMoveWeighted passes
+    * over collected canonical edges (`pairs`: deduped a<b with summed
+    * positive integer weight; unweighted callers pass weight 1) and
+    * per-vertex self-loop weights (`selfs`; empty for unweighted).
+    * Scores fold in BigInt — an exact superset of both the unweighted
+    * Long and the weighted decimal(38,0) arithmetic, so every
+    * comparison matches the distributed plans bit for bit. See the
+    * [[louvainMove]] doc for the replica-semantics inventory.
+    */
+  private def louvainDriverDf(spark: org.apache.spark.sql.SparkSession,
+      pairs: Array[Row], weighted: Boolean, selfs: Array[Row],
+      passes: Int): DataFrame = {
+    // dense vertex ids, first-seen over pairs then selfs; vertex set =
+    // sym endpoints ∪ self-loop-only vertices, exactly the distributed
+    // state rows
+    val g = DriverPath.edges(pairs)
+    val selfIds = selfs.map(r => g.ids(r.getString(0)))
+    val (names, n) = (g.names, g.n)
+    val nameBytes = names.map(
+      _.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
+    // adjacency (neighbor, weight); canonical pairs are deduped so no
+    // neighbor repeats; self loops live in selfW only (as distributed)
+    val pw = pairs.map(r => if (weighted) r.getLong(2) else 1L)
+    val adjE = symAdjacency(n, g.src, g.dst, edgeIds = true)
+    val adjV = Array.tabulate(n)(v =>
+      adjE(v).map(e => if (g.src(e) == v) g.dst(e) else g.src(e)))
+    val adjW = adjE.map(_.map(pw))
+    val selfW = new Array[Long](n)
+    selfs.indices.foreach(i => selfW(selfIds(i)) += selfs(i).getLong(1))
+    // weighted degree k_v (self loops twice) and total weight m
+    val k = Array.tabulate(n)(v => adjW(v).sum + 2L * selfW(v))
+    val m = BigInt(pw.sum) + BigInt(selfs.map(_.getLong(1)).sum)
+    // rank = 1-based position in UTF8-binary vertex order (denseIds)
+    val byBinary = (0 until n).sortWith((x, y) =>
+      java.util.Arrays.compareUnsigned(nameBytes(x), nameBytes(y)) < 0)
+    val rank = new Array[Long](n)
+    byBinary.zipWithIndex.foreach { case (v, i) => rank(v) = i + 1L }
+    // half-synchronous passes: every read is against the pass-start
+    // snapshot (communities AND totals), matching the DataFrame plan
+    var comm = Array.tabulate(n)(identity)
+    for (pass <- 1 to passes) {
+      val tot = new Array[Long](n) // indexed by community id
+      var v = 0
+      while (v < n) { tot(comm(v)) += k(v); v += 1 }
+      val next = comm.clone()
+      val kvc = new java.util.HashMap[Integer, Long]()
+      v = 0
+      while (v < n) {
+        if (rank(v) % 2 == pass % 2) {
+          kvc.clear()
+          val nbrs = adjV(v); val ws = adjW(v)
+          var i = 0
+          while (i < nbrs.length) {
+            val c = comm(nbrs(i))
+            kvc.merge(c, ws(i), java.lang.Long.sum(_, _))
+            i += 1
+          }
+          kvc.putIfAbsent(comm(v), 0L) // the (v, current, 0) union row
+          var bestC = -1
+          var bestScore: BigInt = null
+          val kv = BigInt(k(v))
+          val it = kvc.entrySet().iterator()
+          while (it.hasNext) {
+            val e = it.next()
+            val cand = e.getKey.intValue()
+            val totx = BigInt(tot(cand)) -
+              (if (cand == comm(v)) BigInt(k(v)) else BigInt(0))
+            val score = 2 * m * BigInt(e.getValue) - totx * kv
+            val better = bestC < 0 || score > bestScore ||
+              (score == bestScore && java.util.Arrays.compareUnsigned(
+                nameBytes(cand), nameBytes(bestC)) < 0)
+            if (better) { bestC = cand; bestScore = score }
+          }
+          next(v) = bestC
+        }
+        v += 1
+      }
+      comm = next
+    }
+    val sizes = new Array[Long](n)
+    comm.foreach(c => sizes(c) += 1L)
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("vertex", StringType),
+      StructField("community", StringType),
+      StructField("comm_size", LongType)))
+    DriverPath.frame(spark, (0 until n).map(v =>
+      Row(names(v), names(comm(v)), sizes(comm(v)))), schema)
   }
 
   /** Fixed-pass half-synchronous Louvain local-move community
@@ -988,110 +990,6 @@ object Graph {
     * bound the loop below runs unchanged; GraphSpec pins both paths
     * row-identical on the same fixtures.
     */
-  /** Driver replica of the louvainMove / louvainMoveWeighted passes
-    * over collected canonical edges (`pairs`: deduped a<b with summed
-    * positive integer weight; unweighted callers pass weight 1) and
-    * per-vertex self-loop weights (`selfs`; empty for unweighted).
-    * Scores fold in BigInt — an exact superset of both the unweighted
-    * Long and the weighted decimal(38,0) arithmetic, so every
-    * comparison matches the distributed plans bit for bit. See the
-    * [[louvainMove]] doc for the replica-semantics inventory.
-    */
-  private def louvainDriverDf(spark: org.apache.spark.sql.SparkSession,
-      pairs: Array[(String, String, Long)],
-      selfs: Array[(String, Long)], passes: Int): DataFrame = {
-    // dense vertex ids, first-seen over pairs then selfs (the
-    // denseAdjacency convention); vertex set = sym endpoints ∪
-    // self-loop-only vertices, exactly the distributed state rows
-    val idx = new java.util.HashMap[String, Integer]()
-    val names = new scala.collection.mutable.ArrayBuffer[String]()
-    def id(s: String): Int = {
-      val got = idx.get(s)
-      if (got != null) got.intValue()
-      else { val i = names.length; idx.put(s, i); names += s; i }
-    }
-    pairs.foreach { case (a, b, _) => id(a); id(b) }
-    selfs.foreach { case (v, _) => id(v) }
-    val n = names.length
-    val nameBytes = names.map(
-      _.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
-    // adjacency (neighbor, weight); canonical pairs are deduped so no
-    // neighbor repeats; self loops live in selfW only (as distributed)
-    val deg = new Array[Int](n)
-    pairs.foreach { case (a, b, _) => deg(id(a)) += 1; deg(id(b)) += 1 }
-    val adjV = Array.tabulate(n)(v => new Array[Int](deg(v)))
-    val adjW = Array.tabulate(n)(v => new Array[Long](deg(v)))
-    val fill = new Array[Int](n)
-    pairs.foreach { case (a, b, w) =>
-      val (ia, ib) = (id(a), id(b))
-      adjV(ia)(fill(ia)) = ib; adjW(ia)(fill(ia)) = w; fill(ia) += 1
-      adjV(ib)(fill(ib)) = ia; adjW(ib)(fill(ib)) = w; fill(ib) += 1
-    }
-    val selfW = new Array[Long](n)
-    selfs.foreach { case (v, w) => selfW(id(v)) += w }
-    // weighted degree k_v (self loops twice) and total weight m
-    val k = Array.tabulate(n)(v => adjW(v).sum + 2L * selfW(v))
-    val m = BigInt(pairs.map(_._3).sum) + BigInt(selfs.map(_._2).sum)
-    // rank = 1-based position in UTF8-binary vertex order (denseIds)
-    val byBinary = (0 until n).sortWith((x, y) =>
-      java.util.Arrays.compareUnsigned(nameBytes(x), nameBytes(y)) < 0)
-    val rank = new Array[Long](n)
-    byBinary.zipWithIndex.foreach { case (v, i) => rank(v) = i + 1L }
-    // half-synchronous passes: every read is against the pass-start
-    // snapshot (communities AND totals), matching the DataFrame plan
-    var comm = Array.tabulate(n)(identity)
-    for (pass <- 1 to passes) {
-      val tot = new Array[Long](n) // indexed by community id
-      var v = 0
-      while (v < n) { tot(comm(v)) += k(v); v += 1 }
-      val next = comm.clone()
-      val kvc = new java.util.HashMap[Integer, Long]()
-      v = 0
-      while (v < n) {
-        if (rank(v) % 2 == pass % 2) {
-          kvc.clear()
-          val nbrs = adjV(v); val ws = adjW(v)
-          var i = 0
-          while (i < nbrs.length) {
-            val c = comm(nbrs(i))
-            kvc.merge(c, ws(i), java.lang.Long.sum(_, _))
-            i += 1
-          }
-          kvc.putIfAbsent(comm(v), 0L) // the (v, current, 0) union row
-          var bestC = -1
-          var bestScore: BigInt = null
-          val kv = BigInt(k(v))
-          val it = kvc.entrySet().iterator()
-          while (it.hasNext) {
-            val e = it.next()
-            val cand = e.getKey.intValue()
-            val totx = BigInt(tot(cand)) -
-              (if (cand == comm(v)) BigInt(k(v)) else BigInt(0))
-            val score = 2 * m * BigInt(e.getValue) - totx * kv
-            val better = bestC < 0 || score > bestScore ||
-              (score == bestScore && java.util.Arrays.compareUnsigned(
-                nameBytes(cand), nameBytes(bestC)) < 0)
-            if (better) { bestC = cand; bestScore = score }
-          }
-          next(v) = bestC
-        }
-        v += 1
-      }
-      comm = next
-    }
-    val sizes = new Array[Long](n)
-    comm.foreach(c => sizes(c) += 1L)
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("vertex", StringType),
-      StructField("community", StringType),
-      StructField("comm_size", LongType)))
-    val rows = (0 until n).map(v => org.apache.spark.sql.Row(
-      names(v), names(comm(v)), sizes(comm(v))))
-    val slices = math.max(1, n / 100000)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, slices), schema)
-  }
-
   def louvainMove(edges: DataFrame, srcCol: String, dstCol: String,
       passes: Int): DataFrame = {
     require(passes >= 1 && passes <= 8,
@@ -1099,11 +997,8 @@ object Graph {
     val canonBase = canonicalEdges(edges, srcCol, dstCol)
       .localCheckpoint() // read for the path decision, then reused
     DriverPath.rows(canonBase) match {
-      case Some(rows) =>
-        val pairs = rows.map(r =>
-          (r.getString(0), r.getString(1), 1L))
-        return louvainDriverDf(edges.sparkSession, pairs,
-          Array.empty[(String, Long)], passes)
+      case Some(rows) => return louvainDriverDf(edges.sparkSession, rows,
+        weighted = false, Array.empty[Row], passes)
       case None =>
     }
     val canon = canonBase
@@ -1206,11 +1101,8 @@ object Graph {
       .localCheckpoint()
     DriverPath.rows(canon).flatMap(cs =>
         DriverPath.rows(selfW).map((cs, _))) match {
-      case Some((cs, ss)) =>
-        val pairs = cs.map(r =>
-          (r.getString(0), r.getString(1), r.getLong(2)))
-        val selfs = ss.map(r => (r.getString(0), r.getLong(1)))
-        return louvainDriverDf(edges.sparkSession, pairs, selfs, passes)
+      case Some((cs, ss)) => return louvainDriverDf(edges.sparkSession, cs,
+        weighted = true, ss, passes)
       case None =>
     }
     val sym = canon
@@ -1367,9 +1259,7 @@ object Graph {
       out += org.apache.spark.sql.Row(k._1, k._2,
         if (cell(1) == java.lang.Boolean.TRUE) cell(0) else null)
     }
-    Some(spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toIndexedSeq,
-        math.max(1, out.length / 100000)), schema))
+    Some(DriverPath.frame(spark, out.toIndexedSeq, schema))
   }
 
   /** Multi-level Louvain: run [[louvainMove]] on the raw graph, then
@@ -1580,9 +1470,7 @@ object Graph {
         org.apache.spark.sql.Row(v, if (rc != null) rc else v)
       }
     }
-    Some(spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toIndexedSeq,
-        math.max(1, out.length / 100000)), schema))
+    Some(DriverPath.frame(spark, out.toIndexedSeq, schema))
   }
 
   /** Multi-level LEIDEN: [[louvainMultilevel]] with
@@ -1682,23 +1570,6 @@ object Graph {
     e.groupBy(col("src").as("vertex")).agg(count(lit(1)).as("degree"))
   }
 
-  /** Adamic–Adar link prediction: score NON-adjacent vertex pairs by
-    * their common neighbors, each weighted 1/ln(deg) so rare shared
-    * neighbors count more than hubs — the classic "people you may
-    * know" / co-purchase recommendation baseline.
-    *
-    * Scale guards: candidate pairs are path-2 joins THROUGH a middle
-    * vertex, so a hub middle mints deg² pairs — middles above
-    * `maxMiddleDegree` are dropped by exact degree before the join
-    * (deterministic, documented recall trade: a hub's 1/ln(deg)
-    * contribution is the smallest anyway). Existing edges are
-    * anti-joined out (prediction means NOT-yet-linked), and only the
-    * top-k by (score DESC, a, b) total order return. Common-neighbor
-    * counts are exact integers; the 1/ln(deg) fold is the mutualInfo
-    * float class, rounded at 6 dp.
-    *
-    * Output: (a, b, common_neighbors, adamic_adar), k rows.
-    */
   /** Driver replica of the [[linkPrediction]] /
     * [[linkPredictionJaccard]] candidate machinery: path-2 pairs
     * through degree-capped middles, enumerated per middle over
@@ -1712,22 +1583,10 @@ object Graph {
     * the in-memory budget.
     */
   private def linkPredDriverDf(spark: org.apache.spark.sql.SparkSession,
-      pairs: Array[(String, String)], maxMiddleDegree: Int, k: Int,
+      pairs: Array[Row], maxMiddleDegree: Int, k: Int,
       jaccardMode: Boolean): Option[DataFrame] = {
-    val idx = new java.util.HashMap[String, Integer]()
-    val names = new scala.collection.mutable.ArrayBuffer[String]()
-    def id(s: String): Int = {
-      val got = idx.get(s)
-      if (got != null) got.intValue()
-      else { val i = names.length; idx.put(s, i); names += s; i }
-    }
-    val m = pairs.length
-    val ea = new Array[Int](m); val eb = new Array[Int](m)
-    var i = 0
-    while (i < m) {
-      ea(i) = id(pairs(i)._1); eb(i) = id(pairs(i)._2); i += 1
-    }
-    val n = names.length
+    val g = DriverPath.edges(pairs)
+    val (names, n, m, ea, eb) = (g.names, g.n, g.m, g.src, g.dst)
     if (n >= (1 << 24) || maxMiddleDegree >= (1 << 16)) return None
     // UTF8-binary rank: the plans' string '<' over vertex names
     val nameBytes = names.map(_.getBytes("UTF-8")).toArray
@@ -1736,9 +1595,13 @@ object Graph {
     val rank = new Array[Int](n)
     byBinary.zipWithIndex.foreach { case (v, r) => rank(v) = r }
     val ofRank = byBinary.toArray // rank -> id
-    val deg = new Array[Int](n)
-    i = 0
-    while (i < m) { deg(ea(i)) += 1; deg(eb(i)) += 1; i += 1 }
+    // neighbor RANK lists per middle
+    val adj = symAdjacency(n, ea, eb)
+    adj.foreach { nb =>
+      var j = 0
+      while (j < nb.length) { nb(j) = rank(nb(j)); j += 1 }
+    }
+    val deg = adj.map(_.length)
     // wedge-fan budget before allocating
     var fan = 0L
     var v = 0
@@ -1748,15 +1611,6 @@ object Graph {
       v += 1
     }
     if (fan > 64000000L) return None
-    // neighbor RANK lists per middle
-    val adj = Array.tabulate(n)(v => new Array[Int](deg(v)))
-    val fill = new Array[Int](n)
-    i = 0
-    while (i < m) {
-      adj(ea(i))(fill(ea(i))) = rank(eb(i)); fill(ea(i)) += 1
-      adj(eb(i))(fill(eb(i))) = rank(ea(i)); fill(eb(i)) += 1
-      i += 1
-    }
     // pair keys: rankX<<40 | rankY<<16 | middleDeg (deg <= cap < 2^16)
     val keys = new Array[Long](fan.toInt)
     val starts = new Array[Long](n + 1)
@@ -1767,10 +1621,9 @@ object Graph {
           deg(v).toLong * (deg(v) - 1L) / 2L else 0L)
       v += 1
     }
-    val nT = graft.operators.Stats.driverThreads
     // chunk by vertex but force threading on wedge WORK, not count
-    graft.operators.Stats.parallelChunks(n, nT,
-        minN = if (fan > 1000000L) 1 else 65536) { (_, from, to) =>
+    DriverPath.parallelFor(n,
+        minN = if (fan > 1000000L) 1 else 65536) { (from, to) =>
       var u = from
       while (u < to) {
         if (deg(u) <= maxMiddleDegree && deg(u) >= 2) {
@@ -1794,7 +1647,7 @@ object Graph {
     java.util.Arrays.parallelSort(keys)
     // existing canonical edges as rank-pair keys (lo rank < hi rank)
     val edgeSet = new java.util.HashSet[Long](m * 2)
-    i = 0
+    var i = 0
     while (i < m) {
       val ra = rank(ea(i)); val rb = rank(eb(i))
       val (lo, hi) = if (ra < rb) (ra, rb) else (rb, ra)
@@ -1823,6 +1676,7 @@ object Graph {
     // per-pair results are independent, so the split cannot change
     // any score
     val total = keys.length
+    val nT = DriverPath.threads
     val cut = new Array[Int](nT + 1)
     cut(nT) = total
     var t = 1
@@ -1835,8 +1689,7 @@ object Graph {
     }
     val heaps = Array.fill(nT)(
       new java.util.PriorityQueue[Cand](k + 1, ord.reversed()))
-    graft.operators.Stats.parallelChunks(nT, nT, minN = 1) {
-      (_, tFrom, tTo) =>
+    DriverPath.parallelFor(nT, minN = 1) { (tFrom, tTo) =>
       var ti = tFrom
       while (ti < tTo) {
         val heap = heaps(ti)
@@ -1879,12 +1732,27 @@ object Graph {
       StructField("b", StringType),
       StructField("common_neighbors", LongType),
       StructField(scoreName, DoubleType)))
-    val rows = sorted.map(c =>
-      org.apache.spark.sql.Row(c.a, c.b, c.common, c.score))
-    Some(spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema))
+    Some(DriverPath.frame(spark,
+      sorted.map(c => Row(c.a, c.b, c.common, c.score)).toIndexedSeq, schema))
   }
 
+  /** Adamic–Adar link prediction: score NON-adjacent vertex pairs by
+    * their common neighbors, each weighted 1/ln(deg) so rare shared
+    * neighbors count more than hubs — the classic "people you may
+    * know" / co-purchase recommendation baseline.
+    *
+    * Scale guards: candidate pairs are path-2 joins THROUGH a middle
+    * vertex, so a hub middle mints deg² pairs — middles above
+    * `maxMiddleDegree` are dropped by exact degree before the join
+    * (deterministic, documented recall trade: a hub's 1/ln(deg)
+    * contribution is the smallest anyway). Existing edges are
+    * anti-joined out (prediction means NOT-yet-linked), and only the
+    * top-k by (score DESC, a, b) total order return. Common-neighbor
+    * counts are exact integers; the 1/ln(deg) fold is the mutualInfo
+    * float class, rounded at 6 dp.
+    *
+    * Output: (a, b, common_neighbors, adamic_adar), k rows.
+    */
   def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
       maxMiddleDegree: Int, k: Int): DataFrame = {
     require(maxMiddleDegree >= 2,
@@ -1897,9 +1765,8 @@ object Graph {
     // joins + aggregate compute distributedly is enumerated in memory
     // (see [[linkPredDriverDf]]); falls back past the key/fan budgets.
     DriverPath.rows(half).flatMap(rows =>
-        linkPredDriverDf(edges.sparkSession,
-          rows.map(r => (r.getString(0), r.getString(1))),
-          maxMiddleDegree, k, jaccardMode = false)) match {
+        linkPredDriverDf(edges.sparkSession, rows, maxMiddleDegree, k,
+          jaccardMode = false)) match {
       case Some(df) => return df
       case None =>
     }
@@ -1987,8 +1854,7 @@ object Graph {
     // (uncapped degree denominators, same candidates and anti-join)
     DriverPath.rows(half).flatMap(rows =>
         linkPredDriverDf(edges.sparkSession,
-          rows.map(r => (r.getString(0), r.getString(1))),
-          maxMiddleDegree, k, jaccardMode = true)) match {
+          rows, maxMiddleDegree, k, jaccardMode = true)) match {
       case Some(df) => return df
       case None =>
     }
@@ -2100,7 +1966,7 @@ object Graph {
       case Some(rows) =>
         val pairs = rows.map(r =>
           (r.getString(0), r.getString(1)))
-        val (names, tv) = triangleDriverCounts(pairs)
+        val (names, tv) = triangleDriverCounts(rows)
         val deg = new java.util.HashMap[String, Long]()
         pairs.foreach { case (a, b) =>
           deg.merge(a, 1L, java.lang.Long.sum(_, _))
@@ -2385,13 +2251,6 @@ object Graph {
         col("n_communities"))
   }
 
-  /** Default driver fast-path bound ([[DriverPath.MaxRowsConf]]), in
-    * gated rows — for the graph kernels, deduped CANONICAL edges (so
-    * ~2M edges ≈ 50 MB collected strings + 16 MB dense adjacency — the
-    * broadcast-join size class). Above it the distributed forms run
-    * unchanged. */
-  private[graft] val HarmonicDriverMaxEdges = 2000000L
-
   /** Drop the cached blocks behind a locally-checkpointed frame whose
     * every consumer has since been EAGERLY materialized into its own
     * checkpoint (r19, guide §5 "unpersist when done"): without this,
@@ -2405,40 +2264,41 @@ object Graph {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(blocking = false))
 
-  /** Dense-index adjacency from collected canonical (lo, hi) edges:
-    * vertex names in first-seen order + symmetric neighbor arrays.
-    * Canonical edges are deduped and loop-free, so no neighbor list
-    * contains duplicates or self-entries. */
-  private def denseAdjacency(pairs: Array[(String, String)])
-      : (Array[String], Array[Array[Int]]) = {
-    val idx = new java.util.HashMap[String, Integer]()
-    val names = new scala.collection.mutable.ArrayBuffer[String]()
-    def id(s: String): Int = {
-      val got = idx.get(s)
-      if (got != null) got.intValue()
-      else { val i = names.length; idx.put(s, i); names += s; i }
-    }
-    val degs = new scala.collection.mutable.ArrayBuffer[Int]()
-    val ea = new Array[Int](pairs.length)
-    val eb = new Array[Int](pairs.length)
+  /** The replicas' symmetric adjacency over the edges (ea(i), eb(i))
+    * of an n-vertex graph: each vertex's neighbors in edge order
+    * (callers that intersect lists sort them). `keep` = null keeps
+    * every edge, else edge i only when keep(i); `edgeIds` stores the
+    * incident edge's index instead of the neighbor. */
+  private[operators] def symAdjacency(n: Int, ea: Array[Int], eb: Array[Int],
+      keep: Array[Boolean] = null, edgeIds: Boolean = false)
+      : Array[Array[Int]] = {
+    val deg = new Array[Int](n)
     var i = 0
-    while (i < pairs.length) {
-      val a = id(pairs(i)._1); val b = id(pairs(i)._2)
-      while (degs.length < names.length) degs += 0
-      degs(a) += 1; degs(b) += 1
-      ea(i) = a; eb(i) = b
+    while (i < ea.length) {
+      if (keep == null || keep(i)) { deg(ea(i)) += 1; deg(eb(i)) += 1 }
       i += 1
     }
-    val adj = Array.tabulate(names.length)(v => new Array[Int](degs(v)))
-    val fill = new Array[Int](names.length)
+    val adj = Array.tabulate(n)(v => new Array[Int](deg(v)))
+    val fill = new Array[Int](n)
     i = 0
-    while (i < pairs.length) {
-      val a = ea(i); val b = eb(i)
-      adj(a)(fill(a)) = b; fill(a) += 1
-      adj(b)(fill(b)) = a; fill(b) += 1
+    while (i < ea.length) {
+      if (keep == null || keep(i)) {
+        val a = ea(i); val b = eb(i)
+        adj(a)(fill(a)) = if (edgeIds) i else b; fill(a) += 1
+        adj(b)(fill(b)) = if (edgeIds) i else a; fill(b) += 1
+      }
       i += 1
     }
-    (names.toArray, adj)
+    adj
+  }
+
+  /** Collected canonical (lo, hi) edges as vertex names in first-seen
+    * order + symmetric neighbor arrays. Canonical edges are deduped
+    * and loop-free, so no neighbor list holds duplicates or self-entries. */
+  private def denseAdjacency(rows: Array[Row])
+      : (scala.collection.mutable.ArrayBuffer[String], Array[Array[Int]]) = {
+    val g = DriverPath.edges(rows)
+    (g.names, symAdjacency(g.n, g.src, g.dst))
   }
 
   /** Spark's `round(double, scale)` semantics (HALF_UP over the
@@ -2459,10 +2319,7 @@ object Graph {
       StructField("vertex", StringType) +:
         hopNames.map(nm => StructField(nm, hopType)) :+
         StructField("harmonic", DoubleType))
-    val slices = math.max(1, rows.length / 100000)
-    edges.sparkSession.createDataFrame(
-      edges.sparkSession.sparkContext.parallelize(
-        rows.toIndexedSeq, slices), schema)
+    DriverPath.frame(edges.sparkSession, rows.toIndexedSeq, schema)
   }
 
   /** Bounded-hop harmonic centrality: Σ over vertices within `maxHops`
@@ -2504,8 +2361,7 @@ object Graph {
     // same fixture. The bound is edge-count (collect cost ~50 B/edge).
     DriverPath.rows(canon) match {
       case Some(rows) =>
-        val (names, adj) = denseAdjacency(rows.map(r =>
-          (r.getString(0), r.getString(1))))
+        val (names, adj) = denseAdjacency(rows)
         val n = names.length
         val visited = Array.fill(n)(-1)
         val bufA = new Array[Int](n)
@@ -2639,8 +2495,7 @@ object Graph {
       case Some(rows) =>
         import org.apache.spark.sql.catalyst.expressions.XxHash64Function
         import org.apache.spark.unsafe.types.UTF8String
-        val (names, adj) = denseAdjacency(rows.map(r =>
-          (r.getString(0), r.getString(1))))
+        val (names, adj) = denseAdjacency(rows)
         val n = names.length
         val m = 1 << p
         val hashes = new Array[Long](n)
@@ -2761,74 +2616,23 @@ object Graph {
         harmonic.cast("double").as("harmonic"): _*)
   }
 
-  /** k-truss by FIXED peeling rounds — the EDGE-cohesion dual of
-    * [[kcore]] (a k-core survives on degree alone; a k-truss edge
-    * must sit in ≥ k−2 triangles of the surviving graph, so trusses
-    * reject the star/bridge structures cores admit — the standard
-    * community-core extractor): each round recounts per-edge triangle
-    * support on the CURRENT graph and drops edges below k−2; rounds
-    * is fixed (the [[kcore]] contract — convergence is when a round
-    * removes nothing; size rounds to the expected peel depth,
-    * deterministic either way).
-    *
-    * Support counting enumerates each triangle once via the canonical
-    * a<b<c wedge join + closing-edge equi-join — exact integer
-    * counts, so the enumeration strategy cannot change results; at
-    * hub-skewed 100 TB the [[orientByDegree]] degeneracy orientation
-    * is the drop-in wedge guard (same integers, √(2E)-bounded
-    * fan-out).
-    *
-    * Output: the surviving edges with their support in the FINAL
-    * graph — (a, b, support); support is recomputed after the last
-    * round, so a non-converged peel is visible (edges with support
-    * < k−2 remaining means add rounds).
-    */
   /** Driver replica of [[ktruss]]'s peeling rounds: per-edge support
     * = |N(a) ∩ N(b)| on the current graph (exact integers — the
     * distributed wedge enumeration counts the same triangles, so the
     * strategy cannot change results), drop < k−2 after each full
     * count (half-synchronous, as the plan), final support recount. */
   private def ktrussDriverDf(spark: org.apache.spark.sql.SparkSession,
-      pairs: Array[(String, String)], k: Int, rounds: Int): DataFrame = {
-    val idx = new java.util.HashMap[String, Integer]()
-    val names = new scala.collection.mutable.ArrayBuffer[String]()
-    def id(s: String): Int = {
-      val got = idx.get(s)
-      if (got != null) got.intValue()
-      else { val i = names.length; idx.put(s, i); names += s; i }
-    }
-    val m = pairs.length
-    val ea = new Array[Int](m); val eb = new Array[Int](m)
-    var i = 0
-    while (i < m) {
-      ea(i) = id(pairs(i)._1); eb(i) = id(pairs(i)._2); i += 1
-    }
-    val n = names.length
+      pairs: Array[Row], k: Int, rounds: Int): DataFrame = {
+    val g = DriverPath.edges(pairs)
+    val (names, m, ea, eb) = (g.names, g.m, g.src, g.dst)
     val alive = Array.fill(m)(true)
     val sup = new Array[Long](m)
-    val nT = graft.operators.Stats.driverThreads
     def countSupports(): Unit = {
       // adjacency of the CURRENT graph, neighbor ids sorted for the
       // two-pointer intersection
-      val deg = new Array[Int](n)
-      var i = 0
-      while (i < m) {
-        if (alive(i)) { deg(ea(i)) += 1; deg(eb(i)) += 1 }
-        i += 1
-      }
-      val adj = Array.tabulate(n)(v => new Array[Int](deg(v)))
-      val fill = new Array[Int](n)
-      i = 0
-      while (i < m) {
-        if (alive(i)) {
-          adj(ea(i))(fill(ea(i))) = eb(i); fill(ea(i)) += 1
-          adj(eb(i))(fill(eb(i))) = ea(i); fill(eb(i)) += 1
-        }
-        i += 1
-      }
-      var v = 0
-      while (v < n) { java.util.Arrays.sort(adj(v)); v += 1 }
-      graft.operators.Stats.parallelChunks(m, nT) { (_, from, to) =>
+      val adj = symAdjacency(g.n, ea, eb, keep = alive)
+      adj.foreach(java.util.Arrays.sort(_))
+      DriverPath.parallelFor(m) { (from, to) =>
         var i = from
         while (i < to) {
           if (alive(i)) {
@@ -2858,14 +2662,33 @@ object Graph {
     val schema = StructType(Seq(StructField("a", StringType),
       StructField("b", StringType), StructField("support", LongType)))
     val out = (0 until m).collect {
-      case i if alive(i) =>
-        org.apache.spark.sql.Row(names(ea(i)), names(eb(i)), sup(i))
+      case i if alive(i) => Row(names(ea(i)), names(eb(i)), sup(i))
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out,
-        math.max(1, out.length / 100000)), schema)
+    DriverPath.frame(spark, out, schema)
   }
 
+  /** k-truss by FIXED peeling rounds — the EDGE-cohesion dual of
+    * [[kcore]] (a k-core survives on degree alone; a k-truss edge
+    * must sit in ≥ k−2 triangles of the surviving graph, so trusses
+    * reject the star/bridge structures cores admit — the standard
+    * community-core extractor): each round recounts per-edge triangle
+    * support on the CURRENT graph and drops edges below k−2; rounds
+    * is fixed (the [[kcore]] contract — convergence is when a round
+    * removes nothing; size rounds to the expected peel depth,
+    * deterministic either way).
+    *
+    * Support counting enumerates each triangle once via the canonical
+    * a<b<c wedge join + closing-edge equi-join — exact integer
+    * counts, so the enumeration strategy cannot change results; at
+    * hub-skewed 100 TB the [[orientByDegree]] degeneracy orientation
+    * is the drop-in wedge guard (same integers, √(2E)-bounded
+    * fan-out).
+    *
+    * Output: the surviving edges with their support in the FINAL
+    * graph — (a, b, support); support is recomputed after the last
+    * round, so a non-converged peel is visible (edges with support
+    * < k−2 remaining means add rounds).
+    */
   def ktruss(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"ktruss: k must be >= 3, got $k")
@@ -2878,8 +2701,8 @@ object Graph {
     // milliseconds at bench scale. Pure integers — bit-exact by
     // construction. GraphSpec pins path equality.
     DriverPath.rows(e) match {
-      case Some(rows) => return ktrussDriverDf(edges.sparkSession,
-        rows.map(r => (r.getString(0), r.getString(1))), k, rounds)
+      case Some(rows) =>
+        return ktrussDriverDf(edges.sparkSession, rows, k, rounds)
       case None =>
     }
     def support(cur: DataFrame): DataFrame = {
@@ -2971,8 +2794,7 @@ object Graph {
     // GraphSpec pins path equality.
     DriverPath.rows(canon) match {
       case Some(rows) =>
-        val (names, adj) = denseAdjacency(rows.map(r =>
-          (r.getString(0), r.getString(1))))
+        val (names, adj) = denseAdjacency(rows)
         val n = names.length
         var x = Array.fill(n)(1.0)
         for (_ <- 1 to iters) {
@@ -2995,11 +2817,8 @@ object Graph {
         import org.apache.spark.sql.types._
         val schema = StructType(Seq(StructField("vertex", StringType),
           StructField("eigenvector", DoubleType)))
-        val out = (0 until n).map(v =>
-          org.apache.spark.sql.Row(names(v), roundHalfUp(x(v), 6)))
-        return edges.sparkSession.createDataFrame(
-          edges.sparkSession.sparkContext.parallelize(out,
-            math.max(1, n / 100000)), schema)
+        return DriverPath.frame(edges.sparkSession,
+          (0 until n).map(v => Row(names(v), roundHalfUp(x(v), 6))), schema)
       case None =>
     }
     // partition the symmetric edge table ONCE on the per-pass join key
@@ -3063,8 +2882,7 @@ object Graph {
     // pins path equality.
     DriverPath.rows(canon) match {
       case Some(rows) =>
-        val (names, adj) = denseAdjacency(rows.map(r =>
-          (r.getString(0), r.getString(1))))
+        val (names, adj) = denseAdjacency(rows)
         val n = names.length
         var x = Array.fill(n)(1.0)
         for (_ <- 1 to iters) {
@@ -3082,11 +2900,8 @@ object Graph {
         import org.apache.spark.sql.types._
         val schema = StructType(Seq(StructField("vertex", StringType),
           StructField("katz", DoubleType)))
-        val out = (0 until n).map(v =>
-          org.apache.spark.sql.Row(names(v), roundHalfUp(x(v), 6)))
-        return edges.sparkSession.createDataFrame(
-          edges.sparkSession.sparkContext.parallelize(out,
-            math.max(1, n / 100000)), schema)
+        return DriverPath.frame(edges.sparkSession,
+          (0 until n).map(v => Row(names(v), roundHalfUp(x(v), 6))), schema)
       case None =>
     }
     val sym = canon.select(col("lo").as("v"), col("hi").as("w"))
@@ -3191,12 +3006,11 @@ object Graph {
     */
   def betweennessExact(edges: DataFrame, srcCol: String, dstCol: String,
       maxHops: Int = 0, sampleEvery: Int = 1,
-      maxEdges: Long = HarmonicDriverMaxEdges): DataFrame = {
+      maxEdges: Long = DriverPath.DefaultMaxRows): DataFrame = {
     require(sampleEvery >= 1, s"sampleEvery must be >= 1, got $sampleEvery")
     require(maxHops >= 0, s"maxHops must be >= 0 (0 = unbounded)")
     val canon = canonicalEdges(edges, srcCol, dstCol)
     val pairs = canon.limit((maxEdges + 1).toInt).collect()
-      .map(r => (r.getString(0), r.getString(1)))
     require(pairs.length <= maxEdges,
       s"betweennessExact: > $maxEdges canonical edges — run the " +
         "distributed hop-2 form (betweenness2) or raise sampleEvery " +
@@ -3262,8 +3076,6 @@ object Graph {
       names(v), roundHalfUp(bet(v) / 2.0, 6))) // undirected: halve
     val schema = StructType(Seq(StructField("vertex", StringType),
       StructField("betweenness", DoubleType)))
-    edges.sparkSession.createDataFrame(
-      edges.sparkSession.sparkContext.parallelize(
-        rows.toIndexedSeq, math.max(1, n / 100000)), schema)
+    DriverPath.frame(edges.sparkSession, rows.toIndexedSeq, schema)
   }
 }

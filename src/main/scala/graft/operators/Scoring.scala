@@ -367,6 +367,69 @@ object Scoring {
         .cast("double").as("ess")): _*)
   }
 
+  /** Driver replica of [[alsFactors]]' half-passes (see the fast-path
+    * note there). */
+  private def alsFactorsDriver(spark: org.apache.spark.sql.SparkSession,
+      ratings: Array[org.apache.spark.sql.Row], iters: Int, lambda: Double)
+      : (DataFrame, DataFrame) = {
+    val r = graft.operators.Graph.roundHalfUp _
+    val n = ratings.length
+    val users = new DriverPath.Ids[Long]; val items = new DriverPath.Ids[Long]
+    val ru = ratings.map(row => users(row.getLong(0)))
+    val ri = ratings.map(row => items(row.getLong(1)))
+    val rr = ratings.map(_.getDouble(2))
+    val (uVals, iVals) = (users.keys, items.keys)
+    val nu = uVals.length; val ni = iVals.length
+    // deterministic hash init, Spark's long % / double-cast spelling
+    var itemF1 = Array.tabulate(ni)(i =>
+      r(0.5 + (iVals(i) % 7).toDouble * 0.1, 12))
+    var itemF2 = Array.tabulate(ni)(i =>
+      r(0.3 + (iVals(i) % 11).toDouble * 0.04, 12))
+    var userF1 = new Array[Double](nu); var userF2 = new Array[Double](nu)
+    // one half-pass: solve for `outN` keys from the other side's
+    // factors; exact decimal sums, the identical ridge solve trees
+    def solve(outN: Int, outKey: Array[Int], inKey: Array[Int],
+        inF1: Array[Double], inF2: Array[Double])
+        : (Array[Double], Array[Double]) = {
+      // sums a11 a12 a22 b1 b2
+      val s = DriverPath.fold(n, outN, outKey, 5) { (k, t) =>
+        val in = inKey(k)
+        val f1 = inF1(in); val f2 = inF2(in); val rt = rr(k)
+        t(0) = f1 * f1; t(1) = f1 * f2; t(2) = f2 * f2
+        t(3) = rt * f1; t(4) = rt * f2
+      }
+      val o1 = new Array[Double](outN); val o2 = new Array[Double](outN)
+      var o = 0
+      while (o < outN) {
+        val a11 = s.d(0, o) + lambda
+        val a22 = s.d(2, o) + lambda
+        val a12 = s.d(1, o)
+        val b1 = s.d(3, o); val b2 = s.d(4, o)
+        val det = a11 * a22 - a12 * a12
+        o1(o) = if (det > 0.0) r((b1 * a22 - b2 * a12) / det, 12) else 0.0
+        o2(o) = if (det > 0.0) r((a11 * b2 - a12 * b1) / det, 12) else 0.0
+        o += 1
+      }
+      (o1, o2)
+    }
+    for (_ <- 1 to iters) {
+      val (u1, u2) = solve(nu, ru, ri, itemF1, itemF2)
+      userF1 = u1; userF2 = u2
+      val (i1, i2) = solve(ni, ri, ru, userF1, userF2)
+      itemF1 = i1; itemF2 = i2
+    }
+    import org.apache.spark.sql.types._
+    def mk(keyName: String, keys: scala.collection.mutable.ArrayBuffer[Long],
+        f1: Array[Double], f2: Array[Double]): DataFrame = {
+      val schema = StructType(Seq(StructField(keyName, LongType),
+        StructField("_f1", DoubleType), StructField("_f2", DoubleType)))
+      val rows = keys.indices.map(j =>
+        org.apache.spark.sql.Row(keys(j), f1(j), f2(j)))
+      DriverPath.frame(spark, rows, schema)
+    }
+    (mk("_u", uVals, userF1, userF2), mk("_i", iVals, itemF1, itemF2))
+  }
+
   /** Rank-2 ALS matrix factorization with closed-form per-block normal
     * equations (r16 verdict item 3) — the latent-factor recommender
     * beside [[itemKnnRecommend]]'s neighborhood model, built exactly
@@ -402,100 +465,6 @@ object Scoring {
     * Returns (userFactors(_u,_f1,_f2), itemFactors(_i,_f1,_f2)),
     * factors frozen at 12 dp.
     */
-  /** Driver replica of [[alsFactors]]' half-passes (see the fast-path
-    * note there). */
-  private def alsFactorsDriver(spark: org.apache.spark.sql.SparkSession,
-      ratings: Array[(Long, Long, Double)], iters: Int, lambda: Double)
-      : (DataFrame, DataFrame) = {
-    val r = graft.operators.Graph.roundHalfUp _
-    val n = ratings.length
-    val uIdx = new java.util.HashMap[Long, Integer]()
-    val iIdx = new java.util.HashMap[Long, Integer]()
-    val uVals = new scala.collection.mutable.ArrayBuffer[Long]()
-    val iVals = new scala.collection.mutable.ArrayBuffer[Long]()
-    val ru = new Array[Int](n); val ri = new Array[Int](n)
-    val rr = new Array[Double](n)
-    var k = 0
-    while (k < n) {
-      val (u, i, x) = ratings(k)
-      var iu = uIdx.get(u)
-      if (iu == null) { iu = uVals.length; uIdx.put(u, iu); uVals += u }
-      var ii = iIdx.get(i)
-      if (ii == null) { ii = iVals.length; iIdx.put(i, ii); iVals += i }
-      ru(k) = iu.intValue(); ri(k) = ii.intValue(); rr(k) = x
-      k += 1
-    }
-    val nu = uVals.length; val ni = iVals.length
-    // deterministic hash init, Spark's long % / double-cast spelling
-    var itemF1 = Array.tabulate(ni)(i =>
-      r(0.5 + (iVals(i) % 7).toDouble * 0.1, 12))
-    var itemF2 = Array.tabulate(ni)(i =>
-      r(0.3 + (iVals(i) % 11).toDouble * 0.04, 12))
-    var userF1 = new Array[Double](nu); var userF2 = new Array[Double](nu)
-    val nT = Stats.driverThreads
-    // one half-pass: solve for `outN` keys from the other side's
-    // factors; exact decimal sums, the identical ridge solve trees
-    def solve(outN: Int, outKey: Array[Int], inKey: Array[Int],
-        inF1: Array[Double], inF2: Array[Double])
-        : (Array[Double], Array[Double]) = {
-      val tAcc = Array.fill(nT, 5)(Array.fill(outN)(new Stats.Dec12Sum))
-      Stats.parallelChunks(n, nT) { (t, from, to) =>
-        val ta = tAcc(t)
-        var k = from
-        while (k < to) {
-          val o = outKey(k); val in = inKey(k)
-          val f1 = inF1(in); val f2 = inF2(in); val rt = rr(k)
-          ta(0)(o).add(f1 * f1)
-          ta(1)(o).add(f1 * f2)
-          ta(2)(o).add(f2 * f2)
-          ta(3)(o).add(rt * f1)
-          ta(4)(o).add(rt * f2)
-          k += 1
-        }
-      }
-      val o1 = new Array[Double](outN); val o2 = new Array[Double](outN)
-      var o = 0
-      while (o < outN) {
-        var a11u = BigInt(0); var a12u = BigInt(0); var a22u = BigInt(0)
-        var b1u = BigInt(0); var b2u = BigInt(0)
-        var t = 0
-        while (t < nT) {
-          a11u += tAcc(t)(0)(o).total; a12u += tAcc(t)(1)(o).total
-          a22u += tAcc(t)(2)(o).total; b1u += tAcc(t)(3)(o).total
-          b2u += tAcc(t)(4)(o).total
-          t += 1
-        }
-        val a11 = Stats.dec12ToDouble(a11u) + lambda
-        val a22 = Stats.dec12ToDouble(a22u) + lambda
-        val a12 = Stats.dec12ToDouble(a12u)
-        val b1 = Stats.dec12ToDouble(b1u); val b2 = Stats.dec12ToDouble(b2u)
-        val det = a11 * a22 - a12 * a12
-        o1(o) = if (det > 0.0) r((b1 * a22 - b2 * a12) / det, 12) else 0.0
-        o2(o) = if (det > 0.0) r((a11 * b2 - a12 * b1) / det, 12) else 0.0
-        o += 1
-      }
-      (o1, o2)
-    }
-    for (_ <- 1 to iters) {
-      val (u1, u2) = solve(nu, ru, ri, itemF1, itemF2)
-      userF1 = u1; userF2 = u2
-      val (i1, i2) = solve(ni, ri, ru, userF1, userF2)
-      itemF1 = i1; itemF2 = i2
-    }
-    import org.apache.spark.sql.types._
-    def mk(keyName: String, keys: scala.collection.mutable.ArrayBuffer[Long],
-        f1: Array[Double], f2: Array[Double]): DataFrame = {
-      val schema = StructType(Seq(StructField(keyName, LongType),
-        StructField("_f1", DoubleType), StructField("_f2", DoubleType)))
-      val rows = keys.indices.map(j =>
-        org.apache.spark.sql.Row(keys(j), f1(j), f2(j)))
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, math.max(1, rows.length / 100000)),
-        schema)
-    }
-    (mk("_u", uVals, userF1, userF2), mk("_i", iVals, itemF1, itemF2))
-  }
-
   def alsFactors(df: DataFrame, userCol: String, itemCol: String,
       ratingCol: String, iters: Int = 2, lambda: Double = 0.1)
       : (DataFrame, DataFrame) = {
@@ -519,9 +488,8 @@ object Scoring {
     // long % / cast semantics. The distributed loop stays the 100 TB
     // path. ScoringSpec pins equality.
     DriverPath.rows(r) match {
-      case Some(rows) => return alsFactorsDriver(df.sparkSession,
-        rows.map(row => (row.getLong(0), row.getLong(1), row.getDouble(2))),
-        iters, lambda)
+      case Some(rows) =>
+        return alsFactorsDriver(df.sparkSession, rows, iters, lambda)
       case None =>
     }
     var itemF = r.select("_i").distinct()

@@ -1030,51 +1030,20 @@ object Stats {
           .cast("double"))
   }
 
-  /** Huber M-estimator of location by FIXED IRLS iterations — the
-    * robust mean between [[robustOutliers]]' median (50% breakdown,
-    * low efficiency) and the plain mean (efficient, zero breakdown):
-    * minimize Huber loss with tuning constant k (1.345 ≈ 95%
-    * gaussian efficiency), solved by iteratively reweighted means
-    * w = min(1, k·ŝ/|x − μ|) with the robust scale ŝ = 1.4826·MAD
-    * FROZEN up front (the standard one-step-scale variant — re-
-    * estimating scale per pass is a different, less stable
-    * estimator).
-    *
-    * Determinism ([[logisticFit]]'s fixed-iteration contract): exact
-    * lower median / MAD from the [[robustOutliers]] integer windows
-    * seed μ0 and ŝ; per pass the weights freeze at 12 dp and the
-    * weighted values at 6 dp into order-free decimal sums, μ
-    * re-freezes at 6 dp (scaled units). MAD = 0 degenerates
-    * gracefully: only rows AT the median keep weight 1, so the fit
-    * returns the median — no NULL contract needed.
-    *
-    * Scale shape: the robustOutliers windows once + per iteration one
-    * broadcast params join and one group aggregate; the caveat is the
-    * same single-giant-group sort as robustOutliers (swap the rank
-    * median for the approx dual at that scale). Output: (group, n,
-    * median, mad, huber_mean).
-    */
   /** Driver replica of [[huberMean]] (see the fast-path note there). */
   private def huberDriverDf(df: DataFrame, pts: DataFrame,
       collected: Array[Row], groupCol: String, k: Double,
       iters: Int): DataFrame = {
     val rh = Graph.roundHalfUp _
-    val groups = new java.util.LinkedHashMap[Any,
-      scala.collection.mutable.ArrayBuffer[Long]]()
-    collected.foreach { row =>
-      val g = row.get(0)
-      if (g != null) { // the final equi-join drops null groups
-        var buf = groups.get(g)
-        if (buf == null) {
-          buf = new scala.collection.mutable.ArrayBuffer[Long]()
-          groups.put(g, buf)
-        }
-        buf += row.getLong(1)
-      }
+    // the final equi-join drops null groups
+    val (ids, gOf) = DriverPath.intern(collected, keepNulls = false)
+    val values = Array.fill(ids.size)(
+      new scala.collection.mutable.ArrayBuffer[Long]())
+    collected.indices.foreach { i =>
+      if (gOf(i) >= 0) values(gOf(i)) += collected(i).getLong(1)
     }
-    import scala.jdk.CollectionConverters._
-    val out = groups.entrySet().asScala.toIndexedSeq.map { e =>
-      val xs = e.getValue.toArray
+    val out = ids.keys.indices.map { g =>
+      val xs = values(g).toArray
       java.util.Arrays.sort(xs)
       val n = xs.length
       val medRank = (n + 1) / 2 // floor((n+1)/2), 1-based
@@ -1105,7 +1074,7 @@ object Stats {
           m = rh(swxD / swD, 6)
         }
       }
-      org.apache.spark.sql.Row(e.getKey, n.toLong,
+      org.apache.spark.sql.Row(ids.keys(g), n.toLong,
         rh(med / 1e6, 6), rh(mad / 1e6, 6), rh(m / 1e6, 6))
     }
     import org.apache.spark.sql.types._
@@ -1114,11 +1083,33 @@ object Stats {
       StructField("n", LongType), StructField("median", DoubleType),
       StructField("mad", DoubleType),
       StructField("huber_mean", DoubleType)))
-    df.sparkSession.createDataFrame(
-      df.sparkSession.sparkContext.parallelize(out,
-        math.max(1, out.length / 100000)), schema)
+    DriverPath.frame(df.sparkSession, out, schema)
   }
 
+  /** Huber M-estimator of location by FIXED IRLS iterations — the
+    * robust mean between [[robustOutliers]]' median (50% breakdown,
+    * low efficiency) and the plain mean (efficient, zero breakdown):
+    * minimize Huber loss with tuning constant k (1.345 ≈ 95%
+    * gaussian efficiency), solved by iteratively reweighted means
+    * w = min(1, k·ŝ/|x − μ|) with the robust scale ŝ = 1.4826·MAD
+    * FROZEN up front (the standard one-step-scale variant — re-
+    * estimating scale per pass is a different, less stable
+    * estimator).
+    *
+    * Determinism ([[logisticFit]]'s fixed-iteration contract): exact
+    * lower median / MAD from the [[robustOutliers]] integer windows
+    * seed μ0 and ŝ; per pass the weights freeze at 12 dp and the
+    * weighted values at 6 dp into order-free decimal sums, μ
+    * re-freezes at 6 dp (scaled units). MAD = 0 degenerates
+    * gracefully: only rows AT the median keep weight 1, so the fit
+    * returns the median — no NULL contract needed.
+    *
+    * Scale shape: the robustOutliers windows once + per iteration one
+    * broadcast params join and one group aggregate; the caveat is the
+    * same single-giant-group sort as robustOutliers (swap the rank
+    * median for the approx dual at that scale). Output: (group, n,
+    * median, mad, huber_mean).
+    */
   def huberMean(df: DataFrame, groupCol: String, valueCol: String,
       k: Double = 1.345, iters: Int = 2): DataFrame = {
     require(k > 0.0, s"huberMean: k must be > 0, got $k")
@@ -4663,31 +4654,6 @@ object Stats {
           lit(tau).cast("bigint").as("tau"))
   }
 
-  /** Cox proportional-hazards fit, one covariate, Breslow ties, FIXED
-    * Newton iterations from β = 0 — the regression member of the
-    * survival family: KM/Nelson–Aalen describe a curve, the log-rank
-    * tests two groups, the c-index grades a score, Cox puts a
-    * HAZARD RATIO with a standard error on the covariate. Partial
-    * likelihood: U(β) = Σ_events [Σx_event − d·S1/S0],
-    * I(β) = Σ_events d·(S2/S0 − (S1/S0)²) with S_k(t) =
-    * Σ_{T_j ≥ t} x_j^k·exp(βx_j); β ← β + U/I per iteration.
-    *
-    * Determinism (the pageRank fixed-iteration contract): covariates
-    * freeze at 6 dp; per-subject exp terms freeze at 12 dp into
-    * decimal cell sums (order-free); S_k are exact decimal reverse
-    * cumulatives over the duration-DESC cell order; per-event-time
-    * U/I terms freeze at 12 dp into decimal folds; β re-freezes at
-    * 12 dp per iteration — an oracle unrolling the same iterations
-    * reproduces it bit-for-bit. Iteration count is FIXED, not
-    * convergence-tested; I ≤ 0 (degenerate spread) keeps β unchanged
-    * and reports NULL se.
-    *
-    * Scale shape: per iteration, one broadcast join of the k-row β
-    * table, one (group, duration) cell aggregation, windows over the
-    * calendar-bounded cell table, one group fold — β never leaves the
-    * cluster (no driver collect). Output: (group, n, n_events, beta,
-    * hazard_ratio, se).
-    */
   /** Driver replica of [[coxPH]]'s Newton passes over the collected
     * subjects (see the fast-path note in coxPH): per-(group, t) cells
     * in duration-DESC order, exact decimal(38,12)/(38,6) sums, the
@@ -4696,27 +4662,22 @@ object Stats {
   private def coxDriverDf(df: DataFrame, subj: DataFrame,
       collected: Array[Row], groupCol: String, iters: Int,
       tDesc: (Any, Any) => Boolean): DataFrame = {
+    import DriverPath.dec12ToDouble
     val rh = Graph.roundHalfUp _
     def dec6Unit(t: Double): BigInt = // cast-only (no pre-round)
       BigInt(java.math.BigDecimal.valueOf(t)
         .setScale(6, java.math.RoundingMode.HALF_UP).unscaledValue())
     // group → subjects, then sort each group by t DESC once
-    val groups = new java.util.LinkedHashMap[Any,
-      scala.collection.mutable.ArrayBuffer[(Any, Long, Double)]]()
-    collected.foreach { row =>
-      val g = row.get(0)
-      if (g != null) {
-        var buf = groups.get(g)
-        if (buf == null) {
-          buf = new scala.collection.mutable.ArrayBuffer[(Any, Long, Double)]()
-          groups.put(g, buf)
-        }
-        buf += ((row.get(1), row.getLong(2), row.getDouble(3)))
-      }
+    val (ids, gOf) = DriverPath.intern(collected, keepNulls = false)
+    val subjects = Array.fill(ids.size)(
+      new scala.collection.mutable.ArrayBuffer[(Any, Long, Double)]())
+    collected.indices.foreach { i =>
+      val row = collected(i)
+      if (gOf(i) >= 0)
+        subjects(gOf(i)) += ((row.get(1), row.getLong(2), row.getDouble(3)))
     }
-    import scala.jdk.CollectionConverters._
-    val gList = groups.entrySet().asScala.toIndexedSeq.map { e =>
-      (e.getKey, e.getValue.sortWith((a, b) => tDesc(a._1, b._1)).toArray)
+    val gList = ids.keys.indices.map { g =>
+      (ids.keys(g), subjects(g).sortWith((a, b) => tDesc(a._1, b._1)).toArray)
     }
     val nG = gList.length
     val bArr = new Array[Double](nG)
@@ -4787,11 +4748,34 @@ object Stats {
         rh(bArr(gi), 6), rh(math.exp(bArr(gi)), 6),
         if (iD > 0.0) rh(1.0 / math.sqrt(iD), 6) else null)
     }
-    df.sparkSession.createDataFrame(
-      df.sparkSession.sparkContext.parallelize(out,
-        math.max(1, nG / 100000)), schema)
+    DriverPath.frame(df.sparkSession, out, schema)
   }
 
+  /** Cox proportional-hazards fit, one covariate, Breslow ties, FIXED
+    * Newton iterations from β = 0 — the regression member of the
+    * survival family: KM/Nelson–Aalen describe a curve, the log-rank
+    * tests two groups, the c-index grades a score, Cox puts a
+    * HAZARD RATIO with a standard error on the covariate. Partial
+    * likelihood: U(β) = Σ_events [Σx_event − d·S1/S0],
+    * I(β) = Σ_events d·(S2/S0 − (S1/S0)²) with S_k(t) =
+    * Σ_{T_j ≥ t} x_j^k·exp(βx_j); β ← β + U/I per iteration.
+    *
+    * Determinism (the pageRank fixed-iteration contract): covariates
+    * freeze at 6 dp; per-subject exp terms freeze at 12 dp into
+    * decimal cell sums (order-free); S_k are exact decimal reverse
+    * cumulatives over the duration-DESC cell order; per-event-time
+    * U/I terms freeze at 12 dp into decimal folds; β re-freezes at
+    * 12 dp per iteration — an oracle unrolling the same iterations
+    * reproduces it bit-for-bit. Iteration count is FIXED, not
+    * convergence-tested; I ≤ 0 (degenerate spread) keeps β unchanged
+    * and reports NULL se.
+    *
+    * Scale shape: per iteration, one broadcast join of the k-row β
+    * table, one (group, duration) cell aggregation, windows over the
+    * calendar-bounded cell table, one group fold — β never leaves the
+    * cluster (no driver collect). Output: (group, n, n_events, beta,
+    * hazard_ratio, se).
+    */
   def coxPH(df: DataFrame, groupCol: String, durationCol: String,
       observed: Column, covariateCol: String, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 8, s"coxPH: iters must be in [1, 8]")
@@ -4889,6 +4873,16 @@ object Stats {
         .cast("double").as("se"))
   }
 
+  /** round(t, 12).cast(decimal(38,12)) replicated on the driver as an
+    * unscaled-unit BigInt — the exact composition Spark evaluates
+    * (HALF_UP round over the BigDecimal.valueOf canonical repr, then
+    * the HALF_UP decimal cast), so decimal SUMS of these units are
+    * bit-identical to the distributed aggregates (decimal addition is
+    * exact and order-free on both paths). */
+  private[operators] def dec12Unit(t: Double): BigInt =
+    BigInt(java.math.BigDecimal.valueOf(Graph.roundHalfUp(t, 12))
+      .setScale(12, java.math.RoundingMode.HALF_UP).unscaledValue())
+
   /** Logistic regression, one covariate with intercept, FIXED Newton
     * iterations from (α, β) = (0, 0) — the most common supervised
     * baseline after Naive Bayes: P(y=1|x) = 1/(1+e^−(α+βx)), reported
@@ -4915,67 +4909,6 @@ object Stats {
     * the iterative lineage exactly as [[coxPH]]. Output: (group, n,
     * n_pos, alpha, beta, se_beta, z_beta, odds_ratio).
     */
-  /** round(t, 12).cast(decimal(38,12)) replicated on the driver as an
-    * unscaled-unit BigInt — the exact composition Spark evaluates
-    * (HALF_UP round over the BigDecimal.valueOf canonical repr, then
-    * the HALF_UP decimal cast), so decimal SUMS of these units are
-    * bit-identical to the distributed aggregates (decimal addition is
-    * exact and order-free on both paths). */
-  private[operators] def dec12Unit(t: Double): BigInt =
-    BigInt(java.math.BigDecimal.valueOf(Graph.roundHalfUp(t, 12))
-      .setScale(12, java.math.RoundingMode.HALF_UP).unscaledValue())
-
-  /** decimal(38,12).cast(double) — Spark's Decimal.toDouble. */
-  private[operators] def dec12ToDouble(u: BigInt): Double =
-    new java.math.BigDecimal(u.bigInteger, 12).doubleValue()
-
-  /** Exact decimal(38,12) sum accumulator for the driver fast paths:
-    * unscaled units accumulate in a primitive long with an overflow
-    * spill into BigInt — identical totals to the distributed decimal
-    * aggregates (exact, order-free) at a fraction of the allocation
-    * cost of per-term BigInt folds. */
-  private[operators] final class Dec12Sum {
-    private var lo = 0L
-    private var big: BigInt = null
-    def add(t: Double): Unit = {
-      val bd = java.math.BigDecimal.valueOf(Graph.roundHalfUp(t, 12))
-        .setScale(12, java.math.RoundingMode.HALF_UP)
-      val u = bd.unscaledValue()
-      if (u.bitLength() <= 62) {
-        val ul = u.longValue()
-        val sum = lo + ul
-        if (((lo ^ sum) & (ul ^ sum)) < 0L) { // long overflow: spill
-          big = (if (big == null) BigInt(lo) else big + BigInt(lo))
-          lo = ul
-        } else lo = sum
-      } else {
-        big = (if (big == null) BigInt(u) else big + BigInt(u))
-      }
-    }
-    def total: BigInt =
-      if (big == null) BigInt(lo) else big + BigInt(lo)
-  }
-
-  /** Run `body(threadIdx, from, to)` over [0, n) split across the
-    * local cores — the driver fast paths' substitute for the 32 tasks
-    * the distributed aggregates would have used. Callers accumulate
-    * per-thread and merge with exact (order-free) arithmetic only. */
-  private[operators] def parallelChunks(n: Int, nThreads: Int,
-      minN: Int = 65536)(
-      body: (Int, Int, Int) => Unit): Unit = {
-    if (n < minN || nThreads <= 1) { body(0, 0, n); return }
-    val threads = (0 until nThreads).map { t =>
-      val from = (n.toLong * t / nThreads).toInt
-      val to = (n.toLong * (t + 1) / nThreads).toInt
-      new Thread(() => body(t, from, to))
-    }
-    threads.foreach(_.start())
-    threads.foreach(_.join())
-  }
-
-  private[operators] def driverThreads: Int =
-    math.min(32, math.max(1, Runtime.getRuntime.availableProcessors()))
-
   def logisticFit(df: DataFrame, groupCol: String, xCol: String,
       yCond: Column, iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 8, s"logisticFit: iters must be in [1, 8]")
@@ -4999,119 +4932,7 @@ object Stats {
     if (rows.schema("_x").dataType ==
         org.apache.spark.sql.types.DoubleType) DriverPath.rows(rows) match {
       case Some(collected) =>
-        val gIdx = new java.util.HashMap[Any, Integer]()
-        val gVals = new scala.collection.mutable.ArrayBuffer[Any]()
-        val nRows = collected.length
-        val gi = new Array[Int](nRows)
-        val xs = new Array[Double](nRows)
-        val ys = new Array[Double](nRows)
-        // the per-pass equi-join on _g drops null group keys (null
-        // never equals null) — replicate by skipping them outright
-        var i = 0
-        var nKept = 0
-        while (i < nRows) {
-          val row = collected(i)
-          val g = row.get(0)
-          if (g != null) {
-            var idg = gIdx.get(g)
-            if (idg == null) {
-              idg = gVals.length; gIdx.put(g, idg); gVals += g
-            }
-            gi(nKept) = idg.intValue()
-            xs(nKept) = row.getDouble(1); ys(nKept) = row.getDouble(2)
-            nKept += 1
-          }
-          i += 1
-        }
-        val nUsed = nKept
-        val ng = gVals.length
-        val a = new Array[Double](ng); val b = new Array[Double](ng)
-        val ns = new Array[Long](ng); val ypos = new Array[Double](ng)
-        val G0 = new Array[BigInt](ng); val G1 = new Array[BigInt](ng)
-        val H00 = new Array[BigInt](ng); val H01 = new Array[BigInt](ng)
-        val H11 = new Array[BigInt](ng)
-        val nT = driverThreads
-        def pass(): Unit = {
-          java.util.Arrays.fill(ns, 0L)
-          java.util.Arrays.fill(ypos, 0.0)
-          // per-thread exact accumulators, merged after the barrier —
-          // identical totals to the distributed decimal sums (exact,
-          // order-free); ypos sums 0/1 doubles (exact in any order)
-          val tAcc = Array.fill(nT, 5)(Array.fill(ng)(new Dec12Sum))
-          val tNs = Array.fill(nT)(new Array[Long](ng))
-          val tYp = Array.fill(nT)(new Array[Double](ng))
-          parallelChunks(nUsed, nT) { (t, from, to) =>
-            val Array(g0a, g1a, h00a, h01a, h11a) = tAcc(t)
-            val nsT = tNs(t); val ypT = tYp(t)
-            var i = from
-            while (i < to) {
-              val g = gi(i); val x = xs(i); val y = ys(i)
-              val p = 1.0 / (1.0 + math.exp(-(a(g) + b(g) * x)))
-              val w = p * (1.0 - p)
-              g0a(g).add(y - p)
-              g1a(g).add(x * (y - p))
-              h00a(g).add(w)
-              h01a(g).add(x * w)
-              h11a(g).add(x * x * w)
-              nsT(g) += 1L; ypT(g) += y
-              i += 1
-            }
-          }
-          var g = 0
-          while (g < ng) {
-            G0(g) = BigInt(0); G1(g) = BigInt(0); H00(g) = BigInt(0)
-            H01(g) = BigInt(0); H11(g) = BigInt(0)
-            var t = 0
-            while (t < nT) {
-              G0(g) += tAcc(t)(0)(g).total; G1(g) += tAcc(t)(1)(g).total
-              H00(g) += tAcc(t)(2)(g).total; H01(g) += tAcc(t)(3)(g).total
-              H11(g) += tAcc(t)(4)(g).total
-              ns(g) += tNs(t)(g); ypos(g) += tYp(t)(g)
-              t += 1
-            }
-            g += 1
-          }
-        }
-        for (_ <- 1 to iters) {
-          pass()
-          var g = 0
-          while (g < ng) {
-            val h00 = dec12ToDouble(H00(g)); val h01 = dec12ToDouble(H01(g))
-            val h11 = dec12ToDouble(H11(g))
-            val g0 = dec12ToDouble(G0(g)); val g1 = dec12ToDouble(G1(g))
-            val det = h00 * h11 - h01 * h01
-            if (det > 0.0) {
-              a(g) = Graph.roundHalfUp(a(g) + (g0 * h11 - g1 * h01) / det, 12)
-              b(g) = Graph.roundHalfUp(b(g) + (g1 * h00 - g0 * h01) / det, 12)
-            }
-            g += 1
-          }
-        }
-        pass() // observed information at the final params
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
-          StructField(groupCol, rows.schema("_g").dataType),
-          StructField("n", LongType), StructField("n_pos", LongType),
-          StructField("alpha", DoubleType), StructField("beta", DoubleType),
-          StructField("se_beta", DoubleType),
-          StructField("z_beta", DoubleType),
-          StructField("odds_ratio", DoubleType)))
-        val out = (0 until ng).map { g =>
-          val h00 = dec12ToDouble(H00(g)); val h01 = dec12ToDouble(H01(g))
-          val h11 = dec12ToDouble(H11(g))
-          val det = h00 * h11 - h01 * h01
-          org.apache.spark.sql.Row(gVals(g), ns(g), ypos(g).toLong,
-            Graph.roundHalfUp(a(g), 6), Graph.roundHalfUp(b(g), 6),
-            if (det > 0.0) Graph.roundHalfUp(math.sqrt(h00 / det), 6)
-            else null,
-            if (det > 0.0)
-              Graph.roundHalfUp(b(g) / math.sqrt(h00 / det), 6)
-            else null,
-            Graph.roundHalfUp(math.exp(b(g)), 6))
-        }
-        return df.sparkSession.createDataFrame(
-          df.sparkSession.sparkContext.parallelize(out,
-            math.max(1, ng / 100000)), schema)
+        return logisticDriverDf(df, rows, collected, groupCol, iters)
       case None =>
     }
     def pass(params: DataFrame) = {
@@ -5475,148 +5296,7 @@ object Stats {
         && rows.schema("_x2").dataType ==
           org.apache.spark.sql.types.DoubleType) DriverPath.rows(rows) match {
       case Some(collected) =>
-        val gIdx = new java.util.HashMap[Any, Integer]()
-        val gVals = new scala.collection.mutable.ArrayBuffer[Any]()
-        val nRows = collected.length
-        val gi = new Array[Int](nRows)
-        val x1s = new Array[Double](nRows)
-        val x2s = new Array[Double](nRows)
-        val ys = new Array[Double](nRows)
-        // null group keys never survive the per-pass equi-join — skip
-        var i = 0
-        var nKept = 0
-        while (i < nRows) {
-          val row = collected(i)
-          val g = row.get(0)
-          if (g != null) {
-            var idg = gIdx.get(g)
-            if (idg == null) {
-              idg = gVals.length; gIdx.put(g, idg); gVals += g
-            }
-            gi(nKept) = idg.intValue()
-            x1s(nKept) = row.getDouble(1); x2s(nKept) = row.getDouble(2)
-            ys(nKept) = row.getDouble(3)
-            nKept += 1
-          }
-          i += 1
-        }
-        val nUsed = nKept
-        val ng = gVals.length
-        val a = new Array[Double](ng)
-        val b1 = new Array[Double](ng); val b2 = new Array[Double](ng)
-        val ns = new Array[Long](ng); val ypos = new Array[Double](ng)
-        val acc = Array.fill(9)(new Array[BigInt](ng)) // G0 G1 G2 H00 H01 H02 H11 H12 H22
-        val nT = driverThreads
-        def pass(): Unit = {
-          java.util.Arrays.fill(ns, 0L)
-          java.util.Arrays.fill(ypos, 0.0)
-          val tAcc = Array.fill(nT, 9)(Array.fill(ng)(new Dec12Sum))
-          val tNs = Array.fill(nT)(new Array[Long](ng))
-          val tYp = Array.fill(nT)(new Array[Double](ng))
-          parallelChunks(nUsed, nT) { (t, from, to) =>
-            val ta = tAcc(t); val nsT = tNs(t); val ypT = tYp(t)
-            var i = from
-            while (i < to) {
-              val g = gi(i); val x1 = x1s(i); val x2 = x2s(i); val y = ys(i)
-              val p = 1.0 / (1.0 + math.exp(-(a(g) + b1(g) * x1 + b2(g) * x2)))
-              val w = p * (1.0 - p)
-              ta(0)(g).add(y - p)
-              ta(1)(g).add(x1 * (y - p))
-              ta(2)(g).add(x2 * (y - p))
-              ta(3)(g).add(w)
-              ta(4)(g).add(x1 * w)
-              ta(5)(g).add(x2 * w)
-              ta(6)(g).add(x1 * x1 * w)
-              ta(7)(g).add(x1 * x2 * w)
-              ta(8)(g).add(x2 * x2 * w)
-              nsT(g) += 1L; ypT(g) += y
-              i += 1
-            }
-          }
-          var g = 0
-          while (g < ng) {
-            var k = 0
-            while (k < 9) {
-              var tot = BigInt(0)
-              var t = 0
-              while (t < nT) { tot += tAcc(t)(k)(g).total; t += 1 }
-              acc(k)(g) = tot
-              k += 1
-            }
-            var t = 0
-            while (t < nT) {
-              ns(g) += tNs(t)(g); ypos(g) += tYp(t)(g); t += 1
-            }
-            g += 1
-          }
-        }
-        // the det/det0/det1/det2 double trees, spelled as in the plan
-        def solve(g: Int): (Double, Double, Double, Double, Double) = {
-          val g0 = dec12ToDouble(acc(0)(g)); val g1 = dec12ToDouble(acc(1)(g))
-          val g2 = dec12ToDouble(acc(2)(g))
-          val h00 = dec12ToDouble(acc(3)(g)); val h01 = dec12ToDouble(acc(4)(g))
-          val h02 = dec12ToDouble(acc(5)(g)); val h11 = dec12ToDouble(acc(6)(g))
-          val h12 = dec12ToDouble(acc(7)(g)); val h22 = dec12ToDouble(acc(8)(g))
-          val det = h00 * (h11 * h22 - h12 * h12) -
-            h01 * (h01 * h22 - h12 * h02) +
-            h02 * (h01 * h12 - h11 * h02)
-          val det0 = g0 * (h11 * h22 - h12 * h12) -
-            h01 * (g1 * h22 - h12 * g2) +
-            h02 * (g1 * h12 - h11 * g2)
-          val det1 = h00 * (g1 * h22 - h12 * g2) -
-            g0 * (h01 * h22 - h12 * h02) +
-            h02 * (h01 * g2 - g1 * h02)
-          val det2 = h00 * (h11 * g2 - g1 * h12) -
-            h01 * (h01 * g2 - g1 * h02) +
-            g0 * (h01 * h12 - h11 * h02)
-          (det, det0, det1, det2, 0.0)
-        }
-        for (_ <- 1 to iters) {
-          pass()
-          var g = 0
-          while (g < ng) {
-            val (det, det0, det1, det2, _) = solve(g)
-            if (det > 0.0) {
-              a(g) = Graph.roundHalfUp(a(g) + det0 / det, 12)
-              b1(g) = Graph.roundHalfUp(b1(g) + det1 / det, 12)
-              b2(g) = Graph.roundHalfUp(b2(g) + det2 / det, 12)
-            }
-            g += 1
-          }
-        }
-        pass()
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
-          StructField(groupCol, rows.schema("_g").dataType),
-          StructField("n", LongType), StructField("n_pos", LongType),
-          StructField("alpha", DoubleType),
-          StructField("b1", DoubleType), StructField("b2", DoubleType),
-          StructField("se_b1", DoubleType), StructField("se_b2", DoubleType),
-          StructField("z_b1", DoubleType), StructField("z_b2", DoubleType)))
-        val out = (0 until ng).map { g =>
-          val (det, _, _, _, _) = solve(g)
-          val h00 = dec12ToDouble(acc(3)(g)); val h01 = dec12ToDouble(acc(4)(g))
-          val h02 = dec12ToDouble(acc(5)(g)); val h11 = dec12ToDouble(acc(6)(g))
-          val h22 = dec12ToDouble(acc(8)(g))
-          val a22 = h00 * h22 - h02 * h02
-          val a33 = h00 * h11 - h01 * h01
-          org.apache.spark.sql.Row(gVals(g), ns(g), ypos(g).toLong,
-            Graph.roundHalfUp(a(g), 6),
-            Graph.roundHalfUp(b1(g), 6), Graph.roundHalfUp(b2(g), 6),
-            if (det > 0.0) Graph.roundHalfUp(math.sqrt(a22 / det), 6)
-            else null,
-            if (det > 0.0) Graph.roundHalfUp(math.sqrt(a33 / det), 6)
-            else null,
-            if (det > 0.0)
-              Graph.roundHalfUp(b1(g) / math.sqrt(a22 / det), 6)
-            else null,
-            if (det > 0.0)
-              Graph.roundHalfUp(b2(g) / math.sqrt(a33 / det), 6)
-            else null)
-        }
-        return df.sparkSession.createDataFrame(
-          df.sparkSession.sparkContext.parallelize(out,
-            math.max(1, ng / 100000)), schema)
+        return logistic2DriverDf(df, rows, collected, groupCol, iters)
       case None =>
     }
     def pass(params: DataFrame) = {
@@ -5692,6 +5372,309 @@ object Stats {
         .cast("double").as("z_b2"))
   }
 
+  /** Collected (g, x_1..x_p, y) rows of a grouped GLM replica, null
+    * group keys skipped (the per-pass equi-join drops them). */
+  private final class GlmRows(collected: Array[Row], p: Int) {
+    private val (ids, gAll) = DriverPath.intern(collected, keepNulls = false)
+    private val kept = collected.indices.filter(gAll(_) >= 0).toArray
+    val keys = ids.keys
+    val ng = ids.size
+    val n = kept.length
+    val gi = kept.map(gAll)
+    val xs = Array.tabulate(p)(j => kept.map(collected(_).getDouble(1 + j)))
+    val ys = kept.map(collected(_).getDouble(1 + p))
+    val counts = new Array[Long](ng)
+    gi.foreach(counts(_) += 1L)
+
+    /** Sequential per-group Σy in row order (the log-mean inits). */
+    def ySums: Array[Double] = {
+      val sy = new Array[Double](ng)
+      var i = 0
+      while (i < n) { sy(gi(i)) += ys(i); i += 1 }
+      sy
+    }
+
+    /** The GLM replicas' shared Newton loop: `iters` exact folds of the
+      * per-row `terms` (`nDec` decimal, `nDbl` double), each followed by
+      * `step(g, sums)` updating the caller's params for every group, then
+      * one fold at the final params, whose sums are returned. */
+    def newton(iters: Int, nDec: Int, nDbl: Int)(
+        terms: (Int, Array[Double]) => Unit)(
+        step: (Int, DriverPath.Sums) => Unit): DriverPath.Sums = {
+      for (_ <- 1 to iters) {
+        val s = DriverPath.fold(n, ng, gi, nDec, nDbl)(terms)
+        var g = 0
+        while (g < ng) { step(g, s); g += 1 }
+      }
+      DriverPath.fold(n, ng, gi, nDec, nDbl)(terms)
+    }
+  }
+
+  /** The closed 2×2 Newton step (α, β) += H⁻¹g shared by the logistic
+    * and Poisson replicas, on sums (G0, G1, H00, H01, H11) at term
+    * offset 0; det ≤ 0 keeps the params. */
+  private def newton2(s: DriverPath.Sums, g: Int, a: Array[Double],
+      b: Array[Double]): Unit = {
+    val g0 = s.d(0, g); val g1 = s.d(1, g)
+    val h00 = s.d(2, g); val h01 = s.d(3, g); val h11 = s.d(4, g)
+    val det = h00 * h11 - h01 * h01
+    if (det > 0.0) {
+      a(g) = Graph.roundHalfUp(a(g) + (g0 * h11 - g1 * h01) / det, 12)
+      b(g) = Graph.roundHalfUp(b(g) + (g1 * h00 - g0 * h01) / det, 12)
+    }
+  }
+
+  /** Driver replica of [[logisticFit]]'s Newton passes (see the
+    * fast-path note there); n_pos sums 0/1 doubles, exact in any order. */
+  private def logisticDriverDf(df: DataFrame, rows: DataFrame,
+      collected: Array[Row], groupCol: String, iters: Int): DataFrame = {
+    val glm = new GlmRows(collected, 1)
+    val (gi, xs, ys) = (glm.gi, glm.xs(0), glm.ys)
+    val a = new Array[Double](glm.ng); val b = new Array[Double](glm.ng)
+    val s = glm.newton(iters, 5, 1) { (i, t) =>
+      val g = gi(i); val x = xs(i); val y = ys(i)
+      val p = 1.0 / (1.0 + math.exp(-(a(g) + b(g) * x)))
+      val w = p * (1.0 - p)
+      t(0) = y - p; t(1) = x * (y - p)
+      t(2) = w; t(3) = x * w; t(4) = x * x * w
+      t(5) = y
+    }((g, s) => newton2(s, g, a, b))
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField(groupCol, rows.schema("_g").dataType),
+      StructField("n", LongType), StructField("n_pos", LongType),
+      StructField("alpha", DoubleType), StructField("beta", DoubleType),
+      StructField("se_beta", DoubleType),
+      StructField("z_beta", DoubleType),
+      StructField("odds_ratio", DoubleType)))
+    val out = (0 until glm.ng).map { g =>
+      val h00 = s.d(2, g); val h01 = s.d(3, g); val h11 = s.d(4, g)
+      val det = h00 * h11 - h01 * h01
+      Row(glm.keys(g), glm.counts(g), s.dbl(0)(g).toLong,
+        Graph.roundHalfUp(a(g), 6), Graph.roundHalfUp(b(g), 6),
+        if (det > 0.0) Graph.roundHalfUp(math.sqrt(h00 / det), 6)
+        else null,
+        if (det > 0.0)
+          Graph.roundHalfUp(b(g) / math.sqrt(h00 / det), 6)
+        else null,
+        Graph.roundHalfUp(math.exp(b(g)), 6))
+    }
+    DriverPath.frame(df.sparkSession, out, schema)
+  }
+
+  /** Driver replica of [[logisticFit2]] — [[logisticDriverDf]] with the
+    * 3×3 Cramer solve. */
+  private def logistic2DriverDf(df: DataFrame, rows: DataFrame,
+      collected: Array[Row], groupCol: String, iters: Int): DataFrame = {
+    val glm = new GlmRows(collected, 2)
+    val (gi, x1s, x2s, ys) = (glm.gi, glm.xs(0), glm.xs(1), glm.ys)
+    val ng = glm.ng
+    val a = new Array[Double](ng)
+    val b1 = new Array[Double](ng); val b2 = new Array[Double](ng)
+    // sums G0 G1 G2 H00 H01 H02 H11 H12 H22; the det/det0/det1/det2
+    // double trees, spelled as in the plan
+    def solve(s: DriverPath.Sums, g: Int): (Double, Double, Double, Double) = {
+      val g0 = s.d(0, g); val g1 = s.d(1, g); val g2 = s.d(2, g)
+      val h00 = s.d(3, g); val h01 = s.d(4, g); val h02 = s.d(5, g)
+      val h11 = s.d(6, g); val h12 = s.d(7, g); val h22 = s.d(8, g)
+      val det = h00 * (h11 * h22 - h12 * h12) -
+        h01 * (h01 * h22 - h12 * h02) +
+        h02 * (h01 * h12 - h11 * h02)
+      val det0 = g0 * (h11 * h22 - h12 * h12) -
+        h01 * (g1 * h22 - h12 * g2) +
+        h02 * (g1 * h12 - h11 * g2)
+      val det1 = h00 * (g1 * h22 - h12 * g2) -
+        g0 * (h01 * h22 - h12 * h02) +
+        h02 * (h01 * g2 - g1 * h02)
+      val det2 = h00 * (h11 * g2 - g1 * h12) -
+        h01 * (h01 * g2 - g1 * h02) +
+        g0 * (h01 * h12 - h11 * h02)
+      (det, det0, det1, det2)
+    }
+    val s = glm.newton(iters, 9, 1) { (i, t) =>
+      val g = gi(i); val x1 = x1s(i); val x2 = x2s(i); val y = ys(i)
+      val p = 1.0 / (1.0 + math.exp(-(a(g) + b1(g) * x1 + b2(g) * x2)))
+      val w = p * (1.0 - p)
+      t(0) = y - p; t(1) = x1 * (y - p); t(2) = x2 * (y - p)
+      t(3) = w; t(4) = x1 * w; t(5) = x2 * w
+      t(6) = x1 * x1 * w; t(7) = x1 * x2 * w; t(8) = x2 * x2 * w
+      t(9) = y
+    } { (g, s) =>
+      val (det, det0, det1, det2) = solve(s, g)
+      if (det > 0.0) {
+        a(g) = Graph.roundHalfUp(a(g) + det0 / det, 12)
+        b1(g) = Graph.roundHalfUp(b1(g) + det1 / det, 12)
+        b2(g) = Graph.roundHalfUp(b2(g) + det2 / det, 12)
+      }
+    }
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField(groupCol, rows.schema("_g").dataType),
+      StructField("n", LongType), StructField("n_pos", LongType),
+      StructField("alpha", DoubleType),
+      StructField("b1", DoubleType), StructField("b2", DoubleType),
+      StructField("se_b1", DoubleType), StructField("se_b2", DoubleType),
+      StructField("z_b1", DoubleType), StructField("z_b2", DoubleType)))
+    val out = (0 until ng).map { g =>
+      val (det, _, _, _) = solve(s, g)
+      val h00 = s.d(3, g); val h01 = s.d(4, g); val h02 = s.d(5, g)
+      val h11 = s.d(6, g); val h22 = s.d(8, g)
+      val a22 = h00 * h22 - h02 * h02
+      val a33 = h00 * h11 - h01 * h01
+      Row(glm.keys(g), glm.counts(g), s.dbl(0)(g).toLong,
+        Graph.roundHalfUp(a(g), 6),
+        Graph.roundHalfUp(b1(g), 6), Graph.roundHalfUp(b2(g), 6),
+        if (det > 0.0) Graph.roundHalfUp(math.sqrt(a22 / det), 6)
+        else null,
+        if (det > 0.0) Graph.roundHalfUp(math.sqrt(a33 / det), 6)
+        else null,
+        if (det > 0.0)
+          Graph.roundHalfUp(b1(g) / math.sqrt(a22 / det), 6)
+        else null,
+        if (det > 0.0)
+          Graph.roundHalfUp(b2(g) / math.sqrt(a33 / det), 6)
+        else null)
+    }
+    DriverPath.frame(df.sparkSession, out, schema)
+  }
+
+  /** Driver replica of [[poissonFit]]'s iterations (see the fast-path
+    * note there). */
+  private def poissonDriverDf(df: DataFrame, rows: DataFrame,
+      collected: Array[Row], groupCol: String, iters: Int): DataFrame = {
+    val glm = new GlmRows(collected, 1)
+    val (gi, xs, ys, ns) = (glm.gi, glm.xs(0), glm.ys, glm.counts)
+    val sy0 = glm.ySums
+    // init at the Laplace-smoothed log-mean, as in the plan
+    val a = Array.tabulate(glm.ng)(g => Graph.roundHalfUp(
+      math.log((sy0(g) + 1.0) / (ns(g) + 1.0)), 12))
+    val b = new Array[Double](glm.ng)
+    // sums G0 G1 H00 H01 H11 CHI, then sum_y
+    val s = glm.newton(iters, 6, 1) { (i, t) =>
+      val g = gi(i); val x = xs(i); val y = ys(i)
+      val mu = math.exp(a(g) + b(g) * x)
+      t(0) = y - mu; t(1) = x * (y - mu)
+      t(2) = mu; t(3) = x * mu; t(4) = x * x * mu
+      t(5) = (y - mu) * (y - mu) / mu
+      t(6) = y
+    }((g, s) => newton2(s, g, a, b))
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField(groupCol, rows.schema("_g").dataType),
+      StructField("n", LongType), StructField("sum_y", DoubleType),
+      StructField("alpha", DoubleType), StructField("beta", DoubleType),
+      StructField("se_beta", DoubleType), StructField("z_beta", DoubleType),
+      StructField("rate_ratio", DoubleType),
+      StructField("dispersion", DoubleType),
+      StructField("se_beta_quasi", DoubleType)))
+    val out = (0 until glm.ng).map { g =>
+      val h00 = s.d(2, g); val h01 = s.d(3, g)
+      val h11 = s.d(4, g); val chi = s.d(5, g)
+      val det = h00 * h11 - h01 * h01
+      val nD = ns(g).toDouble
+      Row(glm.keys(g), ns(g),
+        Graph.roundHalfUp(s.dbl(0)(g), 6),
+        Graph.roundHalfUp(a(g), 6), Graph.roundHalfUp(b(g), 6),
+        if (det > 0.0) Graph.roundHalfUp(math.sqrt(h00 / det), 6) else null,
+        if (det > 0.0)
+          Graph.roundHalfUp(b(g) / math.sqrt(h00 / det), 6) else null,
+        Graph.roundHalfUp(math.exp(b(g)), 6),
+        if (ns(g) > 2L) Graph.roundHalfUp(chi / (nD - 2.0), 6) else null,
+        if (det > 0.0 && ns(g) > 2L)
+          Graph.roundHalfUp(
+            math.sqrt(h00 / det) * math.sqrt(chi / (nD - 2.0)), 6)
+        else null)
+    }
+    DriverPath.frame(df.sparkSession, out, schema)
+  }
+
+  /** Driver replica of [[gammaFit]]'s constant-weight IRLS (see the
+    * fast-path note there). */
+  private def gammaDriverDf(df: DataFrame, rows: DataFrame,
+      collected: Array[Row], groupCol: String, iters: Int): DataFrame = {
+    val glm = new GlmRows(collected, 1)
+    val (gi, xs, ys, ns) = (glm.gi, glm.xs(0), glm.ys, glm.counts)
+    val sy0 = glm.ySums
+    val a = Array.tabulate(glm.ng)(g =>
+      Graph.roundHalfUp(math.log(sy0(g) / ns(g).toDouble), 12))
+    val b = new Array[Double](glm.ng)
+    // sums SZ SXZ SX SXX CHI
+    val s = glm.newton(iters, 5, 0) { (i, t) =>
+      val g = gi(i); val x = xs(i); val y = ys(i)
+      val eta = a(g) + b(g) * x
+      val mu = math.exp(eta)
+      val z = eta + (y - mu) / mu
+      t(0) = z; t(1) = x * z; t(2) = x; t(3) = x * x
+      t(4) = (y - mu) * (y - mu) / (mu * mu)
+    } { (g, s) =>
+      val sz = s.d(0, g); val sxz = s.d(1, g)
+      val sx = s.d(2, g); val sxx = s.d(3, g)
+      val nD = ns(g).toDouble
+      val det = nD * sxx - sx * sx
+      if (det > 0.0) {
+        // the in-plan trees: b = (n·Sxz − Sx·Sz)/det,
+        // a = (Sz − b·Sx)/n with b's tree inlined
+        a(g) = Graph.roundHalfUp(
+          (sz - (nD * sxz - sx * sz) / det * sx) / nD, 12)
+        b(g) = Graph.roundHalfUp((nD * sxz - sx * sz) / det, 12)
+      }
+    }
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField(groupCol, rows.schema("_g").dataType),
+      StructField("n", LongType),
+      StructField("alpha", DoubleType), StructField("beta", DoubleType),
+      StructField("se_beta", DoubleType), StructField("z_beta", DoubleType),
+      StructField("rate_ratio", DoubleType),
+      StructField("dispersion", DoubleType)))
+    val out = (0 until glm.ng).map { g =>
+      val sx = s.d(2, g); val sxx = s.d(3, g); val chi = s.d(4, g)
+      val nD = ns(g).toDouble
+      val det = nD * sxx - sx * sx
+      val se = math.sqrt(chi / (nD - 2.0) * (nD / det))
+      Row(glm.keys(g), ns(g),
+        Graph.roundHalfUp(a(g), 6), Graph.roundHalfUp(b(g), 6),
+        if (det > 0.0 && ns(g) > 2L) Graph.roundHalfUp(se, 6) else null,
+        if (det > 0.0 && ns(g) > 2L)
+          Graph.roundHalfUp(b(g) / se, 6) else null,
+        Graph.roundHalfUp(math.exp(b(g)), 6),
+        if (ns(g) > 2L) Graph.roundHalfUp(chi / (nD - 2.0), 6) else null)
+    }
+    DriverPath.frame(df.sparkSession, out, schema)
+  }
+
+  /** Driver replica of [[temperatureScaling]]'s clamped 1-D Newton
+    * passes (see the fast-path note there). */
+  private def temperatureDriverDf(df: DataFrame, collected: Array[Row],
+      passes: Int): DataFrame = {
+    val ss = collected.map(_.getDouble(0))
+    val ys = collected.map(_.getDouble(1))
+    var w = 1.0
+    // sums G H (decimal), then n_pos
+    def pass() = DriverPath.fold(ss.length, 1, null, 2, 1) { (i, t) =>
+      val s = ss(i); val y = ys(i)
+      val p = 1.0 / (1.0 + math.exp(-(w * s)))
+      t(0) = s * (p - y); t(1) = s * s * p * (1.0 - p); t(2) = y
+    }
+    for (_ <- 1 to passes) {
+      val s = pass()
+      val hD = s.d(1, 0)
+      if (hD > 0.0)
+        w = Graph.roundHalfUp(math.max(0.001,
+          math.min(64.0, w - s.d(0, 0) / hD)), 12)
+    }
+    val ypos = pass().dbl(0)(0)
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("n", LongType), StructField("n_pos", LongType),
+      StructField("inv_temp", DoubleType),
+      StructField("temperature", DoubleType)))
+    val out = Seq(Row(ss.length.toLong, ypos.toLong,
+      Graph.roundHalfUp(w, 6),
+      if (w > 0.0) Graph.roundHalfUp(1.0 / w, 6) else null))
+    DriverPath.frame(df.sparkSession, out, schema)
+  }
+
   /** Poisson regression, one covariate with intercept, FIXED Newton
     * iterations from α = Laplace-smoothed log-mean, β = 0 (the
     * standard GLM start — from α = 0 the first step on large counts
@@ -5716,294 +5699,6 @@ object Stats {
     * the cluster. Output: (group, n, sum_y, alpha, beta, se_beta,
     * z_beta, rate_ratio).
     */
-  /** Shared collect step of the GLM driver replicas: (group values,
-    * group index per row, x, y), null group keys skipped (the
-    * per-pass equi-join drops them). */
-  private def collectGlmRows(collected: Array[Row]): (
-      scala.collection.mutable.ArrayBuffer[Any], Array[Int],
-      Array[Double], Array[Double], Int) = {
-    val gIdx = new java.util.HashMap[Any, Integer]()
-    val gVals = new scala.collection.mutable.ArrayBuffer[Any]()
-    val gi = new Array[Int](collected.length)
-    val xs = new Array[Double](collected.length)
-    val ys = new Array[Double](collected.length)
-    var i = 0; var kept = 0
-    while (i < collected.length) {
-      val row = collected(i)
-      val g = row.get(0)
-      if (g != null) {
-        var idg = gIdx.get(g)
-        if (idg == null) { idg = gVals.length; gIdx.put(g, idg); gVals += g }
-        gi(kept) = idg.intValue()
-        xs(kept) = row.getDouble(1); ys(kept) = row.getDouble(2)
-        kept += 1
-      }
-      i += 1
-    }
-    (gVals, gi, xs, ys, kept)
-  }
-
-  /** Driver replica of [[poissonFit]]'s iterations (see the fast-path
-    * note there). */
-  private def poissonDriverDf(df: DataFrame, rows: DataFrame,
-      collected: Array[Row], groupCol: String, iters: Int): DataFrame = {
-    val (gVals, gi, xs, ys, nUsed) = collectGlmRows(collected)
-    val ng = gVals.length
-    val a = new Array[Double](ng); val b = new Array[Double](ng)
-    val ns = new Array[Long](ng); val sy = new Array[Double](ng)
-    // init at the Laplace-smoothed log-mean, as in the plan
-    locally {
-      var i = 0
-      while (i < nUsed) { ns(gi(i)) += 1L; sy(gi(i)) += ys(i); i += 1 }
-      var g = 0
-      while (g < ng) {
-        a(g) = Graph.roundHalfUp(
-          math.log((sy(g) + 1.0) / (ns(g) + 1.0)), 12)
-        g += 1
-      }
-    }
-    val acc = new Array[Array[BigInt]](6) // G0 G1 H00 H01 H11 CHI
-    val nT = driverThreads
-    def pass(): Unit = {
-      java.util.Arrays.fill(ns, 0L); java.util.Arrays.fill(sy, 0.0)
-      val tAcc = Array.fill(nT, 6)(Array.fill(ng)(new Dec12Sum))
-      val tNs = Array.fill(nT)(new Array[Long](ng))
-      val tSy = Array.fill(nT)(new Array[Double](ng))
-      parallelChunks(nUsed, nT) { (t, from, to) =>
-        val ta = tAcc(t); val nsT = tNs(t); val syT = tSy(t)
-        var i = from
-        while (i < to) {
-          val g = gi(i); val x = xs(i); val y = ys(i)
-          val mu = math.exp(a(g) + b(g) * x)
-          ta(0)(g).add(y - mu)
-          ta(1)(g).add(x * (y - mu))
-          ta(2)(g).add(mu)
-          ta(3)(g).add(x * mu)
-          ta(4)(g).add(x * x * mu)
-          ta(5)(g).add((y - mu) * (y - mu) / mu)
-          nsT(g) += 1L; syT(g) += y
-          i += 1
-        }
-      }
-      var g = 0
-      while (g < ng) {
-        var k = 0
-        while (k < 6) {
-          var tot = BigInt(0); var t = 0
-          while (t < nT) { tot += tAcc(t)(k)(g).total; t += 1 }
-          acc(k)(g) = tot; k += 1
-        }
-        var t = 0
-        while (t < nT) { ns(g) += tNs(t)(g); sy(g) += tSy(t)(g); t += 1 }
-        g += 1
-      }
-    }
-    var k = 0
-    while (k < 6) { acc(k) = new Array[BigInt](ng); k += 1 }
-    for (_ <- 1 to iters) {
-      pass()
-      var g = 0
-      while (g < ng) {
-        val g0 = dec12ToDouble(acc(0)(g)); val g1 = dec12ToDouble(acc(1)(g))
-        val h00 = dec12ToDouble(acc(2)(g)); val h01 = dec12ToDouble(acc(3)(g))
-        val h11 = dec12ToDouble(acc(4)(g))
-        val det = h00 * h11 - h01 * h01
-        if (det > 0.0) {
-          a(g) = Graph.roundHalfUp(a(g) + (g0 * h11 - g1 * h01) / det, 12)
-          b(g) = Graph.roundHalfUp(b(g) + (g1 * h00 - g0 * h01) / det, 12)
-        }
-        g += 1
-      }
-    }
-    pass()
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField(groupCol, rows.schema("_g").dataType),
-      StructField("n", LongType), StructField("sum_y", DoubleType),
-      StructField("alpha", DoubleType), StructField("beta", DoubleType),
-      StructField("se_beta", DoubleType), StructField("z_beta", DoubleType),
-      StructField("rate_ratio", DoubleType),
-      StructField("dispersion", DoubleType),
-      StructField("se_beta_quasi", DoubleType)))
-    val out = (0 until ng).map { g =>
-      val h00 = dec12ToDouble(acc(2)(g)); val h01 = dec12ToDouble(acc(3)(g))
-      val h11 = dec12ToDouble(acc(4)(g)); val chi = dec12ToDouble(acc(5)(g))
-      val det = h00 * h11 - h01 * h01
-      val nD = ns(g).toDouble
-      org.apache.spark.sql.Row(gVals(g), ns(g),
-        Graph.roundHalfUp(sy(g), 6),
-        Graph.roundHalfUp(a(g), 6), Graph.roundHalfUp(b(g), 6),
-        if (det > 0.0) Graph.roundHalfUp(math.sqrt(h00 / det), 6) else null,
-        if (det > 0.0)
-          Graph.roundHalfUp(b(g) / math.sqrt(h00 / det), 6) else null,
-        Graph.roundHalfUp(math.exp(b(g)), 6),
-        if (ns(g) > 2L) Graph.roundHalfUp(chi / (nD - 2.0), 6) else null,
-        if (det > 0.0 && ns(g) > 2L)
-          Graph.roundHalfUp(
-            math.sqrt(h00 / det) * math.sqrt(chi / (nD - 2.0)), 6)
-        else null)
-    }
-    df.sparkSession.createDataFrame(
-      df.sparkSession.sparkContext.parallelize(out,
-        math.max(1, ng / 100000)), schema)
-  }
-
-  /** Driver replica of [[gammaFit]]'s constant-weight IRLS (see the
-    * fast-path note there). */
-  private def gammaDriverDf(df: DataFrame, rows: DataFrame,
-      collected: Array[Row], groupCol: String, iters: Int): DataFrame = {
-    val (gVals, gi, xs, ys, nUsed) = collectGlmRows(collected)
-    val ng = gVals.length
-    val a = new Array[Double](ng); val b = new Array[Double](ng)
-    val ns = new Array[Long](ng); val sy = new Array[Double](ng)
-    locally {
-      var i = 0
-      while (i < nUsed) { ns(gi(i)) += 1L; sy(gi(i)) += ys(i); i += 1 }
-      var g = 0
-      while (g < ng) {
-        a(g) = Graph.roundHalfUp(math.log(sy(g) / ns(g).toDouble), 12)
-        g += 1
-      }
-    }
-    val acc = Array.fill(5)(new Array[BigInt](ng)) // SZ SXZ SX SXX CHI
-    val nT = driverThreads
-    def pass(): Unit = {
-      java.util.Arrays.fill(ns, 0L)
-      val tAcc = Array.fill(nT, 5)(Array.fill(ng)(new Dec12Sum))
-      val tNs = Array.fill(nT)(new Array[Long](ng))
-      parallelChunks(nUsed, nT) { (t, from, to) =>
-        val ta = tAcc(t); val nsT = tNs(t)
-        var i = from
-        while (i < to) {
-          val g = gi(i); val x = xs(i); val y = ys(i)
-          val eta = a(g) + b(g) * x
-          val mu = math.exp(eta)
-          val z = eta + (y - mu) / mu
-          ta(0)(g).add(z)
-          ta(1)(g).add(x * z)
-          ta(2)(g).add(x)
-          ta(3)(g).add(x * x)
-          ta(4)(g).add((y - mu) * (y - mu) / (mu * mu))
-          nsT(g) += 1L
-          i += 1
-        }
-      }
-      var g = 0
-      while (g < ng) {
-        var k = 0
-        while (k < 5) {
-          var tot = BigInt(0); var t = 0
-          while (t < nT) { tot += tAcc(t)(k)(g).total; t += 1 }
-          acc(k)(g) = tot; k += 1
-        }
-        var t = 0
-        while (t < nT) { ns(g) += tNs(t)(g); t += 1 }
-        g += 1
-      }
-    }
-    for (_ <- 1 to iters) {
-      pass()
-      var g = 0
-      while (g < ng) {
-        val sz = dec12ToDouble(acc(0)(g)); val sxz = dec12ToDouble(acc(1)(g))
-        val sx = dec12ToDouble(acc(2)(g)); val sxx = dec12ToDouble(acc(3)(g))
-        val nD = ns(g).toDouble
-        val det = nD * sxx - sx * sx
-        if (det > 0.0) {
-          // the in-plan trees: b = (n·Sxz − Sx·Sz)/det,
-          // a = (Sz − b·Sx)/n with b's tree inlined
-          a(g) = Graph.roundHalfUp(
-            (sz - (nD * sxz - sx * sz) / det * sx) / nD, 12)
-          b(g) = Graph.roundHalfUp((nD * sxz - sx * sz) / det, 12)
-        }
-        g += 1
-      }
-    }
-    pass()
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField(groupCol, rows.schema("_g").dataType),
-      StructField("n", LongType),
-      StructField("alpha", DoubleType), StructField("beta", DoubleType),
-      StructField("se_beta", DoubleType), StructField("z_beta", DoubleType),
-      StructField("rate_ratio", DoubleType),
-      StructField("dispersion", DoubleType)))
-    val out = (0 until ng).map { g =>
-      val sx = dec12ToDouble(acc(2)(g)); val sxx = dec12ToDouble(acc(3)(g))
-      val chi = dec12ToDouble(acc(4)(g))
-      val nD = ns(g).toDouble
-      val det = nD * sxx - sx * sx
-      val se = math.sqrt(chi / (nD - 2.0) * (nD / det))
-      org.apache.spark.sql.Row(gVals(g), ns(g),
-        Graph.roundHalfUp(a(g), 6), Graph.roundHalfUp(b(g), 6),
-        if (det > 0.0 && ns(g) > 2L) Graph.roundHalfUp(se, 6) else null,
-        if (det > 0.0 && ns(g) > 2L)
-          Graph.roundHalfUp(b(g) / se, 6) else null,
-        Graph.roundHalfUp(math.exp(b(g)), 6),
-        if (ns(g) > 2L) Graph.roundHalfUp(chi / (nD - 2.0), 6) else null)
-    }
-    df.sparkSession.createDataFrame(
-      df.sparkSession.sparkContext.parallelize(out,
-        math.max(1, ng / 100000)), schema)
-  }
-
-  /** Driver replica of [[temperatureScaling]]'s clamped 1-D Newton
-    * passes (see the fast-path note there). */
-  private def temperatureDriverDf(df: DataFrame, collected: Array[Row],
-      passes: Int): DataFrame = {
-    val n = collected.length
-    val ss = new Array[Double](n); val ys = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      ss(i) = collected(i).getDouble(0)
-      ys(i) = collected(i).getDouble(1)
-      i += 1
-    }
-    var w = 1.0
-    var gTot = BigInt(0); var hTot = BigInt(0); var ypos = 0.0
-    val nT = driverThreads
-    def pass(): Unit = {
-      val tG = Array.fill(nT)(new Dec12Sum)
-      val tH = Array.fill(nT)(new Dec12Sum)
-      val tY = new Array[Double](nT)
-      parallelChunks(n, nT) { (t, from, to) =>
-        val gA = tG(t); val hA = tH(t)
-        var i = from
-        while (i < to) {
-          val s = ss(i); val y = ys(i)
-          val p = 1.0 / (1.0 + math.exp(-(w * s)))
-          gA.add(s * (p - y))
-          hA.add(s * s * p * (1.0 - p))
-          tY(t) += y
-          i += 1
-        }
-      }
-      gTot = BigInt(0); hTot = BigInt(0); ypos = 0.0
-      var t = 0
-      while (t < nT) {
-        gTot += tG(t).total; hTot += tH(t).total; ypos += tY(t); t += 1
-      }
-    }
-    for (_ <- 1 to passes) {
-      pass()
-      val hD = dec12ToDouble(hTot)
-      if (hD > 0.0)
-        w = Graph.roundHalfUp(math.max(0.001,
-          math.min(64.0, w - dec12ToDouble(gTot) / hD)), 12)
-    }
-    pass()
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("n", LongType), StructField("n_pos", LongType),
-      StructField("inv_temp", DoubleType),
-      StructField("temperature", DoubleType)))
-    val out = Seq(org.apache.spark.sql.Row(n.toLong, ypos.toLong,
-      Graph.roundHalfUp(w, 6),
-      if (w > 0.0) Graph.roundHalfUp(1.0 / w, 6) else null))
-    df.sparkSession.createDataFrame(
-      df.sparkSession.sparkContext.parallelize(out, 1), schema)
-  }
-
   def poissonFit(df: DataFrame, groupCol: String, xCol: String,
       yCol: String, iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 8, s"poissonFit: iters must be in [1, 8]")
@@ -6738,47 +6433,16 @@ object Stats {
           .cast("double").as("g"))
   }
 
-  /** Generalized ESD (Rosner) multi-outlier screen — [[grubbs]]
-    * ITERATED: Grubbs tests exactly one suspect and suffers masking
-    * (two outliers shield each other); gESD removes the most extreme
-    * point and re-tests k times, reporting the test statistic R_i of
-    * each round. The caller compares R_i against the λ_i table —
-    * like [[bowkerTest]], the statistic is the deliverable, not a
-    * p-value.
-    *
-    * Determinism: the [[grubbs]] cell machinery on (value, count)
-    * cells — each pass recomputes exact decimal moments, freezes the
-    * per-cell score at 6 dp, finds the max score with the
-    * filter-on-frozen-max pass (the cochranC tie discipline: ties
-    * break to the LARGEST value, two passes, no struct-max), then
-    * decrements that cell's count by ONE (ties are the same value —
-    * removing "one occurrence" is exact). A degenerate pass (sd ≤ 0
-    * — e.g. all remaining values equal) reports NULL r and removes
-    * the largest value, keeping later passes deterministic. Scale
-    * shape: per pass one cell fold + one broadcast-join filter;
-    * cells shrink monotonically. Output: (group, pass, n_remaining,
-    * suspect, r) — one row per (group, pass ≤ k).
-    */
   /** Driver replica of [[gesd]]'s passes over the collected quantized
     * cells (see the fast-path note there). */
   private def gesdDriverDf(df: DataFrame, cells0: DataFrame,
       collected: Array[Row], groupCol: String, k: Int): DataFrame = {
-    val gIdx = new java.util.HashMap[Any, Integer]()
-    val gVals = new scala.collection.mutable.ArrayBuffer[Any]()
+    // null groups kept: the joins are null-safe
+    val (ids, gi) = DriverPath.intern(collected, keepNulls = true)
+    val gVals = ids.keys
     val nc = collected.length
-    val gi = new Array[Int](nc); val xq = new Array[Long](nc)
-    val cnt = new Array[Long](nc)
-    var i = 0
-    while (i < nc) {
-      val row = collected(i)
-      val g = row.get(0) // null groups kept: the joins are null-safe
-      var idg = gIdx.get(g)
-      if (idg == null) { idg = gVals.length; gIdx.put(g, idg); gVals += g }
-      gi(i) = idg.intValue()
-      xq(i) = row.getLong(1); cnt(i) = row.getLong(2)
-      i += 1
-    }
-    val ng = gVals.length
+    val xq = collected.map(_.getLong(1)); val cnt = collected.map(_.getLong(2))
+    val ng = ids.size
     val out = new scala.collection.mutable.ArrayBuffer[
       org.apache.spark.sql.Row]()
     for (pass <- 1 to k) {
@@ -6851,11 +6515,30 @@ object Stats {
       StructField("pass", IntegerType),
       StructField("n_remaining", LongType),
       StructField("suspect", DoubleType), StructField("r", DoubleType)))
-    df.sparkSession.createDataFrame(
-      df.sparkSession.sparkContext.parallelize(out.toIndexedSeq,
-        math.max(1, out.length / 100000)), schema)
+    DriverPath.frame(df.sparkSession, out.toIndexedSeq, schema)
   }
 
+  /** Generalized ESD (Rosner) multi-outlier screen — [[grubbs]]
+    * ITERATED: Grubbs tests exactly one suspect and suffers masking
+    * (two outliers shield each other); gESD removes the most extreme
+    * point and re-tests k times, reporting the test statistic R_i of
+    * each round. The caller compares R_i against the λ_i table —
+    * like [[bowkerTest]], the statistic is the deliverable, not a
+    * p-value.
+    *
+    * Determinism: the [[grubbs]] cell machinery on (value, count)
+    * cells — each pass recomputes exact decimal moments, freezes the
+    * per-cell score at 6 dp, finds the max score with the
+    * filter-on-frozen-max pass (the cochranC tie discipline: ties
+    * break to the LARGEST value, two passes, no struct-max), then
+    * decrements that cell's count by ONE (ties are the same value —
+    * removing "one occurrence" is exact). A degenerate pass (sd ≤ 0
+    * — e.g. all remaining values equal) reports NULL r and removes
+    * the largest value, keeping later passes deterministic. Scale
+    * shape: per pass one cell fold + one broadcast-join filter;
+    * cells shrink monotonically. Output: (group, pass, n_remaining,
+    * suspect, r) — one row per (group, pass ≤ k).
+    */
   def gesd(df: DataFrame, groupCol: String, valueCol: String,
       k: Int): DataFrame = {
     require(k >= 1 && k <= 5, s"gesd: k must be in [1, 5], got $k")

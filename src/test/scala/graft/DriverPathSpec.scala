@@ -115,7 +115,7 @@ class DriverPathSpec extends SparkTestBase {
     val prev = spark.conf.getOption(key)
     spark.conf.unset(key)
     try assert(DriverPath.maxRows(spark) ==
-      graft.operators.Graph.HarmonicDriverMaxEdges)
+      DriverPath.DefaultMaxRows)
     finally prev.foreach(spark.conf.set(key, _))
   }
 
@@ -142,5 +142,92 @@ class DriverPathSpec extends SparkTestBase {
     assert(withDriverPathMaxRows(1000L)(
       DriverPath.rows(narrow, bytesPerRow = 8L * 4 + 48L))
       .exists(_.length == 100))
+  }
+
+  /** round(t, 12).cast(decimal(38,12)) as java.math.BigDecimal: the
+    * distributed aggregate's per-row term. */
+  private def dec12(t: Double): java.math.BigDecimal = {
+    val up = java.math.RoundingMode.HALF_UP
+    val rounded = java.math.BigDecimal.valueOf(t).setScale(12, up).doubleValue()
+    java.math.BigDecimal.valueOf(rounded).setScale(12, up)
+  }
+
+  test("the exact fold equals a BigDecimal sum through the long spill") {
+    // 4e6 is 4e18 decimal(38,12) units: the third add overflows the
+    // primitive long and spills into BigInt; 5e6 (> 62 bits) goes to
+    // BigInt directly; the small terms exercise the 12-dp freeze
+    val ts = Array(4.0e6, 4.0e6, 4.0e6, 0.1234567890123456, -4.0e6,
+      5.0e6, 1e-13, 5e-13, -0.7000000000004999, 4.0e6, 4.0e6)
+    val s = DriverPath.fold(ts.length, 1, null, 1, 1) { (i, out) =>
+      out(0) = ts(i); out(1) = 1.0
+    }
+    val ref = ts.map(dec12).reduce(_ add _)
+    assert(ref.unscaledValue().bitLength() > 63, "the sum must overflow a long")
+    assert(s.dec(0)(0) == BigInt(ref.unscaledValue()))
+    assert(s.d(0, 0) == ref.doubleValue())
+    assert(s.dbl(0)(0) == ts.length.toDouble)
+  }
+
+  test("the exact fold gives the same sums when rows split across threads") {
+    val n = 70000 // over the 65,536-row threading floor
+    val rnd = new scala.util.Random(7)
+    // every 50th term or so is large enough to spill a thread's long
+    val ts = Array.fill(n)(
+      rnd.nextGaussian() * (if (rnd.nextInt(50) == 0) 3e6 else 1.0))
+    val group = Array.tabulate(n)(i => (i * 7) % 3)
+    val flag = Array.tabulate(n)(i => if (i % 5 == 0) 1.0 else 0.0)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val s = DriverPath.fold(n, 3, group, 2, 1) { (i, out) =>
+      seen.add(Thread.currentThread().getId)
+      out(0) = ts(i); out(1) = ts(i) * ts(i); out(2) = flag(i)
+    }
+    if (DriverPath.threads > 1) assert(seen.size > 1, "rows did not split")
+    for (g <- 0 until 3) {
+      val rows = (0 until n).filter(group(_) == g)
+      val r0 = rows.map(i => dec12(ts(i))).reduce(_ add _)
+      val r1 = rows.map(i => dec12(ts(i) * ts(i))).reduce(_ add _)
+      assert(s.dec(0)(g) == BigInt(r0.unscaledValue()), s"group $g term 0")
+      assert(s.dec(1)(g) == BigInt(r1.unscaledValue()), s"group $g term 1")
+      assert(s.dbl(0)(g) == rows.count(_ % 5 == 0).toDouble, s"group $g flags")
+    }
+    // the integer fold sums its per-thread arrays the same way
+    val counts = DriverPath.foldLongs(n, 3) { (from, to, acc) =>
+      var i = from
+      while (i < to) { acc(group(i)) += 1L; i += 1 }
+    }
+    assert(counts.toSeq == (0 until 3).map(g => group.count(_ == g).toLong))
+  }
+
+  test("interning gives first-seen dense ids under both null policies") {
+    val keys = Seq("b", null, "a", "b", null, "c", "a")
+    val rows = keys.map(k => org.apache.spark.sql.Row(k)).toArray
+    // an equi-join drops null keys: id -1, never interned
+    val (dropIds, dropped) = DriverPath.intern(rows, keepNulls = false)
+    assert(dropped.toSeq == Seq(0, -1, 1, 0, -1, 2, 1))
+    assert(dropIds.keys == Seq("b", "a", "c"))
+    // a null-safe join keeps them: null is a key like any other
+    val (keepIds, kept) = DriverPath.intern(rows, keepNulls = true)
+    assert(kept.toSeq == Seq(0, 1, 2, 0, 1, 3, 2))
+    assert(keepIds.keys == Seq("b", null, "a", "c"))
+    assert(keepIds.find("c") == 3 && keepIds.find("z") == -1)
+    // edge lists intern src then dst, edge by edge
+    val g = DriverPath.edges(Array(("x", "y"), ("z", "x"), ("y", "w"))
+      .map { case (a, b) => org.apache.spark.sql.Row(a, b) })
+    assert(g.names == Seq("x", "y", "z", "w"))
+    assert(g.src.toSeq == Seq(0, 2, 1) && g.dst.toSeq == Seq(1, 0, 3))
+  }
+
+  test("frame cuts one slice per 100k rows") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("x", IntegerType)))
+    for ((n, slices) <- Seq(0 -> 1, 1 -> 1, 99999 -> 1, 100000 -> 1,
+        199999 -> 1, 200000 -> 2, 250000 -> 2)) {
+      val df = DriverPath.frame(spark,
+        (0 until n).map(org.apache.spark.sql.Row(_)), schema)
+      assert(df.rdd.getNumPartitions == slices, s"$n rows")
+    }
+    val small = DriverPath.frame(spark,
+      (0 until 5).map(org.apache.spark.sql.Row(_)), schema)
+    assert(small.collect().map(_.getInt(0)).toSeq == (0 until 5))
   }
 }
