@@ -197,10 +197,10 @@ object Bench {
     // ~2x — both fell UNDER 3x, so no re-run fired and two phantom
     // regressions cost steady-state adjudication. 2x catches those;
     // queries under 2x of anchor are within honest run variance.)
-    // Anchors are read from the PREVIOUS round's committed file before
-    // this run overwrites it; no anchor (new query, first round) → no
-    // re-run.
-    val anchorFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
+    // Anchors are always read from the committed bench_full.json (a run
+    // redirected by SPARK_GRAFT_BENCH_OUT keeps the same anchors); no
+    // anchor (new query, first round) → no re-run.
+    val anchorFile = "bench_full.json"
     val anchors: Map[String, Double] =
       try {
         val txt = new String(java.nio.file.Files.readAllBytes(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over DataFrame edge lists.
@@ -21,58 +21,156 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Driver replica of the [[pageRank]] / [[pageRankPersonalized]]
-    * iterations over a collected deduped directed edge list
-    * (`sources = null` selects the uniform-teleport form). Vertex set,
-    * out-degrees, dangling handling, and the end-of-iteration roundDp
-    * freeze match the distributed plans term for term; per-vertex
-    * contribution folds are double sums on both paths, protected by
-    * the same roundDp quantum the DuckDB oracles rely on.
+  /** Driver replica of the PageRank family's damped loop over an
+    * interned edge list: rank₀ = `rank0(v)`; per pass, edge i adds
+    * `term(rank(src), i)` to its dst, the rank mass on `dangling`
+    * vertices is summed, and `update(v, contrib, danglingMass)` frozen
+    * at roundDp is v's next rank — [[pageRankLoop]]'s pieces term for
+    * term. Per-vertex contribution folds are double sums on both paths,
+    * protected by the same roundDp quantum the DuckDB oracles rely on.
+    * Returns (vertex, rank) in vertex-id order.
     */
   private def pageRankDriverDf(spark: org.apache.spark.sql.SparkSession,
-      dedupedEdges: Array[Row], iters: Int, damping: Double,
-      roundDp: Int, sources: Seq[String]): DataFrame = {
-    val g = DriverPath.edges(dedupedEdges)
-    val (names, n, m, es, ed) = (g.names, g.n, g.m, g.src, g.dst)
-    var i = 0
-    val outdeg = new Array[Long](n)
-    es.foreach(outdeg(_) += 1L)
-    val nD = n.toDouble
-    // teleport vector: uniform 1/n, or 1[v∈S]/|S| for the PPR form
-    val ind: Array[Double] =
-      if (sources == null) null
-      else {
-        val s = sources.toSet
-        Array.tabulate(n)(v => if (s(names(v))) 1.0 / sources.size else 0.0)
-      }
-    var rank = Array.tabulate(n)(v =>
-      if (sources == null) 1.0 / nD else ind(v))
-    val hasDangling = outdeg.exists(_ == 0L)
+      g: DriverPath.Edges, dangling: Array[Boolean], rank0: Int => Double,
+      iters: Int, roundDp: Int)(term: (Double, Int) => Double,
+      update: (Int, Double, Double) => Double): DataFrame = {
+    val (n, m, es, ed) = (g.n, g.m, g.src, g.dst)
+    var rank = Array.tabulate(n)(rank0)
+    val hasDangling = dangling.contains(true)
     for (_ <- 1 to iters) {
       val contrib = new Array[Double](n)
-      i = 0
-      while (i < m) {
-        contrib(ed(i)) += rank(es(i)) / outdeg(es(i))
-        i += 1
-      }
-      var dangling = 0.0
+      var i = 0
+      while (i < m) { contrib(ed(i)) += term(rank(es(i)), i); i += 1 }
+      var mass = 0.0
       if (hasDangling) {
         var v = 0
-        while (v < n) { if (outdeg(v) == 0L) dangling += rank(v); v += 1 }
+        while (v < n) { if (dangling(v)) mass += rank(v); v += 1 }
       }
       rank = Array.tabulate(n)(v =>
-        if (sources == null)
-          roundHalfUp((1.0 - damping) / nD
-            + damping * (contrib(v) + dangling / nD), roundDp)
-        else
-          roundHalfUp((1.0 - damping) * ind(v)
-            + damping * (contrib(v) + dangling * ind(v)), roundDp))
+        roundHalfUp(update(v, contrib(v), mass), roundDp))
     }
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("vertex", StringType),
       StructField("rank", DoubleType)))
-    DriverPath.frame(spark, (0 until n).map(v => Row(names(v), rank(v))),
+    DriverPath.frame(spark, (0 until n).map(v => Row(g.names(v), rank(v))),
       schema)
+  }
+
+  /** The PageRank family's distributed damped loop over `e` (edges
+    * hash-partitioned on src and checkpointed) and `state0` (one row per
+    * vertex: `vertex`, `rank` and the columns the pieces read). Per
+    * pass the edges join the broadcast (vertex +: `send`) state and sum
+    * `term` per dst as `contrib`; the rank mass on `dangling` vertices
+    * rides a one-row broadcast as `dangling_mass`; `update` frozen at
+    * roundDp is the next rank, the other state columns carried along.
+    * Returns (vertex, rank).
+    */
+  private def pageRankLoop(e: DataFrame, state0: DataFrame, iters: Int,
+      roundDp: Int, send: Seq[Column], term: Column, dangling: Column,
+      update: Column): DataFrame = {
+    val carried = state0.columns.filter(_ != "rank").map(col).toSeq
+    var state = state0
+    // Dangling vertices exist iff one matches `dangling` — a one-time
+    // limit(1) probe. Symmetrized graphs (the common curation case:
+    // undirected co-occurrence / similarity graphs) have NONE, and for
+    // them the per-iteration dangling-mass aggregate, its broadcast,
+    // and the crossJoin node are pure overhead: the mass is exactly
+    // +0.0 every round, so skipping the term is identical arithmetic,
+    // not an approximation.
+    val hasDangling = !state.filter(dangling).limit(1).isEmpty
+    for (_ <- 1 to iters) {
+      // explicit broadcast of the VERTEX-sized state: checkpointed RDD
+      // scans carry no stats, and without the hint the optimizer has
+      // been observed building the EDGE side of this join as the
+      // broadcast relation — shipping the whole edge list every
+      // iteration. State is the small side by construction (vertices
+      // << edges); for billion-vertex graphs where even state outgrows
+      // the driver, drop the hint and pre-bucket both sides instead.
+      val contrib = e
+        .join(broadcast(state.select(col("vertex") +: send: _*)),
+          e("src") === col("vertex"))
+        .groupBy(col("dst").as("cv"))
+        .agg(sum(term).as("contrib"))
+      val joined = state.join(contrib, state("vertex") === contrib("cv"), "left")
+      val withMass =
+        if (hasDangling) {
+          // one scalar row: rank mass parked on dangling vertices
+          val mass = state.filter(dangling)
+            .agg(coalesce(sum(col("rank")), lit(0.0)).as("dangling_mass"))
+          joined.crossJoin(broadcast(mass))
+        } else joined.withColumn("dangling_mass", lit(0.0))
+      state = withMass
+        .select(carried :+ round(update, roundDp).as("rank"): _*)
+        // lazy: truncates lineage identically but materializes inside
+        // the NEXT action (the following iteration's dangling aggregate
+        // or the caller's first job) instead of paying a blocking
+        // driver-side job per iteration
+        .localCheckpoint(false)
+    }
+    state.select(col("vertex"), col("rank"))
+  }
+
+  /** The unweighted operators' edges: non-null (src, dst) strings,
+    * deduped unless `assumeDistinct`. Every pass joins on src, so they
+    * hash-partition ONCE here and the checkpointed plan keeps its
+    * outputPartitioning: the per-pass exchange moves only the (vertex,
+    * rank) state, never the edges. The gate reads this one checkpoint
+    * (row order changes are inside the roundDp quantum contract). */
+  private def pageRankEdges(edges: DataFrame, srcCol: String,
+      dstCol: String, assumeDistinct: Boolean): DataFrame = {
+    val e0 = edges
+      .select(col(srcCol).cast("string").as("src"),
+        col(dstCol).cast("string").as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    (if (assumeDistinct) e0 else e0.distinct())
+      .repartition(col("src"))
+      .localCheckpoint() // joined every iteration: compute once
+  }
+
+  /** The unweighted operators' replica: out-degree shares, out-degree-0
+    * vertices dangling. */
+  private def outDegreeDriverDf(spark: org.apache.spark.sql.SparkSession,
+      g: DriverPath.Edges, rank0: Int => Double, iters: Int, roundDp: Int)(
+      update: (Int, Double, Double) => Double): DataFrame = {
+    val outdeg = new Array[Long](g.n)
+    g.src.foreach(outdeg(_) += 1L)
+    pageRankDriverDf(spark, g, outdeg.map(_ == 0L), rank0, iters, roundDp)(
+      (r, i) => r / outdeg(g.src(i)), update)
+  }
+
+  /** The unweighted operators' distributed loop: `state0` carries
+    * (vertex, outdeg, …, rank); shares are rank/outdeg, out-degree-0
+    * vertices dangling. */
+  private def outDegreeLoop(e: DataFrame, state0: DataFrame, iters: Int,
+      roundDp: Int)(update: Column): DataFrame =
+    pageRankLoop(e, state0, iters, roundDp, Seq(col("outdeg"), col("rank")),
+      col("rank") / col("outdeg"), col("outdeg") === 0L, update)
+
+  /** (vertex, outdeg|0) over e's endpoints, with the checkpointed vertex
+    * list; a left join keeps dangling vertices. */
+  private def outDegrees(e: DataFrame): (DataFrame, DataFrame) = {
+    val nodes = e.select(col("src").as("vertex"))
+      .unionByName(e.select(col("dst").as("vertex")))
+      .distinct()
+      .localCheckpoint()
+    val outDeg = e.groupBy(col("src").as("vertex"))
+      .agg(count(lit(1)).as("outdeg"))
+    (nodes, nodes.join(outDeg, Seq("vertex"), "left")
+      .select(col("vertex"), coalesce(col("outdeg"), lit(0L)).as("outdeg")))
+  }
+
+  /** The uniform-teleport update (1-d)/N + d·(contrib + danglingMass/N)
+    * of [[pageRank]] and [[pageRankWeighted]], over the state's `n`. */
+  private def uniformUpdate(damping: Double): Column =
+    ((lit(1.0) - lit(damping)) / col("n")
+      + lit(damping) * (coalesce(col("contrib"), lit(0.0))
+        + col("dangling_mass") / col("n")))
+
+  /** [[uniformUpdate]] in the replica: (v, contrib, danglingMass) → rank. */
+  private def uniformUpdate(damping: Double, n: Int)
+      : (Int, Double, Double) => Double = {
+    val nD = n.toDouble
+    (_, c, dm) => (1.0 - damping) / nD + damping * (c + dm / nD)
   }
 
   /** Fixed-iteration PageRank on a directed edge list.
@@ -108,89 +206,25 @@ object Graph {
     require(iters >= 1, s"pageRank: iters must be >= 1, got $iters")
     require(damping > 0.0 && damping < 1.0,
       s"pageRank: damping must be in (0,1), got $damping")
-    val e0 = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
+    val e = pageRankEdges(edges, srcCol, dstCol, assumeDistinct)
     // Small-graph driver fast path (r18, the louvainMove precedent):
     // the identical teleport/contribution/dangling arithmetic with the
     // identical end-of-iteration roundDp freeze, minus ~4 scheduler/
-    // broadcast jobs per iteration. Per-vertex contribution sums are
-    // plain double folds on BOTH paths (order shuffles either way);
-    // the roundDp quantum is the documented engine-portability
-    // contract that already lets the DuckDB oracle replay them.
-    // GraphSpec pins path equality. The gate reads the one checkpoint
-    // the distributed loop needs anyway (row order changes are inside
-    // the roundDp quantum contract both replicas already rely on).
-    val e = (if (assumeDistinct) e0 else e0.distinct())
-      // every iteration joins e on src: hash-partition ONCE here and the
-      // checkpointed plan keeps its outputPartitioning, so the per-pass
-      // exchange moves only the (vertex, rank) state, never the edges
-      .repartition(col("src"))
-      .localCheckpoint() // joined every iteration: compute once
+    // broadcast jobs per iteration. GraphSpec pins path equality.
     DriverPath.rows(e) match {
       case Some(rows) =>
-        return pageRankDriverDf(edges.sparkSession, rows, iters, damping,
-          roundDp, sources = null)
+        val g = DriverPath.edges(rows)
+        return outDegreeDriverDf(edges.sparkSession, g, _ => 1.0 / g.n,
+          iters, roundDp)(uniformUpdate(damping, g.n))
       case None =>
     }
-    val nodes = e.select(col("src").as("vertex"))
-      .unionByName(e.select(col("dst").as("vertex")))
-      .distinct()
-      .localCheckpoint()
-    val outDeg = e.groupBy(col("src").as("vertex"))
-      .agg(count(lit(1)).as("outdeg"))
-    // (vertex, outdeg|0, rank); a left join keeps dangling vertices
-    var state = nodes
-      .join(outDeg, Seq("vertex"), "left")
-      .select(col("vertex"), coalesce(col("outdeg"), lit(0L)).as("outdeg"))
+    val (nodes, outDeg) = outDegrees(e)
+    val state = outDeg
       .crossJoin(broadcast(nodes.agg(count(lit(1)).cast("double").as("n"))))
       .select(col("vertex"), col("outdeg"), col("n"),
         (lit(1.0) / col("n")).as("rank"))
       .localCheckpoint()
-    // Dangling vertices exist iff some vertex has outdeg 0 — a
-    // one-time limit(1) probe. Symmetrized graphs (the common curation
-    // case: undirected co-occurrence / similarity graphs) have NONE,
-    // and for them the per-iteration dangling-mass aggregate, its
-    // broadcast, and the crossJoin node are pure overhead: the mass is
-    // exactly +0.0 every round, so skipping the term is identical
-    // arithmetic, not an approximation.
-    val hasDangling = !state.filter(col("outdeg") === 0L).limit(1).isEmpty
-    for (_ <- 1 to iters) {
-      // explicit broadcast of the VERTEX-sized state: checkpointed RDD
-      // scans carry no stats, and without the hint the optimizer has
-      // been observed building the EDGE side of this join as the
-      // broadcast relation — shipping the whole edge list every
-      // iteration. State is the small side by construction (vertices
-      // << edges); for billion-vertex graphs where even state outgrows
-      // the driver, drop the hint and pre-bucket both sides instead.
-      val contrib = e
-        .join(broadcast(state.select(col("vertex"), col("outdeg"), col("rank"))),
-          e("src") === col("vertex"))
-        .groupBy(col("dst").as("cv"))
-        .agg(sum(col("rank") / col("outdeg")).as("contrib"))
-      val joined = state.join(contrib, state("vertex") === contrib("cv"), "left")
-      val withMass =
-        if (hasDangling) {
-          // one scalar row: rank mass parked on dangling vertices
-          val dangling = state.filter(col("outdeg") === 0L)
-            .agg(coalesce(sum(col("rank")), lit(0.0)).as("dangling_mass"))
-          joined.crossJoin(broadcast(dangling))
-        } else joined.withColumn("dangling_mass", lit(0.0))
-      state = withMass
-        .select(col("vertex"), col("outdeg"), col("n"),
-          round(
-            (lit(1.0) - lit(damping)) / col("n")
-              + lit(damping) * (coalesce(col("contrib"), lit(0.0))
-                + col("dangling_mass") / col("n")),
-            roundDp).as("rank"))
-        // lazy: truncates lineage identically but materializes inside
-        // the NEXT action (the following iteration's dangling aggregate
-        // or the caller's first job) instead of paying a blocking
-        // driver-side job per iteration
-        .localCheckpoint(false)
-    }
-    state.select(col("vertex"), col("rank"))
+    outDegreeLoop(e, state, iters, roundDp)(uniformUpdate(damping))
   }
 
   /** Personalized PageRank: the [[pageRank]] iteration with ALL
@@ -218,60 +252,29 @@ object Graph {
     require(sources.nonEmpty, "pageRankPersonalized: empty source set")
     require(damping > 0.0 && damping < 1.0,
       s"pageRankPersonalized: damping must be in (0,1), got $damping")
-    val e0 = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
+    val e = pageRankEdges(edges, srcCol, dstCol, assumeDistinct)
     // driver fast path: the [[pageRank]] replica with teleport mass
-    // pinned to `sources` (see the contract note there).
-    val e = (if (assumeDistinct) e0 else e0.distinct())
-      .repartition(col("src"))
-      .localCheckpoint()
+    // pinned to `sources`
     DriverPath.rows(e) match {
       case Some(rows) =>
-        return pageRankDriverDf(edges.sparkSession, rows, iters, damping,
-          roundDp, sources = sources)
+        val g = DriverPath.edges(rows)
+        val s = sources.toSet
+        val ind = Array.tabulate(g.n)(v =>
+          if (s(g.names(v))) 1.0 / sources.size else 0.0)
+        return outDegreeDriverDf(edges.sparkSession, g, ind, iters,
+            roundDp)((v, c, dm) =>
+          (1.0 - damping) * ind(v) + damping * (c + dm * ind(v)))
       case None =>
     }
-    val nodes = e.select(col("src").as("vertex"))
-      .unionByName(e.select(col("dst").as("vertex")))
-      .distinct()
-      .localCheckpoint()
-    val outDeg = e.groupBy(col("src").as("vertex"))
-      .agg(count(lit(1)).as("outdeg"))
-    val sLit = typedLit(sources)
-    val ind = when(array_contains(sLit, col("vertex")),
+    val ind = when(array_contains(typedLit(sources), col("vertex")),
       lit(1.0 / sources.size)).otherwise(lit(0.0))
-    var state = nodes
-      .join(outDeg, Seq("vertex"), "left")
-      .select(col("vertex"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
-        ind.as("rank"))
+    val state = outDegrees(e)._2
+      .select(col("vertex"), col("outdeg"), ind.as("rank"))
       .localCheckpoint()
-    val hasDangling = !state.filter(col("outdeg") === 0L).limit(1).isEmpty
-    for (_ <- 1 to iters) {
-      val contrib = e
-        .join(broadcast(state.select(col("vertex"), col("outdeg"),
-          col("rank"))), e("src") === col("vertex"))
-        .groupBy(col("dst").as("cv"))
-        .agg(sum(col("rank") / col("outdeg")).as("contrib"))
-      val joined = state.join(contrib, state("vertex") === contrib("cv"),
-        "left")
-      val withMass =
-        if (hasDangling) {
-          val dangling = state.filter(col("outdeg") === 0L)
-            .agg(coalesce(sum(col("rank")), lit(0.0)).as("dangling_mass"))
-          joined.crossJoin(broadcast(dangling))
-        } else joined.withColumn("dangling_mass", lit(0.0))
-      state = withMass
-        .select(col("vertex"), col("outdeg"),
-          round(
-            (lit(1.0) - lit(damping)) * ind
-              + lit(damping) * (coalesce(col("contrib"), lit(0.0))
-                + col("dangling_mass") * ind),
-            roundDp).as("rank"))
-        .localCheckpoint(false)
-    }
-    state.select(col("vertex"), col("rank"))
+    outDegreeLoop(e, state, iters, roundDp)(
+      (lit(1.0) - lit(damping)) * ind
+        + lit(damping) * (coalesce(col("contrib"), lit(0.0))
+          + col("dangling_mass") * ind))
   }
 
   /** Weight-proportional fixed-iteration PageRank: contributions split
@@ -302,79 +305,49 @@ object Graph {
     require(iters >= 1, s"pageRankWeighted: iters must be >= 1, got $iters")
     require(damping > 0.0 && damping < 1.0,
       s"pageRankWeighted: damping must be in (0,1), got $damping")
-    val e0base = edges
+    val e0 = edges
       .select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"),
         col(weightCol).cast("double").as("w"))
       .filter(col("src").isNotNull && col("dst").isNotNull
         && col("w").isNotNull && col("w") > 0.0)
       .localCheckpoint()
-    // Small-graph driver fast path (the [[pageRank]] replica contract:
-    // identical wout/share/contribution/dangling arithmetic under the
-    // same end-of-iteration roundDp quantum; per-key folds are double
-    // sums on BOTH paths — order shuffles either way — and the judged
-    // weights are integer counts, where double sums are exact).
-    // Parallel edges stay un-deduped, exactly as distributed. The
-    // vertex set comes from the UNFILTERED edge endpoints (a vertex
+    // Small-graph driver fast path (the [[pageRank]] replica contract;
+    // the judged weights are integer counts, where double sums are
+    // exact). Parallel edges stay un-deduped, exactly as distributed.
+    // The vertex set comes from the UNFILTERED edge endpoints (a vertex
     // whose every edge was weight-dropped still ranks, as dangling),
     // so the collect is gated on both tables. GraphSpec pins path
     // equality.
-    val nodesBase = edges
+    val nodes = edges
       .select(col(srcCol).cast("string").as("vertex"))
       .unionByName(edges.select(col(dstCol).cast("string").as("vertex")))
       .filter(col("vertex").isNotNull)
       .distinct()
       .localCheckpoint()
-    DriverPath.rows(e0base).flatMap(rowsE =>
-        DriverPath.rows(nodesBase, scale = 2).map((rowsE, _))) match {
+    DriverPath.rows(e0).flatMap(rowsE =>
+        DriverPath.rows(nodes, scale = 2).map((rowsE, _))) match {
       case Some((rowsE, nodeRows)) =>
-        val names = nodeRows.map(_.getString(0))
         val ids = new DriverPath.Ids[String]
-        names.foreach(ids(_)) // distinct: id = position
-        val n = names.length
-        val m = rowsE.length
-        val es = rowsE.map(r => ids(r.getString(0)))
-        val ed = rowsE.map(r => ids(r.getString(1)))
+        nodeRows.foreach(r => ids(r.getString(0))) // distinct: id = position
+        val g = new DriverPath.Edges(ids, rowsE.map(r => ids(r.getString(0))),
+          rowsE.map(r => ids(r.getString(1))))
         val ew = rowsE.map(_.getDouble(2))
-        var i = 0
-        val woutArr = new Array[Double](n)
-        i = 0
-        while (i < m) { woutArr(es(i)) += ew(i); i += 1 }
-        val nD = n.toDouble
-        var rank = Array.fill(n)(1.0 / nD)
-        val hasDangling = woutArr.exists(_ == 0.0)
-        for (_ <- 1 to iters) {
-          val contrib = new Array[Double](n)
-          i = 0
-          while (i < m) {
-            contrib(ed(i)) += rank(es(i)) * (ew(i) / woutArr(es(i)))
-            i += 1
-          }
-          var dangling = 0.0
-          if (hasDangling) {
-            var v = 0
-            while (v < n) { if (woutArr(v) == 0.0) dangling += rank(v); v += 1 }
-          }
-          rank = Array.tabulate(n)(v =>
-            roundHalfUp((1.0 - damping) / nD
-              + damping * (contrib(v) + dangling / nD), roundDp))
-        }
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(StructField("vertex", StringType),
-          StructField("rank", DoubleType)))
-        return DriverPath.frame(edges.sparkSession,
-          (0 until n).map(v => Row(names(v), rank(v))), schema)
+        val outW = new Array[Double](g.n)
+        var j = 0
+        while (j < g.m) { outW(g.src(j)) += ew(j); j += 1 }
+        return pageRankDriverDf(edges.sparkSession, g, outW.map(_ == 0.0),
+            _ => 1.0 / g.n, iters, roundDp)(
+          (r, i) => r * (ew(i) / outW(g.src(i))), uniformUpdate(damping, g.n))
       case None =>
     }
-    val e0 = e0base
     val wout = e0.groupBy(col("src").as("wv")).agg(sum(col("w")).as("wout"))
     val e = e0
       .join(wout, e0("src") === wout("wv"))
       .select(col("src"), col("dst"), (col("w") / col("wout")).as("share"))
       .repartition(col("src"))
       .localCheckpoint()
-    val nodes = nodesBase // materialized for the gate already
-    var state = nodes
+    val state = nodes
       .join(wout, nodes("vertex") === wout("wv"), "left")
       .select(col("vertex"), col("wout").isNotNull.as("has_out"))
       .crossJoin(broadcast(nodes.agg(count(lit(1)).cast("double").as("n"))))
@@ -383,34 +356,10 @@ object Graph {
       .localCheckpoint()
     // e (share-weighted edges) and state are both eagerly checkpointed
     // now — the gate-time copies are dead weight on the loop's path
-    freeLocalCheckpoint(e0base)
-    freeLocalCheckpoint(nodesBase)
-    val hasDangling = !state.filter(!col("has_out")).limit(1).isEmpty
-    for (_ <- 1 to iters) {
-      // state-side broadcast: same stats-blind-optimizer rationale as
-      // [[pageRank]] (vertices << edges; edge side must never ship)
-      val contrib = e
-        .join(broadcast(state.select(col("vertex"), col("rank"))),
-          e("src") === col("vertex"))
-        .groupBy(col("dst").as("cv"))
-        .agg(sum(col("rank") * col("share")).as("contrib"))
-      val joined = state.join(contrib, state("vertex") === contrib("cv"), "left")
-      val withMass =
-        if (hasDangling) {
-          val dangling = state.filter(!col("has_out"))
-            .agg(coalesce(sum(col("rank")), lit(0.0)).as("dangling_mass"))
-          joined.crossJoin(broadcast(dangling))
-        } else joined.withColumn("dangling_mass", lit(0.0))
-      state = withMass
-        .select(col("vertex"), col("has_out"), col("n"),
-          round(
-            (lit(1.0) - lit(damping)) / col("n")
-              + lit(damping) * (coalesce(col("contrib"), lit(0.0))
-                + col("dangling_mass") / col("n")),
-            roundDp).as("rank"))
-        .localCheckpoint(false)
-    }
-    state.select(col("vertex"), col("rank"))
+    freeLocalCheckpoint(e0)
+    freeLocalCheckpoint(nodes)
+    pageRankLoop(e, state, iters, roundDp, Seq(col("rank")),
+      col("rank") * col("share"), !col("has_out"), uniformUpdate(damping))
   }
 
   /** Fixed-iteration HITS (Kleinberg hubs & authorities) on a directed
@@ -1013,48 +962,13 @@ object Graph {
     // discipline (vertices << edges; the edge side must never ship):
     // 3 exchanges per pass (kvc agg, cands agg, argmax window) where
     // the join-everything form paid ~7
-    var state = Indexing.denseIds(
+    val state = Indexing.denseIds(
         sym.groupBy(col("_a").as("_v")).agg(count(lit(1)).as("_k")),
         Seq("_v"), "_r")
       .withColumn("_c", col("_v"))
       .localCheckpoint()
-    for (pass <- 1 to passes) {
-      val tot = state.groupBy(col("_c")).agg(sum("_k").as("_tot"))
-      val kvc = sym
-        .join(broadcast(state.select(col("_v").as("_b"),
-          col("_c").as("_nc"))), "_b")
-        .groupBy(col("_a").as("_v"), col("_nc").as("_cand"))
-        .agg(count(lit(1)).as("_kvc"))
-      // argmax as min(struct(-score, cand)) — lexicographic struct
-      // order IS (score DESC, community ASC), and a hash aggregate
-      // with map-side partials beats a sort window on the same key
-      state = kvc
-        .unionByName(state.select(col("_v"), col("_c").as("_cand"))
-          .withColumn("_kvc", lit(0L)))
-        .groupBy("_v", "_cand").agg(sum("_kvc").as("_kvc"))
-        .join(broadcast(state), "_v")
-        .join(broadcast(tot.select(col("_c").as("_cand"), col("_tot"))),
-          "_cand")
-        .crossJoin(broadcast(mRow))
-        .withColumn("_totx",
-          col("_tot") - when(col("_cand") === col("_c"), col("_k"))
-            .otherwise(lit(0L)))
-        .withColumn("_score",
-          lit(2L) * col("_m") * col("_kvc") - col("_totx") * col("_k"))
-        .groupBy("_v")
-        .agg(min(struct((-col("_score")).as("_ns"),
-            col("_cand").as("_cd"))).as("_bst"),
-          max("_c").as("_c0"), max("_k").as("_k"), max("_r").as("_r"))
-        .select(col("_v"),
-          when(col("_r") % 2 === pass % 2, col("_bst._cd"))
-            .otherwise(col("_c0")).as("_c"),
-          col("_k"), col("_r"))
-        .localCheckpoint(false)
-    }
-    val sizes = state.groupBy(col("_c")).agg(count(lit(1)).as("comm_size"))
-    state.join(sizes, "_c")
-      .select(col("_v").as("vertex"), col("_c").as("community"),
-        col("comm_size"))
+    louvainPasses(sym, state, mRow, passes, count(lit(1)),
+      lit(2L) * col("_m") * col("_kvc") - col("_totx") * col("_k"))
   }
 
   /** WEIGHTED [[louvainMove]] — the kernel the multi-level ladder
@@ -1115,7 +1029,7 @@ object Graph {
       .select((col("_m0") + col("_m1")).as("_m"))
     // (community, weighted degree, rank) in ONE broadcast state — the
     // louvainMove plan discipline
-    var state = Indexing.denseIds(
+    val state = Indexing.denseIds(
         sym.groupBy(col("_a").as("_v")).agg(sum("_w").as("_k0"))
           .unionByName(selfW.select(col("_v"),
             (col("_sw") * 2L).as("_k0")))
@@ -1123,15 +1037,34 @@ object Graph {
         Seq("_v"), "_r")
       .withColumn("_c", col("_v"))
       .localCheckpoint()
+    // decimal scores order correctly under the argmax's struct comparison
+    louvainPasses(sym, state, mRow, passes, sum("_w"),
+      (lit(2L).cast(dec) * col("_m") * col("_kvc")).cast(dec)
+        - (col("_totx").cast(dec) * col("_k")).cast(dec))
+  }
+
+  /** The half-synchronous pass loop of [[louvainMove]] and
+    * [[louvainMoveWeighted]]: `sym` is the symmetric edge list (_a, _b,
+    * …) partitioned on _b, `state0` the vertex state (_v, _k, _r, _c),
+    * `mRow` the one-row total weight _m. Per pass, `links` aggregates
+    * each (vertex, neighbor community) pair into _kvc and `score` is
+    * the gain numerator over _m, _kvc, _totx and _k. Returns (vertex,
+    * community, comm_size).
+    */
+  private def louvainPasses(sym: DataFrame, state0: DataFrame,
+      mRow: DataFrame, passes: Int, links: Column, score: Column)
+      : DataFrame = {
+    var state = state0
     for (pass <- 1 to passes) {
       val tot = state.groupBy(col("_c")).agg(sum("_k").as("_tot"))
       val kvc = sym
         .join(broadcast(state.select(col("_v").as("_b"),
           col("_c").as("_nc"))), "_b")
         .groupBy(col("_a").as("_v"), col("_nc").as("_cand"))
-        .agg(sum("_w").as("_kvc"))
-      // the louvainMove min-struct argmax (decimal scores order
-      // correctly under struct comparison)
+        .agg(links.as("_kvc"))
+      // argmax as min(struct(-score, cand)) — lexicographic struct
+      // order IS (score DESC, community ASC), and a hash aggregate
+      // with map-side partials beats a sort window on the same key
       state = kvc
         .unionByName(state.select(col("_v"), col("_c").as("_cand"))
           .withColumn("_kvc", lit(0L)))
@@ -1143,9 +1076,7 @@ object Graph {
         .withColumn("_totx",
           col("_tot") - when(col("_cand") === col("_c"), col("_k"))
             .otherwise(lit(0L)))
-        .withColumn("_score",
-          (lit(2L).cast(dec) * col("_m") * col("_kvc")).cast(dec)
-            - (col("_totx").cast(dec) * col("_k")).cast(dec))
+        .withColumn("_score", score)
         .groupBy("_v")
         .agg(min(struct((-col("_score")).as("_ns"),
             col("_cand").as("_cd"))).as("_bst"),
@@ -1755,66 +1686,12 @@ object Graph {
     */
   def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
       maxMiddleDegree: Int, k: Int): DataFrame = {
-    require(maxMiddleDegree >= 2,
-      s"maxMiddleDegree=$maxMiddleDegree must be >= 2")
-    require(k >= 1, s"k=$k must be >= 1")
-    val half = canonicalEdges(edges, srcCol, dstCol)
-      .select(col("lo").as("_a"), col("hi").as("_b"))
-      .localCheckpoint() // sym, degrees, and the anti-join re-read it
-    // Driver fast path (r18): the wedge fan the two pinned merge
-    // joins + aggregate compute distributedly is enumerated in memory
-    // (see [[linkPredDriverDf]]); falls back past the key/fan budgets.
-    DriverPath.rows(half).flatMap(rows =>
-        linkPredDriverDf(edges.sparkSession, rows, maxMiddleDegree, k,
-          jaccardMode = false)) match {
-      case Some(df) => return df
-      case None =>
-    }
-    val sym = half.unionByName(
-      half.select(col("_b").as("_a"), col("_a").as("_b")))
-    val degs = sym.groupBy(col("_a").as("_v")).agg(count(lit(1)).as("_deg"))
-    val mids = degs.filter(col("_deg") <= maxMiddleDegree)
-    // Join strategies are PINNED, not stats-derived: a localCheckpointed
-    // edge frame (fresh build or the GraphOps parquet cache) reports
-    // whatever sizeInBytes its RDD happens to have, and a small-looking
-    // frame made Catalyst BROADCAST the full symmetric edge table into
-    // both big joins (r14, the q_link_pred watch item: 7.5 s cached vs
-    // 2.5 s fresh for the same data — and at 100 TB an edge-table
-    // broadcast is not slow, it's dead). ALL THREE joins get merge
-    // hints (shuffle on the join key, skew-safe, size-independent):
-    // the degree-capped vertex list is small-ish but NOT small by
-    // construction — capping only removes high-degree hubs, so on a
-    // large graph `mids` is still MOST vertices, and force-broadcasting
-    // it would OOM executors at the scale these comments target (r15).
-    // path-2 through an under-cap middle: (x, u) ⋈ (u, y), x < y
-    val viaMid = sym
-      .join(mids.hint("merge"), sym("_b") === mids("_v"))
-      .select(col("_a").as("_x"), col("_b").as("_u"), col("_deg"))
-    val cands = viaMid.as("l")
-      .join(sym.as("r").hint("merge"), col("l._u") === col("r._a"))
-      .filter(col("l._x") < col("r._b"))
-      .select(col("l._x").as("_pa"), col("r._b").as("_pb"),
-        col("l._deg").as("_mdeg"))
-    val scored = cands
-      .groupBy("_pa", "_pb")
-      .agg(count(lit(1)).as("common_neighbors"),
+    linkPredTopK(edges, srcCol, dstCol, maxMiddleDegree, k,
+        jaccardMode = false,
         sum(when(col("_mdeg") > 1, lit(1.0) / log(col("_mdeg")
-          .cast("double")))).as("_aa"))
-      // prediction = pairs NOT already linked
-      .join(half.hint("merge"),
-        col("_pa") === col("_a") && col("_pb") === col("_b"),
-        "left_anti")
-    // Global top-k WITHOUT a single-partition window: orderBy+limit
-    // plans as TakeOrderedAndProject — each partition keeps a local
-    // k-heap and the driver merges partitions × k rows, so the full
-    // candidate set never lands on one task (the r10 verdict's one
-    // remaining plan-shape hazard here).
-    scored
-      .withColumn("adamic_adar", round(col("_aa"), 6).cast("double"))
-      .orderBy(col("adamic_adar").desc, col("_pa"), col("_pb"))
-      .limit(k)
-      .select(col("_pa").as("a"), col("_pb").as("b"),
-        col("common_neighbors"), col("adamic_adar"))
+          .cast("double")))).as("_aa")) { (pairs, _) =>
+      pairs.withColumn("adamic_adar", round(col("_aa"), 6).cast("double"))
+    }
   }
 
   /** Jaccard-coefficient link prediction — [[linkPrediction]]'s
@@ -1844,17 +1721,45 @@ object Graph {
     */
   def linkPredictionJaccard(edges: DataFrame, srcCol: String,
       dstCol: String, maxMiddleDegree: Int, k: Int): DataFrame = {
+    linkPredTopK(edges, srcCol, dstCol, maxMiddleDegree, k,
+        jaccardMode = true) { (pairs, degs) =>
+      pairs
+        .join(degs.select(col("_v").as("_pa"), col("_deg").as("_da"))
+          .hint("merge"), "_pa")
+        .join(degs.select(col("_v").as("_pb"), col("_deg").as("_db"))
+          .hint("merge"), "_pb")
+        .withColumn("jaccard",
+          round(col("common_neighbors").cast("double")
+            / (col("_da") + col("_db") - col("common_neighbors"))
+              .cast("double"), 6).cast("double"))
+    }
+  }
+
+  /** The link predictors' shared body: the gate on the canonical half
+    * edges ([[linkPredDriverDf]] under the bound), else the degree-capped
+    * path-2 candidates. `pairs` are the non-adjacent candidate pairs
+    * (_pa, _pb) with common_neighbors and the `extra` aggregates over
+    * each wedge's middle degree _mdeg; `score` adds the score column
+    * (jaccard or adamic_adar) given them and the (_v, _deg) degrees.
+    * Returns the top k (a, b, common_neighbors, score) under (score
+    * DESC, a, b).
+    */
+  private def linkPredTopK(edges: DataFrame, srcCol: String,
+      dstCol: String, maxMiddleDegree: Int, k: Int, jaccardMode: Boolean,
+      extra: Column*)(score: (DataFrame, DataFrame) => DataFrame)
+      : DataFrame = {
     require(maxMiddleDegree >= 2,
       s"maxMiddleDegree=$maxMiddleDegree must be >= 2")
     require(k >= 1, s"k=$k must be >= 1")
     val half = canonicalEdges(edges, srcCol, dstCol)
       .select(col("lo").as("_a"), col("hi").as("_b"))
-      .localCheckpoint()
-    // Driver fast path (r18) — [[linkPredDriverDf]] in jaccard mode
-    // (uncapped degree denominators, same candidates and anti-join)
+      .localCheckpoint() // sym, degrees, and the anti-join re-read it
+    // Driver fast path (r18): the wedge fan the two pinned merge
+    // joins + aggregate compute distributedly is enumerated in memory
+    // (see [[linkPredDriverDf]]); falls back past the key/fan budgets.
     DriverPath.rows(half).flatMap(rows =>
-        linkPredDriverDf(edges.sparkSession,
-          rows, maxMiddleDegree, k, jaccardMode = true)) match {
+        linkPredDriverDf(edges.sparkSession, rows, maxMiddleDegree, k,
+          jaccardMode)) match {
       case Some(df) => return df
       case None =>
     }
@@ -1862,31 +1767,45 @@ object Graph {
       half.select(col("_b").as("_a"), col("_a").as("_b")))
     val degs = sym.groupBy(col("_a").as("_v")).agg(count(lit(1)).as("_deg"))
     val mids = degs.filter(col("_deg") <= maxMiddleDegree)
+    // Join strategies are PINNED, not stats-derived: a localCheckpointed
+    // edge frame (fresh build or the GraphOps parquet cache) reports
+    // whatever sizeInBytes its RDD happens to have, and a small-looking
+    // frame made Catalyst BROADCAST the full symmetric edge table into
+    // both big joins (r14, the q_link_pred watch item: 7.5 s cached vs
+    // 2.5 s fresh for the same data — and at 100 TB an edge-table
+    // broadcast is not slow, it's dead). ALL THREE joins get merge
+    // hints (shuffle on the join key, skew-safe, size-independent):
+    // the degree-capped vertex list is small-ish but NOT small by
+    // construction — capping only removes high-degree hubs, so on a
+    // large graph `mids` is still MOST vertices, and force-broadcasting
+    // it would OOM executors at the scale these comments target (r15).
+    // path-2 through an under-cap middle: (x, u) ⋈ (u, y), x < y
     val viaMid = sym
       .join(mids.hint("merge"), sym("_b") === mids("_v"))
-      .select(col("_a").as("_x"), col("_b").as("_u"))
+      .select(col("_a").as("_x"), col("_b").as("_u"), col("_deg"))
     val cands = viaMid.as("l")
       .join(sym.as("r").hint("merge"), col("l._u") === col("r._a"))
       .filter(col("l._x") < col("r._b"))
-      .select(col("l._x").as("_pa"), col("r._b").as("_pb"))
-    cands
+      .select(col("l._x").as("_pa"), col("r._b").as("_pb"),
+        col("l._deg").as("_mdeg"))
+    val pairs = cands
       .groupBy("_pa", "_pb")
-      .agg(count(lit(1)).as("common_neighbors"))
+      .agg(count(lit(1)).as("common_neighbors"), extra: _*)
+      // prediction = pairs NOT already linked
       .join(half.hint("merge"),
         col("_pa") === col("_a") && col("_pb") === col("_b"),
         "left_anti")
-      .join(degs.select(col("_v").as("_pa"), col("_deg").as("_da"))
-        .hint("merge"), "_pa")
-      .join(degs.select(col("_v").as("_pb"), col("_deg").as("_db"))
-        .hint("merge"), "_pb")
-      .withColumn("jaccard",
-        round(col("common_neighbors").cast("double")
-          / (col("_da") + col("_db") - col("common_neighbors"))
-            .cast("double"), 6).cast("double"))
-      .orderBy(col("jaccard").desc, col("_pa"), col("_pb"))
+    val scoreName = if (jaccardMode) "jaccard" else "adamic_adar"
+    // Global top-k WITHOUT a single-partition window: orderBy+limit
+    // plans as TakeOrderedAndProject — each partition keeps a local
+    // k-heap and the driver merges partitions × k rows, so the full
+    // candidate set never lands on one task (the r10 verdict's one
+    // remaining plan-shape hazard here).
+    score(pairs, degs)
+      .orderBy(col(scoreName).desc, col("_pa"), col("_pb"))
       .limit(k)
       .select(col("_pa").as("a"), col("_pb").as("b"),
-        col("common_neighbors"), col("jaccard"))
+        col("common_neighbors"), col(scoreName))
   }
 
   /** Rich-club coefficient at each degree threshold k: among the N_k
@@ -2784,71 +2703,15 @@ object Graph {
       dstCol: String, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 8,
       s"eigenvectorCentrality: iters must be in [1, 8], got $iters")
-    val canon = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
-    // Small-graph driver fast path (r18, the harmonic/louvain
-    // precedent). Unlike the pageRank family this replica is BIT-
-    // EXACT, not just quantum-protected: the per-vertex neighbor sum
-    // is an order-free decimal(38,12) fold of 12-dp-frozen scores, so
-    // folding the same decimals as BigInt unscaled units reproduces
-    // _sum, the max, and the renormalized quotient identically.
-    // GraphSpec pins path equality.
-    DriverPath.rows(canon) match {
-      case Some(rows) =>
-        val (names, adj) = denseAdjacency(rows)
-        val n = names.length
-        var x = Array.fill(n)(1.0)
-        for (_ <- 1 to iters) {
-          // decimal(38,12) unscaled units of round(_ev, 12), exactly the
-          // in-plan round(...).cast("decimal(38,12)")
-          val units = x.map(v => BigInt(java.math.BigDecimal
-            .valueOf(roundHalfUp(v, 12))
-            .setScale(12, java.math.RoundingMode.HALF_UP).unscaledValue()))
-          val sums = Array.tabulate(n) { v =>
-            var s = BigInt(0); val nb = adj(v); var i = 0
-            while (i < nb.length) { s += units(nb(i)); i += 1 }
-            s
-          }
-          val mxD = new java.math.BigDecimal(
-            sums.max.bigInteger, 12).doubleValue()
-          x = sums.map(s => roundHalfUp(
-            new java.math.BigDecimal(s.bigInteger, 12).doubleValue() / mxD,
-            12))
-        }
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(StructField("vertex", StringType),
-          StructField("eigenvector", DoubleType)))
-        return DriverPath.frame(edges.sparkSession,
-          (0 until n).map(v => Row(names(v), roundHalfUp(x(v), 6))), schema)
-      case None =>
-    }
-    // partition the symmetric edge table ONCE on the per-pass join key
-    // (w): localCheckpoint pins the layout, so every iteration's join
-    // exchanges only the vertex-sized state — the pageRank discipline;
-    // without this each pass re-shuffles the EDGES, the actual big side
-    val sym = canon.select(col("lo").as("v"), col("hi").as("w"))
-      .unionByName(canon.select(col("hi").as("v"), col("lo").as("w")))
-      .repartition(col("w"))
-      .localCheckpoint()
-    freeLocalCheckpoint(canon) // superseded: sym is the loop's only input
-    var state = sym.select(col("v")).distinct()
-      .withColumn("_ev", lit(1.0))
-    for (_ <- 1 to iters) {
-      val summed = sym
-        .join(state.select(col("v").as("_sv"), col("_ev")),
-          col("w") === col("_sv"))
-        .groupBy("v")
-        .agg(sum(round(col("_ev"), 12).cast("decimal(38,12)")).as("_sum"))
-      val mx = summed.agg(max("_sum").as("_mx"))
-      state = summed.crossJoin(broadcast(mx))
+    powerIteration(edges, srcCol, dstCol, iters, "eigenvector")(
+      summed => summed
+        .crossJoin(broadcast(summed.agg(max("_sum").as("_mx"))))
         .select(col("v"),
           round(col("_sum").cast("double") / col("_mx").cast("double"),
-            12).as("_ev"))
-        // lazy: identical lineage truncation, one fewer blocking
-        // driver-side job per pass (the pageRank loop discipline)
-        .localCheckpoint(false)
+            12).as("_x"))) { sums =>
+      val mx = DriverPath.dec12ToDouble(sums.max)
+      sums.map(u => roundHalfUp(DriverPath.dec12ToDouble(u) / mx, 12))
     }
-    state.select(col("v").as("vertex"),
-      round(col("_ev"), 6).cast("double").as("eigenvector"))
   }
 
   /** Katz centrality by FIXED attenuated iterations — the
@@ -2874,36 +2737,56 @@ object Graph {
       s"katzCentrality: iters must be in [1, 8], got $iters")
     require(alpha > 0.0 && alpha < 1.0,
       s"katzCentrality: alpha must be in (0, 1), got $alpha")
+    powerIteration(edges, srcCol, dstCol, iters, "katz")(
+      _.select(col("v"),
+        round(lit(alpha) * col("_sum").cast("double") + lit(1.0), 12)
+          .as("_x"))) { sums =>
+      sums.map(u => roundHalfUp(alpha * DriverPath.dec12ToDouble(u) + 1.0, 12))
+    }
+  }
+
+  /** The power loop of [[eigenvectorCentrality]] and [[katzCentrality]]
+    * on the symmetric canonical graph: x₀ = 1 on every vertex; per pass
+    * each vertex's neighbor scores, frozen at 12 dp, sum into an
+    * order-free decimal(38,12) `_sum`, and `pass` (the plan: (v, _sum)
+    * → (v, _x)) or `update` (the replica: every vertex's sum in
+    * decimal(38,12) units → its next score) gives the next scores.
+    * Reports (vertex, `outCol`) at 6 dp.
+    */
+  private def powerIteration(edges: DataFrame, srcCol: String,
+      dstCol: String, iters: Int, outCol: String)(
+      pass: DataFrame => DataFrame)(update: Array[BigInt] => Array[Double])
+      : DataFrame = {
     val canon = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
-    // Small-graph driver fast path — BIT-EXACT like
-    // [[eigenvectorCentrality]]'s: order-free decimal(38,12) neighbor
-    // folds replicated as BigInt unscaled units, then the identical
-    // α·sum + 1 double expression under the 12-dp freeze. GraphSpec
-    // pins path equality.
+    // Small-graph driver fast path (r18, the harmonic/louvain
+    // precedent). Unlike the pageRank family this replica is BIT-
+    // EXACT, not just quantum-protected: the neighbor sums are
+    // [[DriverPath.fold]]'s exact decimal(38,12) sums of the same
+    // 12-dp-frozen scores, so `update` sees the plan's _sum exactly.
+    // GraphSpec pins path equality.
     DriverPath.rows(canon) match {
       case Some(rows) =>
-        val (names, adj) = denseAdjacency(rows)
-        val n = names.length
-        var x = Array.fill(n)(1.0)
-        for (_ <- 1 to iters) {
-          val units = x.map(v => BigInt(java.math.BigDecimal
-            .valueOf(roundHalfUp(v, 12))
-            .setScale(12, java.math.RoundingMode.HALF_UP).unscaledValue()))
-          x = Array.tabulate(n) { v =>
-            var s = BigInt(0); val nb = adj(v); var i = 0
-            while (i < nb.length) { s += units(nb(i)); i += 1 }
-            roundHalfUp(alpha
-              * new java.math.BigDecimal(s.bigInteger, 12).doubleValue()
-              + 1.0, 12)
-          }
-        }
+        val g = DriverPath.edges(rows)
+        // each canonical edge twice: lo sums hi's score, hi sums lo's
+        val (to, from) = (g.src ++ g.dst, g.dst ++ g.src)
+        var x = Array.fill(g.n)(1.0)
+        // an edgeless graph has no vertex (and no max to normalize by):
+        // 0 rows, as distributed
+        if (g.n > 0) for (_ <- 1 to iters)
+          x = update(DriverPath.fold(to.length, g.n, to, nDec = 1) {
+            (i, out) => out(0) = x(from(i))
+          }.dec(0))
         import org.apache.spark.sql.types._
         val schema = StructType(Seq(StructField("vertex", StringType),
-          StructField("katz", DoubleType)))
-        return DriverPath.frame(edges.sparkSession,
-          (0 until n).map(v => Row(names(v), roundHalfUp(x(v), 6))), schema)
+          StructField(outCol, DoubleType)))
+        return DriverPath.frame(edges.sparkSession, (0 until g.n).map(v =>
+          Row(g.names(v), roundHalfUp(x(v), 6))), schema)
       case None =>
     }
+    // partition the symmetric edge table ONCE on the per-pass join key
+    // (w): localCheckpoint pins the layout, so every iteration's join
+    // exchanges only the vertex-sized state — the pageRank discipline;
+    // without this each pass re-shuffles the EDGES, the actual big side
     val sym = canon.select(col("lo").as("v"), col("hi").as("w"))
       .unionByName(canon.select(col("hi").as("v"), col("lo").as("w")))
       .repartition(col("w"))
@@ -2912,19 +2795,17 @@ object Graph {
     var state = sym.select(col("v")).distinct()
       .withColumn("_x", lit(1.0))
     for (_ <- 1 to iters) {
-      state = sym
-        .join(state.select(col("v").as("_sv"), col("_x")),
-          col("w") === col("_sv"))
-        .groupBy("v")
-        .agg(sum(round(col("_x"), 12).cast("decimal(38,12)")).as("_sum"))
-        .select(col("v"),
-          round(lit(alpha) * col("_sum").cast("double") + lit(1.0), 12)
-            .as("_x"))
-        // lazy: the pageRank loop discipline (no blocking job per pass)
+      state = pass(sym
+          .join(state.select(col("v").as("_sv"), col("_x")),
+            col("w") === col("_sv"))
+          .groupBy("v")
+          .agg(sum(round(col("_x"), 12).cast("decimal(38,12)")).as("_sum")))
+        // lazy: identical lineage truncation, one fewer blocking
+        // driver-side job per pass (the pageRank loop discipline)
         .localCheckpoint(false)
     }
     state.select(col("v").as("vertex"),
-      round(col("_x"), 6).cast("double").as("katz"))
+      round(col("_x"), 6).cast("double").as(outCol))
   }
 
   /** Hop-2-truncated betweenness centrality, distributed — "who

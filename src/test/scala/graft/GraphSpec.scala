@@ -479,19 +479,22 @@ class GraphSpec extends SparkTestBase {
     }.filter(e => e._1 != e._2)
       ++ (1 to 25).map(i => ("hub", i.toString))) // degree-25 hub
       .toDF("s", "t")
-    for (cap <- Seq(3, 10, 50); kk <- Seq(5, 1000)) {
-      val fa = Graph.linkPrediction(es, "s", "t", cap, kk)
+    // plus the empty graph and a single edge (no candidate pair)
+    val inputs = Seq("graph" -> es, "empty" -> es.limit(0),
+      "one edge" -> Seq(("a", "b")).toDF("s", "t"))
+    for ((name, in) <- inputs; cap <- Seq(3, 10, 50); kk <- Seq(5, 1000)) {
+      val fa = Graph.linkPrediction(in, "s", "t", cap, kk)
         .collect().map(_.toSeq)
       val da = withDriverPathMaxRows(0)(
-        Graph.linkPrediction(es, "s", "t", cap, kk))
+        Graph.linkPrediction(in, "s", "t", cap, kk))
         .collect().map(_.toSeq)
-      assert(fa.toSeq === da.toSeq, s"AA cap=$cap k=$kk")
-      val fj = Graph.linkPredictionJaccard(es, "s", "t", cap, kk)
+      assert(fa.toSeq === da.toSeq, s"AA $name cap=$cap k=$kk")
+      val fj = Graph.linkPredictionJaccard(in, "s", "t", cap, kk)
         .collect().map(_.toSeq)
       val dj = withDriverPathMaxRows(0)(
-        Graph.linkPredictionJaccard(es, "s", "t", cap, kk))
+        Graph.linkPredictionJaccard(in, "s", "t", cap, kk))
         .collect().map(_.toSeq)
-      assert(fj.toSeq === dj.toSeq, s"jaccard cap=$cap k=$kk")
+      assert(fj.toSeq === dj.toSeq, s"jaccard $name cap=$cap k=$kk")
     }
   }
 
@@ -615,13 +618,16 @@ class GraphSpec extends SparkTestBase {
       yield Seq(s"b${blk}t${t}v0" -> s"b${blk}t${t + 1}v0")
     val between = (0 until 3).map(b => Seq(s"b${b}t2v2" -> s"b${b + 1}t0v2"))
     val edges = (tris ++ chains ++ between).flatten.toDF("s", "t")
-    for (p <- Seq(1, 2, 4)) {
-      val fast = Graph.louvainMove(edges, "s", "t", p)
+    // plus the empty graph and a single edge
+    val inputs = Seq("graph" -> edges, "empty" -> edges.limit(0),
+      "one edge" -> Seq("a" -> "b").toDF("s", "t"))
+    for ((name, in) <- inputs; p <- Seq(1, 2, 4)) {
+      val fast = Graph.louvainMove(in, "s", "t", p)
         .as[(String, String, Long)].collect().toSet
       val dist = withDriverPathMaxRows(0)(
-        Graph.louvainMove(edges, "s", "t", p))
+        Graph.louvainMove(in, "s", "t", p))
         .as[(String, String, Long)].collect().toSet
-      assert(fast === dist, s"unweighted passes=$p")
+      assert(fast === dist, s"unweighted $name passes=$p")
     }
     // weighted + self-loops: the contracted-super-graph shape the
     // multilevel ladder feeds in (weights > 1, self-loop mass, and a
@@ -629,13 +635,15 @@ class GraphSpec extends SparkTestBase {
     val wEdges = (Seq(("a", "b", 3L), ("b", "c", 1L), ("c", "d", 3L),
       ("a", "a", 2L), ("d", "d", 2L), ("e", "f", 1L)))
       .toDF("s", "t", "w")
-    for (p <- Seq(1, 3)) {
-      val fast = Graph.louvainMoveWeighted(wEdges, "s", "t", "w", p)
+    val wInputs = Seq("graph" -> wEdges, "empty" -> wEdges.limit(0),
+      "one edge" -> Seq(("a", "b", 2L)).toDF("s", "t", "w"))
+    for ((name, in) <- wInputs; p <- Seq(1, 3)) {
+      val fast = Graph.louvainMoveWeighted(in, "s", "t", "w", p)
         .as[(String, String, Long)].collect().toSet
       val dist = withDriverPathMaxRows(0)(
-        Graph.louvainMoveWeighted(wEdges, "s", "t", "w", p))
+        Graph.louvainMoveWeighted(in, "s", "t", "w", p))
         .as[(String, String, Long)].collect().toSet
-      assert(fast === dist, s"weighted passes=$p")
+      assert(fast === dist, s"weighted $name passes=$p")
     }
     // the driver path fires the same positive-integer weight guard
     intercept[Exception] {
@@ -661,14 +669,18 @@ class GraphSpec extends SparkTestBase {
           .as[(String, Double)].collect().toSet
         assert(fast === dist, s"pageRank iters=$it")
       }
-      val fastP = Graph.pageRankPersonalized(dEdges, "s", "t",
-          sources = Seq("a", "e"), iters = it)
-        .as[(String, Double)].collect().toSet
-      val distP = withDriverPathMaxRows(0)(
-        Graph.pageRankPersonalized(dEdges, "s", "t",
-          sources = Seq("a", "e"), iters = it))
-        .as[(String, Double)].collect().toSet
-      assert(fastP === distP, s"ppr iters=$it")
+      // plus the empty graph and a single edge
+      for (in <- Seq(dEdges, dEdges.limit(0),
+          Seq("a" -> "b").toDF("s", "t"))) {
+        val fastP = Graph.pageRankPersonalized(in, "s", "t",
+            sources = Seq("a", "e"), iters = it)
+          .as[(String, Double)].collect().toSet
+        val distP = withDriverPathMaxRows(0)(
+          Graph.pageRankPersonalized(in, "s", "t",
+            sources = Seq("a", "e"), iters = it))
+          .as[(String, Double)].collect().toSet
+        assert(fastP === distP, s"ppr iters=$it")
+      }
       val fastH = Graph.hits(dEdges, "s", "t", iters = it)
         .as[(String, Double, Double)].collect().toSet
       val distH = withDriverPathMaxRows(0)(
@@ -691,23 +703,35 @@ class GraphSpec extends SparkTestBase {
       assert(fast === dist, s"pageRankWeighted iters=$it")
       assert(fast.map(_._1) === Set("a", "b", "c", "d", "x"),
         "dropped-weight endpoint x must still rank")
+      // the empty graph and a single edge
+      for (in <- Seq(wEdges.limit(0), Seq(("a", "b", 2.0)).toDF("s", "t", "w"))) {
+        val fastW = Graph.pageRankWeighted(in, "s", "t", "w", iters = it)
+          .as[(String, Double)].collect().toSet
+        val distW = withDriverPathMaxRows(0)(
+          Graph.pageRankWeighted(in, "s", "t", "w", iters = it))
+          .as[(String, Double)].collect().toSet
+        assert(fastW === distW, s"pageRankWeighted iters=$it")
+      }
     }
     // undirected decimal-fold kernels: triangle + pendant + an isolated
     // tie pair (exercises the sup-normalizer and the α·sum+1 base)
     val uEdges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "p",
       "x" -> "y").toDF("s", "t")
-    for (it <- Seq(1, 3, 5)) {
-      val fastE = Graph.eigenvectorCentrality(uEdges, "s", "t", iters = it)
+    // plus the empty graph (no vertex, so no max to normalize by) and
+    // a single edge
+    for (it <- Seq(1, 3, 5); in <- Seq(uEdges, uEdges.limit(0),
+        Seq("a" -> "b").toDF("s", "t"))) {
+      val fastE = Graph.eigenvectorCentrality(in, "s", "t", iters = it)
         .as[(String, Double)].collect().toSet
       val distE = withDriverPathMaxRows(0)(
-        Graph.eigenvectorCentrality(uEdges, "s", "t", iters = it))
+        Graph.eigenvectorCentrality(in, "s", "t", iters = it))
         .as[(String, Double)].collect().toSet
       assert(fastE === distE, s"eigenvector iters=$it")
-      val fastK = Graph.katzCentrality(uEdges, "s", "t", alpha = 0.1,
+      val fastK = Graph.katzCentrality(in, "s", "t", alpha = 0.1,
           iters = it)
         .as[(String, Double)].collect().toSet
       val distK = withDriverPathMaxRows(0)(
-        Graph.katzCentrality(uEdges, "s", "t", alpha = 0.1,
+        Graph.katzCentrality(in, "s", "t", alpha = 0.1,
           iters = it))
         .as[(String, Double)].collect().toSet
       assert(fastK === distK, s"katz iters=$it")
