@@ -262,7 +262,10 @@ object Bench {
       // first-touch profile as their judged siblings
       "q_leiden", "q_katz", "q_sssp", "q_link_pred_jaccard",
       "q_gmm", "q_als", "q_als_recs", "q_rec_eval_als",
-      "q_component_sizes")
+      "q_component_sizes",
+      // these swing past ±10% between sweeps on noise alone; the
+      // minimum of two reps reports their steady band
+      "q_rfm", "q_ann_ivfpq_recall", "q_pmi_pairs", "q_pipeline_curate")
     // First pass: time every query once, in name order; family
     // members get the second rep immediately (same warmed state).
     // flaky accounting (r16 ADVICE): a rep-2 failure after a rep-1 pass

@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.nio.ByteBuffer
+
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
@@ -50,7 +52,18 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
   *
   * Determinism: byte-stable serialization (big-endian k, level
   * count, per-level sizes + IEEE doubles); a serialized sketch
-  * reloads bit-identical and re-serializes bit-identical.
+  * reloads bit-identical and re-serializes bit-identical
+  * (`QuantileSketchSpec` pins the bytes).
+  *
+  * Cost model: every level is a primitive `double[]`, so no value is
+  * boxed. A compaction sorts the overfull level in place; encode and
+  * decode copy each level in bulk; a merge appends levels with
+  * `System.arraycopy`, and the merge aggregate appends serialized
+  * levels straight from the bytes. `quantile(q)` makes one primitive
+  * sort per level per call (a copy, O(m log m) for m held values)
+  * plus a weighted k-way merge over the levels' heads, so each
+  * `quantileOf` column pays the sorts again. `countOf` reads only the
+  * level-size header and skips the values.
   *
   * Scale shape: the aggregate buffer is O(k·log(n/k)) doubles
   * regardless of input size; map-side partial aggregation pre-merges
@@ -59,19 +72,73 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
   */
 object QuantileSketch {
 
+  /** One level's values: a growable primitive `double[]`. */
+  final class Level private[QuantileSketch] () {
+    private[QuantileSketch] var values: Array[Double] = new Array[Double](8)
+    private[QuantileSketch] var size: Int = 0
+
+    def length: Int = size
+
+    private def reserve(extra: Int): Unit =
+      if (size + extra > values.length)
+        values = java.util.Arrays.copyOf(values,
+          math.max(size + extra, 2 * values.length))
+
+    private[QuantileSketch] def add(v: Double): Unit = {
+      reserve(1)
+      values(size) = v
+      size += 1
+    }
+
+    private[QuantileSketch] def addAll(src: Array[Double], n: Int): Unit = {
+      reserve(n)
+      System.arraycopy(src, 0, values, size, n)
+      size += n
+    }
+
+    /** Bulk-reads `n` big-endian doubles at the buffer's position. */
+    private[QuantileSketch] def addFrom(bb: ByteBuffer, n: Int): Unit = {
+      reserve(n)
+      bb.asDoubleBuffer().get(values, size, n)
+      bb.position(bb.position() + 8 * n)
+      size += n
+    }
+
+    /** Bulk-writes the values as big-endian doubles. */
+    private[QuantileSketch] def writeTo(bb: ByteBuffer): Unit = {
+      bb.asDoubleBuffer().put(values, 0, size)
+      bb.position(bb.position() + 8 * size)
+    }
+
+    private[QuantileSketch] def sortedCopy: Array[Double] = {
+      val a = java.util.Arrays.copyOf(values, size)
+      java.util.Arrays.sort(a)
+      a
+    }
+  }
+
   /** In-memory sketch: per-level value buffers, level i weight 2^i. */
-  final class Buf(val k: Int, val levels: ArrayBuffer[ArrayBuffer[Double]]) {
-    def this(k: Int) = this(k, ArrayBuffer(ArrayBuffer.empty[Double]))
+  final class Buf(val k: Int) {
+    val levels: ArrayBuffer[Level] = ArrayBuffer(new Level)
+
+    /** Level i, adding empty levels up to it. */
+    private def levelAt(i: Int): Level = {
+      while (levels.length <= i) levels += new Level
+      levels(i)
+    }
 
     def update(v: Double): Unit = {
-      levels(0) += v
+      levels(0).add(v)
       if (levels(0).length > k) compactFrom(0)
     }
 
     private def compactLevel(i: Int): Unit = {
-      val sorted = levels(i).sorted
-      if (levels.length == i + 1) levels += ArrayBuffer.empty[Double]
-      val up = levels(i + 1)
+      val lv = levels(i)
+      // the level is emptied below, so it sorts in place
+      java.util.Arrays.sort(lv.values, 0, lv.size)
+      val sorted = lv.values
+      val n = lv.size
+      val up = levelAt(i + 1)
       // weight conservation: an odd-size level keeps its smallest
       // element here (weight 2^i) and promotes every second element of
       // the even remainder (each promoted value doubles in weight), so
@@ -82,12 +149,12 @@ object QuantileSketch {
       // expectation; a FIXED parity stacks them coherently across
       // levels. Level-parity alternation is the stateless deterministic
       // stand-in — reproducible bit-for-bit, serialization unchanged.
-      val odd = sorted.length % 2 == 1
+      val odd = n % 2 == 1
       val keepN = if (odd) 1 else 0
       var j = keepN + (if (i % 2 == 0) 1 else 0)
-      while (j < sorted.length) { up += sorted(j); j += 2 }
-      levels(i).clear()
-      if (odd) levels(i) += sorted(0)
+      while (j < n) { up.add(sorted(j)); j += 2 }
+      // an odd level keeps sorted(0), already in place
+      lv.size = keepN
     }
 
     private def compactFrom(i0: Int): Unit = {
@@ -102,17 +169,40 @@ object QuantileSketch {
       }
     }
 
+    private def requireSameK(otherK: Int): Unit =
+      require(otherK == k,
+        s"quantile_sketch: capacity mismatch ($otherK vs $k)")
+
     def merge(other: Buf): Buf = {
-      require(other.k == k,
-        s"quantile_sketch: capacity mismatch (${other.k} vs $k)")
+      requireSameK(other.k)
       var i = 0
       while (i < other.levels.length) {
-        while (levels.length <= i) levels += ArrayBuffer.empty[Double]
-        levels(i) ++= other.levels(i)
+        val src = other.levels(i)
+        levelAt(i).addAll(src.values, src.size)
         i += 1
       }
       compactFrom(0)
       this
+    }
+
+    /** `merge(deserialize(bytes))` without the intermediate sketch: the
+      * serialized levels are appended straight into this one. */
+    def mergeSerialized(bytes: Array[Byte]): Buf = {
+      val bb = ByteBuffer.wrap(bytes)
+      requireSameK(bb.getInt)
+      readLevels(bb)
+      compactFrom(0)
+      this
+    }
+
+    /** Appends the level count and levels at `bb`'s position. */
+    private[QuantileSketch] def readLevels(bb: ByteBuffer): Unit = {
+      val n = bb.getInt
+      var i = 0
+      while (i < n) {
+        levelAt(i).addFrom(bb, bb.getInt)
+        i += 1
+      }
     }
 
     /** Total represented weight (the value count). */
@@ -127,57 +217,76 @@ object QuantileSketch {
     }
 
     /** Type-1 quantile: smallest value whose cumulative weight reaches
-      * ceil(q·W) (floor 1); exact while never compacted. */
+      * ceil(q·W) (floor 1); exact while never compacted. Each level is
+      * sorted into a primitive copy, then a weighted k-way merge walks
+      * the levels in `Double.compare` order (-0.0 before 0.0), the
+      * lower level first among equal values. */
     def quantile(q: Double): Option[Double] = {
       val w = count
       if (w == 0L) None
       else {
         val target = math.max(1L, math.ceil(q * w).toLong)
-        val pairs = ArrayBuffer.empty[(Double, Long)]
-        var i = 0
-        while (i < levels.length) {
-          levels(i).foreach(v => pairs += ((v, 1L << i)))
-          i += 1
-        }
-        val sorted = pairs.sortBy(_._1)
+        val nl = levels.length
+        val sorted = Array.tabulate(nl)(i => levels(i).sortedCopy)
+        val pos = new Array[Int](nl)
         var cum = 0L
-        var j = 0
-        while (j < sorted.length) {
-          cum += sorted(j)._2
-          if (cum >= target) return Some(sorted(j)._1)
-          j += 1
+        var last = 0.0
+        var best = 0
+        while (cum < target && best >= 0) {
+          best = -1
+          var i = 0
+          while (i < nl) {
+            if (pos(i) < sorted(i).length && (best < 0 ||
+                java.lang.Double.compare(sorted(i)(pos(i)),
+                  sorted(best)(pos(best))) < 0))
+              best = i
+            i += 1
+          }
+          if (best >= 0) {
+            last = sorted(best)(pos(best))
+            pos(best) += 1
+            cum += 1L << best
+          }
         }
-        Some(sorted.last._1)
+        Some(last)
       }
     }
 
     def serialize: Array[Byte] = {
-      val sizes = levels.map(_.length)
-      val bb = java.nio.ByteBuffer.allocate(
-        8 + 4 * levels.length + 8 * sizes.sum)
+      val values = levels.iterator.map(_.length).sum
+      val bb = ByteBuffer.allocate(8 + 4 * levels.length + 8 * values)
       bb.putInt(k)
       bb.putInt(levels.length)
       levels.foreach { lv =>
         bb.putInt(lv.length)
-        lv.foreach(bb.putDouble)
+        lv.writeTo(bb)
       }
       bb.array()
     }
   }
 
   def deserialize(bytes: Array[Byte]): Buf = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val k = bb.getInt
+    val bb = ByteBuffer.wrap(bytes)
+    val buf = new Buf(bb.getInt)
+    buf.readLevels(bb)
+    buf
+  }
+
+  /** Value count of a serialized sketch, read from its level-size
+    * header alone: each level's doubles are skipped, not decoded. */
+  def serializedCount(bytes: Array[Byte]): Long = {
+    val bb = ByteBuffer.wrap(bytes)
+    bb.getInt
     val n = bb.getInt
-    val levels = ArrayBuffer.fill(math.max(n, 1))(ArrayBuffer.empty[Double])
+    var w = 0L
     var i = 0
     while (i < n) {
       val sz = bb.getInt
-      var j = 0
-      while (j < sz) { levels(i) += bb.getDouble; j += 1 }
+      w += sz.toLong << i
+      bb.position(bb.position() + 8 * sz)
       i += 1
     }
-    new Buf(k, levels)
+    w
   }
 
   private def requireK(k: Int): Unit =
@@ -319,8 +428,7 @@ case class QuantileSketchMergeAgg(child: Expression, k: Int,
   override def update(buf: QuantileSketch.Buf, row: InternalRow)
       : QuantileSketch.Buf = {
     val v = child.eval(row)
-    if (v != null)
-      buf.merge(QuantileSketch.deserialize(v.asInstanceOf[Array[Byte]]))
+    if (v != null) buf.mergeSerialized(v.asInstanceOf[Array[Byte]])
     buf
   }
 
@@ -382,7 +490,7 @@ case class QuantileSketchCountExpr(child: Expression)
   }
 
   override protected def nullSafeEval(input: Any): Any =
-    QuantileSketch.deserialize(input.asInstanceOf[Array[Byte]]).count
+    QuantileSketch.serializedCount(input.asInstanceOf[Array[Byte]])
 
   override protected def withNewChildInternal(newChild: Expression)
       : Expression = copy(child = newChild)

@@ -9679,12 +9679,17 @@ object Stats {
       sum(col("_p").cast(dec12)).as("_sp"),
       sum((col("_p").cast(dec12) * col("_p")).cast(dec12)).as("_spp"))
     def d(c: String): Column = col(c).cast("double")
+    // every divisor is NULL at 0, not only guarded by the `when`s
+    // below: codegen's subexpression elimination evaluates the shared
+    // rho outside them, and a zero divisor then throws under ANSI
+    // (p = 1 when every unit succeeds on every trial)
+    def nz(c: Column): Column = nullif(c, lit(0.0))
     val nu = d("_nu")
     val m = d("_mmin")
-    val p = d("_sk") / d("_sm")
-    val s2 = (d("_spp") - d("_sp") * d("_sp") / nu) / (nu - 1.0)
-    val rho = (m * s2 / (p * (lit(1.0) - p)) - 1.0) / (m - 1.0)
-    val scale = lit(1.0) / rho - 1.0
+    val p = d("_sk") / nz(d("_sm"))
+    val s2 = (d("_spp") - d("_sp") * d("_sp") / nz(nu)) / nz(nu - 1.0)
+    val rho = (m * s2 / nz(p * (lit(1.0) - p)) - 1.0) / nz(m - 1.0)
+    val scale = lit(1.0) / nz(rho) - 1.0
     agg.select(
         when(col("_mmin") =!= col("_mmax"),
           raise_error(lit("betaBinomialMom: unbalanced panel — equal " +

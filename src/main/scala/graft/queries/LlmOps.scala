@@ -1400,16 +1400,20 @@ object LlmOps {
       .toString + "/sk"
     try {
       daily.write.parquet(dir)
+      // sort the merged sketches, then extract: the range sort's
+      // sampling job and its shuffle-map job each evaluate the sort's
+      // input, so an extraction below the sort ran twice; above it, it
+      // runs once, in the result stage
       spark.read.parquet(dir)
         .groupBy("event_type")
         .agg(QuantileSketch.mergeAgg(col("sk"), k).as("sk"))
+        .orderBy("event_type")
         .select(col("event_type"),
           QuantileSketch.countOf(col("sk")).as("n"),
           QuantileSketch.quantileOf(col("sk"), 0.25).as("q25"),
           QuantileSketch.quantileOf(col("sk"), 0.5).as("median"),
           QuantileSketch.quantileOf(col("sk"), 0.75).as("q75"),
           QuantileSketch.quantileOf(col("sk"), 0.9).as("q90"))
-        .orderBy("event_type")
         .localCheckpoint()
     } finally {
       val root = new org.apache.hadoop.fs.Path(dir)

@@ -93,4 +93,52 @@ class PercentilesSpec extends SparkTestBase {
       .collect().head
     assert(med.getDouble(2) == 2.0, s"tied values aggregate first: $med")
   }
+
+  /** Type-1 order statistic: the value at rank ceil(q·n), rank 1 floor. */
+  private def type1(xs: Seq[Double], q: Double): Double = {
+    val sorted = xs.sorted(Ordering.Double.TotalOrdering)
+    sorted(math.max(1L, math.ceil(q * sorted.length).toLong).toInt - 1)
+  }
+
+  test("sketchQuantiles: exact type-1 quantiles and n per group") {
+    import spark.implicits._
+    // three groups of 1, 40 and 97 values with ties; nulls are skipped
+    val rows = Seq(("a", Some(5.0))) ++
+      (0 until 40).map(i => ("b", Some(((i * 13) % 40 / 4).toDouble))) ++
+      (0 until 97).map(i => ("c", Some((i * 31 % 97) - 48.5))) ++
+      Seq(("b", None), ("c", None))
+    val df = rows.toDF("g", "v")
+    val qs = Seq(0.0, 0.25, 0.5, 0.9, 1.0)
+    val out = Percentiles.sketchQuantiles(df, Seq("g"), "v", qs, k = 256)
+    assert(out.columns.toSeq ===
+      Seq("g", "n", "q_0", "q_25", "q_50", "q_90", "q_100"))
+    val got = out.collect().map(r => r.getString(0) -> r).toMap
+    assert(got.keySet === Set("a", "b", "c"))
+    rows.groupBy(_._1).foreach { case (g, vs) =>
+      val xs = vs.flatMap(_._2)
+      val r = got(g)
+      assert(r.getLong(1) === xs.length.toLong, s"$g: $r")
+      qs.zipWithIndex.foreach { case (q, j) =>
+        assert(r.getDouble(2 + j) === type1(xs, q), s"$g q=$q: $r")
+      }
+    }
+  }
+
+  test("sketchQuantiles: no group columns gives one row over all values") {
+    import spark.implicits._
+    val xs = (1 to 25).map(i => (i * 7 % 25).toDouble)
+    val r = Percentiles.sketchQuantiles(xs.toDF("v"), Seq.empty, "v",
+      Seq(0.1, 0.5), k = 64).collect()
+    assert(r.length === 1)
+    assert(r.head.toSeq === Seq(25L, type1(xs, 0.1), type1(xs, 0.5)))
+  }
+
+  test("sketchQuantiles: quantiles that collide after rounding fail") {
+    import spark.implicits._
+    val e = intercept[IllegalArgumentException] {
+      Percentiles.sketchQuantiles(Seq(1.0, 2.0).toDF("v"), Seq.empty, "v",
+        Seq(0.249, 0.251), k = 64)
+    }
+    assert(e.getMessage.contains("collide after rounding"), e.getMessage)
+  }
 }

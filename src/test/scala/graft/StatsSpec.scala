@@ -4178,6 +4178,15 @@ class StatsSpec extends SparkTestBase {
     assert(e.getMessage.contains("unbalanced"), e.getMessage)
   }
 
+  test("betaBinomialMom: every unit succeeding on every trial returns " +
+      "NULL rho/alpha/beta, not DIVIDE_BY_ZERO, under collect()") {
+    import spark.implicits._
+    // p = 1, so p(1-p) = 0: rho's divisor is zero on the one row
+    val full = (1 to 30).map(_ => (24L, 24L)).toDF("k", "m")
+    val r = Stats.betaBinomialMom(full, "k", "m").collect().head
+    assert(r.toSeq === Seq(30L, 24L, 1.0, null, null, null), r.toString)
+  }
+
   test("poissonRateTest: hand rates and Wald z; two zero counts NULL z") {
     import spark.implicits._
     // a: 4 events over exposure 2.0 -> rate 2; b: 1 over 1.0 -> rate 1
