@@ -58,12 +58,12 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
   * Cost model: every level is a primitive `double[]`, so no value is
   * boxed. A compaction sorts the overfull level in place; encode and
   * decode copy each level in bulk; a merge appends levels with
-  * `System.arraycopy`, and the merge aggregate appends serialized
-  * levels straight from the bytes. `quantile(q)` makes one primitive
-  * sort per level per call (a copy, O(m log m) for m held values)
-  * plus a weighted k-way merge over the levels' heads, so each
-  * `quantileOf` column pays the sorts again. `countOf` reads only the
-  * level-size header and skips the values.
+  * `System.arraycopy`. `quantile(q)` makes one primitive sort per
+  * level per call (a copy, O(m log m) for m held values) plus a
+  * weighted k-way merge over the levels' heads, so each `quantileOf`
+  * column pays the sorts again. `countOf` decodes the sketch and sums
+  * the level weights; the decode is a bulk copy, far cheaper than
+  * the sorts.
   *
   * Scale shape: the aggregate buffer is O(k·log(n/k)) doubles
   * regardless of input size; map-side partial aggregation pre-merges
@@ -122,7 +122,7 @@ object QuantileSketch {
     val levels: ArrayBuffer[Level] = ArrayBuffer(new Level)
 
     /** Level i, adding empty levels up to it. */
-    private def levelAt(i: Int): Level = {
+    private[QuantileSketch] def levelAt(i: Int): Level = {
       while (levels.length <= i) levels += new Level
       levels(i)
     }
@@ -169,12 +169,9 @@ object QuantileSketch {
       }
     }
 
-    private def requireSameK(otherK: Int): Unit =
-      require(otherK == k,
-        s"quantile_sketch: capacity mismatch ($otherK vs $k)")
-
     def merge(other: Buf): Buf = {
-      requireSameK(other.k)
+      require(other.k == k,
+        s"quantile_sketch: capacity mismatch (${other.k} vs $k)")
       var i = 0
       while (i < other.levels.length) {
         val src = other.levels(i)
@@ -183,26 +180,6 @@ object QuantileSketch {
       }
       compactFrom(0)
       this
-    }
-
-    /** `merge(deserialize(bytes))` without the intermediate sketch: the
-      * serialized levels are appended straight into this one. */
-    def mergeSerialized(bytes: Array[Byte]): Buf = {
-      val bb = ByteBuffer.wrap(bytes)
-      requireSameK(bb.getInt)
-      readLevels(bb)
-      compactFrom(0)
-      this
-    }
-
-    /** Appends the level count and levels at `bb`'s position. */
-    private[QuantileSketch] def readLevels(bb: ByteBuffer): Unit = {
-      val n = bb.getInt
-      var i = 0
-      while (i < n) {
-        levelAt(i).addFrom(bb, bb.getInt)
-        i += 1
-      }
     }
 
     /** Total represented weight (the value count). */
@@ -268,25 +245,13 @@ object QuantileSketch {
   def deserialize(bytes: Array[Byte]): Buf = {
     val bb = ByteBuffer.wrap(bytes)
     val buf = new Buf(bb.getInt)
-    buf.readLevels(bb)
-    buf
-  }
-
-  /** Value count of a serialized sketch, read from its level-size
-    * header alone: each level's doubles are skipped, not decoded. */
-  def serializedCount(bytes: Array[Byte]): Long = {
-    val bb = ByteBuffer.wrap(bytes)
-    bb.getInt
     val n = bb.getInt
-    var w = 0L
     var i = 0
     while (i < n) {
-      val sz = bb.getInt
-      w += sz.toLong << i
-      bb.position(bb.position() + 8 * sz)
+      buf.levelAt(i).addFrom(bb, bb.getInt)
       i += 1
     }
-    w
+    buf
   }
 
   private def requireK(k: Int): Unit =
@@ -428,7 +393,8 @@ case class QuantileSketchMergeAgg(child: Expression, k: Int,
   override def update(buf: QuantileSketch.Buf, row: InternalRow)
       : QuantileSketch.Buf = {
     val v = child.eval(row)
-    if (v != null) buf.mergeSerialized(v.asInstanceOf[Array[Byte]])
+    if (v != null)
+      buf.merge(QuantileSketch.deserialize(v.asInstanceOf[Array[Byte]]))
     buf
   }
 
@@ -490,7 +456,7 @@ case class QuantileSketchCountExpr(child: Expression)
   }
 
   override protected def nullSafeEval(input: Any): Any =
-    QuantileSketch.serializedCount(input.asInstanceOf[Array[Byte]])
+    QuantileSketch.deserialize(input.asInstanceOf[Array[Byte]]).count
 
   override protected def withNewChildInternal(newChild: Expression)
       : Expression = copy(child = newChild)

@@ -132,8 +132,6 @@ class QuantileSketchSpec extends SparkTestBase {
       .merge(build(8, (1 to 23).map(i => (i * 7 % 23).toDouble / 3.0)))
       .merge(build(8, exactVals))
     sameQuantiles(merged, "merged")
-    sameQuantiles(build(8, shuffled37).mergeSerialized(
-      build(8, exactVals).serialize), "merged from bytes")
   }
 
   test("empty sketch: None from the buffer, NULL from quantileOf, " +
@@ -165,19 +163,5 @@ class QuantileSketchSpec extends SparkTestBase {
       assert(back.count === b.count && qs.map(back.quantile) ===
         qs.map(b.quantile))
     }
-  }
-
-  test("mergeSerialized equals merge(deserialize) and keeps the " +
-      "capacity check") {
-    val a = build(8, shuffled37).serialize
-    val b = build(8, (1 to 100).map(i => (i * 37 % 101).toDouble)).serialize
-    val viaBytes = QuantileSketch.deserialize(a).mergeSerialized(b)
-    val viaBuf = QuantileSketch.deserialize(a)
-      .merge(QuantileSketch.deserialize(b))
-    assert(hex(viaBytes.serialize) === hex(viaBuf.serialize))
-    val e = intercept[IllegalArgumentException] {
-      new QuantileSketch.Buf(16).mergeSerialized(a)
-    }
-    assert(e.getMessage.contains("capacity mismatch"), e.getMessage)
   }
 }
