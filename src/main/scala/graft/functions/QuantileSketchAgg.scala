@@ -11,7 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
 
 /** Mergeable, PERSISTABLE rank/quantile sketch — the save/load/merge
   * member the approx-percentile family was missing (MinHash/SimHash
@@ -60,8 +61,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
   * decode copy each level in bulk; a merge appends levels with
   * `System.arraycopy`. `quantile(q)` makes one primitive sort per
   * level per call (a copy, O(m log m) for m held values) plus a
-  * weighted k-way merge over the levels' heads, so each `quantileOf`
-  * column pays the sorts again. `countOf` decodes the sketch and sums
+  * weighted k-way merge over the levels' heads; `quantilesOf` answers
+  * several quantiles from that one sort, while each `quantileOf`
+  * column pays it again. `countOf` decodes the sketch and sums
   * the level weights; the decode is a bulk copy, far cheaper than
   * the sorts.
   *
@@ -194,38 +196,46 @@ object QuantileSketch {
     }
 
     /** Type-1 quantile: smallest value whose cumulative weight reaches
-      * ceil(q·W) (floor 1); exact while never compacted. Each level is
-      * sorted into a primitive copy, then a weighted k-way merge walks
-      * the levels in `Double.compare` order (-0.0 before 0.0), the
-      * lower level first among equal values. */
-    def quantile(q: Double): Option[Double] = {
+      * ceil(q·W) (floor 1); exact while never compacted. */
+    def quantile(q: Double): Option[Double] = quantiles(Seq(q)).map(_(0))
+
+    /** [[quantile]] of every q in `qs`, in `qs` order, from one sort:
+      * each level is sorted into a primitive copy, then one weighted
+      * k-way merge walks the levels in `Double.compare` order (-0.0
+      * before 0.0), the lower level first among equal values, and
+      * stops at each q's rank in ascending order. */
+    def quantiles(qs: Seq[Double]): Option[Array[Double]] = {
       val w = count
       if (w == 0L) None
       else {
-        val target = math.max(1L, math.ceil(q * w).toLong)
         val nl = levels.length
         val sorted = Array.tabulate(nl)(i => levels(i).sortedCopy)
         val pos = new Array[Int](nl)
+        val out = new Array[Double](qs.length)
         var cum = 0L
         var last = 0.0
         var best = 0
-        while (cum < target && best >= 0) {
-          best = -1
-          var i = 0
-          while (i < nl) {
-            if (pos(i) < sorted(i).length && (best < 0 ||
-                java.lang.Double.compare(sorted(i)(pos(i)),
-                  sorted(best)(pos(best))) < 0))
-              best = i
-            i += 1
+        qs.indices.sortBy(qs(_)).foreach { j =>
+          val target = math.max(1L, math.ceil(qs(j) * w).toLong)
+          while (cum < target && best >= 0) {
+            best = -1
+            var i = 0
+            while (i < nl) {
+              if (pos(i) < sorted(i).length && (best < 0 ||
+                  java.lang.Double.compare(sorted(i)(pos(i)),
+                    sorted(best)(pos(best))) < 0))
+                best = i
+              i += 1
+            }
+            if (best >= 0) {
+              last = sorted(best)(pos(best))
+              pos(best) += 1
+              cum += 1L << best
+            }
           }
-          if (best >= 0) {
-            last = sorted(best)(pos(best))
-            pos(best) += 1
-            cum += 1L << best
-          }
+          out(j) = last
         }
-        Some(last)
+        Some(out)
       }
     }
 
@@ -274,9 +284,16 @@ object QuantileSketch {
   }
 
   /** Extract the q-quantile from a sketch column (NULL for empty). */
-  def quantileOf(sketch: Column, q: Double): Column = {
-    require(q >= 0.0 && q <= 1.0, s"quantile_sketch: q in [0,1], got $q")
-    Bridge.column(QuantileFromSketchExpr(Bridge.expression(sketch), q))
+  def quantileOf(sketch: Column, q: Double): Column =
+    quantilesOf(sketch, Seq(q)).getItem(0)
+
+  /** Extract several quantiles from a sketch column as one
+    * array<double>, in `qs` order (NULL for empty): one decode and one
+    * sort per sketch, however many quantiles. */
+  def quantilesOf(sketch: Column, qs: Seq[Double]): Column = {
+    require(qs.nonEmpty && qs.forall(q => q >= 0.0 && q <= 1.0),
+      s"quantile_sketch: every q in [0,1], got $qs")
+    Bridge.column(QuantileFromSketchExpr(Bridge.expression(sketch), qs))
   }
 
   /** Represented value count of a sketch column. */
@@ -417,14 +434,15 @@ case class QuantileSketchMergeAgg(child: Expression, k: Int,
     copy(child = newChildren.head)
 }
 
-/** sketch -> q-quantile (NULL for an empty sketch). */
-case class QuantileFromSketchExpr(child: Expression, q: Double)
+/** sketch -> its quantiles at `qs`, as array<double> (NULL for an
+  * empty sketch). */
+case class QuantileFromSketchExpr(child: Expression, qs: Seq[Double])
     extends UnaryExpression with CodegenFallback {
 
-  override def dataType: DataType = DoubleType
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   // an EMPTY sketch answers NULL even though the sketch column itself
   // is non-nullable — without this override the generated projection
-  // unboxes the null and NPEs
+  // reads the null as an array and NPEs
   override def nullable: Boolean = true
   override def prettyName: String = "quantile_sketch_q"
 
@@ -436,7 +454,7 @@ case class QuantileFromSketchExpr(child: Expression, q: Double)
 
   override protected def nullSafeEval(input: Any): Any =
     QuantileSketch.deserialize(input.asInstanceOf[Array[Byte]])
-      .quantile(q).map(Double.box).orNull
+      .quantiles(qs).map(new GenericArrayData(_)).orNull
 
   override protected def withNewChildInternal(newChild: Expression)
       : Expression = copy(child = newChild)

@@ -113,8 +113,8 @@ object Baskets {
     val out = tripCnt.asScala.toSeq.collect {
       case ((a, b, c), n3) if n3 >= minSupport =>
         org.apache.spark.sql.Row(a, b, c, n3,
-          Graph.roundHalfUp(n3 / nD, 6),
-          Graph.roundHalfUp(n3 * nD * nD
+          DriverPath.round(n3 / nD, 6),
+          DriverPath.round(n3 * nD * nD
             / (itemCnt.get(a).toDouble * itemCnt.get(b)
               * itemCnt.get(c)), 6))
     }

@@ -412,7 +412,7 @@ object Clustering {
   private[operators] def trainCentroidsDriver(ids: Array[Any],
       vecs: Array[Array[Double]], k: Int, iters: Int, roundDp: Int)
       : Seq[Seq[Double]] = {
-    val r = Graph.roundHalfUp _
+    val r = DriverPath.round _
     val n = vecs.length
     val dim = vecs(0).length
     require(n >= k, s"kmeansPortable: needs >= $k rows, got ${math.min(n, k)}")
@@ -593,12 +593,11 @@ object Clustering {
           roundDp).as("sigma"))
     // centroid-pair distances: the sqDistTo fold replayed on the
     // driver literals — same left-to-right order, same rounding
-    def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(roundDp, java.math.RoundingMode.HALF_UP).doubleValue()
     val pairRows = for {
       i <- centroids.indices; j <- centroids.indices if i != j
-    } yield (i, j, r6(centroids(i).zip(centroids(j))
-      .foldLeft(0.0) { case (acc, (a, b)) => acc + (a - b) * (a - b) }))
+    } yield (i, j, DriverPath.round(centroids(i).zip(centroids(j))
+      .foldLeft(0.0) { case (acc, (a, b)) => acc + (a - b) * (a - b) },
+      roundDp))
     val pairs = vecs.sparkSession.createDataFrame(pairRows)
       .toDF("_ci", "_cj", "_dij")
     val rTab = sig.select(col("cluster").as("_ci"), col("sigma").as("_si"))
@@ -665,11 +664,9 @@ object Clustering {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** Spark `round(double, 6)` on the driver: BigDecimal HALF_UP — the
-    * exact semantics of the engine round the M-step literals must
-    * re-enter the plan with. */
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  /** Spark `round(double, 6)` on the driver — the exact semantics of
+    * the engine round the M-step literals must re-enter the plan with. */
+  private def r6(x: Double): Double = DriverPath.round(x, 6)
 
   /** Driver replica of [[gmmPortable]]'s EM passes (see the
     * fast-path note there). */
@@ -677,14 +674,14 @@ object Clustering {
       idType: org.apache.spark.sql.types.DataType, idCol: String,
       ids: Array[Any], vecs: Array[Array[Double]], k: Int, passes: Int,
       kmeansIters: Int, varFloor: Double): DataFrame = {
-    val rh = Graph.roundHalfUp _
+    val rh = DriverPath.round _
     val n = vecs.length
     val dim = vecs(0).length
-    var mu: IndexedSeq[Seq[Double]] =
-      trainCentroidsDriver(ids, vecs, k, kmeansIters, 6).toIndexedSeq
-    var s2: IndexedSeq[Double] = IndexedSeq.fill(k)(1.0)
-    var pi: IndexedSeq[Double] = IndexedSeq.fill(k)(r6(1.0 / k))
-    def sqDist12(x: Array[Double], c: Seq[Double]): Double = {
+    var mu: Array[Array[Double]] =
+      trainCentroidsDriver(ids, vecs, k, kmeansIters, 6).map(_.toArray).toArray
+    var s2: Array[Double] = Array.fill(k)(1.0)
+    var pi: Array[Double] = Array.fill(k)(r6(1.0 / k))
+    def sqDist12(x: Array[Double], c: Array[Double]): Double = {
       var s = 0.0; var d = 0
       while (d < dim) { val t = x(d) - c(d); s += t * t; d += 1 }
       rh(s, 12)
@@ -724,10 +721,9 @@ object Clustering {
         v += 1
       }
       // VectorMeanAgg: elementwise sum / count (count = n, no nulls)
-      val newMu = (0 until k).map { c =>
+      val newMu = Array.tabulate(k) { c =>
         if (srs(c) > 0.0)
-          (0 until dim).map(d =>
-            r6(mvSums(c)(d) / n * n.toDouble / srs(c))).toSeq
+          Array.tabulate(dim)(d => r6(mvSums(c)(d) / n * n.toDouble / srs(c)))
         else mu(c)
       }
       val sds = new Array[Double](k)
@@ -738,12 +734,12 @@ object Clustering {
         while (c < k) { sds(c) += r(c) * sqDist12(vecs(v), newMu(c)); c += 1 }
         v += 1
       }
-      s2 = (0 until k).map { c =>
+      s2 = Array.tabulate(k) { c =>
         if (srs(c) > 0.0)
           math.max(varFloor, r6(sds(c) / (dim.toDouble * srs(c))))
         else s2(c)
       }
-      pi = (0 until k).map { c =>
+      pi = Array.tabulate(k) { c =>
         if (srs(c) > 0.0) r6(srs(c) / n.toDouble) else pi(c)
       }
       mu = newMu
@@ -1056,7 +1052,7 @@ object Clustering {
   private def spectralDriverDf(spark: org.apache.spark.sql.SparkSession,
       pairs: Array[org.apache.spark.sql.Row], k: Int, powerIters: Int,
       lloydIters: Int): DataFrame = {
-    val r = Graph.roundHalfUp _
+    val r = DriverPath.round _
     // dense ids + symmetric neighbor arrays (canonical edges are
     // deduped and loop-free)
     val es = DriverPath.edges(pairs)

@@ -160,31 +160,128 @@ object DriverPath {
   def dec12ToDouble(u: BigInt): Double =
     new java.math.BigDecimal(u.bigInteger, 12).doubleValue()
 
-  /** Exact decimal(38,12) sum of `round(t, 12).cast(decimal(38,12))`
-    * terms: unscaled units accumulate in a primitive long with an
-    * overflow spill into BigInt — identical totals to the distributed
-    * decimal aggregates (exact, order-free) at a fraction of the
-    * allocation cost of per-term BigInt folds. */
-  private final class Dec12Sum {
+  /* The rounding kernel. Spark freezes a double at `scale` dp as
+   * HALF_UP over its shortest decimal (Double.toString) — `round` and
+   * the double → decimal cast both do — and the replicas must match
+   * that bit for bit. The kernel gets the same HALF_UP units k in
+   * primitive arithmetic: y = |x|·10^s differs from the decimal's
+   * scaled value by at most ulp(y)/2 + ulp(|x|)·10^s/2, so unless
+   * frac(y) is that close to a tie, frac(y) decides the rounding.
+   * Near a tie, or when y ≥ 2^52 (frac(y) is too coarse), it falls
+   * back to the BigDecimal expression itself. k / 10^s is then the
+   * division BigDecimal.doubleValue does for |k| < 2^52. */
+
+  private val MaxFastScale = 22 // 10^22 is the largest exact power
+  private val Pow10 = Array.iterate(1.0, MaxFastScale + 1)(_ * 10.0)
+  private val TwoTo52 = 4503599627370496.0
+  private val Slow = Long.MinValue // the fast path's "fall back"
+
+  /** HALF_UP units of `x`'s shortest decimal at `scale`, or [[Slow]]. */
+  private def fastUnits(x: Double, scale: Int): Long = {
+    if (scale < 0 || scale > MaxFastScale) return Slow
+    val p = Pow10(scale)
+    val a = math.abs(x)
+    val y = a * p
+    if (!(y < TwoTo52)) return Slow // NaN and ±Infinity too
+    val f = math.floor(y)
+    val frac = y - f
+    if (math.abs(frac - 0.5) <= math.ulp(y) + math.ulp(a) * p) return Slow
+    val k = f.toLong + (if (frac > 0.5) 1L else 0L)
+    if (x < 0.0) -k else k
+  }
+
+  /** The kernel's one BigDecimal fallback: Spark's own expression. */
+  private def halfUp(x: Double, scale: Int): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP)
+
+  /** Spark's `round(x, scale)` on a double, bit for bit: NaN and
+    * ±Infinity come back unchanged, -0.0 and every value that rounds
+    * to zero come back as +0.0. */
+  def round(x: Double, scale: Int): Double = {
+    val k = fastUnits(x, scale)
+    if (k != Slow) k / Pow10(scale)
+    else if (x.isNaN || x.isInfinite) x
+    else halfUp(x, scale).doubleValue()
+  }
+
+  private val Max38 = java.math.BigInteger.TEN.pow(38)
+
+  /** The unscaled value of the ANSI `x.cast(decimal(38, scale))`: null
+    * for NaN and ±Infinity, which the cast turns into NULL; a value
+    * past decimal(38, scale) fails, as the cast does. */
+  private def castUnits(x: Double, scale: Int): java.math.BigInteger =
+    if (x.isNaN || x.isInfinite) null
+    else {
+      val u = halfUp(x, scale).unscaledValue()
+      if (u.abs.compareTo(Max38) >= 0) throw new ArithmeticException(
+        s"$x cannot be represented as decimal(38,$scale)")
+      u
+    }
+
+  /** The unscaled value of `x.cast(decimal(38, scale))` as a long;
+    * throws where the cast gives NULL or fails, and when the value
+    * needs more than a long. */
+  def units(x: Double, scale: Int): Long = {
+    val k = fastUnits(x, scale)
+    if (k != Slow) k
+    else {
+      val u = castUnits(x, scale)
+      if (u == null) throw new ArithmeticException(
+        s"$x has no decimal(38,$scale) value")
+      u.longValueExact()
+    }
+  }
+
+  /** An exact decimal(38, scale) sum, in unscaled units: a primitive
+    * long with an overflow spill into BigInt, so totals equal the
+    * distributed decimal aggregates (exact, order-free) without a
+    * BigInt per term. A NaN or ±Infinity term adds nothing, as SUM
+    * skips the NULL its cast gives (a sum of only such terms is NULL
+    * in Spark and 0 here). */
+  final class Units(scale: Int) {
     private var lo = 0L
     private var big: BigInt = null
-    def add(t: Double): Unit = {
-      val bd = java.math.BigDecimal.valueOf(Graph.roundHalfUp(t, 12))
-        .setScale(12, java.math.RoundingMode.HALF_UP)
-      val u = bd.unscaledValue()
-      if (u.bitLength() <= 62) {
-        val ul = u.longValue()
-        val sum = lo + ul
-        if (((lo ^ sum) & (ul ^ sum)) < 0L) { // long overflow: spill
-          big = (if (big == null) BigInt(lo) else big + BigInt(lo))
-          lo = ul
-        } else lo = sum
-      } else {
-        big = (if (big == null) BigInt(u) else big + BigInt(u))
-      }
+    private def spill(u: BigInt): Unit = big = if (big == null) u else big + u
+    private def addUnits(u: Long): Unit = {
+      val sum = lo + u
+      if (((lo ^ sum) & (u ^ sum)) < 0L) { spill(BigInt(lo)); lo = u }
+      else lo = sum
     }
-    def total: BigInt =
-      if (big == null) BigInt(lo) else big + BigInt(lo)
+    private def addUnits(u: java.math.BigInteger): Unit =
+      if (u == null) ()
+      else if (u.bitLength() <= 63) addUnits(u.longValue())
+      else spill(BigInt(u))
+
+    /** Adds `round(t, scale).cast(decimal(38, scale))`. On the fast
+      * path both steps give the same units k (|k| < 2^51: no other
+      * `scale`-dp decimal lies within an ulp of k / 10^scale). */
+    def add(t: Double): Unit = {
+      val k = fastUnits(t, scale)
+      if (k != Slow) addUnits(k) else addCast(round(t, scale))
+    }
+
+    /** Adds `t.cast(decimal(38, scale))`, with no round before it. */
+    def addCast(t: Double): Unit = {
+      val k = fastUnits(t, scale)
+      if (k != Slow) addUnits(k) else addUnits(castUnits(t, scale))
+    }
+
+    /** Adds a·b·c units exactly. */
+    def addProduct(a: Long, b: Long, c: Long = 1L): Unit = {
+      val ab = a * b
+      if (Math.multiplyHigh(a, b) == (ab >> 63)) {
+        val abc = ab * c
+        if (Math.multiplyHigh(ab, c) == (abc >> 63)) { addUnits(abc); return }
+      }
+      spill(BigInt(a) * b * c)
+    }
+
+    def total: BigInt = if (big == null) BigInt(lo) else big + BigInt(lo)
+
+    /** The sum cast to double (Spark's Decimal.toDouble). */
+    def toDouble: Double =
+      new java.math.BigDecimal(total.bigInteger, scale).doubleValue()
   }
 
   /** Per-group totals of a [[fold]]: `dec(k)(g)` in decimal(38,12)
@@ -206,10 +303,10 @@ object DriverPath {
   def fold(n: Int, nGroups: Int, group: Array[Int], nDec: Int,
       nDbl: Int = 0)(terms: (Int, Array[Double]) => Unit): Sums = {
     val nT = threads
-    val tDec = new Array[Array[Array[Dec12Sum]]](nT)
+    val tDec = new Array[Array[Array[Units]]](nT)
     val tDbl = new Array[Array[Array[Double]]](nT)
     parallelChunks(n, nT, 65536) { (t, from, to) =>
-      val dec = Array.fill(nDec)(Array.fill(nGroups)(new Dec12Sum))
+      val dec = Array.fill(nDec)(Array.fill(nGroups)(new Units(12)))
       val dbl = Array.fill(nDbl)(new Array[Double](nGroups))
       tDec(t) = dec; tDbl(t) = dbl
       val out = new Array[Double](nDec + nDbl)

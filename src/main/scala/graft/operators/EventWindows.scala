@@ -548,13 +548,9 @@ object EventWindows {
           val out = sorted.map { e =>
             // HALF_UP like the batch round(): math.round half-rounds
             // toward +inf for negatives, which would fork the twins
-            val q = BigDecimal(e.x * 1e6)
-              .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+            val q = DriverPath.units(e.x * 1e6, 0)
             s = math.max(0L, s + q - offset)
-            CusumOut(key, e.event_id,
-              BigDecimal(s)./(BigDecimal(1000000))
-                .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-              s > thrScaled)
+            CusumOut(key, e.event_id, BigDecimal(s, 6).toDouble, s > thrScaled)
           }
           if (sorted.nonEmpty) gs.update(CusumState(s))
           out.iterator
@@ -630,8 +626,7 @@ object EventWindows {
       : org.apache.spark.sql.Dataset[PosOut] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import events.sparkSession.implicits._
-    def r6(x: Double): Double = BigDecimal(x)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def r6(x: Double): Double = DriverPath.round(x, 6)
     events.groupByKey(_.user)
       .flatMapGroupsWithState[PathState, PosOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -852,7 +847,7 @@ object EventWindows {
     // when it fits the driver comfortably, the horizon loop is pure
     // scheduler overhead (8 tiny checkpointed jobs measured at ~3 s of
     // a 3.6 s query), so run the SAME frozen arithmetic in Scala:
-    // per-step terms round(p·v, 12) summed as exact BigDecimals
+    // per-step terms round(p·v, 12) summed as exact decimal units
     // (order-free, like the decimal(38,12) fold), v re-frozen at 12 dp
     // — bit-identical to the distributed loop (spec-pinned). Past the
     // bound the loop below runs unchanged.
@@ -860,14 +855,12 @@ object EventWindows {
       case Some(collected) =>
         val rows = collected.map(r =>
           (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3)))
-        def r12(x: Double): Double = java.math.BigDecimal.valueOf(x)
-          .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
         val byScen = rows.groupBy(_._1)
         val out = byScen.toSeq.map { case (sc, ts) =>
           var v = ts.map(_._2).distinct.map(_ -> 0.0).toMap
           for (_ <- 1 to horizon) {
             v = ts.groupBy(_._2).map { case (src, edges0) =>
-              var acc = java.math.BigDecimal.ZERO
+              val acc = new DriverPath.Units(12)
               edges0.foreach { case (_, _, dst2, p) =>
                 val value = dst2 match {
                   case "CONV" => 1.0
@@ -875,12 +868,10 @@ object EventWindows {
                   case s => v.getOrElse(s, 0.0)
                 }
                 // the distributed chain is round(·,12) THEN a
-                // decimal(38,12) cast — replicate both steps so
-                // double-rounding edges can't diverge
-                acc = acc.add(java.math.BigDecimal.valueOf(r12(p * value))
-                  .setScale(12, java.math.RoundingMode.HALF_UP))
+                // decimal(38,12) cast: Units.add replicates both steps
+                acc.add(p * value)
               }
-              src -> r12(acc.doubleValue())
+              src -> DriverPath.round(acc.toDouble, 12)
             }
           }
           org.apache.spark.sql.Row(sc, v.getOrElse("START", 0.0))

@@ -327,8 +327,7 @@ object FuzzyJoin {
     require(Seq(pInit, mInit, uInit).forall(v => v > 0.0 && v < 1.0),
       "fellegiSunterEm: inits must be in (0, 1)")
     val dec12 = "decimal(38,12)"
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    def r6(v: Double): Double = DriverPath.round(v, 6)
     def clamp6(v: Double): Double =
       math.min(math.max(r6(v), 1e-6), 0.999999)
     val k = fields.size

@@ -47,7 +47,7 @@ object Graph {
         while (v < n) { if (dangling(v)) mass += rank(v); v += 1 }
       }
       rank = Array.tabulate(n)(v =>
-        roundHalfUp(update(v, contrib(v), mass), roundDp))
+        DriverPath.round(update(v, contrib(v), mass), roundDp))
     }
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("vertex", StringType),
@@ -401,7 +401,7 @@ object Graph {
         def normalize(xs: Array[Double]): Array[Double] = {
           var t = 0.0; var v = 0
           while (v < n) { t += xs(v); v += 1 }
-          xs.map(x => roundHalfUp(x / t, roundDp))
+          xs.map(x => DriverPath.round(x / t, roundDp))
         }
         for (_ <- 1 to iters) {
           val a2 = new Array[Double](n)
@@ -1641,9 +1641,9 @@ object Graph {
             val va = ofRank(ra); val vb = ofRank(rb)
             val score =
               if (jaccardMode)
-                roundHalfUp(common.toDouble
+                DriverPath.round(common.toDouble
                   / (deg(va).toLong + deg(vb).toLong - common).toDouble, 6)
-              else roundHalfUp(aa, 6)
+              else DriverPath.round(aa, 6)
             val c = Cand(names(va), names(vb), common, score)
             if (heap.size < k) heap.add(c)
             else if (ord.compare(c, heap.peek()) < 0) {
@@ -1911,7 +1911,7 @@ object Graph {
         val row = org.apache.spark.sql.Row(names.length.toLong,
           if (names.nonEmpty) w2d / 2.0 else null,
           if (hasTriangles) st.toLong else null,
-          if (hasTriangles && w2d > 0.0) roundHalfUp(2.0 * std / w2d, 6)
+          if (hasTriangles && w2d > 0.0) DriverPath.round(2.0 * std / w2d, 6)
           else null)
         return edges.sparkSession.createDataFrame(
           edges.sparkSession.sparkContext.parallelize(Seq(row), 1),
@@ -2220,13 +2220,6 @@ object Graph {
     (g.names, symAdjacency(g.n, g.src, g.dst))
   }
 
-  /** Spark's `round(double, scale)` semantics (HALF_UP over the
-    * BigDecimal.valueOf canonical representation), for driver fast
-    * paths that must reproduce in-plan rounding bit-for-bit. */
-  private[operators] def roundHalfUp(x: Double, scale: Int): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
-
   /** Materialize driver-computed harmonic rows as a DataFrame with the
     * distributed twins' exact schema (vertex, n_hop1..H, harmonic). */
   private def driverRowsToDf(edges: DataFrame,
@@ -2323,7 +2316,7 @@ object Graph {
           var k = 1
           while (k <= maxHops) { harm += hopCounts(k - 1) / k.toDouble; k += 1 }
           out(v) = org.apache.spark.sql.Row.fromSeq(
-            names(v) +: hopCounts.toSeq :+ roundHalfUp(harm, 6))
+            names(v) +: hopCounts.toSeq :+ DriverPath.round(harm, 6))
           v += 1
         }
         return driverRowsToDf(edges, out,
@@ -2483,8 +2476,8 @@ object Graph {
           k = 1
           while (k <= maxHops) { harm += shells(k - 1) / k.toDouble; k += 1 }
           out(v) = org.apache.spark.sql.Row.fromSeq(
-            names(v) +: shells.toSeq.map(roundHalfUp(_, 2))
-              :+ roundHalfUp(harm, 6))
+            names(v) +: shells.toSeq.map(DriverPath.round(_, 2))
+              :+ DriverPath.round(harm, 6))
           v += 1
         }
         return driverRowsToDf(edges, out,
@@ -2710,7 +2703,7 @@ object Graph {
           round(col("_sum").cast("double") / col("_mx").cast("double"),
             12).as("_x"))) { sums =>
       val mx = DriverPath.dec12ToDouble(sums.max)
-      sums.map(u => roundHalfUp(DriverPath.dec12ToDouble(u) / mx, 12))
+      sums.map(u => DriverPath.round(DriverPath.dec12ToDouble(u) / mx, 12))
     }
   }
 
@@ -2741,7 +2734,7 @@ object Graph {
       _.select(col("v"),
         round(lit(alpha) * col("_sum").cast("double") + lit(1.0), 12)
           .as("_x"))) { sums =>
-      sums.map(u => roundHalfUp(alpha * DriverPath.dec12ToDouble(u) + 1.0, 12))
+      sums.map(u => DriverPath.round(alpha * DriverPath.dec12ToDouble(u) + 1.0, 12))
     }
   }
 
@@ -2780,7 +2773,7 @@ object Graph {
         val schema = StructType(Seq(StructField("vertex", StringType),
           StructField(outCol, DoubleType)))
         return DriverPath.frame(edges.sparkSession, (0 until g.n).map(v =>
-          Row(g.names(v), roundHalfUp(x(v), 6))), schema)
+          Row(g.names(v), DriverPath.round(x(v), 6))), schema)
       case None =>
     }
     // partition the symmetric edge table ONCE on the per-pass join key
@@ -2954,7 +2947,7 @@ object Graph {
     }
     import org.apache.spark.sql.types._
     val rows = order.map(v => org.apache.spark.sql.Row(
-      names(v), roundHalfUp(bet(v) / 2.0, 6))) // undirected: halve
+      names(v), DriverPath.round(bet(v) / 2.0, 6))) // undirected: halve
     val schema = StructType(Seq(StructField("vertex", StringType),
       StructField("betweenness", DoubleType)))
     DriverPath.frame(edges.sparkSession, rows.toIndexedSeq, schema)

@@ -167,8 +167,9 @@ object Percentiles {
       if (groupCols.isEmpty) df.groupBy() else df.groupBy(gcols: _*)
     val sk = grouped.agg(
       QuantileSketch.sketchAgg(col(valueCol).cast("double"), k).as("_sk"))
-    sk.select((gcols :+ QuantileSketch.countOf(col("_sk")).as("n")) ++
-      qs.map(q => QuantileSketch.quantileOf(col("_sk"), q)
-        .as(s"q_${math.round(q * 100)}")): _*)
+    sk.select(gcols :+ QuantileSketch.countOf(col("_sk")).as("n") :+
+        QuantileSketch.quantilesOf(col("_sk"), qs).as("_qs"): _*)
+      .select((gcols :+ col("n")) ++ qs.indices.map(i =>
+        col("_qs")(i).as(s"q_${math.round(qs(i) * 100)}")): _*)
   }
 }

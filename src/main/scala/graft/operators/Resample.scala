@@ -19,6 +19,9 @@ import org.apache.spark.sql.functions._
   */
 object Resample {
 
+  /** Spark's `round(v, 6)`, for the driver folds and streaming twins. */
+  private def r6(v: Double): Double = DriverPath.round(v, 6)
+
   /** Per-key grid with LINEAR interpolation between the neighboring
     * observations (pandas `resample().interpolate()` parity): value at
     * grid instant g = prev + (next - prev)·(g - t_prev)/(t_next -
@@ -198,8 +201,6 @@ object Resample {
     require(orderCols.nonEmpty, "holt needs at least one order column")
     require(!df.columns.contains(levelCol) && !df.columns.contains(trendCol),
       s"input already has '$levelCol'/'$trendCol'; pass different out columns")
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val schema = org.apache.spark.sql.types.StructType(df.schema.fields :+
       org.apache.spark.sql.types.StructField(levelCol,
         org.apache.spark.sql.types.DoubleType, nullable = true) :+
@@ -286,8 +287,6 @@ object Resample {
     require(horizon >= 1 && horizon <= 100,
       s"horizon in [1, 100], got $horizon")
     require(orderCols.nonEmpty, "holtDampedForecast needs order columns")
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val schema = org.apache.spark.sql.types.StructType(df.schema.fields :+
       org.apache.spark.sql.types.StructField("_dl",
         org.apache.spark.sql.types.DoubleType, nullable = true) :+
@@ -374,8 +373,6 @@ object Resample {
     require(orderCols.nonEmpty, "holtWinters needs at least one order column")
     require(Seq(levelCol, trendCol, seasonCol).forall(!df.columns.contains(_)),
       "input already has a level/trend/season column; pass different names")
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val schema = org.apache.spark.sql.types.StructType(df.schema.fields ++
       Seq(levelCol, trendCol, seasonCol).map(c =>
         org.apache.spark.sql.types.StructField(c,
@@ -442,8 +439,6 @@ object Resample {
     require(beta >= 0.0 && beta <= 1.0, s"beta must be in [0,1], got $beta")
     require(gamma >= 0.0 && gamma <= 1.0, s"gamma must be in [0,1], got $gamma")
     require(period >= 2, s"period must be >= 2, got $period")
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     // dedicated terminal-state fold (NOT the row-level op + a trailing
     // window): the final ring lives in the fold state, so a key whose
     // series is exactly `period` rows still forecasts — reading the
@@ -567,8 +562,6 @@ object Resample {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0,1], got $alpha")
     require(beta >= 0.0 && beta <= 1.0, s"beta must be in [0,1], got $beta")
     import events.sparkSession.implicits._
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     events.groupByKey(_.key)
       .flatMapGroupsWithState[HoltState, HoltOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -613,8 +606,6 @@ object Resample {
     require(gamma >= 0.0 && gamma <= 1.0, s"gamma must be in [0,1], got $gamma")
     require(period >= 2, s"period must be >= 2, got $period")
     import events.sparkSession.implicits._
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     events.groupByKey(_.key)
       .flatMapGroupsWithState[HwState, HwOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -1386,8 +1377,6 @@ object Resample {
       k: Double = 32.0, r0: Double = 1500.0): DataFrame = {
     require(orderCols.nonEmpty, "eloTwoPlayer needs order columns")
     require(k > 0.0, s"eloTwoPlayer: k must be > 0, got $k")
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val ln10 = math.log(10.0)
     val schema = org.apache.spark.sql.types.StructType(df.schema.fields :+
       org.apache.spark.sql.types.StructField("expected_a",
@@ -1434,8 +1423,6 @@ object Resample {
       beta: Double): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0,1]")
     require(beta > 0.0 && beta <= 1.0, s"beta must be in (0,1]")
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val cells = dayCells(df, groupCol, tsCol, valueCol)
       .repartition(col("_g"))
       .sortWithinPartitions(col("_g"), col("_day"))
@@ -3023,8 +3010,6 @@ object Resample {
     require(alphaP > 0.0 && alphaP <= 1.0, s"alphaP in (0,1], got $alphaP")
     require(alphaZ > 0.0 && alphaZ <= 1.0, s"alphaZ in (0,1], got $alphaZ")
     require(orderCols.nonEmpty, "tsbForecast needs an order column")
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val sorted = df.filter(col(valueCol).isNotNull)
       .select((col(keyCol).as("_k") +: orderCols.map(col)) :+
         when(col(valueCol) < 0, raise_error(lit(
@@ -3109,8 +3094,6 @@ object Resample {
       orderCols: Seq[String], valueCol: String, alpha: Double): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0,1], got $alpha")
     require(orderCols.nonEmpty, "crostonForecast needs an order column")
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val sorted = df.filter(col(valueCol).isNotNull)
       .select((col(keyCol).as("_k") +: orderCols.map(col)) :+
         when(col(valueCol) < 0, raise_error(lit(
@@ -3193,8 +3176,6 @@ object Resample {
     require(beta >= 0.0 && beta <= 1.0, s"beta must be in [0,1], got $beta")
     require(gamma >= 0.0 && gamma <= 1.0, s"gamma must be in [0,1], got $gamma")
     require(period >= 2, s"period must be >= 2, got $period")
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val sorted = df.filter(col(valueCol).isNotNull)
       .select((col(keyCol).as("_k") +: orderCols.map(col)) :+
         when(col(valueCol) <= 0, raise_error(lit(
@@ -3362,8 +3343,6 @@ object Resample {
     require(orderCols.nonEmpty, "kalmanLocalLevel needs an order column")
     require(!df.columns.contains(levelCol) && !df.columns.contains(gainCol),
       s"input already has '$levelCol'/'$gainCol'; pass different out cols")
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val schema = org.apache.spark.sql.types.StructType(df.schema.fields ++
       Seq(org.apache.spark.sql.types.StructField(levelCol,
         org.apache.spark.sql.types.DoubleType, nullable = true),

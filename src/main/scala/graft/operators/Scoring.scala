@@ -372,7 +372,7 @@ object Scoring {
   private def alsFactorsDriver(spark: org.apache.spark.sql.SparkSession,
       ratings: Array[org.apache.spark.sql.Row], iters: Int, lambda: Double)
       : (DataFrame, DataFrame) = {
-    val r = graft.operators.Graph.roundHalfUp _
+    val r = DriverPath.round _
     val n = ratings.length
     val users = new DriverPath.Ids[Long]; val items = new DriverPath.Ids[Long]
     val ru = ratings.map(row => users(row.getLong(0)))

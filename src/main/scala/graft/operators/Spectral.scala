@@ -54,8 +54,7 @@ object Spectral {
     require(dimProbe.nonEmpty,
       "principalComponent: empty corpus (no non-null vectors)")
     val dim = dimProbe.head.getInt(0)
-    def roundDec(x: Double): Double =
-      BigDecimal(x).setScale(roundDp, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def roundDec(x: Double): Double = DriverPath.round(x, roundDp)
     var comp: Seq[Double] = Seq.fill(dim)(roundDec(1.0 / math.sqrt(dim.toDouble)))
     for (_ <- 1 to iters) {
       val dot = round(aggregate(

@@ -1034,7 +1034,7 @@ object Stats {
   private def huberDriverDf(df: DataFrame, pts: DataFrame,
       collected: Array[Row], groupCol: String, k: Double,
       iters: Int): DataFrame = {
-    val rh = Graph.roundHalfUp _
+    val rh = DriverPath.round _
     // the final equi-join drops null groups
     val (ids, gOf) = DriverPath.intern(collected, keepNulls = false)
     val values = Array.fill(ids.size)(
@@ -1054,25 +1054,19 @@ object Stats {
       var m = med.toDouble
       val ks = mad.toDouble * (1.4826 * k)
       for (_ <- 1 to iters) {
-        var sw = BigInt(0) // decimal(38,12) units of the 12-dp w's
-        var swx = BigInt(0) // decimal(38,6) units of round(w*x, 6)
+        val sw = new DriverPath.Units(12) // the 12-dp w's
+        val swx = new DriverPath.Units(6) // round(w*x, 6)
         var i = 0
         while (i < n) {
           val x = xs(i)
           val ad = math.abs(x.toDouble - m)
           val w = rh(if (ad <= ks) 1.0 else ks / ad, 12)
-          sw += BigInt(java.math.BigDecimal.valueOf(w)
-            .setScale(12, java.math.RoundingMode.HALF_UP).unscaledValue())
-          swx += BigInt(java.math.BigDecimal.valueOf(rh(w * x, 6))
-            .setScale(6, java.math.RoundingMode.HALF_UP).unscaledValue())
+          sw.addCast(w)
+          swx.add(w * x)
           i += 1
         }
-        val swD = new java.math.BigDecimal(sw.bigInteger, 12).doubleValue()
-        if (swD > 0.0) {
-          val swxD = new java.math.BigDecimal(swx.bigInteger, 6)
-            .doubleValue()
-          m = rh(swxD / swD, 6)
-        }
+        val swD = sw.toDouble
+        if (swD > 0.0) m = rh(swx.toDouble / swD, 6)
       }
       org.apache.spark.sql.Row(ids.keys(g), n.toLong,
         rh(med / 1e6, 6), rh(mad / 1e6, 6), rh(m / 1e6, 6))
@@ -4662,11 +4656,7 @@ object Stats {
   private def coxDriverDf(df: DataFrame, subj: DataFrame,
       collected: Array[Row], groupCol: String, iters: Int,
       tDesc: (Any, Any) => Boolean): DataFrame = {
-    import DriverPath.dec12ToDouble
-    val rh = Graph.roundHalfUp _
-    def dec6Unit(t: Double): BigInt = // cast-only (no pre-round)
-      BigInt(java.math.BigDecimal.valueOf(t)
-        .setScale(6, java.math.RoundingMode.HALF_UP).unscaledValue())
+    val rh = DriverPath.round _
     // group → subjects, then sort each group by t DESC once
     val (ids, gOf) = DriverPath.intern(collected, keepNulls = false)
     val subjects = Array.fill(ids.size)(
@@ -4682,45 +4672,44 @@ object Stats {
     val nG = gList.length
     val bArr = new Array[Double](nG)
     val outN = new Array[Long](nG); val outEv = new Array[Long](nG)
-    val outU = new Array[BigInt](nG); val outI = new Array[BigInt](nG)
+    val outU = new Array[Double](nG); val outI = new Array[Double](nG)
     def pass(): Unit = {
       var gi = 0
       while (gi < nG) {
         val (_, rows) = gList(gi)
         val b = bArr(gi)
-        var s0 = BigInt(0); var s1 = BigInt(0); var s2 = BigInt(0)
-        var uSum = BigInt(0); var iSum = BigInt(0)
+        // S_k: reverse cumulatives, so each cell adds into them directly
+        val s0 = new DriverPath.Units(12); val s1 = new DriverPath.Units(12)
+        val s2 = new DriverPath.Units(12)
+        val uSum = new DriverPath.Units(12); val iSum = new DriverPath.Units(12)
         var n = 0L; var nev = 0L
         var i = 0
         while (i < rows.length) {
           // one (g, t) cell = the run of equal t (desc-sorted)
           val t0 = rows(i)._1
-          var s0c = BigInt(0); var s1c = BigInt(0); var s2c = BigInt(0)
-          var d = 0L; var sx = BigInt(0); var nc = 0L
+          var d = 0L; val sx = new DriverPath.Units(6); var nc = 0L
           while (i < rows.length && rows(i)._1 == t0) {
             val (_, e, x) = rows(i)
             val eb = math.exp(b * x)
-            s0c += dec12Unit(eb)
-            s1c += dec12Unit(x * eb)
-            s2c += dec12Unit(x * x * eb)
+            s0.add(eb)
+            s1.add(x * eb)
+            s2.add(x * x * eb)
             d += e
-            sx += dec6Unit(x * e)
+            sx.addCast(x * e) // cast-only (no pre-round)
             nc += 1L
             i += 1
           }
-          s0 += s0c; s1 += s1c; s2 += s2c
           if (d > 0L) {
-            val s0d = dec12ToDouble(s0); val s1d = dec12ToDouble(s1)
-            val s2d = dec12ToDouble(s2)
+            val s0d = s0.toDouble; val s1d = s1.toDouble
+            val s2d = s2.toDouble
             val r1 = s1d / s0d
-            val sxd = new java.math.BigDecimal(sx.bigInteger, 6)
-              .doubleValue()
-            uSum += dec12Unit(sxd - d * r1)
-            iSum += dec12Unit(d * (s2d / s0d - r1 * r1))
+            uSum.add(sx.toDouble - d * r1)
+            iSum.add(d * (s2d / s0d - r1 * r1))
           }
           n += nc; nev += d
         }
-        outN(gi) = n; outEv(gi) = nev; outU(gi) = uSum; outI(gi) = iSum
+        outN(gi) = n; outEv(gi) = nev
+        outU(gi) = uSum.toDouble; outI(gi) = iSum.toDouble
         gi += 1
       }
     }
@@ -4728,9 +4717,8 @@ object Stats {
       pass()
       var gi = 0
       while (gi < nG) {
-        val iD = dec12ToDouble(outI(gi))
-        if (iD > 0.0)
-          bArr(gi) = rh(bArr(gi) + dec12ToDouble(outU(gi)) / iD, 12)
+        val iD = outI(gi)
+        if (iD > 0.0) bArr(gi) = rh(bArr(gi) + outU(gi) / iD, 12)
         gi += 1
       }
     }
@@ -4743,7 +4731,7 @@ object Stats {
       StructField("hazard_ratio", DoubleType),
       StructField("se", DoubleType)))
     val out = (0 until nG).map { gi =>
-      val iD = dec12ToDouble(outI(gi))
+      val iD = outI(gi)
       org.apache.spark.sql.Row(gList(gi)._1, outN(gi), outEv(gi),
         rh(bArr(gi), 6), rh(math.exp(bArr(gi)), 6),
         if (iD > 0.0) rh(1.0 / math.sqrt(iD), 6) else null)
@@ -4872,16 +4860,6 @@ object Stats {
         round(lit(1.0) / sqrt(col("_I").cast("double")), 6))
         .cast("double").as("se"))
   }
-
-  /** round(t, 12).cast(decimal(38,12)) replicated on the driver as an
-    * unscaled-unit BigInt — the exact composition Spark evaluates
-    * (HALF_UP round over the BigDecimal.valueOf canonical repr, then
-    * the HALF_UP decimal cast), so decimal SUMS of these units are
-    * bit-identical to the distributed aggregates (decimal addition is
-    * exact and order-free on both paths). */
-  private[operators] def dec12Unit(t: Double): BigInt =
-    BigInt(java.math.BigDecimal.valueOf(Graph.roundHalfUp(t, 12))
-      .setScale(12, java.math.RoundingMode.HALF_UP).unscaledValue())
 
   /** Logistic regression, one covariate with intercept, FIXED Newton
     * iterations from (α, β) = (0, 0) — the most common supervised
@@ -5419,8 +5397,8 @@ object Stats {
     val h00 = s.d(2, g); val h01 = s.d(3, g); val h11 = s.d(4, g)
     val det = h00 * h11 - h01 * h01
     if (det > 0.0) {
-      a(g) = Graph.roundHalfUp(a(g) + (g0 * h11 - g1 * h01) / det, 12)
-      b(g) = Graph.roundHalfUp(b(g) + (g1 * h00 - g0 * h01) / det, 12)
+      a(g) = DriverPath.round(a(g) + (g0 * h11 - g1 * h01) / det, 12)
+      b(g) = DriverPath.round(b(g) + (g1 * h00 - g0 * h01) / det, 12)
     }
   }
 
@@ -5451,13 +5429,13 @@ object Stats {
       val h00 = s.d(2, g); val h01 = s.d(3, g); val h11 = s.d(4, g)
       val det = h00 * h11 - h01 * h01
       Row(glm.keys(g), glm.counts(g), s.dbl(0)(g).toLong,
-        Graph.roundHalfUp(a(g), 6), Graph.roundHalfUp(b(g), 6),
-        if (det > 0.0) Graph.roundHalfUp(math.sqrt(h00 / det), 6)
+        DriverPath.round(a(g), 6), DriverPath.round(b(g), 6),
+        if (det > 0.0) DriverPath.round(math.sqrt(h00 / det), 6)
         else null,
         if (det > 0.0)
-          Graph.roundHalfUp(b(g) / math.sqrt(h00 / det), 6)
+          DriverPath.round(b(g) / math.sqrt(h00 / det), 6)
         else null,
-        Graph.roundHalfUp(math.exp(b(g)), 6))
+        DriverPath.round(math.exp(b(g)), 6))
     }
     DriverPath.frame(df.sparkSession, out, schema)
   }
@@ -5502,9 +5480,9 @@ object Stats {
     } { (g, s) =>
       val (det, det0, det1, det2) = solve(s, g)
       if (det > 0.0) {
-        a(g) = Graph.roundHalfUp(a(g) + det0 / det, 12)
-        b1(g) = Graph.roundHalfUp(b1(g) + det1 / det, 12)
-        b2(g) = Graph.roundHalfUp(b2(g) + det2 / det, 12)
+        a(g) = DriverPath.round(a(g) + det0 / det, 12)
+        b1(g) = DriverPath.round(b1(g) + det1 / det, 12)
+        b2(g) = DriverPath.round(b2(g) + det2 / det, 12)
       }
     }
     import org.apache.spark.sql.types._
@@ -5522,17 +5500,17 @@ object Stats {
       val a22 = h00 * h22 - h02 * h02
       val a33 = h00 * h11 - h01 * h01
       Row(glm.keys(g), glm.counts(g), s.dbl(0)(g).toLong,
-        Graph.roundHalfUp(a(g), 6),
-        Graph.roundHalfUp(b1(g), 6), Graph.roundHalfUp(b2(g), 6),
-        if (det > 0.0) Graph.roundHalfUp(math.sqrt(a22 / det), 6)
+        DriverPath.round(a(g), 6),
+        DriverPath.round(b1(g), 6), DriverPath.round(b2(g), 6),
+        if (det > 0.0) DriverPath.round(math.sqrt(a22 / det), 6)
         else null,
-        if (det > 0.0) Graph.roundHalfUp(math.sqrt(a33 / det), 6)
-        else null,
-        if (det > 0.0)
-          Graph.roundHalfUp(b1(g) / math.sqrt(a22 / det), 6)
+        if (det > 0.0) DriverPath.round(math.sqrt(a33 / det), 6)
         else null,
         if (det > 0.0)
-          Graph.roundHalfUp(b2(g) / math.sqrt(a33 / det), 6)
+          DriverPath.round(b1(g) / math.sqrt(a22 / det), 6)
+        else null,
+        if (det > 0.0)
+          DriverPath.round(b2(g) / math.sqrt(a33 / det), 6)
         else null)
     }
     DriverPath.frame(df.sparkSession, out, schema)
@@ -5546,7 +5524,7 @@ object Stats {
     val (gi, xs, ys, ns) = (glm.gi, glm.xs(0), glm.ys, glm.counts)
     val sy0 = glm.ySums
     // init at the Laplace-smoothed log-mean, as in the plan
-    val a = Array.tabulate(glm.ng)(g => Graph.roundHalfUp(
+    val a = Array.tabulate(glm.ng)(g => DriverPath.round(
       math.log((sy0(g) + 1.0) / (ns(g) + 1.0)), 12))
     val b = new Array[Double](glm.ng)
     // sums G0 G1 H00 H01 H11 CHI, then sum_y
@@ -5573,15 +5551,15 @@ object Stats {
       val det = h00 * h11 - h01 * h01
       val nD = ns(g).toDouble
       Row(glm.keys(g), ns(g),
-        Graph.roundHalfUp(s.dbl(0)(g), 6),
-        Graph.roundHalfUp(a(g), 6), Graph.roundHalfUp(b(g), 6),
-        if (det > 0.0) Graph.roundHalfUp(math.sqrt(h00 / det), 6) else null,
+        DriverPath.round(s.dbl(0)(g), 6),
+        DriverPath.round(a(g), 6), DriverPath.round(b(g), 6),
+        if (det > 0.0) DriverPath.round(math.sqrt(h00 / det), 6) else null,
         if (det > 0.0)
-          Graph.roundHalfUp(b(g) / math.sqrt(h00 / det), 6) else null,
-        Graph.roundHalfUp(math.exp(b(g)), 6),
-        if (ns(g) > 2L) Graph.roundHalfUp(chi / (nD - 2.0), 6) else null,
+          DriverPath.round(b(g) / math.sqrt(h00 / det), 6) else null,
+        DriverPath.round(math.exp(b(g)), 6),
+        if (ns(g) > 2L) DriverPath.round(chi / (nD - 2.0), 6) else null,
         if (det > 0.0 && ns(g) > 2L)
-          Graph.roundHalfUp(
+          DriverPath.round(
             math.sqrt(h00 / det) * math.sqrt(chi / (nD - 2.0)), 6)
         else null)
     }
@@ -5596,7 +5574,7 @@ object Stats {
     val (gi, xs, ys, ns) = (glm.gi, glm.xs(0), glm.ys, glm.counts)
     val sy0 = glm.ySums
     val a = Array.tabulate(glm.ng)(g =>
-      Graph.roundHalfUp(math.log(sy0(g) / ns(g).toDouble), 12))
+      DriverPath.round(math.log(sy0(g) / ns(g).toDouble), 12))
     val b = new Array[Double](glm.ng)
     // sums SZ SXZ SX SXX CHI
     val s = glm.newton(iters, 5, 0) { (i, t) =>
@@ -5614,9 +5592,9 @@ object Stats {
       if (det > 0.0) {
         // the in-plan trees: b = (n·Sxz − Sx·Sz)/det,
         // a = (Sz − b·Sx)/n with b's tree inlined
-        a(g) = Graph.roundHalfUp(
+        a(g) = DriverPath.round(
           (sz - (nD * sxz - sx * sz) / det * sx) / nD, 12)
-        b(g) = Graph.roundHalfUp((nD * sxz - sx * sz) / det, 12)
+        b(g) = DriverPath.round((nD * sxz - sx * sz) / det, 12)
       }
     }
     import org.apache.spark.sql.types._
@@ -5633,12 +5611,12 @@ object Stats {
       val det = nD * sxx - sx * sx
       val se = math.sqrt(chi / (nD - 2.0) * (nD / det))
       Row(glm.keys(g), ns(g),
-        Graph.roundHalfUp(a(g), 6), Graph.roundHalfUp(b(g), 6),
-        if (det > 0.0 && ns(g) > 2L) Graph.roundHalfUp(se, 6) else null,
+        DriverPath.round(a(g), 6), DriverPath.round(b(g), 6),
+        if (det > 0.0 && ns(g) > 2L) DriverPath.round(se, 6) else null,
         if (det > 0.0 && ns(g) > 2L)
-          Graph.roundHalfUp(b(g) / se, 6) else null,
-        Graph.roundHalfUp(math.exp(b(g)), 6),
-        if (ns(g) > 2L) Graph.roundHalfUp(chi / (nD - 2.0), 6) else null)
+          DriverPath.round(b(g) / se, 6) else null,
+        DriverPath.round(math.exp(b(g)), 6),
+        if (ns(g) > 2L) DriverPath.round(chi / (nD - 2.0), 6) else null)
     }
     DriverPath.frame(df.sparkSession, out, schema)
   }
@@ -5660,7 +5638,7 @@ object Stats {
       val s = pass()
       val hD = s.d(1, 0)
       if (hD > 0.0)
-        w = Graph.roundHalfUp(math.max(0.001,
+        w = DriverPath.round(math.max(0.001,
           math.min(64.0, w - s.d(0, 0) / hD)), 12)
     }
     val ypos = pass().dbl(0)(0)
@@ -5670,8 +5648,8 @@ object Stats {
       StructField("inv_temp", DoubleType),
       StructField("temperature", DoubleType)))
     val out = Seq(Row(ss.length.toLong, ypos.toLong,
-      Graph.roundHalfUp(w, 6),
-      if (w > 0.0) Graph.roundHalfUp(1.0 / w, 6) else null))
+      DriverPath.round(w, 6),
+      if (w > 0.0) DriverPath.round(1.0 / w, 6) else null))
     DriverPath.frame(df.sparkSession, out, schema)
   }
 
@@ -6448,14 +6426,15 @@ object Stats {
     for (pass <- 1 to k) {
       // per-group moments: exact decimal(38,0) sums
       val n = new Array[Long](ng)
-      val s1 = Array.fill(ng)(BigInt(0)); val q1 = Array.fill(ng)(BigInt(0))
+      val s1 = Array.fill(ng)(new DriverPath.Units(0))
+      val q1 = Array.fill(ng)(new DriverPath.Units(0))
       var i = 0
       while (i < nc) {
         if (cnt(i) > 0L) {
-          val g = gi(i); val c = BigInt(cnt(i))
+          val g = gi(i)
           n(g) += cnt(i)
-          s1(g) += c * xq(i)
-          q1(g) += c * xq(i) * xq(i)
+          s1(g).addProduct(cnt(i), xq(i))
+          q1(g).addProduct(cnt(i), xq(i), xq(i))
         }
         i += 1
       }
@@ -6470,10 +6449,7 @@ object Stats {
             "gesd: Division by zero (group reached n = 1; the " +
               "distributed plan's ANSI contract)")
           val nD = n(g).toDouble
-          val s1d = new java.math.BigDecimal(s1(g).bigInteger, 0)
-            .doubleValue()
-          val q1d = new java.math.BigDecimal(q1(g).bigInteger, 0)
-            .doubleValue()
+          val s1d = s1(g).toDouble; val q1d = q1(g).toDouble
           mu(g) = s1d / nD
           val varr = (nD * q1d - s1d * s1d) / (nD * (nD - 1.0))
           if (varr > 0.0) { sd(g) = math.sqrt(varr); hasSd(g) = true }
@@ -6488,7 +6464,7 @@ object Stats {
         if (cnt(i) > 0L) {
           val g = gi(i)
           val z = if (hasSd(g))
-            Graph.roundHalfUp(
+            DriverPath.round(
               math.abs(xq(i).toDouble - mu(g)) / sd(g), 6)
           else 0.0
           if (wIdx(g) < 0 || z > mz(g)
@@ -6502,7 +6478,7 @@ object Stats {
       while (g < ng) {
         if (wIdx(g) >= 0) {
           out += org.apache.spark.sql.Row(gVals(g), pass, n(g),
-            Graph.roundHalfUp(wx(g).toDouble / 1e6, 6),
+            DriverPath.round(wx(g).toDouble / 1e6, 6),
             if (hasSd(g) && n(g) >= 3L) mz(g) else null)
           cnt(wIdx(g)) -= 1L // decrement the winner cell
         }
@@ -8049,8 +8025,7 @@ object Stats {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     require(lambda > 0.0, s"lambda=$lambda must be > 0")
     import events.sparkSession.implicits._
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    def r6(v: Double): Double = DriverPath.round(v, 6)
     events.groupByKey(_.key)
       .flatMapGroupsWithState[PhState, PhOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -8062,13 +8037,12 @@ object Stats {
               java.math.BigDecimal.ZERO, java.math.BigDecimal.ZERO,
               null, java.math.BigDecimal.ZERO, None))
             sorted.foreach { e =>
-              val vq = java.math.BigDecimal.valueOf(e.v * 1e6)
-                .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+              val vq = DriverPath.units(e.v * 1e6, 0)
               val t = st.t + 1
-              val s = st.s.add(java.math.BigDecimal.valueOf(vq))
+              val s = st.s.add(new java.math.BigDecimal(vq))
               val mu = r6(s.doubleValue() / t / 1e6)
-              val dev = java.math.BigDecimal
-                .valueOf(r6(vq / 1e6 - mu - delta)).setScale(6)
+              val dev = new java.math.BigDecimal(java.math.BigInteger.valueOf(
+                DriverPath.units(r6(vq / 1e6 - mu - delta), 6)), 6)
               val m = st.m.add(dev)
               val mMin =
                 if (st.mMin == null || m.compareTo(st.mMin) < 0) m

@@ -1403,17 +1403,19 @@ object LlmOps {
       // sort the merged sketches, then extract: the range sort's
       // sampling job and its shuffle-map job each evaluate the sort's
       // input, so an extraction below the sort ran twice; above it, it
-      // runs once, in the result stage
+      // runs once, in the result stage, and quantilesOf sorts each
+      // sketch once for all four quantiles
       spark.read.parquet(dir)
         .groupBy("event_type")
         .agg(QuantileSketch.mergeAgg(col("sk"), k).as("sk"))
         .orderBy("event_type")
         .select(col("event_type"),
           QuantileSketch.countOf(col("sk")).as("n"),
-          QuantileSketch.quantileOf(col("sk"), 0.25).as("q25"),
-          QuantileSketch.quantileOf(col("sk"), 0.5).as("median"),
-          QuantileSketch.quantileOf(col("sk"), 0.75).as("q75"),
-          QuantileSketch.quantileOf(col("sk"), 0.9).as("q90"))
+          QuantileSketch.quantilesOf(col("sk"), Seq(0.25, 0.5, 0.75, 0.9))
+            .as("qs"))
+        .select(col("event_type"), col("n"), col("qs")(0).as("q25"),
+          col("qs")(1).as("median"), col("qs")(2).as("q75"),
+          col("qs")(3).as("q90"))
         .localCheckpoint()
     } finally {
       val root = new org.apache.hadoop.fs.Path(dir)

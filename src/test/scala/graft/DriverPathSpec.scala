@@ -198,6 +198,123 @@ class DriverPathSpec extends SparkTestBase {
     assert(counts.toSeq == (0 until 3).map(g => group.count(_ == g).toLong))
   }
 
+  /** Spark's own expression for a double frozen at `s` dp. */
+  private def halfUp(x: Double, s: Int): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(x).setScale(s, java.math.RoundingMode.HALF_UP)
+
+  private def bits(x: Double): Long = java.lang.Double.doubleToLongBits(x)
+
+  private val Max38 = java.math.BigInteger.TEN.pow(38)
+
+  /** The doubles at scale `s` the kernel must round exactly. */
+  private def kernelInputs(s: Int, rnd: scala.util.Random): Array[Double] = {
+    def sign(x: Double) = if (rnd.nextBoolean()) -x else x
+    // (k + 0.5) / 10^s, the nearest double to the decimal tie
+    def tie(k: Long) = new java.math.BigDecimal(java.math.BigInteger
+      .valueOf(k).shiftLeft(1).add(java.math.BigInteger.ONE), s + 1)
+      .doubleValue()
+    def around(x: Double) = Seq(x, math.nextUp(x), math.nextDown(x))
+    val edge = math.pow(2, 52) / math.pow(10, s) // |x|·10^s = 2^52
+    val maxK = math.min(1e15, math.pow(10, s + 4)).toLong
+    (Seq.fill(20000)(rnd.nextDouble() * 2 - 1) ++
+      Seq.fill(20000)(rnd.nextDouble() * 2e6 - 1e6) ++
+      Seq.fill(30000)(sign(math.pow(10, rnd.nextDouble() * 22 - 12))) ++
+      Seq.fill(20000)(tie((rnd.nextDouble() * maxK).toLong))
+        .flatMap(around).map(sign) ++
+      Seq.fill(20000)(java.lang.Double.longBitsToDouble(rnd.nextLong())) ++
+      Seq(-0.0, 0.0, Double.MinPositiveValue, java.lang.Double.MIN_NORMAL) ++
+      Seq.fill(2000)(sign(Double.MinPositiveValue * rnd.nextInt(1 << 30))) ++
+      Seq.fill(2000)(sign(edge * (1 + (rnd.nextDouble() - 0.5) * 1e-3))) ++
+      Seq.fill(600)(tie((1L << 52) - 1 - rnd.nextInt(1 << 20)))
+        .flatMap(around).map(sign) ++
+      around(edge).map(sign)).toArray
+  }
+
+  test("the rounding kernel is bit-identical to BigDecimal HALF_UP " +
+      "on 2M seeded doubles at scales 0-12") {
+    val rnd = new scala.util.Random(20261019L)
+    val bad = scala.collection.mutable.ArrayBuffer[String]()
+    var n = 0
+    for (s <- 0 to 12; x <- kernelInputs(s, rnd)) {
+      n += 1
+      def miss(what: String) = if (bad.length < 10) bad += s"$what x=$x s=$s"
+      if (x.isNaN || x.isInfinite) {
+        if (bits(DriverPath.round(x, s)) != bits(x)) miss("round")
+        if (scala.util.Try(DriverPath.units(x, s)).isSuccess) miss("units")
+      } else {
+        val want = halfUp(x, s)
+        val r = want.doubleValue()
+        if (bits(DriverPath.round(x, s)) != bits(r)) miss("round")
+        val u = want.unscaledValue()
+        if (u.bitLength() <= 63) {
+          if (DriverPath.units(x, s) != u.longValue()) miss("units")
+        } else if (scala.util.Try(DriverPath.units(x, s)).isSuccess)
+          miss("units past a long")
+        if (u.abs.compareTo(Max38) < 0) {
+          val cast = new DriverPath.Units(s); cast.addCast(x)
+          if (cast.total != BigInt(u)) miss("addCast")
+          // round, then the cast of the rounded double
+          val twice = halfUp(r, s).unscaledValue()
+          val both = new DriverPath.Units(s); both.add(x)
+          if (both.total != BigInt(twice)) miss("add")
+        }
+      }
+    }
+    assert(n >= 2000000, s"only $n inputs")
+    assert(bad.isEmpty, bad.mkString("; "))
+  }
+
+  test("the kernel's round is Spark's round, and its units Spark's " +
+      "ANSI decimal cast, NaN and Infinity included") {
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val xs = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      -0.0, 0.0, -1e-13, 2.5, -2.5, 0.0078125, -1.0078125, 1.0000005,
+      0.1 + 0.2, 4503.5996273704955, Double.MinPositiveValue, 1e300, -1e-300)
+    val df = xs.toDF("x")
+    for (s <- Seq(0, 2, 6, 12)) {
+      val got = df.select(round(col("x"), s)).as[Double].collect()
+      xs.zip(got).foreach { case (x, g) =>
+        assert(bits(DriverPath.round(x, s)) == bits(g), s"round($x, $s)")
+      }
+    }
+    // the replicas' decimal term: round(t, 12).cast(decimal(38,12))
+    val dec12 = round(col("x"), 12).cast("decimal(38,12)")
+    val finite = xs.filter(x => !x.isNaN && !x.isInfinite && x != 1e300)
+    val cast = finite.toDF("x").select(dec12).as[java.math.BigDecimal]
+      .collect()
+    finite.zip(cast).foreach { case (x, c) =>
+      val acc = new DriverPath.Units(12); acc.add(x)
+      assert(acc.total == BigInt(c.setScale(12).unscaledValue()), s"cast($x)")
+    }
+    // the ANSI cast gives NULL for NaN and ±Infinity, which a SUM
+    // skips, and fails on out-of-range values
+    for (x <- Seq(Double.NaN, Double.PositiveInfinity,
+        Double.NegativeInfinity)) {
+      assert(Seq(x).toDF("x").select(dec12).collect().head.isNullAt(0))
+      val acc = new DriverPath.Units(12); acc.add(x); acc.addCast(x)
+      assert(acc.total == 0, s"$x")
+    }
+    for (x <- Seq(1e300, -1e26)) {
+      intercept[ArithmeticException](
+        Seq(x).toDF("x").select(dec12).collect())
+      intercept[ArithmeticException](new DriverPath.Units(12).add(x))
+      intercept[ArithmeticException](new DriverPath.Units(12).addCast(x))
+    }
+  }
+
+  test("units sums products exactly through the long spill") {
+    val big = 3037000499L // big² is just under 2^63
+    val terms = Seq((1L, big, big), (3L, big, big), (-2L, big, 5L),
+      (7L, Long.MaxValue, 1L), (Long.MinValue, -1L, 1L), (-1L, 1L, 1L))
+    val acc = new DriverPath.Units(0)
+    terms.foreach { case (a, b, c) => acc.addProduct(a, b, c) }
+    val want = terms.map { case (a, b, c) => BigInt(a) * b * c }.sum
+    assert(acc.total == want)
+    assert(bits(acc.toDouble) ==
+      bits(new java.math.BigDecimal(want.bigInteger).doubleValue()))
+  }
+
   test("interning gives first-seen dense ids under both null policies") {
     val keys = Seq("b", null, "a", "b", null, "c", "a")
     val rows = keys.map(k => org.apache.spark.sql.Row(k)).toArray

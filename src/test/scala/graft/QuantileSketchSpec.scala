@@ -146,6 +146,36 @@ class QuantileSketchSpec extends SparkTestBase {
     assert(row.getLong(0) === 0L && row.isNullAt(1), row.toString)
   }
 
+  test("quantiles(qs) and quantilesOf answer every q in qs order, " +
+      "equal to the brute-force statistic and to quantileOf") {
+    import spark.implicits._
+    val order = Seq(0.9, 0.25, 1.0, 0.5, 0.25, 0.0, 0.75)
+    val sketches = Seq(build(64, exactVals), build(8, shuffled37),
+      build(8, (0 until 41).map(i => if (i % 2 == 0) 0.0 else -0.0)),
+      new QuantileSketch.Buf(8))
+    sketches.foreach { b =>
+      val want = order.map(q => bruteQuantile(b.serialize, q))
+      b.quantiles(order) match {
+        case None => assert(want.forall(_.isEmpty))
+        case Some(got) => assert(
+          got.toSeq.map(java.lang.Double.doubleToRawLongBits) ===
+            want.map(w => java.lang.Double.doubleToRawLongBits(w.get)))
+      }
+    }
+    val df = sketches.map(_.serialize).toDF("sk")
+    val arrays = df.select(QuantileSketch.quantilesOf(col("sk"), order))
+      .collect().map(r => if (r.isNullAt(0)) null else r.getSeq[Double](0))
+    val singles = df.select(order.map(q =>
+      QuantileSketch.quantileOf(col("sk"), q)): _*).collect()
+    arrays.zip(singles).foreach { case (a, row) =>
+      if (a == null) assert(order.indices.forall(row.isNullAt))
+      else assert(a.map(java.lang.Double.doubleToRawLongBits) ===
+        order.indices.map(i =>
+          java.lang.Double.doubleToRawLongBits(row.getDouble(i))))
+    }
+    assert(arrays.last == null, "the empty sketch answers NULL")
+  }
+
   test("count and countOf equal n; deserialize(serialize) is the identity") {
     import spark.implicits._
     val sketches = Seq(build(64, exactVals), build(8, shuffled37),

@@ -2221,7 +2221,10 @@ class StatsSpec extends SparkTestBase {
         (null.asInstanceOf[String], 6.5),
         (null.asInstanceOf[String], 7.0),
         (null.asInstanceOf[String], 7.5),
-        (null.asInstanceOf[String], 9.0)))
+        (null.asInstanceOf[String], 9.0))
+      // sd = 0.128 and |z| = 129/128, 115/128: exact 6-dp ties
+      ++ Seq(-0.129, 0.129).flatMap(v => Seq.fill(5)(("t", v)))
+      ++ Seq(-0.115, 0.115).flatMap(v => Seq.fill(3)(("t", v))))
       .toDF("g", "v")
     // the empty input reaches the replica on one path only
     for (in <- Seq(df, df.limit(0)); kk <- Seq(1, 3, 5)) {
@@ -2244,6 +2247,9 @@ class StatsSpec extends SparkTestBase {
       ("b", ((i * 7) % 10 + 1).toLong, i % 2 == 0, (i % 5) / 3.0)
     } ++ (1 to 10).map { i =>
       ("c", (i % 4 + 1).toLong, false, i / 10.0) // zero events
+    } ++ (1 to 128).map { i =>
+      // at β = 0: S1/S0 = (1/64)/128, so U's term −1/8192 is a 12-dp tie
+      ("t", 5L, i == 1, if (i == 2) 0.015625 else 0.0)
     }).toDF("g", "dur", "obs", "x")
     for (it <- Seq(1, 3)) {
       val fast = Stats.coxPH(df, "g", "dur", col("obs"), "x", iters = it)
@@ -2264,7 +2270,10 @@ class StatsSpec extends SparkTestBase {
       ++ (1 to 10).map(i => ("b", 7.25)) // zero MAD
       ++ (1 to 12).map(i => ("c", i.toDouble)) // even n
       ++ Seq((null.asInstanceOf[String], 3.0),
-        (null.asInstanceOf[String], 4.0)))
+        (null.asInstanceOf[String], 4.0))
+      // μ lands on 7.5e-6 after one pass: the output's 6-dp round is
+      // a tie
+      ++ Seq(4, 4, 5, 7, 8, 10, 10, 12).map(i => ("t", i / 1e6)))
       .toDF("g", "v")
     // the empty input reaches the replica on one path only
     for (in <- Seq(df, df.limit(0)); it <- Seq(1, 2, 4)) {
