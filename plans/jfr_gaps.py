@@ -2,7 +2,7 @@
 """Where a query's DataFrame build spends the time its Spark jobs do not.
 
 Usage:
-  python3 plans/jfr_gaps.py RECORDING SPANS [--passes timed|all]
+  python3 plans/jfr_gaps.py RECORDING SPANS
 
 RECORDING is a JFR file (read with `jfr print --json --events
 jdk.ExecutionSample`) or that command's saved JSON output. SPANS is the
@@ -91,14 +91,12 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("recording")
     ap.add_argument("spans")
-    ap.add_argument("--passes", choices=("timed", "all"), default="timed")
     a = ap.parse_args()
 
     with open(a.spans) as f:
         spans = [json.loads(line) for line in f if line.strip()]
     jobs = merged((s["start_us"], s["end_us"]) for s in spans if s["name"] == "job")
-    builds = [s for s in spans if s["name"] == "queries.build"
-              and (a.passes == "all" or s["pass"] >= 0)]
+    builds = [s for s in spans if s["name"] == "queries.build" and s["pass"] >= 0]
     samples = load_samples(a.recording)
     times = [t for t, _ in samples]
 

@@ -664,27 +664,22 @@ object Clustering {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** Spark `round(double, 6)` on the driver — the exact semantics of
-    * the engine round the M-step literals must re-enter the plan with. */
-  private def r6(x: Double): Double = DriverPath.round(x, 6)
-
   /** Driver replica of [[gmmPortable]]'s EM passes (see the
     * fast-path note there). */
   private def gmmDriverDf(spark: org.apache.spark.sql.SparkSession,
       idType: org.apache.spark.sql.types.DataType, idCol: String,
       ids: Array[Any], vecs: Array[Array[Double]], k: Int, passes: Int,
       kmeansIters: Int, varFloor: Double): DataFrame = {
-    val rh = DriverPath.round _
     val n = vecs.length
     val dim = vecs(0).length
     var mu: Array[Array[Double]] =
       trainCentroidsDriver(ids, vecs, k, kmeansIters, 6).map(_.toArray).toArray
     var s2: Array[Double] = Array.fill(k)(1.0)
-    var pi: Array[Double] = Array.fill(k)(r6(1.0 / k))
+    var pi: Array[Double] = Array.fill(k)(DriverPath.round(1.0 / k, 6))
     def sqDist12(x: Array[Double], c: Array[Double]): Double = {
       var s = 0.0; var d = 0
       while (d < dim) { val t = x(d) - c(d); s += t * t; d += 1 }
-      rh(s, 12)
+      DriverPath.round(s, 12)
     }
     // responsibilities of row v under the CURRENT (mu, s2, pi): the
     // identical 12-dp score trees (the lit() constants are computed
@@ -693,7 +688,7 @@ object Clustering {
       val s = new Array[Double](k)
       var c = 0
       while (c < k) {
-        s(c) = rh((math.log(pi(c)) - 0.5 * dim * math.log(s2(c)))
+        s(c) = DriverPath.round((math.log(pi(c)) - 0.5 * dim * math.log(s2(c)))
           - sqDist12(vecs(v), mu(c)) / (2.0 * s2(c)), 12)
         c += 1
       }
@@ -702,7 +697,9 @@ object Clustering {
       var den = 0.0; c = 0
       while (c < k) { den += math.exp(s(c) - mx); c += 1 }
       val r = new Array[Double](k); c = 0
-      while (c < k) { r(c) = rh(math.exp(s(c) - mx) / den, 12); c += 1 }
+      while (c < k) {
+        r(c) = DriverPath.round(math.exp(s(c) - mx) / den, 12); c += 1
+      }
       r
     }
     for (_ <- 1 to passes) {
@@ -723,7 +720,8 @@ object Clustering {
       // VectorMeanAgg: elementwise sum / count (count = n, no nulls)
       val newMu = Array.tabulate(k) { c =>
         if (srs(c) > 0.0)
-          Array.tabulate(dim)(d => r6(mvSums(c)(d) / n * n.toDouble / srs(c)))
+          Array.tabulate(dim)(d =>
+            DriverPath.round(mvSums(c)(d) / n * n.toDouble / srs(c), 6))
         else mu(c)
       }
       val sds = new Array[Double](k)
@@ -736,11 +734,12 @@ object Clustering {
       }
       s2 = Array.tabulate(k) { c =>
         if (srs(c) > 0.0)
-          math.max(varFloor, r6(sds(c) / (dim.toDouble * srs(c))))
+          math.max(varFloor,
+            DriverPath.round(sds(c) / (dim.toDouble * srs(c)), 6))
         else s2(c)
       }
       pi = Array.tabulate(k) { c =>
-        if (srs(c) > 0.0) r6(srs(c) / n.toDouble) else pi(c)
+        if (srs(c) > 0.0) DriverPath.round(srs(c) / n.toDouble, 6) else pi(c)
       }
       mu = newMu
     }
@@ -752,7 +751,7 @@ object Clustering {
       val r = resp(v)
       var best = 0; var c = 1
       while (c < k) { if (r(c) > r(best)) best = c; c += 1 } // first max
-      org.apache.spark.sql.Row(ids(v), best, r6(r(best)))
+      org.apache.spark.sql.Row(ids(v), best, DriverPath.round(r(best), 6))
     }
     DriverPath.frame(spark, out, schema)
   }
@@ -820,7 +819,8 @@ object Clustering {
       lloydCentroids(v, idc, vc, k, kmeansIters, 6) // v is not collectable
         .toIndexedSeq
     var s2: IndexedSeq[Double] = IndexedSeq.fill(k)(1.0)
-    var pi: IndexedSeq[Double] = IndexedSeq.fill(k)(r6(1.0 / k))
+    var pi: IndexedSeq[Double] =
+      IndexedSeq.fill(k)(DriverPath.round(1.0 / k, 6))
     def withResp: DataFrame = {
       val sArr = array((0 until k).map { c =>
         round(lit(math.log(pi(c)) - 0.5 * dim * math.log(s2(c)))
@@ -847,7 +847,8 @@ object Clustering {
       val mvs = (0 until k).map(c =>
         row1.getSeq[Double](row1.fieldIndex(s"_mv$c")))
       val newMu = (0 until k).map { c =>
-        if (srs(c) > 0.0) mvs(c).map(m => r6(m * n.toDouble / srs(c))).toSeq
+        if (srs(c) > 0.0)
+          mvs(c).map(m => DriverPath.round(m * n.toDouble / srs(c), 6)).toSeq
         else mu(c)
       }
       val aggs2 = (0 until k).map { c =>
@@ -858,12 +859,12 @@ object Clustering {
       s2 = (0 until k).map { c =>
         if (srs(c) > 0.0)
           math.max(varFloor,
-            r6(row2.getDouble(row2.fieldIndex(s"_sd$c"))
-              / (dim.toDouble * srs(c))))
+            DriverPath.round(row2.getDouble(row2.fieldIndex(s"_sd$c"))
+              / (dim.toDouble * srs(c)), 6))
         else s2(c)
       }
       pi = (0 until k).map { c =>
-        if (srs(c) > 0.0) r6(srs(c) / n.toDouble) else pi(c)
+        if (srs(c) > 0.0) DriverPath.round(srs(c) / n.toDouble, 6) else pi(c)
       }
       mu = newMu
     }

@@ -156,9 +156,10 @@ object DriverPath {
     out
   }
 
-  /** decimal(38,12).cast(double) — Spark's Decimal.toDouble. */
-  def dec12ToDouble(u: BigInt): Double =
-    new java.math.BigDecimal(u.bigInteger, 12).doubleValue()
+  /** decimal(38, scale).cast(double) of unscaled `u` — Spark's
+    * Decimal.toDouble. */
+  def decToDouble(u: BigInt, scale: Int): Double =
+    new java.math.BigDecimal(u.bigInteger, scale).doubleValue()
 
   /* The rounding kernel. Spark freezes a double at `scale` dp as
    * HALF_UP over its shortest decimal (Double.toString) — `round` and
@@ -237,21 +238,25 @@ object DriverPath {
     * long with an overflow spill into BigInt, so totals equal the
     * distributed decimal aggregates (exact, order-free) without a
     * BigInt per term. A NaN or ±Infinity term adds nothing, as SUM
-    * skips the NULL its cast gives (a sum of only such terms is NULL
-    * in Spark and 0 here). */
+    * skips the NULL its cast gives; a sum whose every term is such a
+    * NULL is NULL in Spark, which no replica carries on, so [[total]]
+    * throws there. */
   final class Units(scale: Int) {
     private var lo = 0L
     private var big: BigInt = null
+    private var nulls = false // a term whose cast gave NULL
+    private var valued = false // a term with a value
     private def spill(u: BigInt): Unit = big = if (big == null) u else big + u
-    private def addUnits(u: Long): Unit = {
+    private def addLong(u: Long): Unit = {
       val sum = lo + u
       if (((lo ^ sum) & (u ^ sum)) < 0L) { spill(BigInt(lo)); lo = u }
       else lo = sum
     }
+    private def addUnits(u: Long): Unit = { valued = true; addLong(u) }
     private def addUnits(u: java.math.BigInteger): Unit =
-      if (u == null) ()
+      if (u == null) nulls = true
       else if (u.bitLength() <= 63) addUnits(u.longValue())
-      else spill(BigInt(u))
+      else { valued = true; spill(BigInt(u)) }
 
     /** Adds `round(t, scale).cast(decimal(38, scale))`. On the fast
       * path both steps give the same units k (|k| < 2^51: no other
@@ -274,21 +279,33 @@ object DriverPath {
         val abc = ab * c
         if (Math.multiplyHigh(ab, c) == (abc >> 63)) { addUnits(abc); return }
       }
+      valued = true
       spill(BigInt(a) * b * c)
     }
 
-    def total: BigInt = if (big == null) BigInt(lo) else big + BigInt(lo)
+    /** Adds every term `o` has taken (a second split of the same sum). */
+    def addAll(o: Units): Unit = {
+      addLong(o.lo)
+      if (o.big != null) spill(o.big)
+      nulls |= o.nulls; valued |= o.valued
+    }
+
+    /** The exact sum; throws when every term was NaN or ±Infinity. */
+    def total: BigInt = {
+      if (nulls && !valued) throw new ArithmeticException(
+        s"every term is NaN or infinite: their decimal(38,$scale) sum is NULL")
+      if (big == null) BigInt(lo) else big + BigInt(lo)
+    }
 
     /** The sum cast to double (Spark's Decimal.toDouble). */
-    def toDouble: Double =
-      new java.math.BigDecimal(total.bigInteger, scale).doubleValue()
+    def toDouble: Double = decToDouble(total, scale)
   }
 
   /** Per-group totals of a [[fold]]: `dec(k)(g)` in decimal(38,12)
     * units, `dbl(k)(g)` plain double sums. */
   final class Sums(val dec: Array[Array[BigInt]],
       val dbl: Array[Array[Double]]) {
-    def d(k: Int, g: Int): Double = dec12ToDouble(dec(k)(g))
+    def d(k: Int, g: Int): Double = decToDouble(dec(k)(g), 12)
   }
 
   /** The replicas' exact fold: rows [0, n) split across [[threads]]
@@ -297,7 +314,8 @@ object DriverPath {
     * with its double terms, summed into group `group(i)` (`group` =
     * null: one group). The decimal terms freeze at 12 dp into exact,
     * order-free sums — the distributed `sum(round(t, 12).cast(
-    * decimal(38,12)))`; the double sums add each thread's rows in order
+    * decimal(38,12)))`, and like [[Units.total]] the fold throws where
+    * that sum is NULL; the double sums add each thread's rows in order
     * and merge in thread order, so callers keep them to sums the split
     * cannot change (0/1 flags, counts). */
   def fold(n: Int, nGroups: Int, group: Array[Int], nDec: Int,
@@ -322,8 +340,11 @@ object DriverPath {
     }
     val used = (0 until nT).filter(tDec(_) != null)
     new Sums(
-      Array.tabulate(nDec, nGroups)((k, g) =>
-        used.foldLeft(BigInt(0))((s, t) => s + tDec(t)(k)(g).total)),
+      Array.tabulate(nDec, nGroups) { (k, g) =>
+        val acc = new Units(12)
+        used.foreach(t => acc.addAll(tDec(t)(k)(g)))
+        acc.total
+      },
       Array.tabulate(nDbl, nGroups)((k, g) =>
         used.foldLeft(0.0)((s, t) => s + tDbl(t)(k)(g))))
   }

@@ -626,7 +626,6 @@ object EventWindows {
       : org.apache.spark.sql.Dataset[PosOut] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import events.sparkSession.implicits._
-    def r6(x: Double): Double = DriverPath.round(x, 6)
     events.groupByKey(_.user)
       .flatMapGroupsWithState[PathState, PosOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -640,14 +639,14 @@ object EventWindows {
               if (k == 0)
                 out += PosOut(user, e.event_id, "direct", 1.0, 1.0)
               else {
-                val lin = r6(1.0 / k)
+                val lin = DriverPath.round(1.0 / k, 6)
                 path.zipWithIndex.foreach { case (ch, i) =>
                   val r = i + 1
                   val u =
                     if (k == 1) 1.0
                     else if (k == 2) 0.5
                     else if (r == 1 || r == k) 0.4
-                    else r6(0.2 / (k - 2))
+                    else DriverPath.round(0.2 / (k - 2), 6)
                   out += PosOut(user, e.event_id, ch, lin, u)
                 }
               }

@@ -327,9 +327,8 @@ object FuzzyJoin {
     require(Seq(pInit, mInit, uInit).forall(v => v > 0.0 && v < 1.0),
       "fellegiSunterEm: inits must be in (0, 1)")
     val dec12 = "decimal(38,12)"
-    def r6(v: Double): Double = DriverPath.round(v, 6)
     def clamp6(v: Double): Double =
-      math.min(math.max(r6(v), 1e-6), 0.999999)
+      math.min(math.max(DriverPath.round(v, 6), 1e-6), 0.999999)
     val k = fields.size
     val rows = pairs.select(fields.zipWithIndex.map { case ((_, c), i) =>
         coalesce(c, lit(false)).as(s"_a$i") }: _*)
@@ -373,8 +372,9 @@ object FuzzyJoin {
     import spark.implicits._
     fields.map(_._1).zipWithIndex.map { case (f, i) =>
       (f, n, p, m(i), u(i),
-        r6(math.log(m(i) / u(i)) / TextAnalysis.ln2),
-        r6(math.log((1.0 - m(i)) / (1.0 - u(i))) / TextAnalysis.ln2))
+        DriverPath.round(math.log(m(i) / u(i)) / TextAnalysis.ln2, 6),
+        DriverPath.round(
+          math.log((1.0 - m(i)) / (1.0 - u(i))) / TextAnalysis.ln2, 6))
     }.toDF("field", "n_pairs", "p_match", "m", "u",
       "w_agree", "w_disagree")
   }

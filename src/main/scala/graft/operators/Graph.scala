@@ -2702,8 +2702,8 @@ object Graph {
         .select(col("v"),
           round(col("_sum").cast("double") / col("_mx").cast("double"),
             12).as("_x"))) { sums =>
-      val mx = DriverPath.dec12ToDouble(sums.max)
-      sums.map(u => DriverPath.round(DriverPath.dec12ToDouble(u) / mx, 12))
+      val mx = DriverPath.decToDouble(sums.max, 12)
+      sums.map(u => DriverPath.round(DriverPath.decToDouble(u, 12) / mx, 12))
     }
   }
 
@@ -2734,7 +2734,8 @@ object Graph {
       _.select(col("v"),
         round(lit(alpha) * col("_sum").cast("double") + lit(1.0), 12)
           .as("_x"))) { sums =>
-      sums.map(u => DriverPath.round(alpha * DriverPath.dec12ToDouble(u) + 1.0, 12))
+      sums.map(u =>
+        DriverPath.round(alpha * DriverPath.decToDouble(u, 12) + 1.0, 12))
     }
   }
 

@@ -19,9 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Resample {
 
-  /** Spark's `round(v, 6)`, for the driver folds and streaming twins. */
-  private def r6(v: Double): Double = DriverPath.round(v, 6)
-
   /** Per-key grid with LINEAR interpolation between the neighboring
     * observations (pandas `resample().interpolate()` parity): value at
     * grid instant g = prev + (next - prev)·(g - t_prev)/(t_next -
@@ -229,9 +226,11 @@ object Resample {
           else {
             val prevL: Double = level
             val prevT: Double = trend
-            val l = r6(alpha * x + (1.0 - alpha) * (prevL + prevT))
+            val l = DriverPath.round(
+              alpha * x + (1.0 - alpha) * (prevL + prevT), 6)
             level = l
-            trend = r6(beta * (l - prevL) + (1.0 - beta) * prevT)
+            trend = DriverPath.round(
+              beta * (l - prevL) + (1.0 - beta) * prevT, 6)
           }
         }
         org.apache.spark.sql.Row.fromSeq(
@@ -315,9 +314,11 @@ object Resample {
           else {
             val prevL: Double = level
             val prevT: Double = trend
-            val l = r6(alpha * x + (1.0 - alpha) * (prevL + phi * prevT))
+            val l = DriverPath.round(
+              alpha * x + (1.0 - alpha) * (prevL + phi * prevT), 6)
             level = l
-            trend = r6(beta * (l - prevL) + (1.0 - beta) * (phi * prevT))
+            trend = DriverPath.round(
+              beta * (l - prevL) + (1.0 - beta) * (phi * prevT), 6)
           }
         }
         org.apache.spark.sql.Row.fromSeq(
@@ -403,18 +404,21 @@ object Resample {
           if (level == null) {
             warm = warm :+ x
             if (warm.size == period) {
-              val l = r6(warm.sum / period)
+              val l = DriverPath.round(warm.sum / period, 6)
               level = l; trend = 0.0
-              ring = warm.map(v => r6(v - l)).toVector
+              ring = warm.map(v => DriverPath.round(v - l, 6)).toVector
               season = ring.last
             }
           } else {
             val sOld = ring.head
             val prevL: Double = level
             val prevT: Double = trend
-            val l = r6(alpha * (x - sOld) + (1.0 - alpha) * (prevL + prevT))
-            val b = r6(beta * (l - prevL) + (1.0 - beta) * prevT)
-            val sNew = r6(gamma * (x - prevL - prevT) + (1.0 - gamma) * sOld)
+            val l = DriverPath.round(
+              alpha * (x - sOld) + (1.0 - alpha) * (prevL + prevT), 6)
+            val b = DriverPath.round(
+              beta * (l - prevL) + (1.0 - beta) * prevT, 6)
+            val sNew = DriverPath.round(
+              gamma * (x - prevL - prevT) + (1.0 - gamma) * sOld, 6)
             level = l; trend = b; season = sNew
             ring = ring.tail :+ sNew
           }
@@ -483,17 +487,19 @@ object Resample {
         if (level == null) {
           warm = warm :+ x
           if (warm.size == period) {
-            val l = r6(warm.sum / period)
+            val l = DriverPath.round(warm.sum / period, 6)
             level = l; trend = 0.0
-            ring = warm.map(v => r6(v - l)).toVector
+            ring = warm.map(v => DriverPath.round(v - l, 6)).toVector
           }
         } else {
           val sOld = ring.head
           val prevL: Double = level
           val prevT = trend
-          val l = r6(alpha * (x - sOld) + (1.0 - alpha) * (prevL + prevT))
-          val b = r6(beta * (l - prevL) + (1.0 - beta) * prevT)
-          val sNew = r6(gamma * (x - prevL - prevT) + (1.0 - gamma) * sOld)
+          val l = DriverPath.round(
+            alpha * (x - sOld) + (1.0 - alpha) * (prevL + prevT), 6)
+          val b = DriverPath.round(beta * (l - prevL) + (1.0 - beta) * prevT, 6)
+          val sNew = DriverPath.round(
+            gamma * (x - prevL - prevT) + (1.0 - gamma) * sOld, 6)
           level = l; trend = b
           ring = ring.tail :+ sNew
         }
@@ -571,8 +577,10 @@ object Resample {
           val out = sorted.map { e =>
             st = if (st == null) HoltState(e.x, 0.0)
             else {
-              val l = r6(alpha * e.x + (1.0 - alpha) * (st.level + st.trend))
-              HoltState(l, r6(beta * (l - st.level) + (1.0 - beta) * st.trend))
+              val l = DriverPath.round(
+                alpha * e.x + (1.0 - alpha) * (st.level + st.trend), 6)
+              HoltState(l, DriverPath.round(
+                beta * (l - st.level) + (1.0 - beta) * st.trend, 6))
             }
             HoltOut(key, e.event_id, st.level, st.trend)
           }
@@ -617,14 +625,18 @@ object Resample {
               case HwState(warm, None, _, _) =>
                 val w2 = warm :+ e.x
                 st = if (w2.size == period) {
-                  val l = r6(w2.sum / period)
-                  HwState(Nil, Some(l), 0.0, w2.map(v => r6(v - l)))
+                  val l = DriverPath.round(w2.sum / period, 6)
+                  HwState(Nil, Some(l), 0.0,
+                    w2.map(v => DriverPath.round(v - l, 6)))
                 } else HwState(w2, None, 0.0, Nil)
               case HwState(_, Some(prevL), prevT, ring) =>
                 val sOld = ring.head
-                val l = r6(alpha * (e.x - sOld) + (1.0 - alpha) * (prevL + prevT))
-                val b = r6(beta * (l - prevL) + (1.0 - beta) * prevT)
-                val sNew = r6(gamma * (e.x - prevL - prevT) + (1.0 - gamma) * sOld)
+                val l = DriverPath.round(
+                  alpha * (e.x - sOld) + (1.0 - alpha) * (prevL + prevT), 6)
+                val b = DriverPath.round(
+                  beta * (l - prevL) + (1.0 - beta) * prevT, 6)
+                val sNew = DriverPath.round(
+                  gamma * (e.x - prevL - prevT) + (1.0 - gamma) * sOld, 6)
                 st = HwState(Nil, Some(l), b, ring.tail :+ sNew)
             }
             HwOut(key, e.event_id, st.level,
@@ -1392,11 +1404,11 @@ object Resample {
       var r = r0
       it.map { row =>
         val s = row.getDouble(si)
-        val e = r6(1.0 / (1.0 + math.exp(
-          (2.0 * r0 - 2.0 * r) * ln10 / 400.0)))
-        r = r6(r + k * (s - e))
+        val e = DriverPath.round(1.0 / (1.0 + math.exp(
+          (2.0 * r0 - 2.0 * r) * ln10 / 400.0)), 6)
+        r = DriverPath.round(r + k * (s - e), 6)
         org.apache.spark.sql.Row.fromSeq(
-          row.toSeq :+ e :+ r :+ r6(2.0 * r0 - r))
+          row.toSeq :+ e :+ r :+ DriverPath.round(2.0 * r0 - r, 6))
       }
     }(org.apache.spark.sql.Encoders.row(schema))
   }
@@ -1456,19 +1468,19 @@ object Resample {
           curKey = k; haveKey = true; f = null; em = 0.0; mad = 0.0
         }
         val day = r.getLong(di)
-        val v = r6(r.getLong(xi) / 1e6)
+        val v = DriverPath.round(r.getLong(xi) / 1e6, 6)
         if (f == null) {
           f = v
           org.apache.spark.sql.Row(k, day, v, null, null, null, false)
         } else {
           val fPrev: Double = f
-          val e = r6(v - fPrev)
-          em = r6(beta * e + (1.0 - beta) * em)
-          mad = r6(beta * math.abs(e) + (1.0 - beta) * mad)
+          val e = DriverPath.round(v - fPrev, 6)
+          em = DriverPath.round(beta * e + (1.0 - beta) * em, 6)
+          mad = DriverPath.round(beta * math.abs(e) + (1.0 - beta) * mad, 6)
           val trk: java.lang.Double =
-            if (mad > 0.0) r6(em / mad) else null
+            if (mad > 0.0) DriverPath.round(em / mad, 6) else null
           val alert = trk != null && math.abs(trk) > 0.51
-          f = r6(alpha * v + (1.0 - alpha) * fPrev)
+          f = DriverPath.round(alpha * v + (1.0 - alpha) * fPrev, 6)
           org.apache.spark.sql.Row(k, day, v, fPrev, e, trk, alert)
         }
       }
@@ -3049,13 +3061,14 @@ object Resample {
         n += 1
         if (p == null) {
           p = if (x > 0.0) 1.0 else 0.0
-          if (x > 0.0) { z = r6(x); nd += 1 }
+          if (x > 0.0) { z = DriverPath.round(x, 6); nd += 1 }
         } else if (x > 0.0) {
           nd += 1
-          p = r6(p + alphaP * (1.0 - p))
-          z = if (z == null) r6(x) else r6(alphaZ * x + (1.0 - alphaZ) * z)
+          p = DriverPath.round(p + alphaP * (1.0 - p), 6)
+          z = if (z == null) DriverPath.round(x, 6)
+            else DriverPath.round(alphaZ * x + (1.0 - alphaZ) * z, 6)
         } else {
-          p = r6((1.0 - alphaP) * p)
+          p = DriverPath.round((1.0 - alphaP) * p, 6)
         }
       }
       flush()
@@ -3134,10 +3147,12 @@ object Resample {
         n += 1
         if (x > 0.0) {
           nd += 1
-          if (z == null) { z = r6(x); p = r6(q.toDouble) }
+          if (z == null) {
+            z = DriverPath.round(x, 6); p = DriverPath.round(q.toDouble, 6)
+          }
           else {
-            z = r6(alpha * x + (1.0 - alpha) * z)
-            p = r6(alpha * q.toDouble + (1.0 - alpha) * p)
+            z = DriverPath.round(alpha * x + (1.0 - alpha) * z, 6)
+            p = DriverPath.round(alpha * q.toDouble + (1.0 - alpha) * p, 6)
           }
           q = 1L
         } else q += 1L
@@ -3220,17 +3235,19 @@ object Resample {
         if (level == null) {
           warm = warm :+ x
           if (warm.size == period) {
-            val l = r6(warm.sum / period)
+            val l = DriverPath.round(warm.sum / period, 6)
             level = l; trend = 0.0
-            ring = warm.map(v => r6(v / l)).toVector
+            ring = warm.map(v => DriverPath.round(v / l, 6)).toVector
           }
         } else {
           val sOld = ring.head
           val prevL: Double = level
           val prevT = trend
-          val l = r6(alpha * (x / sOld) + (1.0 - alpha) * (prevL + prevT))
-          val b = r6(beta * (l - prevL) + (1.0 - beta) * prevT)
-          val sNew = r6(gamma * (x / (prevL + prevT)) + (1.0 - gamma) * sOld)
+          val l = DriverPath.round(
+            alpha * (x / sOld) + (1.0 - alpha) * (prevL + prevT), 6)
+          val b = DriverPath.round(beta * (l - prevL) + (1.0 - beta) * prevT, 6)
+          val sNew = DriverPath.round(
+            gamma * (x / (prevL + prevT)) + (1.0 - gamma) * sOld, 6)
           level = l; trend = b
           ring = ring.tail :+ sNew
         }
@@ -3368,16 +3385,19 @@ object Resample {
         var gain: java.lang.Double = null
         if (!row.isNullAt(vi)) {
           val x = row.getDouble(vi)
-          if (level == null) { level = r6(x); p = r6(r) }
+          if (level == null) {
+            level = DriverPath.round(x, 6); p = DriverPath.round(r, 6)
+          }
           else {
-            val pp = r6(p + q)
-            val kk = r6(pp / (pp + r))
-            level = r6(level + kk * (x - level))
-            p = r6((1.0 - kk) * pp)
+            val pp = DriverPath.round(p + q, 6)
+            val kk = DriverPath.round(pp / (pp + r), 6)
+            level = DriverPath.round(level + kk * (x - level), 6)
+            p = DriverPath.round((1.0 - kk) * pp, 6)
             gain = kk
           }
         } else if (level != null) {
-          p = r6(p + q) // prediction-only step: uncertainty grows
+          // prediction-only step: uncertainty grows
+          p = DriverPath.round(p + q, 6)
         }
         org.apache.spark.sql.Row.fromSeq(
           row.toSeq.dropRight(1) ++ Seq(level: Any, gain: Any))

@@ -54,8 +54,8 @@ object Spectral {
     require(dimProbe.nonEmpty,
       "principalComponent: empty corpus (no non-null vectors)")
     val dim = dimProbe.head.getInt(0)
-    def roundDec(x: Double): Double = DriverPath.round(x, roundDp)
-    var comp: Seq[Double] = Seq.fill(dim)(roundDec(1.0 / math.sqrt(dim.toDouble)))
+    var comp: Seq[Double] =
+      Seq.fill(dim)(DriverPath.round(1.0 / math.sqrt(dim.toDouble), roundDp))
     for (_ <- 1 to iters) {
       val dot = round(aggregate(
         zip_with(col(vc), typedLit(comp), (x, c) => x * c),
@@ -74,7 +74,7 @@ object Spectral {
       require(norm > 0.0,
         "principalComponent: zero matvec (all-zero vectors or a corpus " +
           "orthogonal to the start direction)")
-      comp = yv.map(x => roundDec(x / norm))
+      comp = yv.map(x => DriverPath.round(x / norm, roundDp))
     }
     comp
   }

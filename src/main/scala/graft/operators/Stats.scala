@@ -1034,7 +1034,6 @@ object Stats {
   private def huberDriverDf(df: DataFrame, pts: DataFrame,
       collected: Array[Row], groupCol: String, k: Double,
       iters: Int): DataFrame = {
-    val rh = DriverPath.round _
     // the final equi-join drops null groups
     val (ids, gOf) = DriverPath.intern(collected, keepNulls = false)
     val values = Array.fill(ids.size)(
@@ -1060,16 +1059,17 @@ object Stats {
         while (i < n) {
           val x = xs(i)
           val ad = math.abs(x.toDouble - m)
-          val w = rh(if (ad <= ks) 1.0 else ks / ad, 12)
+          val w = DriverPath.round(if (ad <= ks) 1.0 else ks / ad, 12)
           sw.addCast(w)
           swx.add(w * x)
           i += 1
         }
         val swD = sw.toDouble
-        if (swD > 0.0) m = rh(swx.toDouble / swD, 6)
+        if (swD > 0.0) m = DriverPath.round(swx.toDouble / swD, 6)
       }
       org.apache.spark.sql.Row(ids.keys(g), n.toLong,
-        rh(med / 1e6, 6), rh(mad / 1e6, 6), rh(m / 1e6, 6))
+        DriverPath.round(med / 1e6, 6), DriverPath.round(mad / 1e6, 6),
+        DriverPath.round(m / 1e6, 6))
     }
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
@@ -4656,7 +4656,6 @@ object Stats {
   private def coxDriverDf(df: DataFrame, subj: DataFrame,
       collected: Array[Row], groupCol: String, iters: Int,
       tDesc: (Any, Any) => Boolean): DataFrame = {
-    val rh = DriverPath.round _
     // group → subjects, then sort each group by t DESC once
     val (ids, gOf) = DriverPath.intern(collected, keepNulls = false)
     val subjects = Array.fill(ids.size)(
@@ -4718,7 +4717,7 @@ object Stats {
       var gi = 0
       while (gi < nG) {
         val iD = outI(gi)
-        if (iD > 0.0) bArr(gi) = rh(bArr(gi) + outU(gi) / iD, 12)
+        if (iD > 0.0) bArr(gi) = DriverPath.round(bArr(gi) + outU(gi) / iD, 12)
         gi += 1
       }
     }
@@ -4733,8 +4732,8 @@ object Stats {
     val out = (0 until nG).map { gi =>
       val iD = outI(gi)
       org.apache.spark.sql.Row(gList(gi)._1, outN(gi), outEv(gi),
-        rh(bArr(gi), 6), rh(math.exp(bArr(gi)), 6),
-        if (iD > 0.0) rh(1.0 / math.sqrt(iD), 6) else null)
+        DriverPath.round(bArr(gi), 6), DriverPath.round(math.exp(bArr(gi)), 6),
+        if (iD > 0.0) DriverPath.round(1.0 / math.sqrt(iD), 6) else null)
     }
     DriverPath.frame(df.sparkSession, out, schema)
   }
@@ -8025,7 +8024,6 @@ object Stats {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     require(lambda > 0.0, s"lambda=$lambda must be > 0")
     import events.sparkSession.implicits._
-    def r6(v: Double): Double = DriverPath.round(v, 6)
     events.groupByKey(_.key)
       .flatMapGroupsWithState[PhState, PhOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -8040,9 +8038,10 @@ object Stats {
               val vq = DriverPath.units(e.v * 1e6, 0)
               val t = st.t + 1
               val s = st.s.add(new java.math.BigDecimal(vq))
-              val mu = r6(s.doubleValue() / t / 1e6)
+              val mu = DriverPath.round(s.doubleValue() / t / 1e6, 6)
               val dev = new java.math.BigDecimal(java.math.BigInteger.valueOf(
-                DriverPath.units(r6(vq / 1e6 - mu - delta), 6)), 6)
+                DriverPath.units(
+                  DriverPath.round(vq / 1e6 - mu - delta, 6), 6)), 6)
               val m = st.m.add(dev)
               val mMin =
                 if (st.mMin == null || m.compareTo(st.mMin) < 0) m
@@ -8056,7 +8055,7 @@ object Stats {
             }
             gs.update(st)
             Iterator.single(PhOut(key, st.t,
-              r6(st.phMax.doubleValue()), st.alarm))
+              DriverPath.round(st.phMax.doubleValue(), 6), st.alarm))
           }
       }
   }

@@ -293,7 +293,8 @@ class DriverPathSpec extends SparkTestBase {
         Double.NegativeInfinity)) {
       assert(Seq(x).toDF("x").select(dec12).collect().head.isNullAt(0))
       val acc = new DriverPath.Units(12); acc.add(x); acc.addCast(x)
-      assert(acc.total == 0, s"$x")
+      acc.add(2.5)
+      assert(acc.total == BigInt(25) * BigInt(10).pow(11), s"$x")
     }
     for (x <- Seq(1e300, -1e26)) {
       intercept[ArithmeticException](
@@ -301,6 +302,39 @@ class DriverPathSpec extends SparkTestBase {
       intercept[ArithmeticException](new DriverPath.Units(12).add(x))
       intercept[ArithmeticException](new DriverPath.Units(12).addCast(x))
     }
+  }
+
+  test("a decimal sum of only NaN or Infinity terms, NULL in Spark, " +
+      "throws in the replicas' sums") {
+    import spark.implicits._
+    val ts = Seq(("nan", Double.NaN), ("nan", Double.PositiveInfinity),
+      ("mixed", Double.NaN), ("mixed", 0.25), ("mixed", -1e-13),
+      ("mixed", Double.NegativeInfinity), ("mixed", 1.0000005))
+    val got = ts.toDF("g", "t").groupBy("g")
+      .agg(sum(round(col("t"), 12).cast("decimal(38,12)")).as("s"))
+      .as[(String, java.math.BigDecimal)].collect().toMap
+    assert(got("nan") == null)
+    // one accumulator, and the fold with the rows split across threads
+    def units(g: String): DriverPath.Units = {
+      val acc = new DriverPath.Units(12)
+      ts.filter(_._1 == g).foreach(t => acc.add(t._2))
+      acc
+    }
+    assert(units("mixed").total ==
+      BigInt(got("mixed").setScale(12).unscaledValue()))
+    intercept[ArithmeticException](units("nan").total)
+    // group 1 is the first and the last row: with the rows split
+    // across threads, a NULL term in one thread's share and a value
+    // in another's still sum to that value
+    val n = 200000
+    val group = Array.tabulate(n)(i => if (i == 0 || i == n - 1) 1 else 0)
+    def fold(t: Int => Double) = DriverPath.fold(n, 2, group, 1) {
+      (i, out) => out(0) = t(i) }
+    val s = fold(i => if (i == 0) Double.NaN else 1.0)
+    assert(s.dec(0)(0) == BigInt(n - 2) * BigInt(10).pow(12))
+    assert(s.dec(0)(1) == BigInt(10).pow(12))
+    intercept[ArithmeticException](fold(i =>
+      if (group(i) == 1) Double.NaN else 1.0))
   }
 
   test("units sums products exactly through the long spill") {
