@@ -412,7 +412,6 @@ object Clustering {
   private[operators] def trainCentroidsDriver(ids: Array[Any],
       vecs: Array[Array[Double]], k: Int, iters: Int, roundDp: Int)
       : Seq[Seq[Double]] = {
-    val r = DriverPath.round _
     val n = vecs.length
     val dim = vecs(0).length
     require(n >= k, s"kmeansPortable: needs >= $k rows, got ${math.min(n, k)}")
@@ -422,7 +421,7 @@ object Clustering {
     def sqDist(x: Array[Double], c: Seq[Double]): Double = {
       var s = 0.0; var d = 0
       while (d < dim) { val t = x(d) - c(d); s += t * t; d += 1 }
-      r(s, roundDp)
+      DriverPath.round(s, roundDp)
     }
     def assign(v: Int): Int = {
       var best = 0; var bestD = sqDist(vecs(v), centroids(0)); var c = 1
@@ -446,7 +445,8 @@ object Clustering {
       }
       centroids = (0 until k).map { c =>
         if (cnts(c) > 0L)
-          (0 until dim).map(d => r(sums(c)(d) / cnts(c), roundDp))
+          (0 until dim).map(d =>
+            DriverPath.round(sums(c)(d) / cnts(c), roundDp))
         else centroids(c)
       }
     }
@@ -1053,7 +1053,6 @@ object Clustering {
   private def spectralDriverDf(spark: org.apache.spark.sql.SparkSession,
       pairs: Array[org.apache.spark.sql.Row], k: Int, powerIters: Int,
       lloydIters: Int): DataFrame = {
-    val r = DriverPath.round _
     // dense ids + symmetric neighbor arrays (canonical edges are
     // deduped and loop-free)
     val es = DriverPath.edges(pairs)
@@ -1062,10 +1061,11 @@ object Clustering {
     val deg = adj.map(_.length.toLong)
     val tot = deg.sum.toDouble
     val v1 = Array.tabulate(n)(v =>
-      r(math.sqrt(deg(v).toDouble) / math.sqrt(tot), 12))
+      DriverPath.round(math.sqrt(deg(v).toDouble) / math.sqrt(tot), 12))
     // w_uv = 1/sqrt(d_u·d_w) frozen at 12 dp, aligned with adj
     val wts = Array.tabulate(n)(v => adj(v).map(w =>
-      r(1.0 / math.sqrt(deg(v).toDouble * deg(w).toDouble), 12)))
+      DriverPath.round(
+        1.0 / math.sqrt(deg(v).toDouble * deg(w).toDouble), 12)))
     // Sampling.portableUnit: first 15 md5 hex chars as long / 2^60
     val md = java.security.MessageDigest.getInstance("MD5")
     def unit(s: String): Double = {
@@ -1075,29 +1075,30 @@ object Clustering {
     }
     val units = Array.tabulate(n)(v => unit(names(v)))
     def powerVec(proj: Array[Array[Double]]): Array[Double] = {
-      var x = Array.tabulate(n)(v => r(units(v) - 0.5, 6))
+      var x = Array.tabulate(n)(v => DriverPath.round(units(v) - 0.5, 6))
       for (_ <- 1 to powerIters) {
         val y = Array.tabulate(n) { v =>
           var s = 0.0; val nb = adj(v); val ws = wts(v); var j = 0
           while (j < nb.length) { s += ws(j) * x(nb(j)); j += 1 }
-          r(s, 6)
+          DriverPath.round(s, 6)
         }
         val cs = proj.map { b =>
           var s = 0.0; var v = 0
           while (v < n) { s += b(v) * y(v); v += 1 }
-          r(s, 6)
+          DriverPath.round(s, 6)
         }
         // the in-plan residual is a left-fold subtraction chain:
         // ((y − c0·b0) − c1·b1) − … — replicate the order
         val dd = Array.tabulate(n) { v =>
           var acc = y(v); var p = 0
           while (p < proj.length) { acc -= cs(p) * proj(p)(v); p += 1 }
-          r(acc, 6)
+          DriverPath.round(acc, 6)
         }
         var s2 = 0.0
         dd.foreach(d => s2 += d * d)
         val nrm = math.sqrt(s2)
-        x = dd.map(d => if (nrm > 0.0) r(d / nrm, 6) else 0.0)
+        x = dd.map(d =>
+          if (nrm > 0.0) DriverPath.round(d / nrm, 6) else 0.0)
       }
       x
     }
@@ -1117,7 +1118,7 @@ object Clustering {
     def sqDist(x: Array[Double], c: Seq[Double], dp: Int): Double = {
       var s = 0.0; var d = 0
       while (d < dim) { val t = x(d) - c(d); s += t * t; d += 1 }
-      r(s, dp)
+      DriverPath.round(s, dp)
     }
     def assign(cents: IndexedSeq[Seq[Double]], v: Int): (Int, Double) = {
       var best = 0; var bestD = sqDist(evs(v), cents(0), 6); var c = 1
@@ -1152,7 +1153,8 @@ object Clustering {
       }
       centroids = (0 until k).map { c =>
         if (cnts(c) > 0L) // empty cluster: centroid stands
-          (0 until dim).map(d => r(sums(c)(d) / cnts(c), 6))
+          (0 until dim).map(d =>
+            DriverPath.round(sums(c)(d) / cnts(c), 6))
         else centroids(c)
       }
     }

@@ -372,7 +372,6 @@ object Scoring {
   private def alsFactorsDriver(spark: org.apache.spark.sql.SparkSession,
       ratings: Array[org.apache.spark.sql.Row], iters: Int, lambda: Double)
       : (DataFrame, DataFrame) = {
-    val r = DriverPath.round _
     val n = ratings.length
     val users = new DriverPath.Ids[Long]; val items = new DriverPath.Ids[Long]
     val ru = ratings.map(row => users(row.getLong(0)))
@@ -382,9 +381,9 @@ object Scoring {
     val nu = uVals.length; val ni = iVals.length
     // deterministic hash init, Spark's long % / double-cast spelling
     var itemF1 = Array.tabulate(ni)(i =>
-      r(0.5 + (iVals(i) % 7).toDouble * 0.1, 12))
+      DriverPath.round(0.5 + (iVals(i) % 7).toDouble * 0.1, 12))
     var itemF2 = Array.tabulate(ni)(i =>
-      r(0.3 + (iVals(i) % 11).toDouble * 0.04, 12))
+      DriverPath.round(0.3 + (iVals(i) % 11).toDouble * 0.04, 12))
     var userF1 = new Array[Double](nu); var userF2 = new Array[Double](nu)
     // one half-pass: solve for `outN` keys from the other side's
     // factors; exact decimal sums, the identical ridge solve trees
@@ -406,8 +405,10 @@ object Scoring {
         val a12 = s.d(1, o)
         val b1 = s.d(3, o); val b2 = s.d(4, o)
         val det = a11 * a22 - a12 * a12
-        o1(o) = if (det > 0.0) r((b1 * a22 - b2 * a12) / det, 12) else 0.0
-        o2(o) = if (det > 0.0) r((a11 * b2 - a12 * b1) / det, 12) else 0.0
+        o1(o) = if (det > 0.0)
+          DriverPath.round((b1 * a22 - b2 * a12) / det, 12) else 0.0
+        o2(o) = if (det > 0.0)
+          DriverPath.round((a11 * b2 - a12 * b1) / det, 12) else 0.0
         o += 1
       }
       (o1, o2)

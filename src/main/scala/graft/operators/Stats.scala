@@ -26,6 +26,12 @@ object Stats {
   private[operators] def fdiv(a: Column, b: Column): Column =
     (a - pmod(a, b)) / b
 
+  /** Column `c` as a double (the reader of every decimal sum). */
+  private def d(c: String): Column = col(c).cast("double")
+
+  /** The type of every 12-dp frozen, order-free term sum. */
+  private val dec12 = "decimal(38,12)"
+
   /** Per-group two-sample Kolmogorov–Smirnov statistic of `valueCol`
     * against the complement (all other groups pooled) — the
     * distribution-shift detector for "did this source/slice drift away
@@ -1036,18 +1042,24 @@ object Stats {
       iters: Int): DataFrame = {
     // the final equi-join drops null groups
     val (ids, gOf) = DriverPath.intern(collected, keepNulls = false)
-    val values = Array.fill(ids.size)(
-      new scala.collection.mutable.ArrayBuffer[Long]())
+    // group g's values fill xs(start(g) until start(g + 1)), then sort
+    val start = new Array[Int](ids.size + 1)
+    gOf.foreach(g => if (g >= 0) start(g + 1) += 1)
+    for (g <- 1 to ids.size) start(g) += start(g - 1)
+    val xs = new Array[Long](start(ids.size))
+    val next = start.clone()
     collected.indices.foreach { i =>
-      if (gOf(i) >= 0) values(gOf(i)) += collected(i).getLong(1)
+      val g = gOf(i)
+      if (g >= 0) { xs(next(g)) = collected(i).getLong(1); next(g) += 1 }
     }
     val out = ids.keys.indices.map { g =>
-      val xs = values(g).toArray
-      java.util.Arrays.sort(xs)
-      val n = xs.length
+      val (from, to) = (start(g), start(g + 1))
+      java.util.Arrays.sort(xs, from, to)
+      val n = to - from
       val medRank = (n + 1) / 2 // floor((n+1)/2), 1-based
-      val med = xs(medRank - 1)
-      val ad0 = xs.map(x => math.abs(x - med))
+      val med = xs(from + medRank - 1)
+      val ad0 = java.util.Arrays.copyOfRange(xs, from, to)
+      ad0.indices.foreach(i => ad0(i) = math.abs(ad0(i) - med))
       java.util.Arrays.sort(ad0)
       val mad = ad0(medRank - 1)
       var m = med.toDouble
@@ -1055,8 +1067,8 @@ object Stats {
       for (_ <- 1 to iters) {
         val sw = new DriverPath.Units(12) // the 12-dp w's
         val swx = new DriverPath.Units(6) // round(w*x, 6)
-        var i = 0
-        while (i < n) {
+        var i = from
+        while (i < to) {
           val x = xs(i)
           val ad = math.abs(x.toDouble - m)
           val w = DriverPath.round(if (ad <= ks) 1.0 else ks / ad, 12)
@@ -2251,7 +2263,6 @@ object Stats {
           .as("_s3"),
         sum((col("_x").cast(dec) * col("_x") * col("_x") * col("_x"))
           .cast(dec)).as("_s4"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("n").cast("double")
     val mu = d("_s1") / nd
     val m2 = d("_s2") / nd - mu * mu
@@ -2301,7 +2312,6 @@ object Stats {
           .as("_s3"),
         sum((col("_x").cast(dec) * col("_x") * col("_x") * col("_x"))
           .cast(dec)).as("_s4"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("n").cast("double")
     val mu = d("_s1") / nd
     val m2 = d("_s2") / nd - mu * mu
@@ -2752,7 +2762,6 @@ object Stats {
         sum((col("_s").cast(dec) * col("_n")).cast(dec)).as("_t2"),
         sum((col("_s").cast(dec) * col("_s") * col("_n")).cast(dec))
           .as("_t3"))
-    def d(c: String): Column = col(c).cast("double")
     val pbar = d("n_pos") / d("n")
     val num = d("_t1") - d("_t2") * pbar
     val varT = d("_t3") - d("_t2") * d("_t2") / d("n")
@@ -2886,7 +2895,6 @@ object Stats {
         sum((col("_x").cast(dec) * col("_x")).cast(dec)).as("_sxx"),
         sum((col("_y").cast(dec) * col("_y")).cast(dec)).as("_syy"),
         sum((col("_x").cast(dec) * col("_y")).cast(dec)).as("_sxy"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("n").cast("double")
     val sxx = nd * d("_sxx") - d("_sx") * d("_sx")
     val sxy = nd * d("_sxy") - d("_sx") * d("_sy")
@@ -2959,7 +2967,6 @@ object Stats {
         sum((col("_x").cast(dec) * col("_x")).cast(dec)).as("_sxx"),
         sum((col("_y").cast(dec) * col("_y")).cast(dec)).as("_syy"),
         sum((col("_x").cast(dec) * col("_y")).cast(dec)).as("_sxy"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("n").cast("double")
     val num = nd * d("_sxy") - d("_sx") * d("_sy")
     val denX = nd * d("_sxx") - d("_sx") * d("_sx")
@@ -3021,7 +3028,6 @@ object Stats {
         m("_x1", "_x1").as("_s11"), m("_x2", "_x2").as("_s22"),
         m("_x1", "_x2").as("_s12"), m("_x1", "_y").as("_s1y"),
         m("_x2", "_y").as("_s2y"), m("_y", "_y").as("_syy"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("n").cast("double")
     // n-scaled centered moments: Sij = n·Σxixj − Σxi·Σxj = n²·Cov
     val cS11 = nd * d("_s11") - d("_s1") * d("_s1")
@@ -3151,7 +3157,6 @@ object Stats {
       .agg(count(lit(1)).as("n"),
         sum(col("_x").cast(dec)).as("_s"),
         sum((col("_x").cast(dec) * col("_x")).cast(dec)).as("_q"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("n").cast("double")
     val varS = (nd * d("_q") - d("_s") * d("_s")) / (nd * (nd - 1.0))
     val sd = sqrt(varS) / lit(1e6)
@@ -3222,7 +3227,6 @@ object Stats {
         m3("_w", "_x", "_x").as("_swxx"),
         m3("_w", "_y", "_y").as("_swyy"),
         m3("_w", "_x", "_y").as("_swxy"))
-    def d(c: String): Column = col(c).cast("double")
     val num = d("_sw") * d("_swxy") - d("_swx") * d("_swy")
     val denX = d("_sw") * d("_swxx") - d("_swx") * d("_swx")
     val denY = d("_sw") * d("_swyy") - d("_swy") * d("_swy")
@@ -3278,7 +3282,6 @@ object Stats {
         m("_x1", "_x1").as("_s11"), m("_x2", "_x2").as("_s22"),
         m("_x1", "_x2").as("_s12"), m("_x1", "_y").as("_s1y"),
         m("_x2", "_y").as("_s2y"), m("_y", "_y").as("_syy"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("n").cast("double")
     val lam = lit(1.0 + lambda)
     val cS11 = (nd * d("_s11") - d("_s1") * d("_s1")) * lam
@@ -3494,7 +3497,6 @@ object Stats {
         sum(round(col("_x") * col("_x"), 12).cast(dec)).as("_sxx"),
         sum(round(col("_x") * col("_y"), 12).cast(dec)).as("_sxy"),
         sum(round(col("_y") * col("_y"), 12).cast(dec)).as("_syy"))
-    def d(c: String): Column = col(c).cast("double")
     val nD = col("n_units").cast("double")
     val okR = col("n_units") >= 2 && d("_sy") =!= 0.0
     val r = round(d("_sx") / d("_sy"), 12)
@@ -3659,7 +3661,6 @@ object Stats {
         m("_x1", "_x2").as("_s12"),
         m("_x1", "_y").as("_s1y"), m("_x2", "_y").as("_s2y"),
         m("_x1", "_t").as("_s1t"), m("_x2", "_t").as("_s2t"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("n").cast("double")
     val lam = lit(1.0 + lambda)
     val cS11 = (nd * d("_s11") - d("_s1") * d("_s1")) * lam
@@ -3767,7 +3768,6 @@ object Stats {
         m("_x1", "_x3").as("_s13"), m("_x2", "_x3").as("_s23"),
         m("_x1", "_y").as("_s1y"), m("_x2", "_y").as("_s2y"),
         m("_x3", "_y").as("_s3y"), m("_y", "_y").as("_syy"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("n").cast("double")
     val s11 = nd * d("_s11") - d("_s1") * d("_s1")
     val s22 = nd * d("_s22") - d("_s2") * d("_s2")
@@ -4165,7 +4165,6 @@ object Stats {
     */
   def welchAnova(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
     val dec0 = "decimal(38,0)"
-    val dec12 = "decimal(38,12)"
     val byG = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol) * 1e6).cast("long").as("_x"))
@@ -4457,7 +4456,6 @@ object Stats {
     */
   def markovEntropyRate(df: DataFrame, groupCol: String, seqCol: String,
       tsCol: String, tieCol: String, stateCol: String): DataFrame = {
-    val dec12 = "decimal(38,12)"
     val w = Window.partitionBy("_g", "_s").orderBy("_o", "_tie")
     val trans = df.filter(col(stateCol).isNotNull)
       .select(col(groupCol).as("_g"), col(seqCol).as("_s"),
@@ -4615,7 +4613,6 @@ object Stats {
   def restrictedMeanSurvival(df: DataFrame, groupCols: Seq[String],
       durationCol: String, observed: Column, tau: Long): DataFrame = {
     require(tau >= 1, s"restrictedMeanSurvival: tau must be >= 1, got $tau")
-    val dec12 = "decimal(38,12)"
     val gcols = groupCols.map(col)
     val km = kaplanMeier(df, groupCols, durationCol, observed)
       .filter(col("duration") <= tau)
@@ -4766,7 +4763,6 @@ object Stats {
   def coxPH(df: DataFrame, groupCol: String, durationCol: String,
       observed: Column, covariateCol: String, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 8, s"coxPH: iters must be in [1, 8]")
-    val dec12 = "decimal(38,12)"
     val subj = df.filter(col(covariateCol).isNotNull
         && col(durationCol).isNotNull)
       .select(col(groupCol).as("_g"), col(durationCol).as("_t"),
@@ -4827,37 +4823,27 @@ object Stats {
         .withColumn("_S0", sum("_s0c").over(wRev))
         .withColumn("_S1", sum("_s1c").over(wRev))
         .withColumn("_S2", sum("_s2c").over(wRev))
-        .withColumn("_r1", col("_S1").cast("double") / col("_S0").cast("double"))
+        .withColumn("_r1", d("_S1") / d("_S0"))
         .groupBy("_g")
         .agg(max("_b").as("_b"),
           sum("_nc").cast("bigint").as("n"),
           sum("_d").cast("bigint").as("n_events"),
           sum(when(col("_d") > 0,
-            round(col("_sx").cast("double") - col("_d") * col("_r1"), 12))
+            round(d("_sx") - col("_d") * col("_r1"), 12))
             .otherwise(lit(0.0)).cast(dec12)).as("_U"),
-          sum(when(col("_d") > 0,
-            round(col("_d") * (col("_S2").cast("double")
-              / col("_S0").cast("double") - col("_r1") * col("_r1")), 12))
+          sum(when(col("_d") > 0, round(col("_d")
+              * (d("_S2") / d("_S0") - col("_r1") * col("_r1")), 12))
             .otherwise(lit(0.0)).cast(dec12)).as("_I"))
     }
-    var beta = subj.select(col("_g")).distinct()
-      .withColumn("_b", lit(0.0))
-    for (_ <- 1 to iters) {
-      beta = pass(beta)
-        .select(col("_g"),
-          when(col("_I").cast("double") > 0.0,
-            round(col("_b") + col("_U").cast("double")
-              / col("_I").cast("double"), 12))
-            .otherwise(col("_b")).as("_b"))
-        .localCheckpoint() // k rows; truncate the iterative lineage
-    }
-    // one last pass at the final β for the observed information → se
-    pass(beta).select(col("_g").as(groupCol), col("n"), col("n_events"),
-      round(col("_b"), 6).cast("double").as("beta"),
-      round(exp(col("_b")), 6).cast("double").as("hazard_ratio"),
-      when(col("_I").cast("double") > 0.0,
-        round(lit(1.0) / sqrt(col("_I").cast("double")), 6))
-        .cast("double").as("se"))
+    val init = subj.select(col("_g")).distinct().withColumn("_b", lit(0.0))
+    // the last pass, at the final β, gives the observed information → se
+    newtonLoop(init, iters)(pass)(d("_I") > 0.0,
+      "_b" -> (col("_b") + d("_U") / d("_I")))
+      .select(col("_g").as(groupCol), col("n"), col("n_events"),
+        round(col("_b"), 6).cast("double").as("beta"),
+        round(exp(col("_b")), 6).cast("double").as("hazard_ratio"),
+        when(d("_I") > 0.0, round(lit(1.0) / sqrt(d("_I")), 6))
+          .cast("double").as("se"))
   }
 
   /** Logistic regression, one covariate with intercept, FIXED Newton
@@ -4889,7 +4875,6 @@ object Stats {
   def logisticFit(df: DataFrame, groupCol: String, xCol: String,
       yCond: Column, iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 8, s"logisticFit: iters must be in [1, 8]")
-    val dec12 = "decimal(38,12)"
     val rows = df.filter(col(xCol).isNotNull)
       .select(col(groupCol).as("_g"), round(col(xCol), 6).as("_x"),
         when(yCond, 1.0).otherwise(0.0).as("_y"))
@@ -4912,49 +4897,20 @@ object Stats {
         return logisticDriverDf(df, rows, collected, groupCol, iters)
       case None =>
     }
-    def pass(params: DataFrame) = {
-      val p = lit(1.0) / (lit(1.0)
-        + exp(-(col("_a") + col("_b") * col("_x"))))
-      val w = p * (lit(1.0) - p)
-      rows.join(broadcast(params), Seq("_g"))
-        .withColumn("_g0", round(col("_y") - p, 12).cast(dec12))
-        .withColumn("_g1", round(col("_x") * (col("_y") - p), 12).cast(dec12))
-        .withColumn("_h00", round(w, 12).cast(dec12))
-        .withColumn("_h01", round(col("_x") * w, 12).cast(dec12))
-        .withColumn("_h11", round(col("_x") * col("_x") * w, 12).cast(dec12))
-        .groupBy("_g")
-        .agg(max("_a").as("_a"), max("_b").as("_b"), // constant per group
-          count(lit(1)).as("n"),
-          sum(col("_y")).cast("bigint").as("n_pos"),
-          sum("_g0").as("_G0"), sum("_g1").as("_G1"),
-          sum("_h00").as("_H00"), sum("_h01").as("_H01"),
-          sum("_h11").as("_H11"))
-    }
-    def d(c: String): Column = col(c).cast("double")
-    def det: Column = d("_H00") * d("_H11") - d("_H01") * d("_H01")
-    var params = rows.select(col("_g")).distinct()
+    val p = lit(1.0) / (lit(1.0)
+      + exp(-(col("_a") + col("_b") * col("_x"))))
+    val init = rows.select(col("_g")).distinct()
       .withColumn("_a", lit(0.0)).withColumn("_b", lit(0.0))
-    for (_ <- 1 to iters) {
-      params = pass(params)
-        .select(col("_g"),
-          when(det > 0.0,
-            round(col("_a") + (d("_G0") * d("_H11") - d("_G1") * d("_H01"))
-              / det, 12)).otherwise(col("_a")).as("_a"),
-          when(det > 0.0,
-            round(col("_b") + (d("_G1") * d("_H00") - d("_G0") * d("_H01"))
-              / det, 12)).otherwise(col("_b")).as("_b"))
-        .localCheckpoint() // k rows; truncate the iterative lineage
-    }
-    // one last pass at the final params for the observed information
-    pass(params).select(col("_g").as(groupCol),
-      col("n").cast("bigint").as("n"), col("n_pos"),
-      round(col("_a"), 6).cast("double").as("alpha"),
-      round(col("_b"), 6).cast("double").as("beta"),
-      when(det > 0.0, round(sqrt(d("_H00") / det), 6))
-        .cast("double").as("se_beta"),
-      when(det > 0.0, round(col("_b") / sqrt(d("_H00") / det), 6))
-        .cast("double").as("z_beta"),
-      round(exp(col("_b")), 6).cast("double").as("odds_ratio"))
+    // the last pass, at the final params, gives the observed information
+    newton2Loop(init, iters)(glmPass(rows,
+        newton2Terms(col("_y") - p, p * (lit(1.0) - p)),
+        sum(col("_y")).cast("bigint").as("n_pos")))
+      .select(col("_g").as(groupCol),
+        col("n").cast("bigint").as("n"), col("n_pos"),
+        round(col("_a"), 6).cast("double").as("alpha"),
+        round(col("_b"), 6).cast("double").as("beta"),
+        newton2Se, newton2Z,
+        round(exp(col("_b")), 6).cast("double").as("odds_ratio"))
   }
 
   /** Temperature scaling — the one-parameter calibration fix for an
@@ -4982,7 +4938,6 @@ object Stats {
       yCond: Column, passes: Int = 4): DataFrame = {
     require(passes >= 1 && passes <= 6,
       s"temperatureScaling: passes must be in [1, 6], got $passes")
-    val dec12 = "decimal(38,12)"
     val rows = df.filter(col(scoreCol).isNotNull)
       .select(round(col(scoreCol), 6).as("_s"),
         when(yCond, 1.0).otherwise(0.0).as("_y"))
@@ -5008,20 +4963,13 @@ object Stats {
           sum(col("_y")).cast("bigint").as("n_pos"),
           sum("_gt").as("_G"), sum("_ht").as("_H"))
     }
-    def d(c: String): Column = col(c).cast("double")
-    var params = rows.limit(1).select(lit(1.0).as("_w"))
-    for (_ <- 1 to passes) {
-      params = pass(params)
-        .select(when(d("_H") > 0.0,
-          round(greatest(lit(0.001), least(lit(64.0),
-            col("_w") - d("_G") / d("_H"))), 12))
-          .otherwise(col("_w")).as("_w"))
-        .localCheckpoint() // one row; truncate the iterative lineage
-    }
-    pass(params).select(col("n").cast("bigint").as("n"), col("n_pos"),
-      round(col("_w"), 6).cast("double").as("inv_temp"),
-      when(col("_w") > 0.0, round(lit(1.0) / col("_w"), 6))
-        .cast("double").as("temperature"))
+    newtonLoop(rows.limit(1).select(lit(1.0).as("_w")), passes)(pass)(
+        d("_H") > 0.0, "_w" -> greatest(lit(0.001),
+          least(lit(64.0), col("_w") - d("_G") / d("_H"))))
+      .select(col("n").cast("bigint").as("n"), col("n_pos"),
+        round(col("_w"), 6).cast("double").as("inv_temp"),
+        when(col("_w") > 0.0, round(lit(1.0) / col("_w"), 6))
+          .cast("double").as("temperature"))
   }
 
   /** Multiclass linear classifier by one-vs-rest logistic regression
@@ -5176,7 +5124,6 @@ object Stats {
       iters: Int = 2, clip: Double = 0.01): DataFrame = {
     require(clip > 0.0 && clip < 0.5, s"aipwAte: clip in (0, 0.5), got $clip")
     val dec = "decimal(38,0)"
-    val dec12 = "decimal(38,12)"
     val rows = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(round(col(xCol), 6).as("_x"),
         when(treat, 1L).otherwise(0L).as("_t"),
@@ -5194,7 +5141,6 @@ object Stats {
         sum(col("_xq").cast(dec)).as("_sx"),
         sum(col("_y").cast(dec)).as("_sy"),
         m("_xq", "_xq").as("_sxx"), m("_xq", "_y").as("_sxy"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("_n").cast("double")
     val mxx = nd * d("_sxx") - d("_sx") * d("_sx")
     val mxy = nd * d("_sxy") - d("_sx") * d("_sy")
@@ -5259,7 +5205,6 @@ object Stats {
   def logisticFit2(df: DataFrame, groupCol: String, x1Col: String,
       x2Col: String, yCond: Column, iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 8, s"logisticFit2: iters must be in [1, 8]")
-    val dec12 = "decimal(38,12)"
     val rows = df.filter(col(x1Col).isNotNull && col(x2Col).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(x1Col), 6).as("_x1"), round(col(x2Col), 6).as("_x2"),
@@ -5276,78 +5221,122 @@ object Stats {
         return logistic2DriverDf(df, rows, collected, groupCol, iters)
       case None =>
     }
-    def pass(params: DataFrame) = {
-      val p = lit(1.0) / (lit(1.0)
-        + exp(-(col("_a") + col("_b1") * col("_x1")
-          + col("_b2") * col("_x2"))))
-      val w = p * (lit(1.0) - p)
-      rows.join(broadcast(params), Seq("_g"))
-        .withColumn("_g0", round(col("_y") - p, 12).cast(dec12))
-        .withColumn("_g1", round(col("_x1") * (col("_y") - p), 12).cast(dec12))
-        .withColumn("_g2", round(col("_x2") * (col("_y") - p), 12).cast(dec12))
-        .withColumn("_h00", round(w, 12).cast(dec12))
-        .withColumn("_h01", round(col("_x1") * w, 12).cast(dec12))
-        .withColumn("_h02", round(col("_x2") * w, 12).cast(dec12))
-        .withColumn("_h11", round(col("_x1") * col("_x1") * w, 12).cast(dec12))
-        .withColumn("_h12", round(col("_x1") * col("_x2") * w, 12).cast(dec12))
-        .withColumn("_h22", round(col("_x2") * col("_x2") * w, 12).cast(dec12))
-        .groupBy("_g")
-        .agg(max("_a").as("_a"), max("_b1").as("_b1"), max("_b2").as("_b2"),
-          count(lit(1)).as("n"),
-          sum(col("_y")).cast("bigint").as("n_pos"),
-          sum("_g0").as("_G0"), sum("_g1").as("_G1"), sum("_g2").as("_G2"),
-          sum("_h00").as("_H00"), sum("_h01").as("_H01"),
-          sum("_h02").as("_H02"), sum("_h11").as("_H11"),
-          sum("_h12").as("_H12"), sum("_h22").as("_H22"))
-    }
-    def d(c: String): Column = col(c).cast("double")
-    def det: Column =
+    val p = lit(1.0) / (lit(1.0)
+      + exp(-(col("_a") + col("_b1") * col("_x1")
+        + col("_b2") * col("_x2"))))
+    val w = p * (lit(1.0) - p)
+    val (x1, x2, r) = (col("_x1"), col("_x2"), col("_y") - p)
+    val terms = Seq("_g0" -> r, "_g1" -> x1 * r, "_g2" -> x2 * r,
+      "_h00" -> w, "_h01" -> x1 * w, "_h02" -> x2 * w,
+      "_h11" -> x1 * x1 * w, "_h12" -> x1 * x2 * w, "_h22" -> x2 * x2 * w)
+    val det =
       d("_H00") * (d("_H11") * d("_H22") - d("_H12") * d("_H12")) -
         d("_H01") * (d("_H01") * d("_H22") - d("_H12") * d("_H02")) +
         d("_H02") * (d("_H01") * d("_H12") - d("_H11") * d("_H02"))
-    def det0: Column =
+    val det0 =
       d("_G0") * (d("_H11") * d("_H22") - d("_H12") * d("_H12")) -
         d("_H01") * (d("_G1") * d("_H22") - d("_H12") * d("_G2")) +
         d("_H02") * (d("_G1") * d("_H12") - d("_H11") * d("_G2"))
-    def det1: Column =
+    val det1 =
       d("_H00") * (d("_G1") * d("_H22") - d("_H12") * d("_G2")) -
         d("_G0") * (d("_H01") * d("_H22") - d("_H12") * d("_H02")) +
         d("_H02") * (d("_H01") * d("_G2") - d("_G1") * d("_H02"))
-    def det2: Column =
+    val det2 =
       d("_H00") * (d("_H11") * d("_G2") - d("_G1") * d("_H12")) -
         d("_H01") * (d("_H01") * d("_G2") - d("_G1") * d("_H02")) +
         d("_G0") * (d("_H01") * d("_H12") - d("_H11") * d("_H02"))
-    var params = rows.select(col("_g")).distinct()
+    val init = rows.select(col("_g")).distinct()
       .withColumn("_a", lit(0.0)).withColumn("_b1", lit(0.0))
       .withColumn("_b2", lit(0.0))
-    for (_ <- 1 to iters) {
-      params = pass(params)
-        .select(col("_g"),
-          when(det > 0.0, round(col("_a") + det0 / det, 12))
-            .otherwise(col("_a")).as("_a"),
-          when(det > 0.0, round(col("_b1") + det1 / det, 12))
-            .otherwise(col("_b1")).as("_b1"),
-          when(det > 0.0, round(col("_b2") + det2 / det, 12))
-            .otherwise(col("_b2")).as("_b2"))
-        .localCheckpoint()
-    }
-    val a11 = d("_H11") * d("_H22") - d("_H12") * d("_H12")
     val a22 = d("_H00") * d("_H22") - d("_H02") * d("_H02")
     val a33 = d("_H00") * d("_H11") - d("_H01") * d("_H01")
-    pass(params).select(col("_g").as(groupCol),
-      col("n").cast("bigint").as("n"), col("n_pos"),
-      round(col("_a"), 6).cast("double").as("alpha"),
-      round(col("_b1"), 6).cast("double").as("b1"),
-      round(col("_b2"), 6).cast("double").as("b2"),
-      when(det > 0.0, round(sqrt(a22 / det), 6))
-        .cast("double").as("se_b1"),
-      when(det > 0.0, round(sqrt(a33 / det), 6))
-        .cast("double").as("se_b2"),
-      when(det > 0.0, round(col("_b1") / sqrt(a22 / det), 6))
-        .cast("double").as("z_b1"),
-      when(det > 0.0, round(col("_b2") / sqrt(a33 / det), 6))
-        .cast("double").as("z_b2"))
+    newtonLoop(init, iters)(
+        glmPass(rows, terms, sum(col("_y")).cast("bigint").as("n_pos")))(
+        det > 0.0, "_a" -> (col("_a") + det0 / det),
+        "_b1" -> (col("_b1") + det1 / det), "_b2" -> (col("_b2") + det2 / det))
+      .select(col("_g").as(groupCol),
+        col("n").cast("bigint").as("n"), col("n_pos"),
+        round(col("_a"), 6).cast("double").as("alpha"),
+        round(col("_b1"), 6).cast("double").as("b1"),
+        round(col("_b2"), 6).cast("double").as("b2"),
+        when(det > 0.0, round(sqrt(a22 / det), 6))
+          .cast("double").as("se_b1"),
+        when(det > 0.0, round(sqrt(a33 / det), 6))
+          .cast("double").as("se_b2"),
+        when(det > 0.0, round(col("_b1") / sqrt(a22 / det), 6))
+          .cast("double").as("z_b1"),
+        when(det > 0.0, round(col("_b2") / sqrt(a33 / det), 6))
+          .cast("double").as("z_b2"))
   }
+
+  /** The distributed Newton loop of the fixed-iteration fits (the plan
+    * twin of [[GlmRows.newton]]): `iters` times, `pass` at the current
+    * params, then each `updates` param re-frozen at 12 dp where `ok`
+    * holds (kept where not) into a localCheckpointed table keyed by
+    * `init`'s other columns; returns one last `pass` at the final
+    * params. */
+  private def newtonLoop(init: DataFrame, iters: Int)(
+      pass: DataFrame => DataFrame)(ok: Column,
+      updates: (String, Column)*): DataFrame = {
+    val keys = init.columns.toSeq.filterNot(c => updates.exists(_._1 == c))
+    var params = init
+    for (_ <- 1 to iters) {
+      params = pass(params).select(keys.map(col) ++ updates.map {
+        case (p, u) => when(ok, round(u, 12)).otherwise(col(p)).as(p)
+      }: _*)
+        .localCheckpoint() // k rows; truncate the iterative lineage
+    }
+    pass(params)
+  }
+
+  /** One pass of a grouped GLM at `params` (keyed by `_g`): the rows
+    * joined to the broadcast params, each named per-row term frozen at
+    * 12 dp into decimal(38,12), then one group fold of the params
+    * (constant per group), n, `extra` and the term sums, each sum
+    * named as its term in upper case. */
+  private def glmPass(rows: DataFrame, terms: Seq[(String, Column)],
+      extra: Column*)(params: DataFrame): DataFrame = {
+    val frozen = terms.foldLeft(rows.join(broadcast(params), Seq("_g"))) {
+      case (df, (t, term)) => df.withColumn(t, round(term, 12).cast(dec12))
+    }
+    val aggs = params.columns.toSeq.filter(_ != "_g").map(p => max(p).as(p)) ++
+      (count(lit(1)).as("n") +: extra) ++
+      terms.map { case (t, _) => sum(t).as(t.toUpperCase) }
+    frozen.groupBy("_g").agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The per-row terms of the 2×2 fits ([[logisticFit]], [[poissonFit]])
+    * for residual `r` and weight `w`: gradient (r, xr), Hessian (w, xw,
+    * x²w). */
+  private def newton2Terms(r: Column, w: Column): Seq[(String, Column)] = {
+    val x = col("_x")
+    Seq("_g0" -> r, "_g1" -> x * r, "_h00" -> w, "_h01" -> x * w,
+      "_h11" -> x * x * w)
+  }
+
+  /** The Hessian determinant on the sums of [[newton2Terms]]. */
+  private def newton2Det: Column =
+    d("_H00") * d("_H11") - d("_H01") * d("_H01")
+
+  /** [[newtonLoop]] with the closed 2×2 step (α, β) += H⁻¹g on the
+    * sums of [[newton2Terms]], the plan twin of [[newton2]]; det ≤ 0
+    * keeps the params. */
+  private def newton2Loop(init: DataFrame, iters: Int)(
+      pass: DataFrame => DataFrame): DataFrame = {
+    val det = newton2Det
+    newtonLoop(init, iters)(pass)(det > 0.0,
+      "_a" -> (col("_a") + (d("_G0") * d("_H11") - d("_G1") * d("_H01")) / det),
+      "_b" -> (col("_b") + (d("_G1") * d("_H00") - d("_G0") * d("_H01")) / det))
+  }
+
+  /** se(β) at the final 2×2 fit, NULL where det ≤ 0. */
+  private def newton2Se: Column = when(newton2Det > 0.0,
+    round(sqrt(d("_H00") / newton2Det), 6)).cast("double").as("se_beta")
+
+  /** z(β) at the final 2×2 fit, NULL where det ≤ 0. */
+  private def newton2Z: Column = when(newton2Det > 0.0,
+    round(col("_b") / sqrt(d("_H00") / newton2Det), 6))
+    .cast("double").as("z_beta")
 
   /** Collected (g, x_1..x_p, y) rows of a grouped GLM replica, null
     * group keys skipped (the per-pass equi-join drops them). */
@@ -5679,7 +5668,6 @@ object Stats {
   def poissonFit(df: DataFrame, groupCol: String, xCol: String,
       yCol: String, iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 8, s"poissonFit: iters must be in [1, 8]")
-    val dec12 = "decimal(38,12)"
     val rows = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"), round(col(xCol), 6).as("_x"),
         col(yCol).cast("double").as("_y"))
@@ -5696,69 +5684,41 @@ object Stats {
           return poissonDriverDf(df, rows, collected, groupCol, iters)
         case None =>
       }
-    def pass(params: DataFrame) = {
-      val mu = exp(col("_a") + col("_b") * col("_x"))
-      rows.join(broadcast(params), Seq("_g"))
-        .withColumn("_g0", round(col("_y") - mu, 12).cast(dec12))
-        .withColumn("_g1", round(col("_x") * (col("_y") - mu), 12).cast(dec12))
-        .withColumn("_h00", round(mu, 12).cast(dec12))
-        .withColumn("_h01", round(col("_x") * mu, 12).cast(dec12))
-        .withColumn("_h11", round(col("_x") * col("_x") * mu, 12).cast(dec12))
-        .withColumn("_pe", round((col("_y") - mu) * (col("_y") - mu) / mu,
-          12).cast(dec12))
-        .groupBy("_g")
-        .agg(max("_a").as("_a"), max("_b").as("_b"),
-          count(lit(1)).as("n"),
-          sum(col("_y")).cast("double").as("sum_y"),
-          sum("_g0").as("_G0"), sum("_g1").as("_G1"),
-          sum("_h00").as("_H00"), sum("_h01").as("_H01"),
-          sum("_h11").as("_H11"), sum("_pe").as("_CHI"))
-    }
-    def d(c: String): Column = col(c).cast("double")
-    def det: Column = d("_H00") * d("_H11") - d("_H01") * d("_H01")
+    val mu = exp(col("_a") + col("_b") * col("_x"))
+    val r = col("_y") - mu
     // init α at the Laplace-smoothed log-mean (the standard GLM start;
     // from α = 0 the first Newton step on large counts overshoots to
     // e^49-scale μ and the fit freezes on inf/NaN), β at 0 — both
     // deterministic and oracle-replicable from the same sums
-    var params = rows.groupBy(col("_g"))
+    val init = rows.groupBy(col("_g"))
       .agg(count(lit(1)).as("_n0"), sum(col("_y")).as("_sy0"))
       .select(col("_g"),
         round(log((col("_sy0") + 1.0) / (col("_n0") + 1.0).cast("double")),
           12).as("_a"),
         lit(0.0).as("_b"))
-    for (_ <- 1 to iters) {
-      params = pass(params)
-        .select(col("_g"),
-          when(det > 0.0,
-            round(col("_a") + (d("_G0") * d("_H11") - d("_G1") * d("_H01"))
-              / det, 12)).otherwise(col("_a")).as("_a"),
-          when(det > 0.0,
-            round(col("_b") + (d("_G1") * d("_H00") - d("_G0") * d("_H01"))
-              / det, 12)).otherwise(col("_b")).as("_b"))
-        .localCheckpoint() // k rows; truncate the iterative lineage
-    }
-    pass(params).select(col("_g").as(groupCol),
-      col("n").cast("bigint").as("n"),
-      round(col("sum_y"), 6).cast("double").as("sum_y"),
-      round(col("_a"), 6).cast("double").as("alpha"),
-      round(col("_b"), 6).cast("double").as("beta"),
-      when(det > 0.0, round(sqrt(d("_H00") / det), 6))
-        .cast("double").as("se_beta"),
-      when(det > 0.0, round(col("_b") / sqrt(d("_H00") / det), 6))
-        .cast("double").as("z_beta"),
-      round(exp(col("_b")), 6).cast("double").as("rate_ratio"),
-      // overdispersion diagnostic: Pearson χ²/(n−2) at the final fit —
-      // ≈ 1 for true Poisson data; ≫ 1 says the variance outruns the
-      // mean and a quasi-Poisson/NB error model is needed (the rate
-      // ratio stays consistent, its se does NOT — the caller's cue)
-      when(col("n") > 2, round(d("_CHI") / (col("n").cast("double") - 2.0),
-        6)).cast("double").as("dispersion"),
-      // the quasi-Poisson correction THE dispersion diagnostic calls
-      // for: se·√φ — the rate ratio stays, its honesty interval widens
-      when(det > 0.0 && col("n") > 2,
-        round(sqrt(d("_H00") / det)
-          * sqrt(d("_CHI") / (col("n").cast("double") - 2.0)), 6))
-        .cast("double").as("se_beta_quasi"))
+    val det = newton2Det
+    newton2Loop(init, iters)(glmPass(rows,
+        newton2Terms(r, mu) :+ ("_pe" -> r * r / mu),
+        sum(col("_y")).cast("double").as("sum_y")))
+      .select(col("_g").as(groupCol),
+        col("n").cast("bigint").as("n"),
+        round(col("sum_y"), 6).cast("double").as("sum_y"),
+        round(col("_a"), 6).cast("double").as("alpha"),
+        round(col("_b"), 6).cast("double").as("beta"),
+        newton2Se, newton2Z,
+        round(exp(col("_b")), 6).cast("double").as("rate_ratio"),
+        // overdispersion diagnostic: Pearson χ²/(n−2) at the final fit —
+        // ≈ 1 for true Poisson data; ≫ 1 says the variance outruns the
+        // mean and a quasi-Poisson/NB error model is needed (the rate
+        // ratio stays consistent, its se does NOT — the caller's cue)
+        when(col("n") > 2, round(d("_PE") / (col("n").cast("double") - 2.0),
+          6)).cast("double").as("dispersion"),
+        // the quasi-Poisson correction THE dispersion diagnostic calls
+        // for: se·√φ — the rate ratio stays, its honesty interval widens
+        when(det > 0.0 && col("n") > 2,
+          round(sqrt(d("_H00") / det)
+            * sqrt(d("_PE") / (col("n").cast("double") - 2.0)), 6))
+          .cast("double").as("se_beta_quasi"))
   }
 
   /** Gamma regression, log link — the GLM family's POSITIVE-SKEWED
@@ -5784,7 +5744,6 @@ object Stats {
   def gammaFit(df: DataFrame, groupCol: String, xCol: String,
       yCol: String, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 8, s"gammaFit: iters must be in [1, 8]")
-    val dec12 = "decimal(38,12)"
     val rows = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"), round(col(xCol), 6).as("_x"),
         col(yCol).cast("double").as("_y"))
@@ -5803,56 +5762,33 @@ object Stats {
           return gammaDriverDf(df, rows, collected, groupCol, iters)
         case None =>
       }
-    def pass(params: DataFrame) = {
-      val eta = col("_a") + col("_b") * col("_x")
-      val mu = exp(eta)
-      val z = eta + (col("_y") - mu) / mu
-      rows.join(broadcast(params), Seq("_g"))
-        .withColumn("_zt", round(z, 12).cast(dec12))
-        .withColumn("_xzt", round(col("_x") * z, 12).cast(dec12))
-        .withColumn("_xt", round(col("_x"), 12).cast(dec12))
-        .withColumn("_xxt", round(col("_x") * col("_x"), 12).cast(dec12))
-        .withColumn("_pe",
-          round((col("_y") - mu) * (col("_y") - mu) / (mu * mu), 12)
-            .cast(dec12))
-        .groupBy("_g")
-        .agg(max("_a").as("_a"), max("_b").as("_b"),
-          count(lit(1)).as("n"),
-          sum("_zt").as("_SZ"), sum("_xzt").as("_SXZ"),
-          sum("_xt").as("_SX"), sum("_xxt").as("_SXX"),
-          sum("_pe").as("_CHI"))
-    }
-    def d(c: String): Column = col(c).cast("double")
-    def nD: Column = col("n").cast("double")
-    def det: Column = nD * d("_SXX") - d("_SX") * d("_SX")
-    var params = rows.groupBy(col("_g"))
+    val (x, eta) = (col("_x"), col("_a") + col("_b") * col("_x"))
+    val mu = exp(eta)
+    val z = eta + (col("_y") - mu) / mu
+    val init = rows.groupBy(col("_g"))
       .agg(count(lit(1)).as("_n0"), sum(col("_y")).as("_sy0"))
       .select(col("_g"),
         round(log(col("_sy0") / col("_n0").cast("double")), 12).as("_a"),
         lit(0.0).as("_b"))
-    for (_ <- 1 to iters) {
-      params = pass(params)
-        .select(col("_g"),
-          when(det > 0.0,
-            round((d("_SZ") - (nD * d("_SXZ") - d("_SX") * d("_SZ"))
-              / det * d("_SX")) / nD, 12)).otherwise(col("_a")).as("_a"),
-          when(det > 0.0,
-            round((nD * d("_SXZ") - d("_SX") * d("_SZ")) / det, 12))
-            .otherwise(col("_b")).as("_b"))
-        .localCheckpoint() // k rows; truncate the iterative lineage
-    }
-    val se = sqrt(d("_CHI") / (nD - 2.0) * (nD / det))
-    pass(params).select(col("_g").as(groupCol),
-      col("n").cast("bigint").as("n"),
-      round(col("_a"), 6).cast("double").as("alpha"),
-      round(col("_b"), 6).cast("double").as("beta"),
-      when(det > 0.0 && col("n") > 2, round(se, 6))
-        .cast("double").as("se_beta"),
-      when(det > 0.0 && col("n") > 2, round(col("_b") / se, 6))
-        .cast("double").as("z_beta"),
-      round(exp(col("_b")), 6).cast("double").as("rate_ratio"),
-      when(col("n") > 2, round(d("_CHI") / (nD - 2.0), 6))
-        .cast("double").as("dispersion"))
+    val nD = col("n").cast("double")
+    val det = nD * d("_XXT") - d("_XT") * d("_XT")
+    val slope = (nD * d("_XZT") - d("_XT") * d("_ZT")) / det
+    val se = sqrt(d("_PE") / (nD - 2.0) * (nD / det))
+    newtonLoop(init, iters)(glmPass(rows, Seq("_zt" -> z, "_xzt" -> x * z,
+        "_xt" -> x, "_xxt" -> x * x,
+        "_pe" -> (col("_y") - mu) * (col("_y") - mu) / (mu * mu))))(
+        det > 0.0, "_a" -> ((d("_ZT") - slope * d("_XT")) / nD), "_b" -> slope)
+      .select(col("_g").as(groupCol),
+        col("n").cast("bigint").as("n"),
+        round(col("_a"), 6).cast("double").as("alpha"),
+        round(col("_b"), 6).cast("double").as("beta"),
+        when(det > 0.0 && col("n") > 2, round(se, 6))
+          .cast("double").as("se_beta"),
+        when(det > 0.0 && col("n") > 2, round(col("_b") / se, 6))
+          .cast("double").as("z_beta"),
+        round(exp(col("_b")), 6).cast("double").as("rate_ratio"),
+        when(col("n") > 2, round(d("_PE") / (nD - 2.0), 6))
+          .cast("double").as("dispersion"))
   }
 
   /** One-lag Granger causality F per group — does x's PAST improve the
@@ -5898,7 +5834,6 @@ object Stats {
       m("_y", "_y").as("_syy"), m("_l", "_l").as("_sll"),
       m("_x", "_x").as("_sxx"), m("_y", "_l").as("_syl"),
       m("_y", "_x").as("_syx"), m("_l", "_x").as("_slx"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("n").cast("double")
     val sll = nd * d("_sll") - d("_sl") * d("_sl")
     val sxx = nd * d("_sxx") - d("_sx") * d("_sx")
@@ -5946,7 +5881,6 @@ object Stats {
       : DataFrame = {
     require(groupCols.nonEmpty, "inequality: need at least one group column")
     val gcols = groupCols.map(col)
-    val dec12 = "decimal(38,12)"
     val pts = df
       .select(gcols :+ round(col(valueCol) * 100).cast("long").as("_x"): _*)
       .filter(col("_x").isNotNull && col("_x") > 0)
@@ -6104,7 +6038,6 @@ object Stats {
       side(isL, (col("_y").cast(dec) * col("_y")).cast(dec)).as(s"_syy$tag"))
     val aggs = moments(isL = true, "L") ++ moments(isL = false, "R")
     val sums = pts.groupBy("_g").agg(aggs.head, aggs.tail: _*)
-    def d(c: String): Column = col(c).cast("double")
     // segment SSE from its own sums; pooled sums are exact decimal
     // sums of the two sides
     def sse(n: Column, sx: Column, sy: Column, sxx: Column, sxy: Column,
@@ -6240,7 +6173,6 @@ object Stats {
         sum((col("_xq").cast(dec) * col("_xq")).cast(dec)).as("_sxx"),
         sum((col("_xq").cast(dec) * col("_yq")).cast(dec)).as("_sxy"),
         sum((col("_yq").cast(dec) * col("_yq")).cast(dec)).as("_syy"))
-    def d(c: String): Column = col(c).cast("double")
     val nD = col("_ns").cast("double")
     val cxx = nD * d("_sxx") - d("_sx") * d("_sx")
     val cxy = nD * d("_sxy") - d("_sx") * d("_sy")
@@ -7005,7 +6937,6 @@ object Stats {
         cnt(!e && o).as("_c"), cnt(!e && !o).as("_d"))
       .withColumn("_n", col("_a") + col("_b") + col("_c") + col("_d"))
       .filter(col("_n") >= 2)
-    def d(c: String): Column = col(c).cast("double")
     val nd = d("_n")
     def dz(t: Column): Column = round(t, 12).cast("decimal(38,12)")
     tab
@@ -7060,7 +6991,6 @@ object Stats {
         sum(round(col("_x") * col("_x"), 12).cast(dec)).as("_sxx"),
         sum(round(col("_x") * col("_y"), 12).cast(dec)).as("_sxy"),
         sum(round(col("_y") * col("_y"), 12).cast(dec)).as("_syy"))
-    def d(c: String): Column = col(c).cast("double")
     val nD = col("n").cast("double")
     val cxx = d("_sxx") - d("_sx") * d("_sx") / nD
     val cxy = d("_sxy") - d("_sx") * d("_sy") / nD
@@ -7110,7 +7040,6 @@ object Stats {
       .withColumn("_n", col("_a") + col("_b") + col("_c") + col("_d"))
       .filter(col("_n") >= 2)
       .localCheckpoint() // the psi fold + the per-stratum pass read it
-    def d(c: String): Column = col(c).cast("double")
     val nd = d("_n")
     def dz(t: Column): Column = round(t, 12).cast("decimal(38,12)")
     val psiRow = tab.agg(
@@ -7315,7 +7244,6 @@ object Stats {
     val agg = perT.agg(max("_nb").as("_n"), count(lit(1)).as("_kk"),
       sum("_a16").as("_a"),
       sum((col("_t4") * col("_t4")).cast(dec)).as("_bnum"))
-    def d(c: String): Column = col(c).cast("double")
     val nD = col("_n").cast("double")
     val den = nD * d("_a") - d("_bnum")
     val ok = col("_n") >= 2 && col("_kk") >= 2 && den > 0.0
@@ -7370,7 +7298,6 @@ object Stats {
       .groupBy(col("_g").as(groupCol))
       .agg(sum("_c").as("n_group"),
         sum((col("_c").cast(dec) * col("_a2")).cast(dec)).as("_sa2"))
-    def d(c: String): Column = col(c).cast("double")
     perG.crossJoin(broadcast(nn))
       .withColumn("n_rest", (col("_n") - col("n_group")).cast("bigint"))
       .withColumn("_mean", col("n_group").cast("double") * d("_t2")
@@ -7412,7 +7339,6 @@ object Stats {
       .agg(count(lit(1)).as("n"),
         cnt(e && o).as("_a"), cnt(e && !o).as("_b"),
         cnt(!e && o).as("_c"), cnt(!e && !o).as("_d"))
-    def d(c: String): Column = col(c).cast("double")
     val n1 = col("_a") + col("_b")
     val n0 = col("_c") + col("_d")
     val ok = n1 >= 1 && n0 >= 1
@@ -7565,7 +7491,6 @@ object Stats {
       .groupBy(col("_g").as(groupCol))
       .agg(sum("_c").as("n_group"),
         sum((col("_c").cast(dec) * col("_m4")).cast(dec)).as("_sm4"))
-    def d(c: String): Column = col(c).cast("double")
     perG.crossJoin(broadcast(nn))
       .withColumn("n_rest", (col("_n") - col("n_group")).cast("bigint"))
       .withColumn("_mean", col("n_group").cast("double") * d("_t2")
@@ -8095,7 +8020,6 @@ object Stats {
         s2("_x", "_x").as("_sxx"), s2("_y", "_y").as("_syy"),
         s2("_z", "_z").as("_szz"), s2("_x", "_y").as("_sxy"),
         s2("_x", "_z").as("_sxz"), s2("_y", "_z").as("_syz"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("n").cast("double")
     def cov(sab: String, sa: String, sb: String): Column =
       nd * d(sab) - d(sa) * d(sb)
@@ -8457,7 +8381,6 @@ object Stats {
       .select(dq.as("_d"))
       .agg(count(lit(1)).as("n"), sum(col("_d").cast(dec)).as("_s"),
         sum((col("_d").cast(dec) * col("_d")).cast(dec)).as("_q"))
-    def d(c: String) = col(c).cast("double")
     val bias = round(d("_s") / d("n") / 1e6, 6)
     val sd = round(sqrt((d("n") * d("_q") - d("_s") * d("_s"))
       / (d("n") * (d("n") - 1.0))) / 1e6, 6)
@@ -8495,7 +8418,6 @@ object Stats {
     */
   def krippendorffAlpha(df: DataFrame, unitCol: String,
       categoryCol: String): DataFrame = {
-    val dec12 = "decimal(38,12)"
     val cells = df
       .filter(col(unitCol).isNotNull && col(categoryCol).isNotNull)
       .select(col(unitCol).as("_u"), col(categoryCol).as("_c"))
@@ -8520,7 +8442,6 @@ object Stats {
           .cast("decimal(38,0)")).as("_sq"),
         count(lit(1)).as("_k"))
     val nUnits = units.agg(count(lit(1)).as("_nu"))
-    def d(c: String) = col(c).cast("double")
     // sum_{c != k} n_c n_k = n^2 - sum n_c^2
     val dOb = d("_do_num") / d("_nn")
     val dEx = (d("_nn") * d("_nn") - d("_sq")) /
@@ -8558,7 +8479,6 @@ object Stats {
     */
   def fisherExactGreater(df: DataFrame, exposed: Column, outcome: Column,
       maxN: Long = 1000000L): DataFrame = {
-    val dec12 = "decimal(38,12)"
     val cells = df
       .filter(exposed.isNotNull && outcome.isNotNull)
       .select(when(exposed, 1L).otherwise(0L).as("_e"),
@@ -8687,7 +8607,6 @@ object Stats {
       sum((col("_s") * col("_s")).cast(dec)).as("_SC"),
       sum(col("_s")).as("_S"), sum(col("_q")).as("_Q"),
       max("_nc").as("_n"), count(lit(1)).as("_ncells"))
-    def d(c: String) = col(c).cast("double")
     val joinedAll = grand.crossJoin(broadcast(aLev))
       .crossJoin(broadcast(bLev))
       // completeness guard: a missing (a, b) cell is a ragged design
@@ -8835,7 +8754,6 @@ object Stats {
         sum((col("_x").cast(dec) * col("_x")).cast(dec)).as("_sxxa"),
         sum((col("_y").cast(dec) * col("_y")).cast(dec)).as("_syya"),
         sum((col("_x").cast(dec) * col("_y")).cast(dec)).as("_sxya"))
-    def d(c: String) = col(c).cast("double")
     val thetaDen = d("_n") * d("_sxx") - d("_sx") * d("_sx")
     val theta = round((d("_n") * d("_sxy") - d("_sx") * d("_sy"))
       / thetaDen, 12)
@@ -8899,7 +8817,6 @@ object Stats {
       pick(1, 0, "_s").as("_st0"), pick(1, 1, "_s").as("_st1"),
       pick(0, 0, "_q").as("_qc0"), pick(0, 1, "_q").as("_qc1"),
       pick(1, 0, "_q").as("_qt0"), pick(1, 1, "_q").as("_qt1"))
-    def d(c: String) = col(c).cast("double")
     def m(s: String, n: String) = d(s) / d(n)
     def v(q: String, s: String, n: String) =
       (d(n) * d(q) - d(s) * d(s)) / (d(n) * (d(n) - 1.0))
@@ -8967,7 +8884,6 @@ object Stats {
         pick(t, p, s, "_q").as(s"_q$t$p$s"))
     }
     val folded = cells.agg(aggs.head, aggs.tail: _*)
-    def d(c: String) = col(c).cast("double")
     def m(t: Int, p: Int, s: Int) = d(s"_s$t$p$s") / d(s"_n$t$p$s")
     def v(t: Int, p: Int, s: Int) =
       (d(s"_n$t$p$s") * d(s"_q$t$p$s") -
@@ -9019,7 +8935,6 @@ object Stats {
       .groupBy("_t", "_k")
       .agg(count(lit(1)).as("_n"), sum(col("_v").cast(dec)).as("_s"),
         sum((col("_v").cast(dec) * col("_v")).cast(dec)).as("_q"))
-    def d(c: String) = col(c).cast("double")
     val perK = cells.groupBy("_k").agg(
       max(when(col("_t") === 1, col("_n"))).as("_nt"),
       max(when(col("_t") === 0, col("_n"))).as("_nc"),
@@ -9171,7 +9086,6 @@ object Stats {
       cell(bi, 1, 1, s = true).as(s"_st1_$bi"))
     } :+ count(lit(1)).as("_nrows")
     val one = withT.agg(aggs.head, aggs.tail: _*)
-    def d(c: String) = col(c).cast("double")
     def m(s: String, n: String) = d(s) / d(n)
     def did(bi: Int): Column = {
       val haveAll = col(s"_nc0_$bi").isNotNull &&
@@ -9238,7 +9152,6 @@ object Stats {
       m("_x", "_x").as("_sxx"), m("_z", "_z").as("_szz"),
       m("_z", "_x").as("_szx"), m("_z", "_y").as("_szy"),
       m("_x", "_y").as("_sxy"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("n").cast("double")
     val mxx = nd * d("_sxx") - d("_sx") * d("_sx")
     val mzz = nd * d("_szz") - d("_sz") * d("_sz")
@@ -9304,7 +9217,6 @@ object Stats {
       side(1, col("_y").cast(dec)).as("_syr"),
       side(1, sq("_x", "_x")).as("_sxxr"),
       side(1, sq("_x", "_y")).as("_sxyr"))
-    def d(c: String): Column = col(c).cast("double")
     def fit(n: Column, sx: String, sy: String, sxx: String, sxy: String)
         : (Column, Column, Column) = {
       val nd = n.cast("double")
@@ -9360,7 +9272,6 @@ object Stats {
       arm(true, (col("_v").cast(dec) * col("_v")).cast(dec)).as("_qt"),
       arm(false, col("_v").cast(dec)).as("_sc"),
       arm(false, (col("_v").cast(dec) * col("_v")).cast(dec)).as("_qc"))
-    def d(c: String): Column = col(c).cast("double")
     val ntd = col("nt").cast("double")
     val ncd = col("nc").cast("double")
     val mt = d("_st") / ntd
@@ -9431,7 +9342,6 @@ object Stats {
         sum((col("_n").cast(dec) * col("_n")).cast(dec)).as("_sn2"),
         sum((col("_n").cast(dec) * col("_n")
           * (lit(2L) * col("_n") + 3L)).cast(dec)).as("_sn23"))
-    def d(c: String): Column = col(c).cast("double")
     pairTerms.crossJoin(broadcast(ns))
       .withColumn("_mean",
         (d("_nn") * d("_nn") - d("_sn2")) / 4.0)
@@ -9593,7 +9503,6 @@ object Stats {
     val sA = pairSum(c1, c2).select(col("_s").as("_sa"))
     val sB = pairSum(c1, c1).select(col("_s").as("_sb"))
     val sC = pairSum(c2, c2).select(col("_s").as("_sc"))
-    def d(c: String): Column = col(c).cast("double")
     val n1d = d("_n1")
     val n2d = d("_n2")
     val a = d("_sa") / (n1d * n2d)
@@ -9635,7 +9544,6 @@ object Stats {
     */
   def betaBinomialMom(df: DataFrame, succCol: String,
       trialCol: String): DataFrame = {
-    val dec12 = "decimal(38,12)"
     val rows = df.filter(col(succCol).isNotNull && col(trialCol).isNotNull)
       .select(col(succCol).cast("long").as("_k"),
         col(trialCol).cast("long").as("_m"))
@@ -9651,7 +9559,6 @@ object Stats {
       sum("_k").as("_sk"), sum("_m").as("_sm"),
       sum(col("_p").cast(dec12)).as("_sp"),
       sum((col("_p").cast(dec12) * col("_p")).cast(dec12)).as("_spp"))
-    def d(c: String): Column = col(c).cast("double")
     // every divisor is NULL at 0, not only guarded by the `when`s
     // below: codegen's subexpression elimination evaluates the shared
     // rho outside them, and a zero divisor then throws under ANSI
@@ -9757,7 +9664,6 @@ object Stats {
           .as("_cx"),
         sum((col("_wc").cast(dec) * col("_ry") * col("_ry")).cast(dec))
           .as("_cy"))
-    def d(c: String): Column = col(c).cast("double")
     val nD = col("n").cast("double")
     val n2 = nD * nD
     def vstat(a: String, c: String, b1: String, b2: String): Column =
@@ -9806,7 +9712,6 @@ object Stats {
     val b = flat.filter(col("_rn") === 2)
       .select(col("_g").as("group_b"), col("_sk").as("_k2"),
         col("_st").as("_t2"))
-    def d(c: String): Column = col(c).cast("double")
     val t1 = d("_t1") / 1e6
     val t2 = d("_t2") / 1e6
     val r1 = d("_k1") / t1
@@ -9864,7 +9769,6 @@ object Stats {
       .select((Seq("_g", "_n", "_sa", "_sb", "_saa", "_sbb", "_sab")
         .map(c => col(c).as(c + suffix))): _*)
     val j = side(1, "1").crossJoin(side(2, "2"))
-    def d(c: String): Column = col(c).cast("double")
     def css(n: String, q: String, s1: String, s2: String): Column =
       d(q) - d(s1) * d(s2) / d(n)
     // pooled covariance entries ×(n1+n2−2); the common factor cancels
@@ -9929,7 +9833,6 @@ object Stats {
     val b = flat.filter(col("_rn") === 2)
       .select(col("_g").as("group_b"), col("_n").as("_n2"),
         col("_sk").as("_k2"))
-    def d(c: String): Column = col(c).cast("double")
     val p1 = round(d("_k1") / d("_n1"), 12)
     val p2 = round(d("_k2") / d("_n2"), 12)
     val se = sqrt(p1 * (lit(1.0) - p1) / d("_n1")
@@ -9984,7 +9887,6 @@ object Stats {
     val sums = grouped.agg(count(lit(1)).as("_n"),
       sum(col("_x").cast(dec)).as("_sx"),
       sum((col("_x").cast(dec) * col("_x")).cast(dec)).as("_sxx"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("_n").cast("double")
     val mean = d("_sx") / nd / 1e6
     val varS = (d("_sxx") - d("_sx") * d("_sx") / nd)
@@ -10034,7 +9936,6 @@ object Stats {
       sum(col("_in2").cast("long")).as("_n2"),
       sum(when(col("_in1") === 1 && col("_in2") === 1, 1L)
         .otherwise(0L)).as("_m"))
-    def d(c: String): Column = col(c).cast("double")
     val nHat = (d("_n1") + 1.0) * (d("_n2") + 1.0) / (d("_m") + 1.0) - 1.0
     val varHat = (d("_n1") + 1.0) * (d("_n2") + 1.0) *
       (d("_n1") - d("_m")) * (d("_n2") - d("_m")) /
@@ -10071,7 +9972,6 @@ object Stats {
   def twoWayFixedEffects(df: DataFrame, unitCol: String, timeCol: String,
       yCol: String, xCol: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val dec12 = "decimal(38,12)"
     val pts = df.filter(col(yCol).isNotNull && col(xCol).isNotNull
         && col(unitCol).isNotNull && col(timeCol).isNotNull)
       .select(col(unitCol).as("_u"), col(timeCol).as("_t"),
@@ -10102,7 +10002,6 @@ object Stats {
       sum(round(col("_dx") * col("_dx"), 12).cast(dec12)).as("_sxx"),
       sum(round(col("_dx") * col("_dy"), 12).cast(dec12)).as("_sxy"),
       sum(round(col("_dy") * col("_dy"), 12).cast(dec12)).as("_syy"))
-    def d(c: String): Column = col(c).cast("double")
     val beta = d("_sxy") / d("_sxx")
     val dof = col("n").cast("double") - d("_nu") - d("_nt") + 1.0 - 1.0
     val sse = d("_syy") - beta * d("_sxy")
@@ -10151,7 +10050,6 @@ object Stats {
         round((col(valueCol) - mu0) * 1e6).cast("long").as("_x"))
       .withColumn("_n", count(lit(1)).over(w))
       .withColumn("_s", sum(col("_x").cast(dec)).over(w))
-    def d(c: String): Column = col(c).cast("double")
     val nd = d("_n")
     val sd = d("_s") / 1e6
     val denom = lit(sigma2) + nd * tau2
@@ -10192,7 +10090,6 @@ object Stats {
     val ties = ranked.groupBy("_b", "_v").agg(count(lit(1)).as("_t"))
       .agg(coalesce(sum((col("_t").cast(dec) * col("_t") * col("_t")
         - col("_t")).cast(dec)), lit(0L).cast(dec)).as("_st"))
-    def d(c: String): Column = col(c).cast("double")
     val m = d("_m")
     val k = d("_k")
     val num = lit(12.0) * (d("_sr2q") / 4.0) -
@@ -10276,7 +10173,6 @@ object Stats {
         // cast BEFORE squaring: Long*Long silently overflows above
         // ~3.04e9 counts; decimal*long keeps the square exact
         sum((col("_x").cast(dec) * col("_x")).cast(dec)).as("_s2"))
-    def d(c: String): Column = col(c).cast("double")
     val nD = col("n").cast("double")
     val mean = d("_s1") / nD
     val variance = (d("_s2") - d("_s1") * d("_s1") / nD) / (nD - 1.0)
@@ -10311,7 +10207,6 @@ object Stats {
     */
   def cochraneOrcutt(df: DataFrame, groupCol: String, orderCol: String,
       xCol: String, yCol: String): DataFrame = {
-    val dec12 = "decimal(38,12)"
     val rows = df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull
         && col(orderCol).isNotNull)
@@ -10319,7 +10214,6 @@ object Stats {
         round(col(xCol).cast("double"), 6).as("_x"),
         round(col(yCol).cast("double"), 6).as("_y"))
       .localCheckpoint() // OLS1, residual window, OLS2 all re-read it
-    def d(c: String): Column = col(c).cast("double")
     def ols(pts: DataFrame, xc: String, yc: String, tag: String)
         : DataFrame = pts
       .withColumn("_tx", round(col(xc), 12).cast(dec12))
@@ -10494,7 +10388,6 @@ object Stats {
   def westgardRules(df: DataFrame, groupCol: String, orderCol: String,
       valueCol: String): DataFrame = {
     val dec6 = "decimal(38,6)"
-    val dec12 = "decimal(38,12)"
     val rows = df
       .filter(col(valueCol).isNotNull && col(orderCol).isNotNull)
       .select(col(groupCol).as("_g"), col(orderCol).as("_o"),
@@ -10505,7 +10398,6 @@ object Stats {
       .groupBy("_g")
       .agg(count(lit(1)).as("_n"), sum("_v1").as("_s1"),
         sum("_v2").as("_s2"))
-    def d(c: String): Column = col(c).cast("double")
     val nD = col("_n").cast("double")
     val mean = d("_s1") / nD
     val variance = (d("_s2") - d("_s1") * d("_s1") / nD) / (nD - 1.0)
@@ -10558,7 +10450,6 @@ object Stats {
     */
   def priceIndex(df: DataFrame, itemCol: String, periodCol: String,
       priceCol: String, qtyCol: String): DataFrame = {
-    val dec12 = "decimal(38,12)"
     val cells = df
       .filter(col(priceCol).isNotNull && col(qtyCol).isNotNull)
       .select(col(itemCol).as("_i"), col(periodCol).cast("int").as("_p"),
@@ -10580,7 +10471,6 @@ object Stats {
       fold(col("_p0"), col("_q0")).as("_l0"),
       fold(col("_p1"), col("_q1")).as("_pa1"),
       fold(col("_p0"), col("_q1")).as("_pa0"))
-    def d(c: String): Column = col(c).cast("double")
     val lasp = d("_l1") / d("_l0")
     val paas = d("_pa1") / d("_pa0")
     agg.select(col("n_items").cast("bigint").as("n_items"),
@@ -10673,7 +10563,6 @@ object Stats {
       valueCol: String, lsl: Double, usl: Double): DataFrame = {
     require(usl > lsl, s"processCapability: need usl > lsl, got [$lsl, $usl]")
     val dec6 = "decimal(38,6)"
-    val dec12 = "decimal(38,12)"
     val rows = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol).cast("double"), 6).as("_v"))
@@ -10683,7 +10572,6 @@ object Stats {
       .groupBy("_g")
       .agg(count(lit(1)).as("_n"), sum("_v1").as("_s1"),
         sum("_v2").as("_s2"))
-    def d(c: String): Column = col(c).cast("double")
     val nD = col("_n").cast("double")
     val mean = d("_s1") / nD
     val variance = (d("_s2") - d("_s1") * d("_s1") / nD) / (nD - 1.0)
@@ -10714,7 +10602,6 @@ object Stats {
     require(target >= lsl && target <= usl,
       s"taguchiCpm: target $target outside [$lsl, $usl]")
     val dec6 = "decimal(38,6)"
-    val dec12 = "decimal(38,12)"
     val rows = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol).cast("double"), 6).as("_v"))
@@ -10724,7 +10611,6 @@ object Stats {
       .groupBy("_g")
       .agg(count(lit(1)).as("_n"), sum("_v1").as("_s1"),
         sum("_v2").as("_s2"))
-    def d(c: String): Column = col(c).cast("double")
     val nD = col("_n").cast("double")
     val mean = d("_s1") / nD
     val variance = (d("_s2") - d("_s1") * d("_s1") / nD) / (nD - 1.0)
@@ -10754,7 +10640,6 @@ object Stats {
   def cochranC(df: DataFrame, groupCol: String, valueCol: String)
       : DataFrame = {
     val dec6 = "decimal(38,6)"
-    val dec12 = "decimal(38,12)"
     val rows = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).cast("string").as("_g"),
         round(col(valueCol).cast("double"), 6).as("_v"))
@@ -10764,7 +10649,6 @@ object Stats {
       .groupBy("_g")
       .agg(count(lit(1)).as("_n"), sum("_v1").as("_s1"),
         sum("_v2").as("_s2"))
-    def d(c: String): Column = col(c).cast("double")
     val nD = col("_n").cast("double")
     val variance = (d("_s2") - d("_s1") * d("_s1") / nD) / (nD - 1.0)
     val perG = agg
@@ -10819,7 +10703,6 @@ object Stats {
       .agg(count(lit(1)).as("_n"),
         sum(col("_v")).as("_s"),
         sum((col("_v") * col("_v")).cast(dec)).as("_q"))
-    def d(c: String): Column = col(c).cast("double")
     val nD = col("_n").cast("double")
     val hhi = round(d("_q") / (d("_s") * d("_s")), 6)
     agg.select(col("_g").as(groupCol),
@@ -10858,7 +10741,6 @@ object Stats {
       m("_x1", "_x1").as("_s11"), m("_x2", "_x2").as("_s22"),
       m("_x3", "_x3").as("_s33"), m("_x1", "_x2").as("_s12"),
       m("_x1", "_x3").as("_s13"), m("_x2", "_x3").as("_s23"))
-    def d(c: String): Column = col(c).cast("double")
     val nd = col("n").cast("double")
     def cc(sab: String, sa: String, sb: String): Column =
       nd * d(sab) - d(sa) * d(sb)
@@ -11013,14 +10895,12 @@ object Stats {
         && windows.forall(_ >= 4),
       s"hurstRS: need >= 2 distinct window sizes >= 4, got $windows")
     val dec6 = "decimal(38,6)"
-    val dec12 = "decimal(38,12)"
     val base = df.filter(col(valueCol).isNotNull && col(orderCol).isNotNull)
       .select(col(groupCol).as("_g"), col(orderCol).as("_o"),
         round(col(valueCol).cast("double"), 6).as("_x"))
       .withColumn("_i", row_number().over(
         Window.partitionBy("_g").orderBy("_o")))
       .localCheckpoint() // every window size re-reads it
-    def d(c: String): Column = col(c).cast("double")
     val perW = windows.map { w =>
       val wD = w.toDouble
       val blocks = base.withColumn("_b", ((col("_i") - 1) / w).cast("long"))

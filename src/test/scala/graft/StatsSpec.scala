@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Resample, Stats}
@@ -2138,14 +2139,13 @@ class StatsSpec extends SparkTestBase {
     }
   }
 
-  test("logisticFit/logisticFit2: the r18 driver fast paths equal " +
-      "the distributed loops row-for-row (multi-group, degenerate " +
-      "single-class group, null group key)") {
+  // ---- the Newton-loop fits' shared fixtures ----
+
+  /** Two informative cohorts, a constant-x group (det == 0 keeps the
+    * params frozen) and a null group key: (g, x1, x2, y). */
+  private def logisticRows = {
     import spark.implicits._
-    // two informative cohorts + one all-negative (det stays 0 at the
-    // (0,0) start? no — w>0 always; but a constant-x group makes the
-    // Hessian singular: det == 0 keeps params frozen) + a null group
-    val df = ((1 to 200).map { i =>
+    ((1 to 200).map { i =>
       val x = i / 20.0
       (if (i % 2 == 0) "a" else "b", x, x / 3.0,
         1.5 * x - 4.0 + math.sin(i.toDouble) > 0.0)
@@ -2153,18 +2153,65 @@ class StatsSpec extends SparkTestBase {
       ++ (1 to 10).map(i => (null.asInstanceOf[String], i / 5.0,
         i / 7.0, i % 3 == 0)))
       .toDF("g", "x1", "x2", "y")
-    for (it <- Seq(1, 3)) {
-      val fast1 = Stats.logisticFit(df, "g", "x1", col("y"), iters = it)
-        .collect().map(_.toSeq).toSet
-      val dist1 = withDriverPathMaxRows(0)(
-        Stats.logisticFit(df, "g", "x1", col("y"), iters = it))
-        .collect().map(_.toSeq).toSet
+  }
+
+  /** Two cohorts of non-negative counts: (g, x, y). */
+  private def countRows = {
+    import spark.implicits._
+    (1 to 150).map { i =>
+      val x = i / 15.0
+      (if (i % 2 == 0) "a" else "b", x,
+        math.max(0.0, math.floor(3.0 + 2.0 * x + 2.0 * math.sin(i.toDouble))))
+    }.toDF("g", "x", "y")
+  }
+
+  /** One noisy calibrated scorer: (s, y). */
+  private def scoredRows = {
+    import spark.implicits._
+    (1 to 200).map { i =>
+      (i / 20.0 - 5.0, 2.0 * (i / 20.0 - 5.0) + math.sin(i.toDouble) > 0.0)
+    }.toDF("s", "y")
+  }
+
+  /** Censoring, tied durations, multi-group, an all-censored group and
+    * a 12-dp tie in U at β = 0: (g, dur, obs, x). */
+  private def coxRows = {
+    import spark.implicits._
+    ((1 to 80).map { i =>
+      val dur = (i * 13) % 20 + 1
+      ("a", dur.toLong, (i % 3) != 0, (i % 7) / 2.0)
+    } ++ (1 to 40).map { i =>
+      ("b", ((i * 7) % 10 + 1).toLong, i % 2 == 0, (i % 5) / 3.0)
+    } ++ (1 to 10).map { i =>
+      ("c", (i % 4 + 1).toLong, false, i / 10.0) // zero events
+    } ++ (1 to 128).map { i =>
+      // at β = 0: S1/S0 = (1/64)/128, so U's term −1/8192 is a 12-dp tie
+      ("t", 5L, i == 1, if (i == 2) 0.015625 else 0.0)
+    }).toDF("g", "dur", "obs", "x")
+  }
+
+  /** `fit`'s rows on the driver path and at conf 0, as sets. */
+  private def bothPaths(fit: => DataFrame) =
+    (fit.collect().map(_.toSeq).toSet,
+      withDriverPathMaxRows(0)(fit).collect().map(_.toSeq).toSet)
+
+  test("logisticFit/logisticFit2: the r18 driver fast paths equal " +
+      "the distributed loops row-for-row (multi-group, degenerate " +
+      "single-class group, null group key)") {
+    import spark.implicits._
+    val df = logisticRows
+    // plus a one-row group, an n = 2 group and a second constant-x group
+    val degenerate = df.union(Seq(("d1", 1.0, 2.0, true),
+      ("d2", 0.5, 0.2, false), ("d2", 1.5, 0.1, true),
+      ("k", 3.0, 1.0, true), ("k", 3.0, 1.0, false), ("k", 3.0, 1.0, true))
+      .toDF("g", "x1", "x2", "y"))
+    // the empty input reaches the replica on one path only
+    for (in <- Seq(df, df.limit(0), degenerate); it <- Seq(1, 3)) {
+      val (fast1, dist1) =
+        bothPaths(Stats.logisticFit(in, "g", "x1", col("y"), iters = it))
       assert(fast1 === dist1, s"logisticFit iters=$it")
-      val fast2 = Stats.logisticFit2(df, "g", "x1", "x2", col("y"),
-        iters = it).collect().map(_.toSeq).toSet
-      val dist2 = withDriverPathMaxRows(0)(
-        Stats.logisticFit2(df, "g", "x1", "x2", col("y"),
-          iters = it)).collect().map(_.toSeq).toSet
+      val (fast2, dist2) = bothPaths(
+        Stats.logisticFit2(in, "g", "x1", "x2", col("y"), iters = it))
       assert(fast2 === dist2, s"logisticFit2 iters=$it")
     }
   }
@@ -2172,36 +2219,55 @@ class StatsSpec extends SparkTestBase {
   test("poissonFit/gammaFit/temperatureScaling: the r18 driver fast " +
       "paths equal the distributed loops row-for-row") {
     import spark.implicits._
-    val cnt = (1 to 150).map { i =>
-      val x = i / 15.0
-      (if (i % 2 == 0) "a" else "b", x,
-        math.max(0.0, math.floor(3.0 + 2.0 * x + 2.0 * math.sin(i.toDouble))))
-    }.toDF("g", "x", "y")
-    for (it <- Seq(1, 3)) {
-      val fp = Stats.poissonFit(cnt, "g", "x", "y", iters = it)
-        .collect().map(_.toSeq).toSet
-      val dp = withDriverPathMaxRows(0)(
-        Stats.poissonFit(cnt, "g", "x", "y", iters = it))
-        .collect().map(_.toSeq).toSet
+    val cnt = countRows
+    // plus a one-row group, an n = 2 group, a constant-x group and a
+    // null group key (gamma's se at n = 2 and det = 0 is NULL)
+    val degenerate = cnt.union(Seq(("d1", 1.0, 4.0), ("d2", 0.5, 1.0),
+      ("d2", 1.5, 3.0), ("k", 2.0, 1.0), ("k", 2.0, 5.0), ("k", 2.0, 2.0),
+      (null.asInstanceOf[String], 1.0, 2.0),
+      (null.asInstanceOf[String], 2.0, 6.0)).toDF("g", "x", "y"))
+    for (in <- Seq(cnt, cnt.limit(0), degenerate); it <- Seq(1, 3)) {
+      val (fp, dp) = bothPaths(Stats.poissonFit(in, "g", "x", "y", iters = it))
       assert(fp === dp, s"poisson iters=$it")
-      val pos = cnt.withColumn("y", col("y") + 0.5)
-      val fg = Stats.gammaFit(pos, "g", "x", "y", iters = it)
-        .collect().map(_.toSeq).toSet
-      val dg = withDriverPathMaxRows(0)(
-        Stats.gammaFit(pos, "g", "x", "y", iters = it))
-        .collect().map(_.toSeq).toSet
+      val pos = in.withColumn("y", col("y") + 0.5)
+      val (fg, dg) = bothPaths(Stats.gammaFit(pos, "g", "x", "y", iters = it))
       assert(fg === dg, s"gamma iters=$it")
+      if (in eq degenerate) {
+        val se = fg.map(r => r(0) -> r(4)).toMap
+        assert(se("d2") == null && se("k") == null, s"gamma se: $se")
+      }
     }
-    val scored = (1 to 200).map { i =>
-      (i / 20.0 - 5.0, 2.0 * (i / 20.0 - 5.0) + math.sin(i.toDouble) > 0.0)
-    }.toDF("s", "y")
-    for (ps <- Seq(1, 4)) {
-      val ft = Stats.temperatureScaling(scored, "s", col("y"), passes = ps)
-        .collect().map(_.toSeq).toSet
-      val dt = withDriverPathMaxRows(0)(
-        Stats.temperatureScaling(scored, "s", col("y"), passes = ps))
-        .collect().map(_.toSeq).toSet
+    val scored = scoredRows
+    // plus one row and all-zero scores
+    val zeros = (1 to 20).map(i => (0.0, i % 4 == 0)).toDF("s", "y")
+    for (in <- Seq(scored, scored.limit(0), scored.limit(1), zeros);
+         ps <- Seq(1, 4)) {
+      val (ft, dt) =
+        bothPaths(Stats.temperatureScaling(in, "s", col("y"), passes = ps))
       assert(ft === dt, s"tempScaling passes=$ps")
+    }
+  }
+
+  test("Newton-loop fits: conf-0 job counts, 5 + 3 per iteration " +
+      "(coxPH 6 + 4)") {
+    val (lg, cnt) = (logisticRows, countRows)
+    val fits: Seq[(String, Int, Int, Int => DataFrame)] = Seq(
+      ("logisticFit", 5, 3,
+        it => Stats.logisticFit(lg, "g", "x1", col("y"), iters = it)),
+      ("logisticFit2", 5, 3,
+        it => Stats.logisticFit2(lg, "g", "x1", "x2", col("y"), iters = it)),
+      ("poissonFit", 5, 3,
+        it => Stats.poissonFit(cnt, "g", "x", "y", iters = it)),
+      ("gammaFit", 5, 3, it => Stats.gammaFit(
+        cnt.withColumn("y", col("y") + 0.5), "g", "x", "y", iters = it)),
+      ("temperatureScaling", 5, 3, it =>
+        Stats.temperatureScaling(scoredRows, "s", col("y"), passes = it)),
+      ("coxPH", 6, 4,
+        it => Stats.coxPH(coxRows, "g", "dur", col("obs"), "x", iters = it)))
+    for ((name, fixed, perIter, fit) <- fits; it <- Seq(1, 3)) {
+      val (jobs, _) = withDriverPathMaxRows(0)(jobsDuring(fit(it).collect()))
+      assert(jobs.size === fixed + perIter * it,
+        s"$name iters=$it: ${jobs.mkString(", ")}")
     }
   }
 
@@ -2239,24 +2305,10 @@ class StatsSpec extends SparkTestBase {
   test("coxPH: the r18 driver fast path equals the distributed loop " +
       "row-for-row (censoring, tied durations, multi-group, " +
       "all-censored group)") {
-    import spark.implicits._
-    val df = ((1 to 80).map { i =>
-      val dur = (i * 13) % 20 + 1
-      ("a", dur.toLong, (i % 3) != 0, (i % 7) / 2.0)
-    } ++ (1 to 40).map { i =>
-      ("b", ((i * 7) % 10 + 1).toLong, i % 2 == 0, (i % 5) / 3.0)
-    } ++ (1 to 10).map { i =>
-      ("c", (i % 4 + 1).toLong, false, i / 10.0) // zero events
-    } ++ (1 to 128).map { i =>
-      // at β = 0: S1/S0 = (1/64)/128, so U's term −1/8192 is a 12-dp tie
-      ("t", 5L, i == 1, if (i == 2) 0.015625 else 0.0)
-    }).toDF("g", "dur", "obs", "x")
+    val df = coxRows
     for (it <- Seq(1, 3)) {
-      val fast = Stats.coxPH(df, "g", "dur", col("obs"), "x", iters = it)
-        .collect().map(_.toSeq).toSet
-      val dist = withDriverPathMaxRows(0)(
-        Stats.coxPH(df, "g", "dur", col("obs"), "x", iters = it))
-        .collect().map(_.toSeq).toSet
+      val (fast, dist) =
+        bothPaths(Stats.coxPH(df, "g", "dur", col("obs"), "x", iters = it))
       assert(fast === dist, s"coxPH iters=$it")
     }
   }
