@@ -285,8 +285,10 @@ object Clustering {
     val v = vecs.select(col(idCol).cast("string").as(idc),
         col(vecCol).cast("array<double>").as(vc))
       .localCheckpoint() // k sequential passes re-read it
-    val seedRow = v.orderBy(Sampling.portableUnit(col(idc)), col(idc))
-      .limit(1).select(col(idc), col(vc)).head()
+    val seed = v.orderBy(Sampling.portableUnit(col(idc)), col(idc))
+      .limit(1).select(col(idc), col(vc)).take(1)
+    require(seed.nonEmpty, "kCenterCoreset: needs >= 1 row, got 0")
+    val seedRow = seed(0)
     var picks = Seq((1, seedRow.getString(0),
       Option.empty[Double]))
     var center = seedRow.getSeq[Double](1).toSeq
@@ -324,18 +326,13 @@ object Clustering {
       zip_with(vec, typedLit(centroid), (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, e) => acc + e), roundDp)
 
-  /** The Lloyd training loop of [[kmeansPortable]], reusable on any
-    * (id, vector) projection — [[ProductQuantizer]] runs it once per
-    * subspace. Same portable seeding, per-step rounding, and
-    * empty-cluster rule; driver state is the k·dim centroid matrix
-    * only (the sanctioned bounded collect).
-    */
   /** The (id, vector) driver fast-path gate: the collected projection
     * when it fits the [[DriverPath]] bound. The bound is byte-aware
     * (r19): rows × (8·dim + 48 bytes id/row overhead) must also fit
     * [[DriverPath.DriverMaxCollectBytes]], dim from a first-row probe
     * (an estimate is all a gate needs). Returns None (→ caller stays
-    * distributed) past either bound, when the id type's driver-side
+    * distributed) at a bound <= 0 (before the probe: no gate job at
+    * all), past either bound, when the id type's driver-side
     * ordering would not replicate Spark's, or when any null/ragged
     * row is present (those flow through the distributed kernels' own
     * null semantics). */
@@ -348,7 +345,8 @@ object Clustering {
       case ArrayType(DoubleType, _) => true
       case _ => false
     }
-    if (!idOk || !vecOk) return None
+    if (!idOk || !vecOk || DriverPath.maxRows(v.sparkSession) <= 0L)
+      return None
     val probe = v.select(size(col(vc))).limit(1).collect()
     val width = if (probe.isEmpty || probe(0).isNullAt(0)) 0
       else math.max(probe(0).getInt(0), 0)
@@ -381,14 +379,9 @@ object Clustering {
     * Spark's orderBy replica (UTF8-binary for strings, numeric for
     * integral ids). */
   private[operators] def seedOrder(ids: Array[Any]): Array[Int] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def unit(s: String): Double = {
-      md.reset()
-      val hex = md.digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-      java.lang.Long.parseLong(hex.take(15), 16) / 1152921504606846976.0
-    }
     // portableUnit casts the key to string first — replicate
-    val units = ids.map(a => unit(a.toString))
+    val units = ids.map(a =>
+      Sampling.portableBits(a.toString) / 1152921504606846976.0) // 2^60
     def idLt(a: Any, b: Any): Boolean = (a, b) match {
       case (x: String, y: String) =>
         java.util.Arrays.compareUnsigned(
@@ -408,51 +401,64 @@ object Clustering {
     * argmin-lowest-index ties, roundDp per-dim means, empty-cluster
     * keep rule. Double sums differ from the distributed avg only in
     * task order, absorbed by the roundDp freeze (the kmeansPortable
-    * portability contract the oracle replay relies on). */
+    * portability contract the oracle replay relies on). The GMM
+    * replica's init and spectral's cut run it too. */
   private[operators] def trainCentroidsDriver(ids: Array[Any],
       vecs: Array[Array[Double]], k: Int, iters: Int, roundDp: Int)
-      : Seq[Seq[Double]] = {
+      : Array[Array[Double]] = {
     val n = vecs.length
+    require(n >= k, s"kmeansPortable: needs >= $k rows, got $n")
     val dim = vecs(0).length
-    require(n >= k, s"kmeansPortable: needs >= $k rows, got ${math.min(n, k)}")
     val order = seedOrder(ids)
-    var centroids: IndexedSeq[Seq[Double]] =
-      (0 until k).map(j => vecs(order(j)).toSeq)
-    def sqDist(x: Array[Double], c: Seq[Double]): Double = {
-      var s = 0.0; var d = 0
-      while (d < dim) { val t = x(d) - c(d); s += t * t; d += 1 }
-      DriverPath.round(s, roundDp)
-    }
-    def assign(v: Int): Int = {
-      var best = 0; var bestD = sqDist(vecs(v), centroids(0)); var c = 1
-      while (c < k) {
-        val dc = sqDist(vecs(v), centroids(c))
-        if (dc < bestD) { best = c; bestD = dc }
-        c += 1
-      }
-      best
-    }
+    var centroids = Array.tabulate(k)(j => vecs(order(j)))
     for (_ <- 1 to iters) {
       val sums = Array.fill(k, dim)(0.0)
       val cnts = new Array[Long](k)
       var v = 0
       while (v < n) {
-        val c = assign(v)
+        val c = nearest(vecs(v), centroids, roundDp)._1
         cnts(c) += 1L
         var d = 0
         while (d < dim) { sums(c)(d) += vecs(v)(d); d += 1 }
         v += 1
       }
-      centroids = (0 until k).map { c =>
+      centroids = Array.tabulate(k) { c =>
         if (cnts(c) > 0L)
-          (0 until dim).map(d =>
+          Array.tabulate(dim)(d =>
             DriverPath.round(sums(c)(d) / cnts(c), roundDp))
-        else centroids(c)
+        else centroids(c) // empty cluster: centroid stands
       }
     }
-    centroids.map(_.toSeq)
+    centroids
   }
 
+  /** [[sqDistTo]]'s driver twin: the squares folded left from 0.0, one
+    * round at `dp`. */
+  private def sqDist(x: Array[Double], c: Array[Double], dp: Int): Double = {
+    var s = 0.0; var d = 0
+    while (d < x.length) { val t = x(d) - c(d); s += t * t; d += 1 }
+    DriverPath.round(s, dp)
+  }
+
+  /** [[assignToCentroids]]' driver twin: the index of the nearest
+    * centroid (ties to the lowest) and its [[sqDist]]. */
+  private def nearest(x: Array[Double], cs: Array[Array[Double]],
+      dp: Int): (Int, Double) = {
+    var best = 0; var bestD = sqDist(x, cs(0), dp); var c = 1
+    while (c < cs.length) {
+      val dc = sqDist(x, cs(c), dp)
+      if (dc < bestD) { best = c; bestD = dc }
+      c += 1
+    }
+    (best, bestD)
+  }
+
+  /** The Lloyd training loop of [[kmeansPortable]], reusable on any
+    * (id, vector) projection — [[ProductQuantizer]] runs it once per
+    * subspace. Same portable seeding, per-step rounding, and
+    * empty-cluster rule; driver state is the k·dim centroid matrix
+    * only (the sanctioned bounded collect).
+    */
   private[operators] def trainCentroids(v: DataFrame, idc: String,
       vc: String, k: Int, iters: Int, roundDp: Int): Seq[Seq[Double]] = {
     require(k >= 1, s"kmeansPortable: k must be >= 1, got $k")
@@ -466,7 +472,7 @@ object Clustering {
     // byte-aware ([[collectVectors]]).
     collectVectors(v, idc, vc) match {
       case Some((ids, vecs)) =>
-        trainCentroidsDriver(ids, vecs, k, iters, roundDp)
+        trainCentroidsDriver(ids, vecs, k, iters, roundDp).map(_.toSeq).toSeq
       case None => lloydCentroids(v, idc, vc, k, iters, roundDp)
     }
   }
@@ -474,7 +480,6 @@ object Clustering {
   /** The distributed Lloyd loop behind [[trainCentroids]]. */
   private def lloydCentroids(v: DataFrame, idc: String, vc: String,
       k: Int, iters: Int, roundDp: Int): Seq[Seq[Double]] = {
-    val dim = v.select(size(col(vc))).head().getInt(0)
     var centroids: Seq[Seq[Double]] = v
       .orderBy(Sampling.portableUnit(col(idc)), col(idc))
       .limit(k)
@@ -482,6 +487,7 @@ object Clustering {
       .map(_.getSeq[Double](0).toSeq)
     require(centroids.size == k,
       s"kmeansPortable: needs >= $k rows, got ${centroids.size}")
+    val dim = centroids.head.length
     for (_ <- 1 to iters) {
       val dimAvgs = (0 until dim).map(i =>
         round(avg(element_at(col(vc), i + 1)), roundDp).as(s"m$i"))
@@ -671,16 +677,10 @@ object Clustering {
       ids: Array[Any], vecs: Array[Array[Double]], k: Int, passes: Int,
       kmeansIters: Int, varFloor: Double): DataFrame = {
     val n = vecs.length
+    var mu = trainCentroidsDriver(ids, vecs, k, kmeansIters, 6)
     val dim = vecs(0).length
-    var mu: Array[Array[Double]] =
-      trainCentroidsDriver(ids, vecs, k, kmeansIters, 6).map(_.toArray).toArray
     var s2: Array[Double] = Array.fill(k)(1.0)
     var pi: Array[Double] = Array.fill(k)(DriverPath.round(1.0 / k, 6))
-    def sqDist12(x: Array[Double], c: Array[Double]): Double = {
-      var s = 0.0; var d = 0
-      while (d < dim) { val t = x(d) - c(d); s += t * t; d += 1 }
-      DriverPath.round(s, 12)
-    }
     // responsibilities of row v under the CURRENT (mu, s2, pi): the
     // identical 12-dp score trees (the lit() constants are computed
     // in Scala on both paths), max-shifted exp fold in array order
@@ -689,7 +689,7 @@ object Clustering {
       var c = 0
       while (c < k) {
         s(c) = DriverPath.round((math.log(pi(c)) - 0.5 * dim * math.log(s2(c)))
-          - sqDist12(vecs(v), mu(c)) / (2.0 * s2(c)), 12)
+          - sqDist(vecs(v), mu(c), 12) / (2.0 * s2(c)), 12)
         c += 1
       }
       var mx = s(0); c = 1
@@ -729,7 +729,7 @@ object Clustering {
       while (v < n) {
         val r = resp(v)
         var c = 0
-        while (c < k) { sds(c) += r(c) * sqDist12(vecs(v), newMu(c)); c += 1 }
+        while (c < k) { sds(c) += r(c) * sqDist(vecs(v), newMu(c), 12); c += 1 }
         v += 1
       }
       s2 = Array.tabulate(k) { c =>
@@ -813,11 +813,11 @@ object Clustering {
           kmeansIters, varFloor)
       case None =>
     }
-    val dim = v.select(size(col(vc))).head().getInt(0)
     val n = v.count()
     var mu: IndexedSeq[Seq[Double]] =
       lloydCentroids(v, idc, vc, k, kmeansIters, 6) // v is not collectable
         .toIndexedSeq
+    val dim = mu(0).length
     var s2: IndexedSeq[Double] = IndexedSeq.fill(k)(1.0)
     var pi: IndexedSeq[Double] =
       IndexedSeq.fill(k)(DriverPath.round(1.0 / k, 6))
@@ -1066,16 +1066,11 @@ object Clustering {
     val wts = Array.tabulate(n)(v => adj(v).map(w =>
       DriverPath.round(
         1.0 / math.sqrt(deg(v).toDouble * deg(w).toDouble), 12)))
-    // Sampling.portableUnit: first 15 md5 hex chars as long / 2^60
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def unit(s: String): Double = {
-      md.reset()
-      val hex = md.digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-      java.lang.Long.parseLong(hex.take(15), 16) / 1152921504606846976.0
-    }
-    val units = Array.tabulate(n)(v => unit(names(v)))
+    // the init: portableUnit − ½ at 6 dp
+    val x0 = Array.tabulate(n)(v => DriverPath.round(
+      Sampling.portableBits(names(v)) / 1152921504606846976.0 - 0.5, 6))
     def powerVec(proj: Array[Array[Double]]): Array[Double] = {
-      var x = Array.tabulate(n)(v => DriverPath.round(units(v) - 0.5, 6))
+      var x = x0
       for (_ <- 1 to powerIters) {
         val y = Array.tabulate(n) { v =>
           var s = 0.0; val nb = adj(v); val ws = wts(v); var j = 0
@@ -1111,60 +1106,16 @@ object Clustering {
       proj = proj :+ ej
     }
     // spectral embedding: the first k−1 coordinates feed the cut
-    val dim = k - 1
-    val evs = Array.tabulate(n)(v => Array.tabulate(dim)(d => eig(d)(v)))
-    // [[sqDistTo]] replica: zip_with squares, left-fold sum from 0.0,
-    // ONE round at the end
-    def sqDist(x: Array[Double], c: Seq[Double], dp: Int): Double = {
-      var s = 0.0; var d = 0
-      while (d < dim) { val t = x(d) - c(d); s += t * t; d += 1 }
-      DriverPath.round(s, dp)
-    }
-    def assign(cents: IndexedSeq[Seq[Double]], v: Int): (Int, Double) = {
-      var best = 0; var bestD = sqDist(evs(v), cents(0), 6); var c = 1
-      while (c < cents.length) {
-        val dc = sqDist(evs(v), cents(c), 6)
-        if (dc < bestD) { best = c; bestD = dc } // ties keep lowest idx
-        c += 1
-      }
-      (best, bestD)
-    }
-    // [[trainCentroids]] seed: k smallest under (portableUnit, UTF8-
-    // binary id) total order
-    val order = (0 until n).sortWith { (a, b) =>
-      if (units(a) != units(b)) units(a) < units(b)
-      else java.util.Arrays.compareUnsigned(
-        names(a).getBytes("UTF-8"), names(b).getBytes("UTF-8")) < 0
-    }
-    var centroids: IndexedSeq[Seq[Double]] =
-      order.take(k).map(v => evs(v).toSeq).toIndexedSeq
-    require(centroids.size == k,
-      s"kmeansPortable: needs >= $k rows, got ${centroids.size}")
-    for (_ <- 1 to lloydIters) {
-      val sums = Array.fill(k, dim)(0.0)
-      val cnts = new Array[Long](k)
-      var v = 0
-      while (v < n) {
-        val (c, _) = assign(centroids, v)
-        cnts(c) += 1L
-        var d = 0
-        while (d < dim) { sums(c)(d) += evs(v)(d); d += 1 }
-        v += 1
-      }
-      centroids = (0 until k).map { c =>
-        if (cnts(c) > 0L) // empty cluster: centroid stands
-          (0 until dim).map(d =>
-            DriverPath.round(sums(c)(d) / cnts(c), 6))
-        else centroids(c)
-      }
-    }
+    val evs = Array.tabulate(n)(v => Array.tabulate(k - 1)(d => eig(d)(v)))
+    val centroids = trainCentroidsDriver(names.toArray[Any], evs, k,
+      lloydIters, 6)
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("vertex", StringType),
       StructField("e2", DoubleType), StructField("e3", DoubleType),
       StructField("cluster", IntegerType),
       StructField("dist", DoubleType)))
     val rows = (0 until n).map { v =>
-      val (c, dist) = assign(centroids, v)
+      val (c, dist) = nearest(evs(v), centroids, 6)
       org.apache.spark.sql.Row(names(v), eig(0)(v), eig(1)(v), c, dist)
     }
     DriverPath.frame(spark, rows, schema)

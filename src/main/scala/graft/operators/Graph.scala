@@ -2220,6 +2220,48 @@ object Graph {
     (g.names, symAdjacency(g.n, g.src, g.dst))
   }
 
+  /** The per-source hop BFS of the harmonic replicas: from every
+    * source v, a visited-stamped frontier walk of exactly `maxHops`
+    * hops (an exhausted frontier reaches nothing more). `reach(v, w)`
+    * sees each vertex w the walk from v reaches, v itself first;
+    * `hop(v, h, shell)` follows hop h with the number of vertices
+    * first reached there. */
+  private def hopBfs(adj: Array[Array[Int]], maxHops: Int)(
+      reach: (Int, Int) => Unit)(hop: (Int, Int, Int) => Unit): Unit = {
+    val n = adj.length
+    val visited = Array.fill(n)(-1)
+    var frontier = new Array[Int](n)
+    var next = new Array[Int](n)
+    var v = 0
+    while (v < n) {
+      visited(v) = v
+      reach(v, v)
+      frontier(0) = v
+      var fLen = 1
+      var h = 1
+      while (h <= maxHops) {
+        var nLen = 0
+        var i = 0
+        while (i < fLen) {
+          val nb = adj(frontier(i))
+          var j = 0
+          while (j < nb.length) {
+            val w = nb(j)
+            if (visited(w) != v) {
+              visited(w) = v; reach(v, w); next(nLen) = w; nLen += 1
+            }
+            j += 1
+          }
+          i += 1
+        }
+        hop(v, h, nLen)
+        val t = frontier; frontier = next; next = t; fLen = nLen
+        h += 1
+      }
+      v += 1
+    }
+  }
+
   /** Materialize driver-computed harmonic rows as a DataFrame with the
     * distributed twins' exact schema (vertex, n_hop1..H, harmonic). */
   private def driverRowsToDf(edges: DataFrame,
@@ -2274,50 +2316,17 @@ object Graph {
     DriverPath.rows(canon) match {
       case Some(rows) =>
         val (names, adj) = denseAdjacency(rows)
-        val n = names.length
-        val visited = Array.fill(n)(-1)
-        val bufA = new Array[Int](n)
-        val bufB = new Array[Int](n)
-        val out = new Array[org.apache.spark.sql.Row](n)
-        var v = 0
-        while (v < n) {
-          val hopCounts = new Array[Long](maxHops)
-          visited(v) = v
-          var frontier = bufA
-          var next = bufB
-          var fLen = 0
-          val nb0 = adj(v)
-          var i = 0
-          while (i < nb0.length) {
-            val w = nb0(i)
-            if (visited(w) != v) { visited(w) = v; frontier(fLen) = w; fLen += 1 }
-            i += 1
+        val out = new Array[org.apache.spark.sql.Row](names.length)
+        val hopCounts = new Array[Long](maxHops)
+        hopBfs(adj, maxHops)((_, _) => ()) { (v, h, shell) =>
+          hopCounts(h - 1) = shell
+          if (h == maxHops) {
+            var harm = 0.0
+            var k = 1
+            while (k <= maxHops) { harm += hopCounts(k - 1) / k.toDouble; k += 1 }
+            out(v) = org.apache.spark.sql.Row.fromSeq(
+              names(v) +: hopCounts.toSeq :+ DriverPath.round(harm, 6))
           }
-          hopCounts(0) = fLen
-          var h = 2
-          while (h <= maxHops && fLen > 0) {
-            var nLen = 0
-            i = 0
-            while (i < fLen) {
-              val nb = adj(frontier(i))
-              var j = 0
-              while (j < nb.length) {
-                val w = nb(j)
-                if (visited(w) != v) { visited(w) = v; next(nLen) = w; nLen += 1 }
-                j += 1
-              }
-              i += 1
-            }
-            hopCounts(h - 1) = nLen
-            val t = frontier; frontier = next; next = t; fLen = nLen
-            h += 1
-          }
-          var harm = 0.0
-          var k = 1
-          while (k <= maxHops) { harm += hopCounts(k - 1) / k.toDouble; k += 1 }
-          out(v) = org.apache.spark.sql.Row.fromSeq(
-            names(v) +: hopCounts.toSeq :+ DriverPath.round(harm, 6))
-          v += 1
         }
         return driverRowsToDf(edges, out,
           (1 to maxHops).map(h => s"n_hop$h"))
@@ -2410,75 +2419,32 @@ object Graph {
         val (names, adj) = denseAdjacency(rows)
         val n = names.length
         val m = 1 << p
-        val hashes = new Array[Long](n)
-        var i = 0
-        while (i < n) {
-          hashes(i) = XxHash64Function.hash(UTF8String.fromString(names(i)),
-            org.apache.spark.sql.types.StringType, graft.functions.HllReach.Seed)
-          i += 1
-        }
-        val visited = Array.fill(n)(-1)
-        val bufA = new Array[Int](n)
-        val bufB = new Array[Int](n)
+        val hashes = Array.tabulate(n)(i => XxHash64Function.hash(
+          UTF8String.fromString(names(i)),
+          org.apache.spark.sql.types.StringType, graft.functions.HllReach.Seed))
         val reg = new Array[Byte](m)
         val out = new Array[org.apache.spark.sql.Row](n)
-        var v = 0
-        while (v < n) {
-          java.util.Arrays.fill(reg, 0.toByte)
-          graft.functions.HllReach.insertHashed(reg, p, hashes(v))
-          visited(v) = v
-          val balls = new Array[Double](maxHops)
-          var frontier = bufA
-          var next = bufB
-          var fLen = 0
-          val nb0 = adj(v)
-          i = 0
-          while (i < nb0.length) {
-            val w = nb0(i)
-            if (visited(w) != v) {
-              visited(w) = v
-              graft.functions.HllReach.insertHashed(reg, p, hashes(w))
-              frontier(fLen) = w; fLen += 1
+        val balls = new Array[Double](maxHops)
+        hopBfs(adj, maxHops) { (v, w) =>
+          if (w == v) java.util.Arrays.fill(reg, 0.toByte) // a new source
+          graft.functions.HllReach.insertHashed(reg, p, hashes(w))
+        } { (v, h, _) =>
+          balls(h - 1) = graft.functions.HllReach.estimate(reg)
+          if (h == maxHops) {
+            val shells = new Array[Double](maxHops)
+            var k = 1
+            while (k <= maxHops) {
+              val prev = if (k == 1) 1.0 else balls(k - 2)
+              shells(k - 1) = math.max(0.0, balls(k - 1) - prev)
+              k += 1
             }
-            i += 1
+            var harm = 0.0
+            k = 1
+            while (k <= maxHops) { harm += shells(k - 1) / k.toDouble; k += 1 }
+            out(v) = org.apache.spark.sql.Row.fromSeq(
+              names(v) +: shells.toSeq.map(DriverPath.round(_, 2))
+                :+ DriverPath.round(harm, 6))
           }
-          balls(0) = graft.functions.HllReach.estimate(reg)
-          var h = 2
-          while (h <= maxHops) {
-            var nLen = 0
-            i = 0
-            while (i < fLen) {
-              val nb = adj(frontier(i))
-              var j = 0
-              while (j < nb.length) {
-                val w = nb(j)
-                if (visited(w) != v) {
-                  visited(w) = v
-                  graft.functions.HllReach.insertHashed(reg, p, hashes(w))
-                  next(nLen) = w; nLen += 1
-                }
-                j += 1
-              }
-              i += 1
-            }
-            balls(h - 1) = graft.functions.HllReach.estimate(reg)
-            val t = frontier; frontier = next; next = t; fLen = nLen
-            h += 1
-          }
-          val shells = new Array[Double](maxHops)
-          var k = 1
-          while (k <= maxHops) {
-            val prev = if (k == 1) 1.0 else balls(k - 2)
-            shells(k - 1) = math.max(0.0, balls(k - 1) - prev)
-            k += 1
-          }
-          var harm = 0.0
-          k = 1
-          while (k <= maxHops) { harm += shells(k - 1) / k.toDouble; k += 1 }
-          out(v) = org.apache.spark.sql.Row.fromSeq(
-            names(v) +: shells.toSeq.map(DriverPath.round(_, 2))
-              :+ DriverPath.round(harm, 6))
-          v += 1
         }
         return driverRowsToDf(edges, out,
           (1 to maxHops).map(h => s"n_hop$h"),

@@ -36,13 +36,8 @@ object Projection {
     * dimension j over input dimensions 0..inDim-1.
     */
   def signMatrix(inDim: Int, outDim: Int, seed: String): Array[Array[Double]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
     Array.tabulate(outDim, inDim) { (j, i) =>
-      md.reset()
-      val hex = md.digest(s"$seed:$i:$j".getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString
-      val v = java.lang.Long.parseLong(hex.take(15), 16)
-      if ((v & 1L) == 1L) 1.0 else -1.0
+      if ((Sampling.portableBits(s"$seed:$i:$j") & 1L) == 1L) 1.0 else -1.0
     }
   }
 

@@ -230,6 +230,17 @@ object Sampling {
     conv(substring(md5(keyCol.cast("string")), 1, 15), 16, 10)
       .cast("long") / lit(1152921504606846976.0) // 2^60
 
+  private val md5Digest = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  /** The 60-bit integer [[portableUnit]] reads from md5(`key`) — the
+    * first 15 hex digits are the top 60 bits of the digest's first 8
+    * bytes — for driver code that replays the draw; over 2^60 it is
+    * the unit itself. */
+  def portableBits(key: String): Long =
+    java.nio.ByteBuffer.wrap(md5Digest.get().digest(
+      key.getBytes(java.nio.charset.StandardCharsets.UTF_8))).getLong >>> 4
+
   /** Deterministic weighted corpus mixture — the training-data mixing
     * step: keep each source's rows with probability = its weight, tag
     * provenance in `tagCol`, and union by name. The draw hashes

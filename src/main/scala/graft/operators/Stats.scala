@@ -32,6 +32,31 @@ object Stats {
   /** The type of every 12-dp frozen, order-free term sum. */
   private val dec12 = "decimal(38,12)"
 
+  /** The type of every exact integer count or scaled-integer sum. */
+  private val dec = "decimal(38,0)"
+
+  /** Appends `med`, the exact LOWER median of `v` within each `_g`:
+    * the value at rank ⌊(n+1)/2⌋ of the group's `v` order (`rn`
+    * holds the rank). The group count `n` is added unless the frame
+    * carries it already. */
+  private def lowerMedian(df: DataFrame, v: String, med: String,
+      n: String = "_n", rn: String = "_rn"): DataFrame = {
+    val wg = Window.partitionBy("_g")
+    val ranked = df.withColumn(rn, row_number().over(wg.orderBy(v)))
+    val counted =
+      if (df.columns.contains(n)) ranked
+      else ranked.withColumn(n, count(lit(1)).over(wg))
+    counted.withColumn(med, max(when(
+      col(rn) === floor((col(n) + 1) / 2).cast("bigint"), col(v))).over(wg))
+  }
+
+  /** [[lowerMedian]] `_med` of `_x` per `_g`, the absolute deviation
+    * `_ad` and its lower median `_mad` (rank `_rna`). */
+  private def medianMad(pts: DataFrame): DataFrame =
+    lowerMedian(lowerMedian(pts, "_x", "_med")
+      .withColumn("_ad", abs(col("_x") - col("_med"))),
+      "_ad", "_mad", rn = "_rna")
+
   /** Per-group two-sample Kolmogorov–Smirnov statistic of `valueCol`
     * against the complement (all other groups pooled) — the
     * distribution-shift detector for "did this source/slice drift away
@@ -225,7 +250,6 @@ object Stats {
       .withColumn("_cbelow", coalesce(
         sum("_e").over(Window.orderBy(col("_tq"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val dec = "decimal(38,0)"
     val nn = totals.agg(sum("_e").as("_n"),
       sum((col("_e").cast(dec) * col("_e") * col("_e") - col("_e"))
         .cast(dec)).as("_ties"))
@@ -303,7 +327,6 @@ object Stats {
       .withColumn("_cbelow", coalesce(
         sum("_e").over(Window.orderBy(col("_tq"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val dec = "decimal(38,0)"
     val nn = totals.agg(sum("_e").as("_n"),
       sum((col("_e").cast(dec) * col("_e") * col("_e") - col("_e"))
         .cast(dec)).as("_ties"))
@@ -405,7 +428,6 @@ object Stats {
   def rollingCorr(df: DataFrame, groupCol: String, orderCol: String,
       xCol: String, yCol: String, window: Int): DataFrame = {
     require(window >= 2, s"rollingCorr: window must be >= 2")
-    val dec = "decimal(38,0)"
     val pts = df.select(col(groupCol).as("_g"), col(orderCol).as("_o"),
       round(col(xCol) * 1e6).cast("long").as("_x"),
       round(col(yCol) * 1e6).cast("long").as("_y"))
@@ -448,7 +470,6 @@ object Stats {
   def rollingSlope(df: DataFrame, groupCol: String, orderCol: String,
       xCol: String, yCol: String, window: Int): DataFrame = {
     require(window >= 2, s"rollingSlope: window must be >= 2")
-    val dec = "decimal(38,0)"
     val pts = df.select(col(groupCol).as("_g"), col(orderCol).as("_o"),
       round(col(xCol) * 1e6).cast("long").as("_x"),
       round(col(yCol) * 1e6).cast("long").as("_y"))
@@ -574,23 +595,14 @@ object Stats {
       .select(col("_g"),
         round((col("_y2") - col("_y1")) / (col("_x2") - col("_x1")), 6)
           .as("_s"))
-    val wS = Window.partitionBy("_g").orderBy("_s")
-    val wG = Window.partitionBy("_g")
-    val medRank = floor((col("_nq") + 1) / 2).cast("bigint")
-    val slopeMed = slopes
-      .withColumn("_rn", row_number().over(wS))
-      .withColumn("_nq", count(lit(1)).over(wG))
-      .withColumn("_med", max(when(col("_rn") === medRank, col("_s"))).over(wG))
+    val slopeMed = lowerMedian(slopes, "_s", "_med", n = "_nq")
       .groupBy(col("_g").as("_gm"))
       .agg(count(lit(1)).as("n_pairs"), max("_med").as("slope"))
     val withSlope = pts.join(slopeMed, col("_g") <=> col("_gm"), "left")
-    val wI = Window.partitionBy("_g").orderBy("_i")
-    val interMed = withSlope
-      .filter(col("slope").isNotNull)
-      .withColumn("_i", round(col("_y") - col("slope") * col("_x"), 6))
-      .withColumn("_rn", row_number().over(wI))
-      .withColumn("_nq", count(lit(1)).over(wG))
-      .withColumn("_imed", max(when(col("_rn") === medRank, col("_i"))).over(wG))
+    val interMed = lowerMedian(withSlope
+        .filter(col("slope").isNotNull)
+        .withColumn("_i", round(col("_y") - col("slope") * col("_x"), 6)),
+        "_i", "_imed", n = "_nq")
       .groupBy(col("_g").as("_gi"))
       .agg(max("_imed").as("intercept"))
     pts.groupBy("_g").agg(count(lit(1)).as("n"))
@@ -652,14 +664,10 @@ object Stats {
       .agg(count(lit(1)).as("n_pairs"), max("_k").as("k_neg"),
         max("_med").as("slope"))
     val withSlope = pts.join(slopeMed, col("_g") <=> col("_gm"), "left")
-    val wI = Window.partitionBy("_g").orderBy("_i")
-    val medRank = floor((col("_nq") + 1) / 2).cast("bigint")
-    val interMed = withSlope
-      .filter(col("slope").isNotNull)
-      .withColumn("_i", round(col("_y") - col("slope") * col("_x"), 6))
-      .withColumn("_rn", row_number().over(wI))
-      .withColumn("_nq", count(lit(1)).over(wG))
-      .withColumn("_imed", max(when(col("_rn") === medRank, col("_i"))).over(wG))
+    val interMed = lowerMedian(withSlope
+        .filter(col("slope").isNotNull)
+        .withColumn("_i", round(col("_y") - col("slope") * col("_x"), 6)),
+        "_i", "_imed", n = "_nq")
       .groupBy(col("_g").as("_gi"))
       .agg(max("_imed").as("intercept"))
     pts.groupBy("_g").agg(count(lit(1)).as("n"))
@@ -884,14 +892,7 @@ object Stats {
     val pts = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"), col(orderCol).as("_o"),
         round(col(valueCol) * 1e6).cast("long").as("_q"))
-    val wv = Window.partitionBy("_g").orderBy("_q")
-    val wg = Window.partitionBy("_g")
-    val medRank = floor((col("_n") + 1) / 2).cast("bigint")
-    val withMed = pts
-      .withColumn("_rn", row_number().over(wv))
-      .withColumn("_n", count(lit(1)).over(wg))
-      .withColumn("_med",
-        max(when(col("_rn") === medRank, col("_q"))).over(wg))
+    val withMed = lowerMedian(pts, "_q", "_med")
       .filter(col("_q") =!= col("_med"))
       .withColumn("_above", col("_q") > col("_med"))
     val wOrd = Window.partitionBy("_g").orderBy("_o")
@@ -1009,20 +1010,7 @@ object Stats {
       .filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol) * 1e6).cast("bigint").as("_x"))
-    val wv = Window.partitionBy("_g").orderBy("_x")
-    val wg = Window.partitionBy("_g")
-    val medRank = floor((col("_n") + 1) / 2).cast("bigint")
-    val withMed = pts
-      .withColumn("_rn", row_number().over(wv))
-      .withColumn("_n", count(lit(1)).over(wg))
-      .withColumn("_med",
-        max(when(col("_rn") === medRank, col("_x"))).over(wg))
-      .withColumn("_ad", abs(col("_x") - col("_med")))
-    val wa = Window.partitionBy("_g").orderBy("_ad")
-    withMed
-      .withColumn("_rna", row_number().over(wa))
-      .withColumn("_mad",
-        max(when(col("_rna") === medRank, col("_ad"))).over(wg))
+    medianMad(pts)
       .groupBy(col("_g").as(groupCol))
       .agg(count(lit(1)).as("n"),
         round(max("_med") / 1e6, 6).cast("double").as("median"),
@@ -1136,20 +1124,7 @@ object Stats {
       case Some(rows) => return huberDriverDf(df, pts, rows, groupCol, k, iters)
       case None =>
     }
-    val wv = Window.partitionBy("_g").orderBy("_x")
-    val wg = Window.partitionBy("_g")
-    val medRank = floor((col("_n") + 1) / 2).cast("bigint")
-    val withMed = pts
-      .withColumn("_rn", row_number().over(wv))
-      .withColumn("_n", count(lit(1)).over(wg))
-      .withColumn("_med",
-        max(when(col("_rn") === medRank, col("_x"))).over(wg))
-      .withColumn("_ad0", abs(col("_x") - col("_med")))
-    val wa = Window.partitionBy("_g").orderBy("_ad0")
-    val rows = withMed
-      .withColumn("_rna", row_number().over(wa))
-      .withColumn("_mad",
-        max(when(col("_rna") === medRank, col("_ad0"))).over(wg))
+    val rows = medianMad(pts)
       .select("_g", "_x", "_med", "_mad")
       .localCheckpoint() // re-read every iteration
     var params = rows.groupBy("_g")
@@ -1307,7 +1282,6 @@ object Stats {
     * one-row global. Output: (group, n_group, n_rest, cohens_d).
     */
   def cohensD(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol) * 1e6).cast("long").as("_x"))
@@ -1730,7 +1704,6 @@ object Stats {
       .groupBy(col("_g"), abs(col("_d")).as("_ad"))
       .agg(count(lit(1)).as("_e"),
         sum(when(col("_d") > 0, 1L).otherwise(0L)).as("_p"))
-    val dec = "decimal(38,0)"
     val wBelow = Window.partitionBy("_g").orderBy("_ad")
       .rowsBetween(Window.unboundedPreceding, -1)
     val perG = cells
@@ -2111,7 +2084,6 @@ object Stats {
   def concordanceIndex(df: DataFrame, durationCol: String,
       observed: Column, riskCol: String, maxPoints: Int = 5000)
       : DataFrame = {
-    val dec = "decimal(38,0)"
     val raw = df
       .filter(col(durationCol).isNotNull && observed.isNotNull
         && col(riskCol).isNotNull)
@@ -2186,7 +2158,6 @@ object Stats {
     * Output: one row (n, n_a_levels, n_b_levels, dof, chi2, cramers_v).
     */
   def chiSquared(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val cells = df.groupBy(col(aCol).as("_a"), col(bCol).as("_b"))
       .agg(count(lit(1)).as("_o"))
     val rows = cells.groupBy(col("_a").as("_ar"))
@@ -2249,7 +2220,6 @@ object Stats {
   def jarqueBera(df: DataFrame, groupCol: String, valueCol: String,
       scale: Int = 100): DataFrame = {
     require(scale >= 1, s"scale=$scale must be >= 1")
-    val dec = "decimal(38,0)"
     val x = round(col(valueCol) * scale).cast("long")
     val sums = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"), x.as("_x"))
@@ -2300,7 +2270,6 @@ object Stats {
   def dagostinoK2(df: DataFrame, groupCol: String, valueCol: String,
       scale: Int = 100): DataFrame = {
     require(scale >= 1, s"scale=$scale must be >= 1")
-    val dec = "decimal(38,0)"
     val x = round(col(valueCol) * scale).cast("long")
     val sums = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"), x.as("_x"))
@@ -2394,7 +2363,6 @@ object Stats {
   def cvmBinned(df: DataFrame, groupCol: String, valueCol: String,
       bins: Int): DataFrame = {
     require(bins >= 2, s"bins=$bins must be >= 2")
-    val dec = "decimal(38,0)"
     val stats = df.agg(min(col(valueCol)).as("_lo"),
       max(col(valueCol)).as("_hi"))
     val points = df.crossJoin(broadcast(stats))
@@ -2642,7 +2610,6 @@ object Stats {
   def intervalScore(df: DataFrame, groupCol: String, valueCol: String,
       alpha: Double = 0.05, z: Double = 1.959964): DataFrame = {
     require(alpha > 0.0 && alpha < 1.0, s"intervalScore: alpha in (0,1)")
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol) * 1e6).cast("long").as("_y"))
@@ -2749,7 +2716,6 @@ object Stats {
     */
   def cochranArmitage(df: DataFrame, groupCol: String, bucket: Column,
       success: Column): DataFrame = {
-    val dec = "decimal(38,0)"
     val cells = df
       .select(col(groupCol).as("_g"), bucket.cast("long").as("_s"),
         when(success, 1L).otherwise(0L).as("_y"))
@@ -2880,7 +2846,6 @@ object Stats {
     */
   def dickeyFuller(df: DataFrame, groupCol: String, orderCol: String,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val w = Window.partitionBy("_g").orderBy("_o")
     val pairs = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"), col(orderCol).as("_o"),
@@ -2955,7 +2920,6 @@ object Stats {
 
   def linearFit(df: DataFrame, groupCol: String, xCol: String,
       yCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val sums = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(xCol) * 1e6).cast("long").as("_x"),
@@ -3011,7 +2975,6 @@ object Stats {
         s"2x2 solve); got ${xCols.size} — for p=1 use linearFit, " +
         "for p=3 use linearFitMulti3")
     val Seq(x1c, x2c) = xCols
-    val dec = "decimal(38,0)"
     val rows = df.filter(col(x1c).isNotNull && col(x2c).isNotNull
         && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"),
@@ -3149,7 +3112,6 @@ object Stats {
     val zPower = MdeZ.getOrElse(("power", power), sys.error(
       s"minDetectableEffect: unsupported power=$power — pinned grid: " +
         MdeZ.keys.filter(_._1 == "power").map(_._2).toSeq.sorted.mkString(", ")))
-    val dec = "decimal(38,0)"
     val sums = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol) * 1e6).cast("long").as("_x"))
@@ -3206,7 +3168,6 @@ object Stats {
     */
   def weightedLinearFit(df: DataFrame, groupCol: String, xCol: String,
       yCol: String, wCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val rows = df.filter(col(xCol).isNotNull && col(yCol).isNotNull
         && col(wCol).isNotNull)
       .select(col(groupCol).as("_g"),
@@ -3265,7 +3226,6 @@ object Stats {
     require(xCols.size == 2, s"ridgeFit: exactly 2 covariates")
     require(lambda >= 0.0, s"ridgeFit: lambda must be >= 0, got $lambda")
     val Seq(x1c, x2c) = xCols
-    val dec = "decimal(38,0)"
     val rows = df.filter(col(x1c).isNotNull && col(x2c).isNotNull
         && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"),
@@ -3483,7 +3443,6 @@ object Stats {
     */
   def deltaMethodRatio(df: DataFrame, groupCol: String, unitCol: String,
       numCol: String, denCol: String): DataFrame = {
-    val dec = "decimal(38,12)"
     val units = df
       .groupBy(col(groupCol).as("_g"), col(unitCol).as("_u"))
       .agg(round(sum(round(col(numCol), 6).cast("decimal(38,6)"))
@@ -3492,11 +3451,11 @@ object Stats {
           .cast("double"), 6).as("_y"))
     val folded = units.groupBy(col("_g"))
       .agg(count(lit(1)).as("n_units"),
-        sum(col("_x").cast(dec)).as("_sx"),
-        sum(col("_y").cast(dec)).as("_sy"),
-        sum(round(col("_x") * col("_x"), 12).cast(dec)).as("_sxx"),
-        sum(round(col("_x") * col("_y"), 12).cast(dec)).as("_sxy"),
-        sum(round(col("_y") * col("_y"), 12).cast(dec)).as("_syy"))
+        sum(col("_x").cast(dec12)).as("_sx"),
+        sum(col("_y").cast(dec12)).as("_sy"),
+        sum(round(col("_x") * col("_x"), 12).cast(dec12)).as("_sxx"),
+        sum(round(col("_x") * col("_y"), 12).cast(dec12)).as("_sxy"),
+        sum(round(col("_y") * col("_y"), 12).cast(dec12)).as("_syy"))
     val nD = col("n_units").cast("double")
     val okR = col("n_units") >= 2 && d("_sy") =!= 0.0
     val r = round(d("_sx") / d("_sy"), 12)
@@ -3640,7 +3599,6 @@ object Stats {
     require(xCols.size == 2, "doubleMlAte: exactly 2 confounders")
     require(lambda >= 0.0, s"doubleMlAte: lambda must be >= 0, got $lambda")
     val Seq(x1c, x2c) = xCols
-    val dec = "decimal(38,0)"
     val rows = df.filter(col(x1c).isNotNull && col(x2c).isNotNull
         && col(yCol).isNotNull && treat.isNotNull)
       .select(col(groupCol).as("_g"),
@@ -3747,7 +3705,6 @@ object Stats {
     require(xCols.size == 3,
       s"linearFitMulti3: exactly 3 covariates, got ${xCols.size}")
     val Seq(x1c, x2c, x3c) = xCols
-    val dec = "decimal(38,0)"
     val rows = df.filter(col(x1c).isNotNull && col(x2c).isNotNull
         && col(x3c).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"),
@@ -3983,7 +3940,6 @@ object Stats {
     * summed in decimal(38,12) (the kruskalWallis discipline); the
     * scale factor cancels in F, so nothing descales. */
   private[graft] def anovaCore(points: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val byG = points.groupBy("_g")
       .agg(count(lit(1)).as("_ng"),
         sum(col("_x").cast(dec)).as("_s1"),
@@ -4128,13 +4084,7 @@ object Stats {
     val pts = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol) * 1e6).cast("long").as("_x"))
-    val wv = Window.partitionBy("_g").orderBy("_x")
-    val wg = Window.partitionBy("_g")
-    val medRank = floor((col("_n") + 1) / 2).cast("bigint")
-    anovaOnPoints(pts
-      .withColumn("_rn", row_number().over(wv))
-      .withColumn("_n", count(lit(1)).over(wg))
-      .withColumn("_med", max(when(col("_rn") === medRank, col("_x"))).over(wg))
+    anovaOnPoints(lowerMedian(pts, "_x", "_med")
       .select(col("_g"), abs(col("_x") - col("_med")).as("_x")))
   }
 
@@ -4301,7 +4251,6 @@ object Stats {
     */
   def conoverSquaredRanks(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol) * 1e6).cast("long").as("_x"))
@@ -4368,7 +4317,6 @@ object Stats {
       trimPct: Int = 20): DataFrame = {
     require(trimPct >= 1 && trimPct < 50,
       s"yuenT: trimPct must be in [1, 49], got $trimPct")
-    val dec = "decimal(38,0)"
     // rank ties in _x may order arbitrarily — harmless: every
     // rank-derived quantity here (boundary VALUES, membership of the
     // trimmed middle, Winsorized values) is tie-invariant because tied
@@ -4511,7 +4459,6 @@ object Stats {
   def breakpointScan(df: DataFrame, groupCol: String, xCol: String,
       yCol: String, bins: Int): DataFrame = {
     require(bins >= 2 && bins <= 4096, s"bins=$bins must be in [2, 4096]")
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(xCol) * 1e6).cast("long").as("_x"),
@@ -5051,7 +4998,6 @@ object Stats {
       iters: Int = 2): DataFrame = {
     require(nStrata >= 2 && nStrata <= 100,
       s"propensityStratifiedAte: nStrata must be in [2, 100], got $nStrata")
-    val dec = "decimal(38,0)"
     val rows = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(round(col(xCol), 6).as("_x"),
         when(treat, 1L).otherwise(0L).as("_t"),
@@ -5123,7 +5069,6 @@ object Stats {
   def aipwAte(df: DataFrame, treat: Column, yCol: String, xCol: String,
       iters: Int = 2, clip: Double = 0.01): DataFrame = {
     require(clip > 0.0 && clip < 0.5, s"aipwAte: clip in (0, 0.5), got $clip")
-    val dec = "decimal(38,0)"
     val rows = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(round(col(xCol), 6).as("_x"),
         when(treat, 1L).otherwise(0L).as("_t"),
@@ -5815,7 +5760,6 @@ object Stats {
     */
   def grangerF(df: DataFrame, groupCol: String, orderCol: String,
       yCol: String, xCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val w = Window.partitionBy("_g").orderBy("_o")
     val pts = df.filter(col(yCol).isNotNull && col(xCol).isNotNull)
       .select(col(groupCol).as("_g"), col(orderCol).as("_o"),
@@ -5947,7 +5891,6 @@ object Stats {
   def regressionInfluence(df: DataFrame, groupCol: String, xCol: String,
       yCol: String, topK: Int): DataFrame = {
     require(topK >= 1, s"topK=$topK must be >= 1")
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(xCol) * 1e6).cast("long").as("_xq"),
@@ -6018,7 +5961,6 @@ object Stats {
     */
   def chowTest(df: DataFrame, groupCol: String, xCol: String,
       yCol: String, breakX: Double): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"),
         (col(xCol) < breakX).as("_l"),
@@ -6091,7 +6033,6 @@ object Stats {
     */
   def breuschPagan(df: DataFrame, groupCol: String, xCol: String,
       yCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(xCol) * 1e6).cast("long").as("_xq"),
@@ -6149,7 +6090,6 @@ object Stats {
       yCol: String, dropFrac: Double = 0.2): DataFrame = {
     require(dropFrac >= 0.0 && dropFrac < 1.0,
       s"goldfeldQuandt: dropFrac must be in [0,1), got $dropFrac")
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(xCol) * 1e6).cast("long").as("_xq"),
@@ -6212,7 +6152,6 @@ object Stats {
     */
   def breuschGodfrey(df: DataFrame, groupCol: String, xCol: String,
       yCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(xCol) * 1e6).cast("long").as("_xq"),
@@ -6255,7 +6194,6 @@ object Stats {
 
   def durbinWatson(df: DataFrame, groupCol: String, xCol: String,
       yCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(xCol) * 1e6).cast("long").as("_xq"),
@@ -6310,7 +6248,6 @@ object Stats {
     * max — no windows. Output: (group, n, mean, sd, suspect, g).
     */
   def grubbs(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol) * 1e6).cast("long").as("_xq"))
@@ -6449,7 +6386,6 @@ object Stats {
   def gesd(df: DataFrame, groupCol: String, valueCol: String,
       k: Int): DataFrame = {
     require(k >= 1 && k <= 5, s"gesd: k must be in [1, 5], got $k")
-    val dec = "decimal(38,0)"
     val cells0 = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol) * 1e6).cast("long").as("_xq"))
@@ -6553,7 +6489,6 @@ object Stats {
     * Output: (group, n_group, n_rest, t, dof).
     */
   def studentT(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol) * 1e6).cast("long").as("_x"))
@@ -6593,7 +6528,6 @@ object Stats {
 
   def welchT(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
 
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol) * 1e6).cast("long").as("_x"))
@@ -6659,7 +6593,6 @@ object Stats {
       margin: Double, tCrit: Double = 1.645): DataFrame = {
     require(margin > 0.0, s"tostEquivalence: margin must be > 0, got $margin")
     require(tCrit > 0.0, s"tostEquivalence: tCrit must be > 0, got $tCrit")
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol) * 1e6).cast("long").as("_x"))
@@ -6735,7 +6668,6 @@ object Stats {
     * fold. Output: (n, k_used, k2).
     */
   def bartlett(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val byG = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol) * 1e6).cast("long").as("_x"))
@@ -6871,7 +6803,6 @@ object Stats {
     */
   def cronbachAlpha(df: DataFrame, blockCol: String, itemCol: String,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(valueCol).isNotNull)
       .select(col(blockCol).as("_b"), col(itemCol).as("_i"),
         round(col(valueCol) * 1e6).cast("long").as("_v"))
@@ -6980,17 +6911,16 @@ object Stats {
   def demingRegression(df: DataFrame, groupCol: String, xCol: String,
       yCol: String, lambda: Double = 1.0): DataFrame = {
     require(lambda > 0.0, s"demingRegression: lambda must be > 0")
-    val dec = "decimal(38,12)"
     val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(xCol), 6).as("_x"), round(col(yCol), 6).as("_y"))
     val folded = pts.groupBy(col("_g"))
       .agg(count(lit(1)).as("n"),
-        sum(col("_x").cast(dec)).as("_sx"),
-        sum(col("_y").cast(dec)).as("_sy"),
-        sum(round(col("_x") * col("_x"), 12).cast(dec)).as("_sxx"),
-        sum(round(col("_x") * col("_y"), 12).cast(dec)).as("_sxy"),
-        sum(round(col("_y") * col("_y"), 12).cast(dec)).as("_syy"))
+        sum(col("_x").cast(dec12)).as("_sx"),
+        sum(col("_y").cast(dec12)).as("_sy"),
+        sum(round(col("_x") * col("_x"), 12).cast(dec12)).as("_sxx"),
+        sum(round(col("_x") * col("_y"), 12).cast(dec12)).as("_sxy"),
+        sum(round(col("_y") * col("_y"), 12).cast(dec12)).as("_syy"))
     val nD = col("n").cast("double")
     val cxx = d("_sxx") - d("_sx") * d("_sx") / nD
     val cxy = d("_sxy") - d("_sx") * d("_sy") / nD
@@ -7173,7 +7103,6 @@ object Stats {
     */
   def pageTrend(df: DataFrame, blockCol: String, treatCol: String,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val ranked = friedmanRanked(df, blockCol, treatCol, valueCol)
     val perT = ranked.groupBy("_i")
       .agg(sum(col("_m2").cast(dec)).as("_r2"), count(lit(1)).as("_nb"))
@@ -7222,7 +7151,6 @@ object Stats {
     */
   def quadeTest(df: DataFrame, blockCol: String, treatCol: String,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val ranked = friedmanRanked(df, blockCol, treatCol, valueCol)
       .select("_b", "_i", "_v", "_m2")
     val k = ranked.select(col("_i")).distinct()
@@ -7276,7 +7204,6 @@ object Stats {
     */
   def ansariBradley(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val cells = df.select(col(groupCol).as("_g"),
         round(col(valueCol), 6).as("_q"))
       .groupBy("_g", "_q").agg(count(lit(1)).as("_c"))
@@ -7469,7 +7396,6 @@ object Stats {
     */
   def moodDispersion(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val cells = df.select(col(groupCol).as("_g"),
         round(col(valueCol), 6).as("_q"))
       .groupBy("_g", "_q").agg(count(lit(1)).as("_c"))
@@ -7654,7 +7580,6 @@ object Stats {
 
   def friedman(df: DataFrame, blockCol: String, treatCol: String,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val ranked = friedmanRanked(df, blockCol, treatCol, valueCol)
     val perT = ranked.groupBy("_i")
       .agg(sum(col("_m2").cast(dec)).as("_r2"),
@@ -7694,7 +7619,6 @@ object Stats {
     * z) with group_a < group_b.
     */
   def dunnTest(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val cells = df.select(col(groupCol).as("_g"),
         round(col(valueCol), 6).as("_q"))
       .groupBy("_g", "_q").agg(count(lit(1)).as("_c"))
@@ -7767,7 +7691,6 @@ object Stats {
     * (n, n_a_levels, n_b_levels, dof, g).
     */
   def gTest(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val cells = df.groupBy(col(aCol).as("_a"), col(bCol).as("_b"))
       .agg(count(lit(1)).as("_o"))
     val rows = cells.groupBy(col("_a").as("_ar")).agg(sum("_o").as("_r"))
@@ -7821,7 +7744,6 @@ object Stats {
   def adBinned(df: DataFrame, groupCol: String, valueCol: String,
       bins: Int): DataFrame = {
     require(bins >= 2, s"bins=$bins must be >= 2")
-    val dec = "decimal(38,0)"
     val stats = df.agg(min(col(valueCol)).as("_lo"),
       max(col(valueCol)).as("_hi"))
     val points = df.crossJoin(broadcast(stats))
@@ -8005,7 +7927,6 @@ object Stats {
     */
   def partialCorr(df: DataFrame, groupCol: String, xCol: String,
       yCol: String, zCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     def q(c: String): Column = round(col(c) * 1e6).cast("long")
     val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull
         && col(zCol).isNotNull)
@@ -8067,7 +7988,6 @@ object Stats {
     * group_a < group_b.
     */
   def tukeyHsd(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val byG = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(valueCol) * 1e6).cast("long").as("_x"))
@@ -8127,7 +8047,6 @@ object Stats {
     */
   def cochranQ(df: DataFrame, blockCol: String, treatCol: String,
       flagCol: Column): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = df
       .select(col(blockCol).as("_b"), col(treatCol).as("_i"),
         when(flagCol, 1L).otherwise(0L).as("_x"))
@@ -8249,7 +8168,6 @@ object Stats {
   def fleissKappa(df: DataFrame, subjectCol: String, categoryCol: String,
       r: Int): DataFrame = {
     require(r >= 2, s"fleissKappa: r must be >= 2, got $r")
-    val dec = "decimal(38,0)"
     val pts = df
       .filter(col(subjectCol).isNotNull && col(categoryCol).isNotNull)
       .select(col(subjectCol).as("_s"), col(categoryCol).as("_c"))
@@ -8374,7 +8292,6 @@ object Stats {
   def blandAltman(df: DataFrame, xCol: String, yCol: String,
       z: Double = 1.96): DataFrame = {
     require(z > 0.0, s"blandAltman: z must be > 0, got $z")
-    val dec = "decimal(38,0)"
     val dq = (round(col(xCol) * 1e6).cast("long")
       - round(col(yCol) * 1e6).cast("long"))
     val m = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
@@ -8576,7 +8493,6 @@ object Stats {
     */
   def anovaTwoWay(df: DataFrame, aCol: String, bCol: String,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val cells = df
       .filter(col(aCol).isNotNull && col(bCol).isNotNull
         && col(valueCol).isNotNull)
@@ -8668,7 +8584,6 @@ object Stats {
     */
   def mannKendall(df: DataFrame, groupCol: String, tsCol: String,
       valueCol: String, maxPoints: Int = 2000): DataFrame = {
-    val dec = "decimal(38,0)"
     val day = fdiv(unix_timestamp(col(tsCol)), lit(86400L)).cast("long")
     val cellsRaw = df
       .select(col(groupCol).as("_g"), day.as("_day"),
@@ -8736,7 +8651,6 @@ object Stats {
     */
   def cuped(df: DataFrame, armCol: String, preCol: String,
       postCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = df
       .filter(col(preCol).isNotNull && col(postCol).isNotNull)
       .select(col(armCol).as("_arm"),
@@ -8797,7 +8711,6 @@ object Stats {
     */
   def diffInDiff(df: DataFrame, treated: Column, post: Column,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val cells = df
       .filter(treated.isNotNull && post.isNotNull
         && col(valueCol).isNotNull)
@@ -8862,7 +8775,6 @@ object Stats {
     */
   def tripleDiff(df: DataFrame, treated: Column, post: Column,
       stratum: Column, valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val cells = df
       .filter(treated.isNotNull && post.isNotNull && stratum.isNotNull
         && col(valueCol).isNotNull)
@@ -8925,7 +8837,6 @@ object Stats {
     */
   def eventStudy(df: DataFrame, treated: Column, periodCol: Column,
       valueCol: String, refPeriod: Long = -1L): DataFrame = {
-    val dec = "decimal(38,0)"
     val cells = df
       .filter(treated.isNotNull && periodCol.isNotNull
         && col(valueCol).isNotNull)
@@ -8989,7 +8900,6 @@ object Stats {
     */
   def schnabel(df: DataFrame, idCol: String,
       occasionCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val sightings = df
       .filter(col(idCol).isNotNull && col(occasionCol).isNotNull)
       .select(col(idCol).cast("string").as("_id"),
@@ -9047,7 +8957,6 @@ object Stats {
       b: Int = 19): DataFrame = {
     require(b >= 1 && b <= 200,
       s"randomizationInference: b must be in [1, 200], got $b")
-    val dec = "decimal(38,0)"
     val base = df
       .filter(treated.isNotNull && post.isNotNull
         && col(valueCol).isNotNull && col(unitCol).isNotNull)
@@ -9136,7 +9045,6 @@ object Stats {
     */
   def ivWald(df: DataFrame, groupCol: String, yCol: String,
       xCol: String, zCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(yCol).isNotNull && col(xCol).isNotNull
         && col(zCol).isNotNull)
       .select(col(groupCol).as("_g"),
@@ -9195,7 +9103,6 @@ object Stats {
       bandwidth: Double): DataFrame = {
     require(bandwidth > 0.0,
       s"regressionDiscontinuity: bandwidth must be > 0, got $bandwidth")
-    val dec = "decimal(38,0)"
     val band = df.filter(col(runCol).isNotNull && col(yCol).isNotNull
         && col(runCol) >= cutoff - bandwidth
         && col(runCol) <= cutoff + bandwidth)
@@ -9257,7 +9164,6 @@ object Stats {
   def balanceSmd(df: DataFrame, treatCol: org.apache.spark.sql.Column,
       cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "balanceSmd: need at least one covariate")
-    val dec = "decimal(38,0)"
     val stacked = df.select(treatCol.cast("boolean").as("_t"),
         explode(array(cols.map(c => struct(lit(c).as("_c"),
           round(col(c) * 1e6).cast("long").as("_v"))): _*)).as("_s"))
@@ -9316,7 +9222,6 @@ object Stats {
     */
   def jonckheereTerpstra(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val cells = df.filter(col(valueCol).isNotNull
         && col(groupCol).isNotNull)
       .select(col(groupCol).as("_g"), round(col(valueCol), 6).as("_q"))
@@ -9381,7 +9286,6 @@ object Stats {
     */
   def brunnerMunzel(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val cells = df.filter(col(valueCol).isNotNull
         && col(groupCol).isNotNull)
       .select(col(groupCol).as("_g"), round(col(valueCol), 6).as("_q"))
@@ -9472,7 +9376,6 @@ object Stats {
       valueCol: String, bins: Int): DataFrame = {
     require(bins >= 2 && bins <= 100000,
       s"energyDistanceBinned: bins in [2, 100000], got $bins")
-    val dec = "decimal(38,0)"
     val base = df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
     val nGroups = base.select(col(groupCol)).distinct().limit(3).count()
     require(nGroups == 2,
@@ -9615,7 +9518,6 @@ object Stats {
       xCol: String, yCol: String, bins: Int): DataFrame = {
     require(bins >= 2 && bins <= 64,
       s"distanceCorrelationBinned: bins must be in [2, 64], got $bins")
-    val dec = "decimal(38,0)"
     val stats = df.agg(min(col(xCol)).as("_xlo"), max(col(xCol)).as("_xhi"),
       min(col(yCol)).as("_ylo"), max(col(yCol)).as("_yhi"))
     def bin(c: Column, lo: Column, hi: Column): Column =
@@ -9693,7 +9595,6 @@ object Stats {
     */
   def poissonRateTest(df: DataFrame, groupCol: String, eventCol: Column,
       exposureCol: Column): DataFrame = {
-    val dec = "decimal(38,0)"
     val rows = df.filter(col(groupCol).isNotNull)
       .select(col(groupCol).as("_g"),
         when(eventCol, 1L).otherwise(0L).as("_k"),
@@ -9747,7 +9648,6 @@ object Stats {
     */
   def hotellingT2(df: DataFrame, groupCol: String, x1Col: String,
       x2Col: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val rows = df.filter(col(groupCol).isNotNull && col(x1Col).isNotNull
         && col(x2Col).isNotNull)
       .select(col(groupCol).as("_g"),
@@ -9877,7 +9777,6 @@ object Stats {
       valueCol: String, periods: Seq[Int]): DataFrame = {
     require(periods.nonEmpty && periods.forall(_ >= 2),
       s"gumbelReturnLevels: periods must be >= 2, got $periods")
-    val dec = "decimal(38,0)"
     val gamma = 0.5772156649015329
     val gcols = groupCols.map(col)
     val pts = df.filter(col(valueCol).isNotNull)
@@ -9971,7 +9870,6 @@ object Stats {
     */
   def twoWayFixedEffects(df: DataFrame, unitCol: String, timeCol: String,
       yCol: String, xCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(yCol).isNotNull && col(xCol).isNotNull
         && col(unitCol).isNotNull && col(timeCol).isNotNull)
       .select(col(unitCol).as("_u"), col(timeCol).as("_t"),
@@ -10042,7 +9940,6 @@ object Stats {
       tau2: Double): DataFrame = {
     require(sigma2 > 0.0, s"msprt: sigma2 must be > 0, got $sigma2")
     require(tau2 > 0.0, s"msprt: tau2 must be > 0, got $tau2")
-    val dec = "decimal(38,0)"
     val w = Window.partitionBy("_g").orderBy("_o")
       .rowsBetween(Window.unboundedPreceding, 0)
     val pts = df.filter(col(valueCol).isNotNull)
@@ -10080,7 +9977,6 @@ object Stats {
     */
   def kendallW(df: DataFrame, blockCol: String, treatCol: String,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val ranked = friedmanRanked(df, blockCol, treatCol, valueCol)
       .localCheckpoint() // item sums + per-block tie sums re-read it
     val perT = ranked.groupBy("_i")
@@ -10161,7 +10057,6 @@ object Stats {
     */
   def negbinFit(df: DataFrame, groupCol: String, countCol: String)
       : DataFrame = {
-    val dec = "decimal(38,0)"
     val x = col(countCol)
     val guarded = when(x.isNull || x < 0 || x =!= x.cast("long"),
       raise_error(lit("negbinFit: counts must be non-negative integers")))
@@ -10495,7 +10390,6 @@ object Stats {
       : DataFrame = {
     require(period >= 2 && period <= 366,
       s"mannKendallSeasonal: period in [2, 366], got $period")
-    val dec = "decimal(38,0)"
     val day = fdiv(unix_timestamp(col(tsCol)), lit(86400L)).cast("long")
     val cellsRaw = df
       .select(col(groupCol).as("_g"), day.as("_day"),
@@ -10692,7 +10586,6 @@ object Stats {
     */
   def herfindahl(df: DataFrame, groupCol: String, entityCol: String,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val ent = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("_g"), col(entityCol).as("_e"),
         round(col(valueCol) * 100).cast("long").as("_c"))
@@ -10726,7 +10619,6 @@ object Stats {
   def vif3(df: DataFrame, xCols: Seq[String]): DataFrame = {
     require(xCols.size == 3, s"vif3: exactly 3 covariates, got ${xCols.size}")
     val Seq(x1c, x2c, x3c) = xCols
-    val dec = "decimal(38,0)"
     val rows = df.filter(col(x1c).isNotNull && col(x2c).isNotNull
         && col(x3c).isNotNull)
       .select(round(col(x1c) * 1e6).cast("long").as("_x1"),
@@ -10977,7 +10869,6 @@ object Stats {
   def binarySegmentation(df: DataFrame, groupCol: String, xCol: String,
       yCol: String, bins: Int): DataFrame = {
     require(bins >= 4 && bins <= 4096, s"bins=$bins must be in [4, 4096]")
-    val dec = "decimal(38,0)"
     val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("_g"),
         round(col(xCol) * 1e6).cast("long").as("_x"),

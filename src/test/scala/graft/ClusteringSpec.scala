@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.Clustering
+import graft.operators.{Clustering, DriverPath}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class ClusteringSpec extends SparkTestBase {
@@ -312,13 +313,15 @@ class ClusteringSpec extends SparkTestBase {
           iters = it)).collect().map(_.toSeq).toSet
       assert(fast === dist, s"kmeans iters=$it ${pts.schema("id").dataType}")
     }
-    for (pts <- Seq(ptsS, ptsL); ps <- Seq(1, 3)) {
+    for (pts <- Seq(ptsS, ptsL);
+        (ps, ki) <- Seq((1, 1), (3, 1), (1, 0), (1, 2))) {
       val fast = Clustering.gmmPortable(pts, "id", "vec", k = 3,
-        passes = ps).collect().map(_.toSeq).toSet
+        passes = ps, kmeansIters = ki).collect().map(_.toSeq).toSet
       val dist = withDriverPathMaxRows(0)(
         Clustering.gmmPortable(pts, "id", "vec", k = 3,
-          passes = ps)).collect().map(_.toSeq).toSet
-      assert(fast === dist, s"gmm passes=$ps ${pts.schema("id").dataType}")
+          passes = ps, kmeansIters = ki)).collect().map(_.toSeq).toSet
+      assert(fast === dist,
+        s"gmm passes=$ps kmeansIters=$ki ${pts.schema("id").dataType}")
     }
   }
 
@@ -335,15 +338,15 @@ class ClusteringSpec extends SparkTestBase {
     val disjoint = Seq(("a", "b"), ("b", "c"), ("a", "c"),
       ("x", "y"), ("y", "z"), ("x", "z")).toDF("s", "t")
     for (edges <- Seq(bridged, disjoint); k <- Seq(2, 3);
-        it <- Seq(2, 6)) {
+        (it, li) <- Seq((2, 1), (6, 1), (2, 0), (2, 2))) {
       val fast = Clustering.spectralClustering(edges, "s", "t",
-          k = k, powerIters = it)
+          k = k, powerIters = it, lloydIters = li)
         .as[(String, Double, Double, Int, Double)].collect().toSet
       val dist = withDriverPathMaxRows(0)(
         Clustering.spectralClustering(edges, "s", "t",
-          k = k, powerIters = it))
+          k = k, powerIters = it, lloydIters = li))
         .as[(String, Double, Double, Int, Double)].collect().toSet
-      assert(fast === dist, s"k=$k powerIters=$it")
+      assert(fast === dist, s"k=$k powerIters=$it lloydIters=$li")
     }
   }
 
@@ -365,6 +368,62 @@ class ClusteringSpec extends SparkTestBase {
     val ccParts = cc.groupBy(_._2).values.map(_.keys.toSet).toSet
     assert(spectralParts === ccParts,
       s"spectral=$spectralParts cc=$ccParts")
+  }
+
+  test("empty input: kmeans, gmm, an edgeless spectral graph and " +
+      "kCenterCoreset fail with the declared error on both paths") {
+    import spark.implicits._
+    val none = Seq.empty[(String, Seq[Double])].toDF("id", "vec")
+    val noEdges = Seq.empty[(String, String)].toDF("s", "t")
+    val loopsOnly = Seq(("a", "a"), ("b", "b")).toDF("s", "t")
+    def fails(what: String, msg: String)(body: => DataFrame): Unit = {
+      val ex = intercept[IllegalArgumentException](body.collect())
+      assert(ex.getMessage.contains(msg), s"$what: ${ex.getMessage}")
+    }
+    for (bound <- Seq(DriverPath.DefaultMaxRows, 0L)) withDriverPathMaxRows(bound) {
+      fails(s"kmeans at $bound", "needs >= 3 rows")(
+        Clustering.kmeansPortable(none, "id", "vec", k = 3, iters = 1))
+      fails(s"gmm at $bound", "needs >= 2 rows")(
+        Clustering.gmmPortable(none, "id", "vec", k = 2, passes = 1))
+      for (edges <- Seq(noEdges, loopsOnly))
+        fails(s"spectral at $bound", "needs >= 2 rows")(
+          Clustering.spectralClustering(edges, "s", "t", k = 2,
+            powerIters = 2))
+      fails(s"kCenterCoreset at $bound", "needs >= 1 row")(
+        Clustering.kCenterCoreset(none, "id", "vec", k = 2))
+    }
+  }
+
+  test("Lloyd family: conf-0 job counts (no vector probe at a bound " +
+      "of 0)") {
+    import spark.implicits._
+    // a planned (not local) input, so every collect is a job
+    val pts = spark.range(1, 61).select(concat(lit("v"), col("id")).as("id"),
+      array((col("id") % 5).cast("double"), (col("id") % 9) / 3.0,
+        col("id") / 20.0).as("vec"))
+    def clique(vs: Seq[String]) =
+      for (i <- vs.indices; j <- i + 1 until vs.size) yield (vs(i), vs(j))
+    val edges = (clique(Seq("a", "b", "c", "d"))
+      ++ clique(Seq("e", "f", "g", "h")) :+ (("d", "e"))).toDF("s", "t")
+    def jobs(body: => DataFrame): Seq[String] =
+      withDriverPathMaxRows(0)(jobsDuring(body.collect())._1)
+    // the seeds, 2 per iteration (the assign aggregate and its shuffle
+    // stage), the result
+    assert(jobs(Clustering.kmeansPortable(pts, "id", "vec", 3, 1)).size == 4)
+    assert(jobs(Clustering.kmeansPortable(pts, "id", "vec", 3, 3)).size == 8)
+    // the checkpoint, the count (2), the k-means init at 1 iteration
+    // (3), 4 per EM pass (two global aggregates), the result
+    assert(jobs(Clustering.gmmPortable(pts, "id", "vec", 3, 1)).size == 11)
+    assert(jobs(Clustering.gmmPortable(pts, "id", "vec", 3, 2)).size == 15)
+    // spectral: the jobs the operator starts itself (AQE's query-stage
+    // jobs inside its joins vary by one between JVMs on this fixture):
+    // 4 input checkpoints, per eigenvector 1 + powerIters, the basis
+    // and the embedding, then the seed collect
+    for ((it, own) <- Seq((2, 13), (4, 17))) {
+      val sites = jobs(Clustering.spectralClustering(edges, "s", "t", 2, it))
+        .filterNot(_.contains("CompletableFuture"))
+      assert(sites.size == own, s"powerIters=$it: $sites")
+    }
   }
 
   test("kCenterCoreset: md5-seeded farthest-point traversal — seed " +

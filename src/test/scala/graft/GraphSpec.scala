@@ -339,19 +339,25 @@ class GraphSpec extends SparkTestBase {
       ++ Seq(("v40", "v41"), ("v41", "v42"))).toDF("s", "d")
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.toSeq.toList).sortBy(_.toString).toList
-    for (hops <- Seq(1, 2, 3)) {
-      val fast = graft.operators.Graph.harmonicCentrality(
-        edges, "s", "d", maxHops = hops)
-      val dist = withDriverPathMaxRows(-1L)(
-        graft.operators.Graph.harmonicCentrality(
-          edges, "s", "d", maxHops = hops))
-      assert(canon(fast) == canon(dist), s"exact twin diverged at hops=$hops")
+    // and the empty edge list: both paths return no rows
+    for ((g, gn) <- Seq((edges, "graph"), (edges.limit(0), "empty"));
+        hops <- Seq(1, 2, 3, 4, 6)) {
+      if (hops <= 4) {
+        val fast = graft.operators.Graph.harmonicCentrality(
+          g, "s", "d", maxHops = hops)
+        val dist = withDriverPathMaxRows(-1L)(
+          graft.operators.Graph.harmonicCentrality(
+            g, "s", "d", maxHops = hops))
+        assert(canon(fast) == canon(dist),
+          s"exact twin diverged at hops=$hops on $gn")
+      }
       val fastA = graft.operators.Graph.harmonicCentralityApprox(
-        edges, "s", "d", maxHops = hops, p = 7)
+        g, "s", "d", maxHops = hops, p = 7)
       val distA = withDriverPathMaxRows(-1L)(
         graft.operators.Graph.harmonicCentralityApprox(
-          edges, "s", "d", maxHops = hops, p = 7))
-      assert(canon(fastA) == canon(distA), s"approx twin diverged at hops=$hops")
+          g, "s", "d", maxHops = hops, p = 7))
+      assert(canon(fastA) == canon(distA),
+        s"approx twin diverged at hops=$hops on $gn")
     }
   }
 

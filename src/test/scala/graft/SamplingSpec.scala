@@ -11,6 +11,29 @@ class SamplingSpec extends SparkTestBase {
 
   private def docs = spark.read.parquet(s"$sfDir/documents.parquet")
 
+  test("portableBits is portableUnit's driver twin, bit for bit " +
+      "(empty, non-ASCII, long and string keys)") {
+    import spark.implicits._
+    val strs = Seq("", " ", "a", "é", "日本語", "naïve café", "😀",
+      "x" * 300) ++ (0 until 600).map(i => s"k$i:${i * 7919}")
+    val longs = Seq(Long.MinValue, -1L, 0L, Long.MaxValue) ++
+      (0 until 400).map(i => i.toLong * 1000003L - 200000000L)
+    def bits(c: org.apache.spark.sql.Column) =
+      conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
+    val s = strs.toDF("k")
+      .select(col("k"), Sampling.portableUnit(col("k")), bits(col("k")))
+      .collect()
+    val l = longs.toDF("k")
+      .select(col("k"), Sampling.portableUnit(col("k")), bits(col("k")))
+      .collect()
+    assert(s.length + l.length > 1000)
+    for (r <- s ++ l) {
+      val b = Sampling.portableBits(r.get(0).toString)
+      assert(b == r.getLong(2), r.toString)
+      assert(b / 1152921504606846976.0 == r.getDouble(1), r.toString)
+    }
+  }
+
   test("hash sample is deterministic and fraction-accurate") {
     val s1 = Sampling.sample(docs, "doc_id", 0.3)
       .select("doc_id").collect().map(_.getLong(0)).toSet
